@@ -18,24 +18,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import types as T  # noqa: E402
-
 import __spark_entry__ as entrymod  # noqa: E402
 from caterpillar_spark.cdc import replay_chunks  # noqa: E402
 from caterpillar_spark.generator import GeneratorSpec, write_changelog_chunks  # noqa: E402
 from caterpillar_spark.session import get_spark  # noqa: E402
 from caterpillar_spark.sinks.snapshot_table import SnapshotTable  # noqa: E402
-
-PAYLOAD = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("role", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("tool", T.StringType()),
-        T.StructField("ts", T.TimestampType()),
-    ]
-)
+from caterpillar_spark.streaming.apply import TRANSCRIPT_SCHEMA  # noqa: E402
 
 BENCH_QUERIES = [
     "cdc_lww_latest",
@@ -97,7 +85,7 @@ TABLE_BASE = "/tmp/caterpillar_bench"
 def run_cdc_bench(spark, n_events: int, n_chunks: int = 4) -> dict:
     chunks = cdc_events_dir(spark, n_events, n_chunks)
     work = f"{TABLE_BASE}/table_{os.getpid()}_{time.time_ns()}"
-    tbl = SnapshotTable(spark, work, n_buckets=32).create(PAYLOAD)
+    tbl = SnapshotTable(spark, work, n_buckets=32).create(TRANSCRIPT_SCHEMA)
     t0 = time.time()
     replay_chunks(spark, chunks, tbl)
     dt = time.time() - t0
@@ -112,34 +100,35 @@ def run_cdc_bench(spark, n_events: int, n_chunks: int = 4) -> dict:
 
 
 def _regression_gate(
-    per_query: dict[str, float], factor: float = 1.5
+    per_query: dict[str, float], cores: str, sf: float, factor: float = 1.5
 ) -> tuple[str | None, dict[str, list[float]]]:
     """Compare this run's per-query medians against the newest recorded
-    round file (``BENCH_r*.json`` beside this script). Returns the prior
-    file name and ``{query: [prior_sec, now_sec]}`` for every query whose
-    median exceeds ``factor``× the prior value. Prior rounds only record
-    values at sf0.1, so the gate stays silent at other scales."""
+    round file (``BENCH_r*.json`` beside this script, results under
+    ``parsed``) that ran with the same ``cores`` and ``sf``. Returns the
+    prior file name (None when no round matches) and ``{query:
+    [prior_sec, now_sec]}`` for every query whose median exceeds
+    ``factor``× the prior value."""
     import glob
 
     here = os.path.dirname(os.path.abspath(__file__))
-    priors = sorted(glob.glob(os.path.join(here, "BENCH_r*.json")))
-    if not priors or os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1").rstrip(
-        "/"
-    ).rsplit("/", 1)[-1] != "sf0.1":
-        return None, {}
-    try:
-        with open(priors[-1]) as f:
-            prior = json.load(f).get("queries", {})
-    except Exception:
-        return None, {}
-    hits = {
-        name: [prior[name], now]
-        for name, now in per_query.items()
-        if isinstance(prior.get(name), (int, float))
-        and prior[name] > 0
-        and now > factor * prior[name]
-    }
-    return os.path.basename(priors[-1]), hits
+    for path in sorted(glob.glob(os.path.join(here, "BENCH_r*.json")), reverse=True):
+        try:
+            with open(path) as f:
+                parsed = json.load(f).get("parsed") or {}
+        except (OSError, ValueError):
+            continue
+        if str(parsed.get("cores")) != str(cores) or parsed.get("sf") != sf:
+            continue
+        prior = parsed.get("queries") or {}
+        hits = {
+            name: [prior[name], now]
+            for name, now in per_query.items()
+            if isinstance(prior.get(name), (int, float))
+            and prior[name] > 0
+            and now > factor * prior[name]
+        }
+        return os.path.basename(path), hits
+    return None, {}
 
 
 def main() -> None:
@@ -210,12 +199,12 @@ def main() -> None:
     except Exception:
         host = None
 
-    # regression gate vs the newest recorded round (>1.5x the prior
-    # median fires; the probe ratio is attached so a throttled-host hit
-    # can be discounted by the reader instead of silently suppressed)
-    prior_round, regressions = _regression_gate(per_query)
-
     sf = float(sf_dir.rstrip("/").split("sf")[-1]) if "sf" in sf_dir else -1.0
+    # regression gate vs the newest recorded round on the same cores and
+    # scale (>1.5x the prior median fires; the probe ratio is attached so
+    # a throttled-host hit can be discounted by the reader instead of
+    # silently suppressed)
+    prior_round, regressions = _regression_gate(per_query, cores, sf)
     print(
         json.dumps(
             {

@@ -46,7 +46,6 @@ def apply_changes(
     batch_id: int,
     stream_id: str = "default",
     offset_range: tuple[int, int] | None = None,
-    prune: bool | None = None,
     mode: str = "auto",
     batch_rows: int | None = None,
 ) -> BatchResult:
@@ -59,10 +58,10 @@ def apply_changes(
       happens with ZERO Spark jobs, and per-partition lineage counts are
       collected by ``observe()`` DURING the merge job; the merge's own
       narrow stats scan derives per-bucket key ranges for file pruning.
-    - ``offset_range`` unknown (ad-hoc batch) or ``prune=True``: one pruned
-      statistics pass (source_partition/conv_id/lsn columns only) derives
-      range + lineage + per-bucket key stats in a single scan, which the
-      merge then consumes with zero additional passes.
+    - ``offset_range`` unknown (ad-hoc batch): one pruned statistics
+      pass (source_partition/conv_id/lsn columns only) derives range +
+      lineage + per-bucket key stats in a single scan, which the merge
+      then consumes with zero additional passes.
 
     ``mode`` forwards to :meth:`SnapshotTable.merge` — ``auto`` (default)
     picks merge-on-read delta appends for small batches and file-pruned
@@ -74,7 +73,7 @@ def apply_changes(
     counts: list[tuple[int, int]] | None = None
     incoming: dict[int, tuple[str | None, str | None, int]] | None = None
 
-    if offset_range is None or (prune is True):
+    if offset_range is None:
         stats = (
             events.groupBy(sp_col.alias("sp"), table.bucket_expr().alias("b"))
             .agg(
@@ -88,11 +87,10 @@ def apply_changes(
         )
         if not stats:
             return BatchResult(batch_id, -1, 0, -1, 0, time.time() - t0)
-        if offset_range is None:
-            offset_range = (
-                min(int(r["lo"]) for r in stats),
-                max(int(r["hi"]) for r in stats),
-            )
+        offset_range = (
+            min(int(r["lo"]) for r in stats),
+            max(int(r["hi"]) for r in stats),
+        )
         incoming = {}
         for r in stats:
             b = int(r["b"])
@@ -183,11 +181,6 @@ def segment_footer_stats(path: str) -> tuple[int, int, int] | None:
             lo = st.min if lo is None else min(lo, st.min)
             hi = st.max if hi is None else max(hi, st.max)
     return None if lo is None else (int(lo), int(hi), rows)
-
-
-def lsn_range_from_footers(path: str) -> tuple[int, int] | None:
-    st = segment_footer_stats(path)
-    return None if st is None else (st[0], st[1])
 
 
 def replay_chunks(

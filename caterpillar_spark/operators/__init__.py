@@ -10,7 +10,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
-REGISTRY: dict[str, Callable[..., DataFrame]] = {}
+_REGISTRY: dict[str, Callable[..., DataFrame]] = {}
 
 
 def fan_out(df: DataFrame, key: str | None = None) -> DataFrame:
@@ -39,16 +39,15 @@ def fan_out(df: DataFrame, key: str | None = None) -> DataFrame:
 
 def register(name: str):
     def deco(fn):
-        REGISTRY[name] = fn
+        _REGISTRY[name] = fn
         return fn
 
     return deco
 
 
 def _load_all() -> None:
-    """Populate REGISTRY by importing every operator module (bottom import
-    keeps the circular dependency one-way: modules only need `register`,
-    which is already defined)."""
+    """Populate the registry by importing every operator module (modules
+    only need `register`, which is already defined)."""
     from caterpillar_spark.operators import (  # noqa: F401
         compress,
         dedup,
@@ -60,4 +59,11 @@ def _load_all() -> None:
     )
 
 
-_load_all()
+def __getattr__(name: str):
+    # REGISTRY fills on first access, not at package import: the table sink
+    # imports only `dedup`, and loading every operator module would pull
+    # pandas/numpy into the engine's driver (~60 MB RSS)
+    if name == "REGISTRY":
+        _load_all()
+        return _REGISTRY
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -30,11 +30,11 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from caterpillar_spark.operators import register
+from caterpillar_spark.session import cached_columns
 
 DEFAULT_KEY = ("conv_id", "turn_idx")
 
@@ -47,11 +47,34 @@ def _payload_cols(df: DataFrame, key: Sequence[str], lsn_col: str) -> list[str]:
 def last_writer_wins(
     df: DataFrame, key: Sequence[str] = DEFAULT_KEY, lsn_col: str = "lsn"
 ) -> DataFrame:
-    """Hash-agg max_by reducer (default). One shuffle, partial combine."""
+    """Hash-agg max_by reducer (default). One shuffle, partial combine.
+    Every non-key column rides in the ``max_by`` struct — including the
+    table sink's ``_deleted`` tombstone flag, so this is also the reducer
+    of ``SnapshotTable`` reads, merges and compactions. The Column lists
+    are memoised per shape (it sits on the merge's per-batch driver path)."""
     payload = _payload_cols(df, key, lsn_col)
-    w = F.max_by(F.struct(*payload), F.col(lsn_col)).alias("_w")
-    out = df.groupBy(*key).agg(w, F.max(lsn_col).alias(lsn_col))
-    return out.select(*key, *[F.col(f"_w.{c}").alias(c) for c in payload], lsn_col)
+    shape = (tuple(key), lsn_col, tuple(payload))
+    spark = df.sparkSession
+    agg = cached_columns(
+        spark,
+        "lww_agg",
+        shape,
+        lambda: [
+            F.max_by(F.struct(*payload), F.col(lsn_col)).alias("_w"),
+            F.max(lsn_col).alias(lsn_col),
+        ],
+    )
+    sel = cached_columns(
+        spark,
+        "lww_sel",
+        shape,
+        lambda: [
+            *key,
+            *[F.col(f"_w.{c}").alias(c) for c in payload],
+            F.col(lsn_col),
+        ],
+    )
+    return df.groupBy(*key).agg(*agg).select(*sel)
 
 
 @register("dedup_lww_window")
@@ -107,6 +130,10 @@ def last_writer_wins_pandas(
     must fit in executor memory — documented limitation, default stays
     the hash-agg variant (SURVEY.md §7.5).
     """
+    # imported here, not at module level: the table sink imports this
+    # module for last_writer_wins, and pandas costs ~60 MB of driver RSS
+    import pandas as pd
+
     schema = df.schema
     cols = df.columns
 

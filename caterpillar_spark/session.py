@@ -58,3 +58,27 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# Unresolved Column objects are immutable and bind to attributes by name at
+# analysis time, so identical column lists (the merge's observe metrics and
+# projection, the LWW agg/select lists) are reusable across batches and
+# table handles. Rebuilding them each merge is pure py4j round-trip cost on
+# the per-batch serial path (~23 ms for the LWW lists alone). A Column is a
+# py4j ref into one JVM, so the cache holds ONE application's lists and is
+# replaced when the applicationId changes. Unlocked: two threads racing on
+# a miss both build a valid list, and the last one stored wins.
+_column_cache: tuple[str | None, dict[tuple, list]] = (None, {})
+
+
+def cached_columns(spark, kind: str, params: tuple, build) -> list:
+    """``build()``'s Column list for ``(kind, params)``, memoised for the
+    current Spark application."""
+    global _column_cache
+    app = spark.sparkContext.applicationId
+    if _column_cache[0] != app:
+        _column_cache = (app, {})
+    cols = _column_cache[1].get((kind, params))
+    if cols is None:
+        cols = _column_cache[1][(kind, params)] = build()
+    return cols

@@ -13,14 +13,12 @@ Layout::
                                        # clobber a winner's committed files
 
 File/bucket invariant: every data file contains rows of EXACTLY ONE bucket.
-A flat ``repartition(n, _route)`` write normally spreads several buckets
-into one shuffle partition (pid(b) = pmod(murmur3(b), n) collides); here
-``_route`` is a precomputed inverse — for each bucket b an int r_b with
-``pmod(murmur3(r_b), n) == b`` — so shuffle partition b receives exactly
-bucket b and the part-file index IS the bucket id. That keeps the 3-5x
-cheaper flat write (no dynamic-partition committer) while making the
-bucket -> files pointers exact: no co-hashed stale rows can survive a
-bucket rewrite (the round-1 design leaked them).
+A row's bucket is ``pmod(hash(conv_id), n)`` — Spark's own HashPartitioning
+placement — so one ``repartition(n, conv_id)`` puts bucket b in shuffle
+partition b, and the part-file index of a flat parquet write IS the bucket
+id. The bucket -> files pointers are exact (no co-hashed stale rows can
+survive a bucket rewrite), no per-row bucket column is stored, and the same
+exchange satisfies the LWW aggregate's clustering.
 
 Concurrency/atomicity model (single writer, many readers — same posture as
 a Structured Streaming ``foreachBatch`` sink): a commit writes its data
@@ -73,8 +71,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from caterpillar_spark.operators.dedup import last_writer_wins
+from caterpillar_spark.session import cached_columns
+
 KEY = ["conv_id", "turn_idx"]
-_SYS_COLS = ["_lsn", "_deleted", "_b"]
+_SYS_COLS = ["_lsn", "_deleted"]
+# merge's lineage observe() counts source partitions 0.._OBSERVE_PARTITIONS-1
+# individually and the rest as partition -1
+_OBSERVE_PARTITIONS = 32
+# "auto" merges take the delta path when the files a CoW would rewrite hold
+# more than this many times the incoming rows (BENCH/delta_ab.json)
+_DELTA_THRESHOLD = 3.0
 
 
 @dataclass
@@ -107,10 +114,10 @@ class Snapshot:
     file_stats: dict[str, dict] = field(default_factory=dict)
     # bucket id (str) -> path of the IMMUTABLE manifest file holding that
     # bucket's complete current state (base + delta files + their stats) —
-    # Iceberg's manifest-list pattern. When set, the inline buckets/deltas/
-    # file_stats fields above are resolved VIEWS (populated at load, empty
-    # in the serialized JSON): a commit re-manifests only the buckets it
-    # touched, so commit metadata is O(touched buckets), not O(table files).
+    # Iceberg's manifest-list pattern. The buckets/deltas/file_stats fields
+    # above are resolved VIEWS (populated at load, empty in the serialized
+    # JSON): a commit re-manifests only the buckets it touched, so commit
+    # metadata is O(touched buckets), not O(table files).
     # SERIALIZED inverted and relative — {manifest filename: [bucket ids]} —
     # so shared pointers dedupe (the map costs bytes per MANIFEST, not per
     # bucket-path pair) and the table stays relocatable.
@@ -149,29 +156,6 @@ def _covered(ranges: list[list[int]], lo: int, hi: int) -> bool:
 
 
 # --------------------------------------------------------------- routing
-def murmur3_hash_int(value: int, seed: int = 42) -> int:
-    """Spark's ``F.hash`` of a single int32 column: Murmur3_x86_32.hashInt
-    (the public MurmurHash3 algorithm, seed 42 — same constants as
-    org.apache.spark.unsafe.hash.Murmur3_x86_32). Signed-int32 result.
-    Pure Python so bucket routing needs ZERO Spark jobs; parity with the
-    JVM is pinned by a test."""
-    mask = 0xFFFFFFFF
-    k1 = (value & mask) * 0xCC9E2D51 & mask
-    k1 = ((k1 << 15) | (k1 >> 17)) & mask
-    k1 = k1 * 0x1B873593 & mask
-    h1 = (seed & mask) ^ k1
-    h1 = ((h1 << 13) | (h1 >> 19)) & mask
-    h1 = (h1 * 5 + 0xE6546B64) & mask
-    # fmix(h1, length=4)
-    h1 ^= 4
-    h1 ^= h1 >> 16
-    h1 = h1 * 0x85EBCA6B & mask
-    h1 ^= h1 >> 13
-    h1 = h1 * 0xC2B2AE35 & mask
-    h1 ^= h1 >> 16
-    return h1 - (1 << 32) if h1 >= (1 << 31) else h1
-
-
 def murmur3_hash_bytes(data: bytes, seed: int = 42) -> int:
     """Spark's ``F.hash`` of one string column: Murmur3_x86_32 over the
     UTF-8 bytes with Spark's byte-wise tail handling (each trailing byte
@@ -220,25 +204,6 @@ def _overlaps(stats: dict | None, klo: str | None, khi: str | None) -> bool:
 
 
 class SnapshotTable:
-    # Unresolved Column objects are immutable and bind to attributes by
-    # name at analysis time, so identical column lists (the 33 observe
-    # lineage metrics, the LWW agg/select lists, the merge projection) are
-    # reusable across batches and table handles. Rebuilding them each
-    # merge is pure py4j round-trip cost on the per-batch SERIAL path —
-    # measured 0.25s of the ~0.3s/batch driver-serial share (the Amdahl
-    # term that caps N->4N scaling efficiency). Class-level and keyed by
-    # applicationId: a Column is a py4j ref into one JVM, so a restarted
-    # session must never see another session's refs.
-    _col_cache: dict[tuple, list] = {}
-
-    def _cached_cols(self, kind: str, params: tuple, build) -> list:
-        key = (self.spark.sparkContext.applicationId, kind, params)
-        cols = SnapshotTable._col_cache.get(key)
-        if cols is None:
-            cols = build()
-            SnapshotTable._col_cache[key] = cols
-        return cols
-
     def __init__(self, spark: SparkSession, root: str, n_buckets: int = 64):
         self.spark = spark
         self.root = root
@@ -255,8 +220,8 @@ class SnapshotTable:
             try:
                 self.snapshot()
             except (RuntimeError, FileNotFoundError, json.JSONDecodeError):
-                # format-1 gate / crashed-create leftovers (a _log dir with
-                # no loadable v*.json) / corrupt latest snapshot: defer —
+                # inline-pointer snapshot / crashed-create leftovers (a _log
+                # dir with no loadable v*.json) / corrupt latest snapshot: defer —
                 # the first actual use re-raises, and create/repair flows
                 # stay able to construct the object (ADVICE r3)
                 pass
@@ -285,6 +250,18 @@ class SnapshotTable:
         v = self.current_version() if version is None else version
         with open(self._snap_path(v)) as f:
             data = json.load(f)
+        # every writer of this engine keeps bucket pointers in manifests;
+        # inline ones come from a retired writer, and committing on top of
+        # them would silently drop every bucket the commit does not touch
+        if any(data.get("buckets", {}).values()) or any(
+            data.get("deltas", {}).values()
+        ):
+            raise RuntimeError(
+                f"{self._snap_path(v)} stores inline bucket pointers (a "
+                "retired snapshot format); rewrite the table: read its data "
+                "via spark.read.parquet + LWW-reduce, then create() + merge() "
+                "into a new table"
+            )
         stored_manifests = data.get("manifests") or {}
         data["manifests"] = {}
         snap = Snapshot(**data)
@@ -293,24 +270,12 @@ class SnapshotTable:
             full = os.path.join(mdir, fname)
             for b in blist:
                 snap.manifests[str(b)] = full
-        # format gate: format-1 tables shared co-hashed buckets per file
-        # and relied on a read-side _b filter this code no longer applies;
-        # reading one here would silently return stale rows after a merge
-        if snap.buckets and snap.properties.get("format") != 2:
-            raise RuntimeError(
-                f"{self.root} is a format-1 snapshot table (shared-bucket "
-                "files); rewrite it with a format-2 writer (read the old "
-                "data via spark.read.parquet + LWW-reduce, then create() "
-                "+ merge() into a new table) before using this engine"
-            )
         # the STORED bucket count is authoritative (ADVICE r2): an instance
         # opened with a mismatched n_buckets would silently under-read
         # (read() iterates range(self.n_buckets)) or mis-bucket merges.
-        # Adopt it and invalidate the route-expression cache.
         stored_n = snap.properties.get("n_buckets")
-        if stored_n is not None and int(stored_n) != self.n_buckets:
+        if stored_n is not None:
             self.n_buckets = int(stored_n)
-            self._route_col = None
         return snap
 
     def snapshot(self, version: int | None = None) -> Snapshot:
@@ -344,17 +309,10 @@ class SnapshotTable:
         the parent's manifests for the rest. A merge into 1 of 10^6 files'
         worth of buckets serializes kilobytes, not the whole file_stats map
         (VERDICT r2 what's-wrong #1 — the O(table-files)-per-commit Amdahl
-        term). Populated buckets of a legacy inline snapshot auto-migrate
-        on the first commit."""
-        todo = {int(b) for b in touched}
+        term)."""
         new_manifests = dict(snap.manifests)
-        for bs in set(list(snap.buckets) + list(snap.deltas)):
-            if bs not in new_manifests and (
-                snap.buckets.get(bs) or snap.deltas.get(bs)
-            ):
-                todo.add(int(bs))  # legacy inline bucket -> migrate
         entries: dict[str, dict] = {}
-        for b in sorted(todo):
+        for b in sorted({int(b) for b in touched}):
             bs = str(b)
             base = snap.buckets.get(bs, [])
             delt = snap.deltas.get(bs, [])
@@ -383,22 +341,15 @@ class SnapshotTable:
                 new_manifests[bs] = mpath
         snap.manifests = new_manifests
 
-    def _commit(self, snap: Snapshot, touched=None) -> None:
+    def _commit(self, snap: Snapshot, touched) -> None:
         """Atomic create of the next snapshot file (fails on conflict).
-        ``touched`` = bucket ids whose state this commit changed; when
-        given, those buckets' pointers+stats are sharded into an immutable
-        manifest file and the snapshot JSON stores only the O(n_buckets)
-        manifest map. ``touched=None`` keeps legacy inline serialization
-        (used by nothing internally; retained for hand-built snapshots)."""
+        ``touched`` = bucket ids whose state this commit changed: their
+        pointers+stats are sharded into an immutable manifest file and the
+        snapshot JSON stores only the O(n_buckets) manifest map."""
         os.makedirs(self._log_dir, exist_ok=True)
-        if touched is not None:
-            self._shard_metadata(snap, touched)
-        payload = asdict(snap)
-        if snap.manifests:
-            # resolved views live in the manifests; don't double-store
-            payload["buckets"] = {}
-            payload["deltas"] = {}
-            payload["file_stats"] = {}
+        self._shard_metadata(snap, touched)
+        # resolved views live in the manifests; don't double-store
+        payload = {**asdict(snap), "buckets": {}, "deltas": {}, "file_stats": {}}
         inv: dict[str, list[int]] = {}
         for bs, mpath in snap.manifests.items():
             inv.setdefault(os.path.basename(mpath), []).append(int(bs))
@@ -412,13 +363,42 @@ class SnapshotTable:
         finally:
             os.unlink(tmp)
 
-    def _stamped_properties(self, snap: Snapshot) -> dict:
-        """Commit properties always re-stamp format 2 + the bucket count:
-        a v2 writer committing into an EMPTY pre-existing format-1 table
-        (which passes the format gate because buckets is empty) must not
-        leave its one-bucket-per-file output flagged format-1, or the next
-        snapshot() raises against the writer's own valid data (ADVICE r2)."""
-        return {**snap.properties, "format": 2, "n_buckets": self.n_buckets}
+    def _commit_next(
+        self,
+        snap: Snapshot,
+        buckets: dict[str, list[str]],
+        deltas: dict[str, list[str]],
+        applied: dict[str, list[list[int]]],
+        lineage: list[dict],
+        schema_json: str,
+        touched,
+    ) -> int:
+        """Commit the successor of ``snap`` with the given file pointers and
+        return its version. ``file_stats`` keeps the parent's entries for
+        files still referenced and reads parquet footers for the new ones;
+        the bucket count is (re-)stamped into the properties."""
+        referenced = [p for ps in (*buckets.values(), *deltas.values()) for p in ps]
+        file_stats = {p: snap.file_stats[p] for p in referenced if p in snap.file_stats}
+        file_stats.update(
+            self._collect_file_stats([p for p in referenced if p not in file_stats])
+        )
+        version = snap.version + 1
+        self._commit(
+            Snapshot(
+                version=version,
+                schema_json=schema_json,
+                buckets=buckets,
+                applied=applied,
+                lineage=lineage,
+                parent=snap.version,
+                properties={**snap.properties, "n_buckets": self.n_buckets},
+                deltas=deltas,
+                file_stats=file_stats,
+                manifests=snap.manifests,
+            ),
+            touched,
+        )
+        return version
 
     def _new_data_dir(self, version: int) -> str:
         # collision-free per writer: a losing concurrent committer's files
@@ -437,7 +417,7 @@ class SnapshotTable:
             buckets={},
             applied={},
             parent=None,
-            properties={"n_buckets": self.n_buckets, "format": 2},
+            properties={"n_buckets": self.n_buckets},
         )
         self._commit(snap, touched=())
         return self
@@ -454,7 +434,6 @@ class SnapshotTable:
             + [
                 T.StructField("_lsn", T.LongType()),
                 T.StructField("_deleted", T.BooleanType()),
-                T.StructField("_b", T.IntegerType()),
             ]
         )
 
@@ -462,7 +441,9 @@ class SnapshotTable:
         """Raw stored rows (incl. tombstones + sys cols) of the given files.
 
         An explicit read schema makes additive evolution free: files written
-        before a column existed return null for it — no rewrite. No bucket
+        before a column existed return null for it — no rewrite — and
+        columns the schema no longer names (the bucket column ``_b`` older
+        writers stored) are skipped. No bucket
         filter is needed: every file holds exactly one bucket (routing
         invariant), so the path list IS the bucket pruning.
         """
@@ -471,41 +452,12 @@ class SnapshotTable:
             return self.spark.createDataFrame([], schema)
         return self.spark.read.schema(schema).parquet(*sorted(set(paths)))
 
-    def _bucket_paths(
-        self, snap: Snapshot, bucket_ids: list[int], include_deltas: bool = True
-    ) -> list[str]:
-        out = [p for b in bucket_ids for p in snap.buckets.get(str(b), [])]
-        if include_deltas:
-            out += [p for b in bucket_ids for p in snap.deltas.get(str(b), [])]
-        return out
-
-    def _lww_reduce(self, df: DataFrame, payload_cols: list[str]) -> DataFrame:
-        """The last-writer-wins reducer: per key keep the max-``_lsn`` row.
-        Hash agg with map-side partial combine — the merge semantics of
-        Iceberg ``MERGE INTO ... WHEN MATCHED`` expressed as one aggregate
-        (SURVEY.md §7.2)."""
-        nonkey = [c for c in payload_cols if c not in KEY]
-        agg_cols = self._cached_cols(
-            "lww_agg",
-            tuple(nonkey),
-            lambda: [
-                F.max_by(
-                    F.struct(*nonkey, "_deleted", "_b"), F.col("_lsn")
-                ).alias("_w"),
-                F.max("_lsn").alias("_lsn"),
-            ],
-        )
-        sel_cols = self._cached_cols(
-            "lww_sel",
-            tuple(nonkey),
-            lambda: [
-                *[F.col(f"_w.{c}").alias(c) for c in nonkey],
-                F.col("_lsn"),
-                F.col("_w._deleted").alias("_deleted"),
-                F.col("_w._b").alias("_b"),
-            ],
-        )
-        return df.groupBy(*KEY).agg(*agg_cols).select(*KEY, *sel_cols)
+    def _bucket_paths(self, snap: Snapshot, bucket_ids: list[int]) -> list[str]:
+        return [
+            p
+            for b in bucket_ids
+            for p in snap.buckets.get(str(b), []) + snap.deltas.get(str(b), [])
+        ]
 
     def bucket_for_key(self, conv_id: str) -> int:
         """Bucket id of one conv_id — the same ``pmod(hash(conv_id),
@@ -608,7 +560,7 @@ class SnapshotTable:
                 snap, self._bucket_paths(snap, list(range(self.n_buckets)))
             )
         if any_deltas:
-            df = self._lww_reduce(df, [f.name for f in self.payload_schema(snap)])
+            df = last_writer_wins(df, KEY, "_lsn")
         if not include_deleted:
             df = df.filter(~F.col("_deleted"))
         return df.drop(*_SYS_COLS) if not include_deleted else df
@@ -641,8 +593,6 @@ class SnapshotTable:
         merge reduce+route runs on a single exchange of the payload."""
         return F.pmod(F.hash(F.col("conv_id")), F.lit(self.n_buckets)).cast("int")
 
-    _bucket_col = bucket_expr
-
     def _partition_by_bucket(self, df: DataFrame) -> DataFrame:
         """Shuffle ``df`` so partition index == bucket id (see
         :meth:`bucket_expr`). AQE never coalesces an explicit
@@ -651,17 +601,13 @@ class SnapshotTable:
         exchange instead of adding its own."""
         return df.repartition(self.n_buckets, F.col("conv_id"))
 
-    def _write_bucketed(
-        self, df: DataFrame, data_dir: str, routed: bool = False
-    ) -> dict[int, list[str]]:
-        """Flat parquet write where shuffle partition b == bucket b, so
-        file index == bucket id. Returns bucket -> new file paths.
-        ``routed=True`` promises ``df`` is already partitioned by
-        :meth:`_partition_by_bucket` (e.g. the merge reducer's output,
-        whose aggregation preserved that exchange) and skips the
-        shuffle."""
-        if not routed:
-            df = self._partition_by_bucket(df)
+    @staticmethod
+    def _write_bucketed(df: DataFrame, data_dir: str) -> dict[int, list[str]]:
+        """Flat parquet write of ``df``, which must already be partitioned
+        by :meth:`_partition_by_bucket` (the LWW reducer's output, whose
+        aggregation preserved that exchange): shuffle partition b ==
+        bucket b, so file index == bucket id. Returns bucket -> new file
+        paths."""
         df.write.mode("errorifexists").parquet(data_dir)
         out: dict[int, list[str]] = {}
         for f in os.listdir(data_dir):
@@ -720,9 +666,7 @@ class SnapshotTable:
         stream_id: str = "default",
         t_start: float | None = None,
         incoming_stats: dict[int, tuple[str | None, str | None, int]] | None = None,
-        observe_partitions: int = 32,
         mode: str = "auto",
-        delta_threshold: float = 3.0,
     ) -> tuple[int, list[tuple[int, int]] | None]:
         """Apply a change batch (``op`` + ``lsn`` columns; multiple events
         per key allowed — the merge aggregation is itself the last-writer-
@@ -741,7 +685,7 @@ class SnapshotTable:
           per key) as per-bucket delta files; zero table rewrite. Reads
           LWW-reduce until ``compact()``.
         - ``"auto"``  — delta when the files a CoW would rewrite hold more
-          than ``delta_threshold``× the incoming rows, else CoW. Small
+          than ``_DELTA_THRESHOLD``× the incoming rows, else CoW. Small
           incremental batches against a big table take the O(batch) path;
           bulk loads take the pre-reduced path.
 
@@ -760,6 +704,26 @@ class SnapshotTable:
         prior = snap.applied.get(stream_id, [])
         if _covered(prior, lo, hi):
             return -1, None  # exactly-once: already applied
+        applied = {**snap.applied, stream_id: _merge_ranges(prior + [[lo, hi]])}
+        new_version = snap.version + 1
+
+        def lineage(counts: list[tuple[int, int]]) -> list[dict]:
+            t_end = time.time()
+            return [
+                asdict(
+                    LineageEntry(
+                        batch_id=batch_id,
+                        offset_start=lo,
+                        offset_end=hi,
+                        snapshot_id=new_version,
+                        rows_applied=int(n),
+                        partition=int(p),
+                        t_start=t0,
+                        t_end=t_end,
+                    )
+                )
+                for p, n in counts
+            ]
 
         # ---- lineage-by-observation (no extra pass) ---------------------
         observation = None
@@ -773,19 +737,19 @@ class SnapshotTable:
                 sp = F.col("source_partition") if has_sp else F.lit(-1)
                 m = [
                     F.sum(F.when(sp == i, 1).otherwise(0)).alias(f"p{i}")
-                    for i in range(observe_partitions if has_sp else 0)
+                    for i in range(_OBSERVE_PARTITIONS if has_sp else 0)
                 ]
                 m.append(
                     F.sum(
                         F.when(
-                            (sp < 0) | (sp >= observe_partitions), 1
+                            (sp < 0) | (sp >= _OBSERVE_PARTITIONS), 1
                         ).otherwise(0)
                     ).alias("rest")
                 )
                 return m
 
-            metrics = self._cached_cols(
-                "observe_metrics", (has_sp, observe_partitions), _build_metrics
+            metrics = cached_columns(
+                self.spark, "observe_metrics", (has_sp,), _build_metrics
             )
             updates = updates.observe(observation, *metrics)
         updates = (
@@ -814,13 +778,13 @@ class SnapshotTable:
 
         upd = upd.select(
             *payload_cols,
-            *self._cached_cols(
+            *cached_columns(
+                self.spark,
                 "merge_sys_cols",
-                (self.n_buckets,),
+                (),
                 lambda: [
                     F.col("lsn").alias("_lsn"),
                     (F.col("op") == "D").alias("_deleted"),
-                    self._bucket_col().alias("_b"),
                 ],
             ),
         )
@@ -829,7 +793,7 @@ class SnapshotTable:
         if incoming_stats is None:
             incoming_stats = {
                 int(r["b"]): (r["klo"], r["khi"], int(r["n"]))
-                for r in upd.groupBy(F.col("_b").alias("b"))
+                for r in upd.groupBy(self.bucket_expr().alias("b"))
                 .agg(
                     F.min("conv_id").alias("klo"),
                     F.max("conv_id").alias("khi"),
@@ -842,38 +806,16 @@ class SnapshotTable:
             # REAL offset range: commit a data-less snapshot that records
             # the range, else the ledger keeps a permanent hole and replay-
             # completeness checks report the stream as unfinished
-            applied = dict(snap.applied)
-            applied[stream_id] = _merge_ranges(prior + [[lo, hi]])
-            empty_version = snap.version + 1
-            self._commit(
-                Snapshot(
-                    version=empty_version,
-                    schema_json=snap.schema_json,
-                    buckets=snap.buckets,
-                    applied=applied,
-                    lineage=[
-                        asdict(
-                            LineageEntry(
-                                batch_id=batch_id,
-                                offset_start=lo,
-                                offset_end=hi,
-                                snapshot_id=empty_version,
-                                rows_applied=0,
-                                partition=-1,
-                                t_start=t0,
-                                t_end=time.time(),
-                            )
-                        )
-                    ],
-                    parent=snap.version,
-                    properties=self._stamped_properties(snap),
-                    deltas=snap.deltas,
-                    file_stats=snap.file_stats,
-                    manifests=snap.manifests,
-                ),
+            self._commit_next(
+                snap,
+                snap.buckets,
+                snap.deltas,
+                applied,
+                lineage([(-1, 0)]),
+                snap.schema_json,
                 touched=(),  # data untouched: reuse parent manifests as-is
             )
-            return empty_version, [(-1, 0)]
+            return new_version, [(-1, 0)]
 
         # ---- file-level pruning -----------------------------------------
         candidates: dict[int, list[str]] = {}
@@ -892,7 +834,7 @@ class SnapshotTable:
             )
         incoming_rows = sum(n for _, _, n in incoming_stats.values())
         use_delta = mode == "delta" or (
-            mode == "auto" and cand_rows > delta_threshold * max(incoming_rows, 1)
+            mode == "auto" and cand_rows > _DELTA_THRESHOLD * max(incoming_rows, 1)
         )
 
         # ---- reduce + write ----------------------------------------------
@@ -903,61 +845,30 @@ class SnapshotTable:
         # aggregate runs in place and the write needs no further exchange
         if use_delta:
             # in-batch LWW only: O(batch) write volume, table untouched
-            winner = self._lww_reduce(self._partition_by_bucket(upd), payload_cols)
+            rows = upd
         else:
-            current = self._read_files(
+            rows = self._read_files(
                 snap, [p for ps in candidates.values() for p in ps]
             )
             for f in new_fields:  # stored side lacks brand-new columns
-                current = current.withColumn(f.name, F.lit(None).cast(f.dataType))
-            winner = self._lww_reduce(
-                self._partition_by_bucket(
-                    current.select(*upd.columns).unionByName(upd)
-                ),
-                payload_cols,
-            )
+                rows = rows.withColumn(f.name, F.lit(None).cast(f.dataType))
+            rows = rows.select(*upd.columns).unionByName(upd)
+        winner = last_writer_wins(self._partition_by_bucket(rows), KEY, "_lsn")
 
         timing = os.environ.get("SPARK_GRAFT_MERGE_TIMING")
         t_plan = time.time()
-        new_version = snap.version + 1
-        data_dir = self._new_data_dir(new_version)
-        by_bucket = self._write_bucketed(winner, data_dir, routed=True)
+        by_bucket = self._write_bucketed(winner, self._new_data_dir(new_version))
         t_write = time.time()
 
-        new_buckets = dict(snap.buckets)
-        new_deltas = {k: list(v) for k, v in snap.deltas.items()}
-        if use_delta:
-            for b in incoming_stats:
-                new = by_bucket.get(b, [])
-                if new:
-                    new_deltas[str(b)] = new_deltas.get(str(b), []) + new
-        else:
-            for b in incoming_stats:
-                new_buckets[str(b)] = untouched[b] + by_bucket.get(b, [])
-
-        new_paths = [p for ps in by_bucket.values() for p in ps]
-        referenced = {
-            p
-            for ps in list(new_buckets.values()) + list(new_deltas.values())
-            for p in ps
-        }
-        file_stats = {
-            p: s for p, s in snap.file_stats.items() if p in referenced
-        }
-        file_stats.update(self._collect_file_stats(new_paths))
-        if timing:
-            import sys
-
-            print(
-                f"[merge-timing] b{batch_id} plan={t_plan - t0:.2f}s "
-                f"write={t_write - t_plan:.2f}s "
-                f"stats={time.time() - t_write:.2f}s",
-                file=sys.stderr,
-                flush=True,
-            )
+        buckets, deltas = dict(snap.buckets), dict(snap.deltas)
+        for b in incoming_stats:
+            new = by_bucket.get(b, [])
+            if not use_delta:
+                buckets[str(b)] = untouched[b] + new
+            elif new:
+                deltas[str(b)] = deltas.get(str(b), []) + new
 
         # ---- lineage + ledger -------------------------------------------
-        t1 = time.time()
         obs_counts: list[tuple[int, int]] | None = None
         if partition_counts is None:
             got = observation.get  # blocks until the write action's metrics
@@ -969,38 +880,25 @@ class SnapshotTable:
             if got.get("rest"):
                 obs_counts.append((-1, int(got["rest"])))
             partition_counts = sorted(obs_counts) or [(-1, 0)]
-        lineage = [
-            asdict(
-                LineageEntry(
-                    batch_id=batch_id,
-                    offset_start=lo,
-                    offset_end=hi,
-                    snapshot_id=new_version,
-                    rows_applied=int(n),
-                    partition=int(p),
-                    t_start=t0,
-                    t_end=t1,
-                )
-            )
-            for p, n in partition_counts
-        ]
-        applied = dict(snap.applied)
-        applied[stream_id] = _merge_ranges(prior + [[lo, hi]])
-        self._commit(
-            Snapshot(
-                version=new_version,
-                schema_json=evolved.json(),
-                buckets=new_buckets,
-                applied=applied,
-                lineage=lineage,
-                parent=snap.version,
-                properties=self._stamped_properties(snap),
-                deltas=new_deltas,
-                file_stats=file_stats,
-                manifests=snap.manifests,
-            ),
+        self._commit_next(
+            snap,
+            buckets,
+            deltas,
+            applied,
+            lineage(partition_counts),
+            evolved.json(),
             touched=incoming_stats.keys(),
         )
+        if timing:
+            import sys
+
+            print(
+                f"[merge-timing] b{batch_id} plan={t_plan - t0:.2f}s "
+                f"write={t_write - t_plan:.2f}s "
+                f"stats={time.time() - t_write:.2f}s",
+                file=sys.stderr,
+                flush=True,
+            )
         return new_version, obs_counts
 
     # ------------------------------------------------------------ expire
@@ -1080,44 +978,19 @@ class SnapshotTable:
         paths = self._bucket_paths(snap, sel)
         if not paths:
             return snap.version
-        payload_cols = [f.name for f in self.payload_schema(snap)]
-        df = self._lww_reduce(
-            self._partition_by_bucket(self._read_files(snap, paths)), payload_cols
+        df = last_writer_wins(
+            self._partition_by_bucket(self._read_files(snap, paths)), KEY, "_lsn"
         )
         if drop_tombstones:
             df = df.filter(~F.col("_deleted"))
-        new_version = snap.version + 1
-        data_dir = self._new_data_dir(new_version)
-        by_bucket = self._write_bucketed(df, data_dir, routed=True)
-        new_buckets = dict(snap.buckets)
-        new_deltas = {k: list(v) for k, v in snap.deltas.items()}
+        by_bucket = self._write_bucketed(df, self._new_data_dir(snap.version + 1))
+        buckets, deltas = dict(snap.buckets), dict(snap.deltas)
         for b in sel:
-            new_buckets[str(b)] = by_bucket.get(b, [])
-            new_deltas.pop(str(b), None)
-        new_paths = [p for ps in by_bucket.values() for p in ps]
-        referenced = {
-            p
-            for ps in list(new_buckets.values()) + list(new_deltas.values())
-            for p in ps
-        }
-        file_stats = {p: s for p, s in snap.file_stats.items() if p in referenced}
-        file_stats.update(self._collect_file_stats(new_paths))
-        self._commit(
-            Snapshot(
-                version=new_version,
-                schema_json=snap.schema_json,
-                buckets=new_buckets,
-                applied=snap.applied,
-                lineage=[],
-                parent=snap.version,
-                properties=self._stamped_properties(snap),
-                deltas=new_deltas,
-                file_stats=file_stats,
-                manifests=snap.manifests,
-            ),
-            touched=sel,
+            buckets[str(b)] = by_bucket.get(b, [])
+            deltas.pop(str(b), None)
+        return self._commit_next(
+            snap, buckets, deltas, snap.applied, [], snap.schema_json, touched=sel
         )
-        return new_version
 
     def maintain(
         self, max_delta_files: int = 4, max_base_files: int = 8

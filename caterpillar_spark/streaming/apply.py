@@ -40,6 +40,15 @@ CHANGE_EVENT_SCHEMA = T.StructType(
         T.StructField("source_partition", T.IntegerType(), True),
     ]
 )
+# payload schema of a transcript table: the change-event columns minus the
+# system columns (op, lsn, source_partition)
+TRANSCRIPT_SCHEMA = T.StructType(
+    [
+        f
+        for f in CHANGE_EVENT_SCHEMA.fields
+        if f.name not in ("op", "lsn", "source_partition")
+    ]
+)
 
 
 def stream_changelog(

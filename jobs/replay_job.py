@@ -32,21 +32,13 @@ import json
 import os
 
 from pyspark.sql import SparkSession
-from pyspark.sql import types as T
 
 from caterpillar_spark.cdc import replay_chunks
 from caterpillar_spark.sinks.snapshot_table import SnapshotTable
-from caterpillar_spark.streaming import apply_stream, stream_changelog
-
-TRANSCRIPT_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("role", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("tool", T.StringType()),
-        T.StructField("ts", T.TimestampType()),
-    ]
+from caterpillar_spark.streaming import (
+    TRANSCRIPT_SCHEMA,
+    apply_stream,
+    stream_changelog,
 )
 
 

@@ -105,9 +105,9 @@ def test_nbuckets_adopted_from_snapshot(spark, tmp_path):
 
 
 def test_format2_stamped_on_commit_into_format1_empty(spark, tmp_path):
-    """An EMPTY pre-existing format-1 table passes the format gate; the
-    first v2 merge must re-stamp format 2 or the next snapshot() raises
-    against the writer's own output (ADVICE r2)."""
+    """An EMPTY legacy table whose v0 carries no properties takes merges:
+    the first commit stamps the bucket count and the table keeps loading
+    (ADVICE r2)."""
     root = str(tmp_path / "t")
     tbl = SnapshotTable(spark, root, n_buckets=4).create(PAYLOAD)
     # rewrite v0 as a legacy snapshot: no format / n_buckets properties
@@ -119,6 +119,26 @@ def test_format2_stamped_on_commit_into_format1_empty(spark, tmp_path):
         json.dump(raw, f)
     chunks = write_changelog_chunks(spark, SPEC, str(tmp_path / "log"), n_chunks=1)
     replay_chunks(spark, chunks, tbl)
-    snap = tbl.snapshot()  # must not raise the format gate
-    assert snap.properties.get("format") == 2
+    snap = tbl.snapshot()
     assert snap.properties.get("n_buckets") == 4
+
+
+def test_inline_bucket_pointers_raise_on_load(spark, tmp_path):
+    """A snapshot JSON with inline bucket/delta pointers comes from a
+    retired writer: loading it raises instead of letting the next commit
+    silently drop every bucket it does not touch. The constructor defers
+    the error so repair flows can still open the table."""
+    root = str(tmp_path / "t")
+    tbl = SnapshotTable(spark, root, n_buckets=4).create(PAYLOAD)
+    for field in ("buckets", "deltas"):
+        raw = json.load(open(tbl._snap_path(0)))
+        raw.update(version=1, parent=0, **{field: {"2": ["data/x/part-00002.parquet"]}})
+        with open(tbl._snap_path(1), "w") as f:
+            json.dump(raw, f)
+        reopened = SnapshotTable(spark, root)  # deferred, not raised
+        with pytest.raises(RuntimeError, match="inline bucket pointers"):
+            reopened.snapshot()
+        with pytest.raises(RuntimeError, match="inline bucket pointers"):
+            reopened.read()
+        os.unlink(tbl._snap_path(1))
+    assert tbl.snapshot().version == 0  # empty inline maps load fine

@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from caterpillar_spark import session
 from caterpillar_spark.cdc import apply_changes, replay_chunks
 from caterpillar_spark.generator import (
     GeneratorSpec,
@@ -299,13 +300,41 @@ def test_merge_column_cache_reused_across_batches_and_handles(spark, tmp_path):
     chunks = write_changelog_chunks(spark, SPEC, str(tmp_path / "log"), n_chunks=3)
     tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=16).create(PAYLOAD)
     replay_chunks(spark, chunks, tbl)
-    app = spark.sparkContext.applicationId
-    kinds = {k[1] for k in SnapshotTable._col_cache if k[0] == app}
+    app, cache = session._column_cache
+    assert app == spark.sparkContext.applicationId
+    kinds = {k[0] for k in cache}
     assert {"observe_metrics", "merge_sys_cols", "lww_agg", "lww_sel"} <= kinds
-    n_entries = len(SnapshotTable._col_cache)
+    n_entries = len(cache)
     # same shapes through a second handle + table: zero new cache entries,
     # identical final state
     tbl2 = SnapshotTable(spark, str(tmp_path / "t2"), n_buckets=16).create(PAYLOAD)
     replay_chunks(spark, chunks, tbl2)
-    assert len(SnapshotTable._col_cache) == n_entries
+    assert session._column_cache[1] is cache and len(cache) == n_entries
     assert _final_state_canon(tbl2.read()) == _expected_canon(spark, SPEC)
+
+
+def test_column_cache_holds_one_application(monkeypatch):
+    """The Column-list cache keeps only the current application's lists:
+    a new applicationId (a restarted session) replaces them, so refs into
+    a dead JVM are dropped instead of accumulating."""
+    from types import SimpleNamespace
+
+    monkeypatch.setattr(session, "_column_cache", (None, {}))
+
+    def fake_spark(app_id):
+        return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+    builds = []
+
+    def build():
+        builds.append(1)
+        return [object()]
+
+    a1 = session.cached_columns(fake_spark("app-1"), "k", (1,), build)
+    assert session.cached_columns(fake_spark("app-1"), "k", (1,), build) is a1
+    session.cached_columns(fake_spark("app-1"), "k", (2,), build)
+    assert len(builds) == 2 and len(session._column_cache[1]) == 2
+    a2 = session.cached_columns(fake_spark("app-2"), "k", (1,), build)
+    assert a2 is not a1 and len(builds) == 3
+    assert session._column_cache[0] == "app-2"
+    assert list(session._column_cache[1]) == [("k", (1,))]

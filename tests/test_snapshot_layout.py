@@ -16,7 +16,6 @@ from pyspark.sql import types as T
 from caterpillar_spark.sinks.snapshot_table import (
     SnapshotTable,
     murmur3_hash_bytes,
-    murmur3_hash_int,
 )
 
 PAYLOAD = T.StructType(
@@ -66,20 +65,6 @@ def _table_bytes(tbl):
     return sum(os.path.getsize(p) for p in paths), paths
 
 
-def test_murmur3_python_matches_spark(spark):
-    """The pure-Python Murmur3_x86_32.hashInt must agree with F.hash on
-    int columns — the routing invariant rests on it."""
-    vals = list(range(-50, 500))
-    got = {
-        r["v"]: r["h"]
-        for r in spark.createDataFrame([(v,) for v in vals], "v int")
-        .select("v", F.hash("v").alias("h"))
-        .collect()
-    }
-    for v in vals:
-        assert murmur3_hash_int(v) == got[v], v
-
-
 def test_repartition_places_bucket_in_matching_partition(spark):
     """``repartition(n, conv_id)`` must land every row whose
     ``bucket_expr`` value is b in shuffle partition b — the identity the
@@ -109,7 +94,8 @@ def test_repartition_places_bucket_in_matching_partition(spark):
 def test_one_bucket_per_file(spark, tmp_path):
     """Every data file contains rows of exactly the bucket that points at
     it — the invariant the round-1 flat write violated (co-hashed buckets
-    shared files, so bucket rewrites left stale rows behind)."""
+    shared files, so bucket rewrites left stale rows behind). A row's
+    bucket is computed from its key; files store no bucket column."""
     tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=8).create(PAYLOAD)
     convs = [f"conv_{i:06d}" for i in range(200)]
     tbl.merge(_insert_batch(spark, convs, 0), 0, (0, 199))
@@ -121,7 +107,12 @@ def test_one_bucket_per_file(spark, tmp_path):
             seen_files[p] = int(b_str)
     assert seen_files, "no data files written"
     for p, b in seen_files.items():
-        got = {r["_b"] for r in spark.read.parquet(p).select("_b").collect()}
+        df = spark.read.parquet(p)
+        assert "_b" not in df.columns, f"{p} stores a bucket column"
+        got = {
+            r["b"]
+            for r in df.select(F.pmod(F.hash("conv_id"), F.lit(8)).alias("b")).collect()
+        }
         assert got == {b}, f"{p} holds buckets {got}, pointer says {b}"
 
 
@@ -191,9 +182,8 @@ def test_file_pruning_bounds_write_amplification(spark, tmp_path):
 
 def test_murmur3_bytes_python_matches_spark(spark):
     """The pure-Python Murmur3_x86_32-over-bytes must agree with F.hash
-    on string columns — point-lookup bucket routing rests on it (the
-    read-side twin of the int parity test above; covers aligned words,
-    every tail length, and multi-byte UTF-8)."""
+    on string columns — point-lookup bucket routing rests on it (covers
+    aligned words, every tail length, and multi-byte UTF-8)."""
     vals = [f"conv_{i:08d}" for i in range(50)] + [
         "",
         "a",
