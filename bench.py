@@ -45,21 +45,9 @@ BENCH_QUERIES = [
 
 
 def cdc_events_dir(spark, n_events: int, n_chunks: int) -> list[str]:
-    """Generate-once cache of the benchmark change stream.
-
-    ``SPARK_GRAFT_BENCH_HOT_FRAC`` / ``SPARK_GRAFT_BENCH_HOT_TRAFFIC``
-    override the generator's skew shape (defaults 0.01 / 0.5) so the
-    scaling harness can record a Zipf-hot run; non-default skew gets its
-    own cache directory so shapes never mix."""
+    """Generate-once cache of the benchmark change stream."""
     base = os.environ.get("SPARK_GRAFT_BENCH_CACHE", "/tmp/caterpillar_bench")
-    hot_frac = float(os.environ.get("SPARK_GRAFT_BENCH_HOT_FRAC", "0.01"))
-    hot_traffic = float(os.environ.get("SPARK_GRAFT_BENCH_HOT_TRAFFIC", "0.5"))
-    tag = (
-        ""
-        if (hot_frac, hot_traffic) == (0.01, 0.5)
-        else f"_hf{hot_frac:g}_ht{hot_traffic:g}"
-    )
-    out = f"{base}/events_{n_events}_{n_chunks}{tag}"
+    out = f"{base}/events_{n_events}_{n_chunks}"
     marker = f"{out}/_DONE"
     if not os.path.exists(marker):
         shutil.rmtree(out, ignore_errors=True)
@@ -68,8 +56,6 @@ def cdc_events_dir(spark, n_events: int, n_chunks: int) -> list[str]:
             n_convs=max(1000, n_events // 100),
             turns_per_conv=10,
             seed=42,
-            hot_frac=hot_frac,
-            hot_traffic=hot_traffic,
             n_source_partitions=32,
         )
         write_changelog_chunks(spark, spec, out, n_chunks=n_chunks)
@@ -80,6 +66,45 @@ def cdc_events_dir(spark, n_events: int, n_chunks: int) -> list[str]:
 
 
 TABLE_BASE = "/tmp/caterpillar_bench"
+
+
+def _burn(n: int) -> float:
+    import numpy as np
+
+    a = np.random.default_rng(0).random((256, 256))
+    t0 = time.perf_counter()
+    for _ in range(n):
+        a = a @ a
+        a /= np.abs(a).max() + 1.0
+    return time.perf_counter() - t0
+
+
+def host_probe(n_procs: int = 8, reps: int = 60) -> float:
+    """Aggregate host compute capacity RIGHT NOW (matmuls/sec across
+    n_procs processes, fixed work so runtime is bounded even when
+    throttled). ~1-4s per probe."""
+    import multiprocessing as mp
+
+    with mp.get_context("spawn").Pool(n_procs) as pool:
+        pool.map(_burn, [2] * n_procs)  # spawn + import warm-up, untimed
+        best = 0.0
+        for _ in range(3):  # best-of-3 damps probe-side noise
+            t0 = time.perf_counter()
+            pool.map(_burn, [reps] * n_procs)
+            best = max(best, n_procs * reps / (time.perf_counter() - t0))
+        return best
+
+
+def pin_cores(cores: str) -> None:
+    """Pin this process (and the JVM it launches) to the first ``cores``
+    CPUs; ``*`` leaves it unpinned."""
+    if cores != "*":
+        try:
+            os.sched_setaffinity(
+                0, set(range(min(int(cores), os.cpu_count() or 32)))
+            )
+        except (ValueError, OSError):
+            pass  # non-numeric cores or restricted platform: run unpinned
 
 
 def run_cdc_bench(spark, n_events: int, n_chunks: int = 4) -> dict:
@@ -139,13 +164,7 @@ def main() -> None:
     # 664k, unpinned 32 = 345k. Sizing parallelism to the hardware is the
     # job config, not a trick; the cores used are recorded in the output.
     cores = os.environ.get("SPARK_GRAFT_CPUS", "16")
-    if cores != "*":
-        try:
-            os.sched_setaffinity(
-                0, set(range(min(int(cores), os.cpu_count() or 32)))
-            )
-        except (ValueError, OSError):
-            pass  # non-numeric cores or restricted platform: run unpinned
+    pin_cores(cores)
     n_events = int(os.environ.get("SPARK_GRAFT_BENCH_EVENTS", "10000000"))
     spark = get_spark("caterpillar-bench", cores=cores)
 
@@ -192,12 +211,7 @@ def main() -> None:
 
     # host-capacity probe recorded alongside: a low value flags that this
     # bench landed in a hypervisor-throttled window (see BENCH/BASELINE.md)
-    try:
-        from tools.run_scaling import host_probe
-
-        host = round(host_probe(), 1)
-    except Exception:
-        host = None
+    host = round(host_probe(), 1)
 
     sf = float(sf_dir.rstrip("/").split("sf")[-1]) if "sf" in sf_dir else -1.0
     # regression gate vs the newest recorded round on the same cores and

@@ -855,10 +855,7 @@ class SnapshotTable:
             rows = rows.select(*upd.columns).unionByName(upd)
         winner = last_writer_wins(self._partition_by_bucket(rows), KEY, "_lsn")
 
-        timing = os.environ.get("SPARK_GRAFT_MERGE_TIMING")
-        t_plan = time.time()
         by_bucket = self._write_bucketed(winner, self._new_data_dir(new_version))
-        t_write = time.time()
 
         buckets, deltas = dict(snap.buckets), dict(snap.deltas)
         for b in incoming_stats:
@@ -889,16 +886,6 @@ class SnapshotTable:
             evolved.json(),
             touched=incoming_stats.keys(),
         )
-        if timing:
-            import sys
-
-            print(
-                f"[merge-timing] b{batch_id} plan={t_plan - t0:.2f}s "
-                f"write={t_write - t_plan:.2f}s "
-                f"stats={time.time() - t_write:.2f}s",
-                file=sys.stderr,
-                flush=True,
-            )
         return new_version, obs_counts
 
     # ------------------------------------------------------------ expire

@@ -1,8 +1,8 @@
 """10^8-event pinned replay record (VERDICT r2 next-round #7): measure —
 not assert — that the driver-serial merge phases amortize at large
-batches. Captures the per-batch plan/write/stats breakdown the sink
-emits under SPARK_GRAFT_MERGE_TIMING and reports the serial share
-(everything outside the distributed write job) of replay wall time.
+batches. Times each merge's plan/write/stats phases (``merge_phases``)
+and reports the serial share (everything outside the distributed write
+job) of replay wall time.
 
 Usage: python tools/big_replay.py [--events 100000000] [--chunks 4]
        [--cores 16]
@@ -13,30 +13,65 @@ from __future__ import annotations
 
 import argparse
 import contextlib
-import io
+import inspect
 import json
 import os
-import re
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from caterpillar_spark.sinks.snapshot_table import SnapshotTable  # noqa: E402
 
 
-class _Tee(io.TextIOBase):
-    """Capture [merge-timing] lines while passing everything through."""
+@contextlib.contextmanager
+def merge_phases(batches: int):
+    """Wrap ``SnapshotTable.merge`` and ``_write_bucketed`` for the block
+    and yield a list that gains one ``{batch, plan_sec, write_sec,
+    stats_sec}`` per merge that writes data: plan runs from the merge's
+    ``t_start`` (else its entry) to the write, write is the time inside
+    ``_write_bucketed``, stats runs from the write's exit to the merge's
+    return. After restoring both, raises unless exactly ``batches``
+    phases were captured: a merge that stopped calling the wrapped
+    writer must fail the record, not leave it empty."""
+    merge = SnapshotTable.__dict__["merge"]
+    write = SnapshotTable.__dict__["_write_bucketed"]
+    bind = inspect.signature(merge).bind
+    phases: list[dict] = []
+    writes: list[tuple[float, float]] = []
 
-    def __init__(self, real):
-        self.real = real
-        self.captured: list[str] = []
+    def timed_merge(self, *args, **kwargs):
+        call = bind(self, *args, **kwargs).arguments
+        t0 = call.get("t_start")
+        t0 = time.time() if t0 is None else t0
+        writes.clear()
+        out = merge(self, *args, **kwargs)
+        if writes:
+            (w0, _), (_, w1) = writes[0], writes[-1]
+            phases.append({
+                "batch": call["batch_id"], "plan_sec": round(w0 - t0, 2),
+                "write_sec": round(w1 - w0, 2),
+                "stats_sec": round(time.time() - w1, 2),
+            })
+        return out
 
-    def write(self, s):
-        if "[merge-timing]" in s:
-            self.captured.append(s)
-        return self.real.write(s)
+    def timed_write(*args, **kwargs):
+        t = time.time()
+        out = write.__func__(*args, **kwargs)
+        writes.append((t, time.time()))
+        return out
 
-    def flush(self):
-        self.real.flush()
+    SnapshotTable.merge = timed_merge
+    SnapshotTable._write_bucketed = staticmethod(timed_write)
+    try:
+        yield phases
+    finally:
+        SnapshotTable.merge, SnapshotTable._write_bucketed = merge, write
+    if len(phases) != batches:
+        raise RuntimeError(
+            f"captured {len(phases)} merge phases for {batches} data batches"
+        )
 
 
 def main() -> None:
@@ -48,8 +83,7 @@ def main() -> None:
     args = ap.parse_args()
 
     os.sched_setaffinity(0, set(range(args.cores)))
-    os.chdir("/root/repo")
-    os.environ["SPARK_GRAFT_MERGE_TIMING"] = "1"
+    os.chdir(ROOT)
 
     from caterpillar_spark.session import get_spark
 
@@ -75,24 +109,9 @@ def main() -> None:
     bench.cdc_events_dir(spark, args.events, args.chunks)
     gen_sec = round(time.time() - t_gen0, 1)
 
-    tee = _Tee(sys.stderr)
-    with contextlib.redirect_stderr(tee):
+    # every chunk of the generated log carries events, so each writes data
+    with merge_phases(args.chunks) as phases:
         res = bench.run_cdc_bench(spark, args.events, args.chunks)
-
-    phases = []
-    for line in tee.captured:
-        m = re.search(
-            r"b(\d+) plan=([\d.]+)s write=([\d.]+)s stats=([\d.]+)s", line
-        )
-        if m:
-            phases.append(
-                {
-                    "batch": int(m.group(1)),
-                    "plan_sec": float(m.group(2)),
-                    "write_sec": float(m.group(3)),
-                    "stats_sec": float(m.group(4)),
-                }
-            )
     serial = sum(p["plan_sec"] + p["stats_sec"] for p in phases)
     record = {
         "events": args.events,
@@ -110,8 +129,7 @@ def main() -> None:
         "timestamp": time.strftime("%Y-%m-%d %H:%M:%S"),
     }
     print(json.dumps(record))
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
-    with open("/root/repo/BENCH/big_replay.json", "a") as f:
+    with open(os.path.join(ROOT, "BENCH", "big_replay.json"), "a") as f:
         f.write(json.dumps(record) + "\n")
 
 

@@ -12,7 +12,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 
@@ -73,28 +73,18 @@ def arrow_kind(t) -> str:
     """Canonical type token for a pyarrow DataType (DuckDB result side)."""
     import pyarrow as pa
 
-    if pa.types.is_int64(t):
-        return "int64"
-    if pa.types.is_int32(t):
-        return "int32"
-    if pa.types.is_int16(t):
-        return "int16"
-    if pa.types.is_float64(t):
-        return "float64"
-    if pa.types.is_float32(t):
-        return "float32"
-    if pa.types.is_string(t) or pa.types.is_large_string(t):
-        return "string"
-    if pa.types.is_boolean(t):
-        return "bool"
-    if pa.types.is_timestamp(t):
-        return "timestamp"
-    if pa.types.is_date(t):
-        return "date"
-    if pa.types.is_binary(t) or pa.types.is_large_binary(t):
-        return "binary"
-    if pa.types.is_decimal(t):
-        return "decimal"
+    kinds = [
+        ("int64", pa.types.is_int64), ("int32", pa.types.is_int32),
+        ("int16", pa.types.is_int16), ("float64", pa.types.is_float64),
+        ("float32", pa.types.is_float32), ("string", pa.types.is_string),
+        ("string", pa.types.is_large_string), ("bool", pa.types.is_boolean),
+        ("timestamp", pa.types.is_timestamp), ("date", pa.types.is_date),
+        ("binary", pa.types.is_binary), ("binary", pa.types.is_large_binary),
+        ("decimal", pa.types.is_decimal),
+    ]
+    for tok, is_kind in kinds:
+        if is_kind(t):
+            return tok
     if pa.types.is_list(t) or pa.types.is_large_list(t):
         return f"list<{arrow_kind(t.value_type)}>"
     return str(t)

@@ -37,11 +37,7 @@ def main() -> None:
     import __spark_entry__ as entrymod
 
     cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if cores != "*":
-        try:
-            os.sched_setaffinity(0, set(range(min(int(cores), os.cpu_count() or 32))))
-        except (ValueError, OSError):
-            pass
+    benchmod.pin_cores(cores)
     spark = get_spark("caterpillar-profile", cores=cores)
     qs = entrymod.queries()
     names = args.queries or benchmod.BENCH_QUERIES
