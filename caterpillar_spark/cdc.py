@@ -1,15 +1,10 @@
 """apply_changes — the north-star entry point: ordered change-event batch
-(or chunked log replay) -> LSN dedup -> bucketed MERGE upsert -> lineage.
-
-Pipeline per batch (all JVM-side DataFrame ops, zero per-row Python):
-
-1. per-source-partition lineage counts (min/max lsn, rows) — the Spark
-   version of the reference's per-task record accounting
-   (``internal/pkg/pipeline/task/task.go:95-108``);
-2. last-writer-wins dedup by lsn (hash agg ``max_by``; delete events kept
-   so the MERGE can tombstone them);
-3. ``SnapshotTable.merge`` — bucket-pruned upsert, atomic snapshot commit
-   carrying the offset ledger (exactly-once) and the lineage rows.
+(or chunked log replay) -> ``SnapshotTable.merge``, which reduces by LSN
+(last writer wins, deletes kept as tombstones), upserts bucket by bucket
+and commits data, offset ledger and per-source-partition lineage counts
+(the reference's per-task record accounting,
+``internal/pkg/pipeline/task/task.go:95-108``) in one atomic snapshot.
+All JVM-side DataFrame ops, zero per-row Python.
 
 Replay (``replay_chunks``) walks an ordered directory of log segments and
 is resumable: a chunk whose LSN range is already in the table's applied
@@ -25,9 +20,8 @@ import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from caterpillar_spark.sinks.snapshot_table import SnapshotTable, _covered
+from caterpillar_spark.sinks.snapshot_table import SnapshotTable
 
 
 @dataclass
@@ -46,98 +40,30 @@ def apply_changes(
     batch_id: int,
     stream_id: str = "default",
     offset_range: tuple[int, int] | None = None,
-    mode: str = "auto",
     batch_rows: int | None = None,
 ) -> BatchResult:
     """Apply one ordered change-event batch to the table, exactly once.
 
-    Two execution shapes, both a single merge job over the batch:
+    ``offset_range`` known up front (binlog segments carry their LSN range
+    and row count, ``batch_rows``, in parquet footers — see
+    ``replay_chunks``) goes straight to :meth:`SnapshotTable.merge`, whose
+    ledger check costs ZERO Spark jobs. Unknown (an ad-hoc batch): one
+    narrow stats pass (:meth:`SnapshotTable._batch_stats`) derives the
+    range, the lineage counts and the per-bucket key stats together, and
+    the merge consumes all three with no further pass.
 
-    - ``offset_range`` known up front (binlog segments carry their LSN
-      range in parquet footers — see ``replay_chunks``): the ledger check
-      happens with ZERO Spark jobs, and per-partition lineage counts are
-      collected by ``observe()`` DURING the merge job; the merge's own
-      narrow stats scan derives per-bucket key ranges for file pruning.
-    - ``offset_range`` unknown (ad-hoc batch): one pruned statistics
-      pass (source_partition/conv_id/lsn columns only) derives range +
-      lineage + per-bucket key stats in a single scan, which the merge
-      then consumes with zero additional passes.
-
-    ``mode`` forwards to :meth:`SnapshotTable.merge` — ``auto`` (default)
-    picks merge-on-read delta appends for small batches and file-pruned
-    copy-on-write for bulk ones.
+    How the batch merges — delta or copy-on-write, with or without a stats
+    pass — is decided by the merge alone, from the batch and table sizes.
     """
     t0 = time.time()
-    has_sp = "source_partition" in events.columns
-    sp_col = F.col("source_partition") if has_sp else F.lit(-1)
-    counts: list[tuple[int, int]] | None = None
-    incoming: dict[int, tuple[str | None, str | None, int]] | None = None
-
+    counts = incoming = None
     if offset_range is None:
-        stats = (
-            events.groupBy(sp_col.alias("sp"), table.bucket_expr().alias("b"))
-            .agg(
-                F.count("*").alias("n"),
-                F.min("lsn").alias("lo"),
-                F.max("lsn").alias("hi"),
-                F.min("conv_id").alias("klo"),
-                F.max("conv_id").alias("khi"),
-            )
-            .collect()
-        )
-        if not stats:
+        offset_range, counts, incoming = table._batch_stats(events)
+        if offset_range is None:
             return BatchResult(batch_id, -1, 0, -1, 0, time.time() - t0)
-        offset_range = (
-            min(int(r["lo"]) for r in stats),
-            max(int(r["hi"]) for r in stats),
-        )
-        incoming = {}
-        for r in stats:
-            b = int(r["b"])
-            prev = incoming.get(b)
-            if prev is None:
-                incoming[b] = (r["klo"], r["khi"], int(r["n"]))
-                continue
-            klo, khi, n = prev
-            # None = all-NULL conv_id in that group (min/max skip nulls);
-            # null-key events that slipped past quarantine must degrade the
-            # bucket range to unknown (conservative: _overlaps keeps every
-            # file a candidate), not raise min(str, None) (ADVICE r2)
-            incoming[b] = (
-                None if klo is None or r["klo"] is None else min(klo, r["klo"]),
-                None if khi is None or r["khi"] is None else max(khi, r["khi"]),
-                n + int(r["n"]),
-            )
-        by_sp: dict[int, int] = {}
-        for r in stats:
-            by_sp[int(r["sp"])] = by_sp.get(int(r["sp"]), 0) + int(r["n"])
-        counts = sorted(by_sp.items())
-
-    if _covered(table.applied_ranges(stream_id), *offset_range):
-        return BatchResult(
-            batch_id, -1, offset_range[0], offset_range[1], 0, time.time() - t0
-        )
-
-    # bulk fast path: when the batch (row count known free from segment
-    # footers) is at least table-sized, file pruning cannot save anything —
-    # skip the per-bucket stats job entirely and declare every bucket
-    # affected with unknown key ranges (all files become rewrite
-    # candidates, which is what a table-sized batch forces anyway)
-    if incoming is None and batch_rows is not None and mode == "auto":
-        snap = table.snapshot()
-        tbl_rows = sum(
-            int(s.get("rows") or 0) for s in snap.file_stats.values()
-        )
-        if batch_rows >= tbl_rows:
-            per_b = max(1, batch_rows // table.n_buckets)
-            incoming = {
-                b: (None, None, per_b) for b in range(table.n_buckets)
-            }
-            mode = "cow"
-
     # no pre-dedup: merge's union + max_by aggregation IS the last-writer-
     # wins reducer — deduping here first would shuffle the batch twice
-    version, obs_counts = table.merge(
+    version, counts = table.merge(
         events,
         batch_id=batch_id,
         offset_range=offset_range,
@@ -145,11 +71,9 @@ def apply_changes(
         stream_id=stream_id,
         t_start=t0,
         incoming_stats=incoming,
-        mode=mode,
+        batch_rows=batch_rows,
     )
-    if counts is None:
-        counts = obs_counts or [(-1, 0)]
-    rows_in = sum(n for _, n in counts)
+    rows_in = 0 if version < 0 else sum(n for _, n in counts)
     return BatchResult(
         batch_id, version, offset_range[0], offset_range[1], rows_in, time.time() - t0
     )
@@ -188,7 +112,6 @@ def replay_chunks(
     chunk_paths: list[str],
     table: SnapshotTable,
     stream_id: str = "default",
-    mode: str = "auto",
 ) -> list[BatchResult]:
     """Replay an ordered on-disk change log chunk by chunk, resumably.
 
@@ -218,7 +141,6 @@ def replay_chunks(
                 batch_id=i,
                 stream_id=stream_id,
                 offset_range=None if st is None else (st[0], st[1]),
-                mode=mode,
                 batch_rows=None if st is None else st[2],
             )
         )

@@ -11,7 +11,19 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
+
+
+def _submitted_master() -> bool:
+    """Whether spark-submit already chose this driver's master. It starts
+    the JVM before Python and hands over the gateway port; that JVM's conf
+    holds ``--master`` (or spark-submit's default). A plain-python driver
+    has no such port: it launches its own JVM, later sessions included."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return False
+    SparkContext._ensure_initialized()
+    return SparkConf().contains("spark.master")
 
 
 def get_spark(
@@ -23,18 +35,20 @@ def get_spark(
     """Build (or fetch) a SparkSession.
 
     ``cores``: int N -> ``local[N]``; ``"*"`` -> all; default from
-    ``$SPARK_GRAFT_CPUS`` or ``*``.
+    ``$SPARK_GRAFT_CPUS`` or ``*``. Under spark-submit the submitted master
+    is kept and ``cores`` only sizes the shuffle partitions.
     """
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    master = f"local[{cores}]"
     if shuffle_partitions is None:
         ncores = os.cpu_count() or 8 if cores == "*" else int(cores)
         shuffle_partitions = max(8, ncores)
 
+    builder = SparkSession.builder
+    if not _submitted_master():
+        builder = builder.master(f"local[{cores}]")
     builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
+        builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

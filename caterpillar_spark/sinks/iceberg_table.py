@@ -102,7 +102,11 @@ def updated_ledger(
 
 
 class IcebergTable:
-    """Same merge/read/applied_ranges surface as SnapshotTable.
+    """The ``read``/``applied_ranges``/``merge`` contract of SnapshotTable
+    over an Iceberg catalog. It is driven through its own :meth:`merge`, not
+    through ``cdc.apply_changes``/``replay_chunks``: those call
+    SnapshotTable-only methods (``_batch_stats``, and a merge that takes
+    per-bucket stats and footer row counts).
 
     The Iceberg table must carry ``lsn BIGINT`` and ``_deleted BOOLEAN``
     columns alongside the payload — the analogues of SnapshotTable's
@@ -152,11 +156,10 @@ class IcebergTable:
         partition_counts: list[tuple[int, int]] | None = None,
         stream_id: str = "default",
         t_start: float | None = None,
-        incoming_stats: dict | None = None,  # accepted for surface parity;
-        mode: str = "auto",  # Iceberg plans its own file pruning/MoR
-        **_compat,
     ) -> tuple[int, list[tuple[int, int]] | None]:
-        del incoming_stats, mode  # Iceberg's planner owns pruning/MoR
+        """MERGE one change batch and commit the ledger + lineage with it;
+        ``(-1, None)`` if ``offset_range`` is already applied. Iceberg's
+        planner owns file pruning and copy-on-write vs merge-on-read."""
         lo, hi = offset_range
         # full-summary read, not just this stream: a commit rewriting the
         # ledger with ONLY the current stream would erase other streams'

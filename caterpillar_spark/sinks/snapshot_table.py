@@ -79,9 +79,11 @@ _SYS_COLS = ["_lsn", "_deleted"]
 # merge's lineage observe() counts source partitions 0.._OBSERVE_PARTITIONS-1
 # individually and the rest as partition -1
 _OBSERVE_PARTITIONS = 32
-# "auto" merges take the delta path when the files a CoW would rewrite hold
-# more than this many times the incoming rows (BENCH/delta_ab.json)
+# merges take the delta path when the files a CoW would rewrite hold more
+# than this many times the incoming rows (BENCH/delta_ab.json)
 _DELTA_THRESHOLD = 3.0
+# a batch's per-bucket (min conv_id, max conv_id, rows); None = unknown range
+KeyStats = dict[int, tuple[str | None, str | None, int]]
 
 
 @dataclass
@@ -214,9 +216,9 @@ class SnapshotTable:
         # replay loop re-reads only the manifests its last commit created
         self._manifest_cache: dict[str, dict] = {}
         if self.exists():
-            # adopt the stored n_buckets NOW: callers build bucket
-            # expressions (apply_changes' stats pass) before their first
-            # snapshot() load, and a mismatched count mis-buckets them
+            # adopt the stored n_buckets NOW: apply_changes runs
+            # _batch_stats (a bucket expression) before the first
+            # snapshot() load, and a mismatched count mis-buckets it
             try:
                 self.snapshot()
             except (RuntimeError, FileNotFoundError, json.JSONDecodeError):
@@ -657,6 +659,48 @@ class SnapshotTable:
             return dict(ex.map(one, paths))
 
     # -------------------------------------------------------------- merge
+    def _batch_stats(
+        self, df: DataFrame
+    ) -> tuple[tuple[int, int] | None, list[tuple[int, int]], KeyStats]:
+        """One narrow pass over a change batch (source_partition, conv_id
+        and lsn only): its LSN range (None if empty), rows per source
+        partition (-1 for rows without one) and per-bucket ``(min_key,
+        max_key, rows)``."""
+        sp = F.lit(-1)
+        if "source_partition" in df.columns:
+            sp = F.coalesce(F.col("source_partition"), sp)
+        stats = (
+            df.groupBy(sp.alias("sp"), self.bucket_expr().alias("b"))
+            .agg(
+                F.count("*").alias("n"),
+                F.min("lsn").alias("lo"),
+                F.max("lsn").alias("hi"),
+                F.min("conv_id").alias("klo"),
+                F.max("conv_id").alias("khi"),
+            )
+            .collect()
+        )
+        if not stats:
+            return None, [], {}
+        by_sp: dict[int, int] = {}
+        by_b: dict[int, list] = {}
+        for r in stats:
+            by_sp[r["sp"]] = by_sp.get(r["sp"], 0) + r["n"]
+            by_b.setdefault(r["b"], []).append(r)
+        # a group whose conv_ids are all NULL has no min/max: its bucket's
+        # key range degrades to unknown (conservative: _overlaps keeps
+        # every file a candidate) instead of raising min(str, None)
+        # (ADVICE r2)
+        incoming: KeyStats = {}
+        for b, g in by_b.items():
+            n = sum(r["n"] for r in g)
+            if any(r["klo"] is None for r in g):
+                incoming[b] = (None, None, n)
+            else:
+                incoming[b] = (min(r["klo"] for r in g), max(r["khi"] for r in g), n)
+        lsn_range = (min(r["lo"] for r in stats), max(r["hi"] for r in stats))
+        return lsn_range, sorted(by_sp.items()), incoming
+
     def merge(
         self,
         updates: DataFrame,
@@ -665,38 +709,35 @@ class SnapshotTable:
         partition_counts: list[tuple[int, int]] | None = None,
         stream_id: str = "default",
         t_start: float | None = None,
-        incoming_stats: dict[int, tuple[str | None, str | None, int]] | None = None,
-        mode: str = "auto",
+        incoming_stats: KeyStats | None = None,
+        batch_rows: int | None = None,
     ) -> tuple[int, list[tuple[int, int]] | None]:
         """Apply a change batch (``op`` + ``lsn`` columns; multiple events
         per key allowed — the merge aggregation is itself the last-writer-
-        wins reducer). Returns ``(version, observed_counts)``: version -1
-        if the offset range was already applied (idempotent no-op).
+        wins reducer). Returns ``(version, partition_counts)`` as recorded
+        in the lineage; ``(-1, None)`` if the ledger already covers
+        ``offset_range`` (checked before any Spark job).
 
-        ``incoming_stats``: per-bucket ``(min_key, max_key, rows)`` of the
-        batch if the caller already computed them (``apply_changes`` folds
-        this into its lineage stats pass); otherwise one narrow scan here.
+        The one place that decides how a batch merges, from measurements:
 
-        ``mode``:
-        - ``"cow"``   — copy-on-write: rewrite only the files whose key
-          range overlaps the batch (file-level pruning via the snapshot's
-          per-file stats); untouched files stay referenced.
-        - ``"delta"`` — merge-on-read: append the batch (reduced to one row
-          per key) as per-bucket delta files; zero table rewrite. Reads
-          LWW-reduce until ``compact()``.
-        - ``"auto"``  — delta when the files a CoW would rewrite hold more
-          than ``_DELTA_THRESHOLD``× the incoming rows, else CoW. Small
-          incremental batches against a big table take the O(batch) path;
-          bulk loads take the pre-reduced path.
+        - ``incoming_stats``/``partition_counts`` come from the caller if
+          it has them, else from one :meth:`_batch_stats` pass. A batch of
+          ``batch_rows`` (footer row count) ≥ the table's rows skips that
+          pass — pruning cannot save anything — and counts every bucket as
+          touched with an unknown key range; its lineage counts ride the
+          write job via ``observe()``.
+        - The CoW candidates are the files whose key range overlaps the
+          batch. If they hold more than ``_DELTA_THRESHOLD``× the incoming
+          rows, the reduced batch is appended as per-bucket merge-on-read
+          delta files (zero table rewrite; reads LWW-reduce until
+          ``compact()``); else the candidates are rewritten copy-on-write
+          with the batch. A table-sized batch therefore always takes CoW.
 
         Either path commits data + offset ledger + lineage in ONE atomic
-        snapshot create. If ``partition_counts`` is None, per-source-
-        partition lineage counts are collected by ``observe()`` DURING the
-        merge job (zero extra passes).
-
-        Semantics = Iceberg ``MERGE INTO t USING u ON key WHEN MATCHED AND
-        op='D' THEN DELETE / WHEN MATCHED THEN UPDATE / WHEN NOT MATCHED AND
-        op<>'D' THEN INSERT`` (SURVEY.md §7.2) under LWW-by-``lsn``.
+        snapshot create. Semantics = Iceberg ``MERGE INTO t USING u ON key
+        WHEN MATCHED AND op='D' THEN DELETE / WHEN MATCHED THEN UPDATE /
+        WHEN NOT MATCHED AND op<>'D' THEN INSERT`` (SURVEY.md §7.2) under
+        LWW-by-``lsn``.
         """
         t0 = t_start if t_start is not None else time.time()
         snap = self.snapshot()
@@ -725,7 +766,35 @@ class SnapshotTable:
                 for p, n in counts
             ]
 
-        # ---- lineage-by-observation (no extra pass) ---------------------
+        # ---- incoming key stats (per bucket) ----------------------------
+        if incoming_stats is None:
+            tbl_rows = sum(int(s.get("rows") or 0) for s in snap.file_stats.values())
+            if batch_rows is not None and batch_rows >= tbl_rows:
+                per_b = max(1, batch_rows // self.n_buckets)
+                incoming_stats = {
+                    b: (None, None, per_b) for b in range(self.n_buckets)
+                }
+            else:
+                _, counts, incoming_stats = self._batch_stats(updates)
+                if partition_counts is None:
+                    partition_counts = counts
+        if not incoming_stats:
+            # empty batch (e.g. everything quarantined upstream) with a
+            # REAL offset range: commit a data-less snapshot that records
+            # the range, else the ledger keeps a permanent hole and replay-
+            # completeness checks report the stream as unfinished
+            self._commit_next(
+                snap,
+                snap.buckets,
+                snap.deltas,
+                applied,
+                lineage([(-1, 0)]),
+                snap.schema_json,
+                touched=(),  # data untouched: reuse parent manifests as-is
+            )
+            return new_version, [(-1, 0)]
+
+        # ---- lineage-by-observation (bulk batches: no stats pass) -------
         observation = None
         if partition_counts is None:
             from pyspark.sql import Observation
@@ -735,28 +804,17 @@ class SnapshotTable:
 
             def _build_metrics() -> list:
                 sp = F.col("source_partition") if has_sp else F.lit(-1)
-                m = [
+                rest = (sp < 0) | (sp >= _OBSERVE_PARTITIONS)
+                return [
                     F.sum(F.when(sp == i, 1).otherwise(0)).alias(f"p{i}")
                     for i in range(_OBSERVE_PARTITIONS if has_sp else 0)
-                ]
-                m.append(
-                    F.sum(
-                        F.when(
-                            (sp < 0) | (sp >= _OBSERVE_PARTITIONS), 1
-                        ).otherwise(0)
-                    ).alias("rest")
-                )
-                return m
+                ] + [F.sum(F.when(rest, 1).otherwise(0)).alias("rest")]
 
             metrics = cached_columns(
                 self.spark, "observe_metrics", (has_sp,), _build_metrics
             )
             updates = updates.observe(observation, *metrics)
-        updates = (
-            updates.drop("source_partition")
-            if "source_partition" in updates.columns
-            else updates
-        )
+        updates = updates.drop("source_partition")  # no-op when absent
 
         # ---- schema evolution (additive) --------------------------------
         table_schema = self.payload_schema(snap)
@@ -789,34 +847,6 @@ class SnapshotTable:
             ),
         )
 
-        # ---- incoming key stats (per bucket) ----------------------------
-        if incoming_stats is None:
-            incoming_stats = {
-                int(r["b"]): (r["klo"], r["khi"], int(r["n"]))
-                for r in upd.groupBy(self.bucket_expr().alias("b"))
-                .agg(
-                    F.min("conv_id").alias("klo"),
-                    F.max("conv_id").alias("khi"),
-                    F.count("*").alias("n"),
-                )
-                .collect()
-            }
-        if not incoming_stats:
-            # empty batch (e.g. everything quarantined upstream) with a
-            # REAL offset range: commit a data-less snapshot that records
-            # the range, else the ledger keeps a permanent hole and replay-
-            # completeness checks report the stream as unfinished
-            self._commit_next(
-                snap,
-                snap.buckets,
-                snap.deltas,
-                applied,
-                lineage([(-1, 0)]),
-                snap.schema_json,
-                touched=(),  # data untouched: reuse parent manifests as-is
-            )
-            return new_version, [(-1, 0)]
-
         # ---- file-level pruning -----------------------------------------
         candidates: dict[int, list[str]] = {}
         untouched: dict[int, list[str]] = {}
@@ -833,9 +863,7 @@ class SnapshotTable:
                 int(snap.file_stats.get(p, {}).get("rows") or 0) for p in cand
             )
         incoming_rows = sum(n for _, _, n in incoming_stats.values())
-        use_delta = mode == "delta" or (
-            mode == "auto" and cand_rows > _DELTA_THRESHOLD * max(incoming_rows, 1)
-        )
+        use_delta = cand_rows > _DELTA_THRESHOLD * max(incoming_rows, 1)
 
         # ---- reduce + write ----------------------------------------------
         # the explicit bucket repartition BEFORE the reduce is the whole
@@ -866,17 +894,16 @@ class SnapshotTable:
                 deltas[str(b)] = deltas.get(str(b), []) + new
 
         # ---- lineage + ledger -------------------------------------------
-        obs_counts: list[tuple[int, int]] | None = None
-        if partition_counts is None:
+        if observation is not None:
             got = observation.get  # blocks until the write action's metrics
-            obs_counts = [
+            counts = [
                 (int(k[1:]), int(v))
                 for k, v in got.items()
                 if k.startswith("p") and v
             ]
             if got.get("rest"):
-                obs_counts.append((-1, int(got["rest"])))
-            partition_counts = sorted(obs_counts) or [(-1, 0)]
+                counts.append((-1, int(got["rest"])))
+            partition_counts = sorted(counts) or [(-1, 0)]
         self._commit_next(
             snap,
             buckets,
@@ -886,7 +913,7 @@ class SnapshotTable:
             evolved.json(),
             touched=incoming_stats.keys(),
         )
-        return new_version, obs_counts
+        return new_version, partition_counts
 
     # ------------------------------------------------------------ expire
     def expire_snapshots(

@@ -77,7 +77,6 @@ def apply_stream(
     checkpoint_dir: str,
     stream_id: str = "stream",
     available_now: bool = True,
-    mode: str = "auto",
     maintain_every: int | None = None,
 ) -> StreamingQuery:
     """Run the stream into the table via foreachBatch (MERGE is a batch op;
@@ -89,18 +88,17 @@ def apply_stream(
     the ledger skips it — that's the exactly-once half the checkpoint alone
     can't give.
 
-    ``mode`` forwards to the merge (``auto`` lets small micro-batches take
-    the merge-on-read delta path — write volume O(batch)); with
-    ``maintain_every=k`` the sink runs incremental compaction
-    (``table.maintain()``) after every k-th applied batch, bounding the
-    read-side delta backlog — the streaming deployment's maintenance loop."""
+    The merge picks the path per micro-batch: a batch that is small next
+    to the files it overlaps takes the merge-on-read delta path (write
+    volume O(batch)), a large one copy-on-write. With ``maintain_every=k``
+    the sink runs incremental compaction (``table.maintain()``) after every
+    k-th applied batch, bounding the read-side delta backlog — the
+    streaming deployment's maintenance loop."""
 
     applied = {"n": 0}
 
     def handle(batch: DataFrame, batch_id: int) -> None:
-        res = apply_changes(
-            batch, table, batch_id=int(batch_id), stream_id=stream_id, mode=mode
-        )
+        res = apply_changes(batch, table, batch_id=int(batch_id), stream_id=stream_id)
         if res.snapshot_version > 0 and maintain_every:
             applied["n"] += 1
             if applied["n"] % maintain_every == 0:

@@ -20,8 +20,7 @@ from __future__ import annotations
 import argparse
 import json
 
-from pyspark.sql import SparkSession
-
+from caterpillar_spark.session import get_spark
 from caterpillar_spark.sinks.snapshot_table import SnapshotTable
 
 
@@ -42,11 +41,7 @@ def main() -> None:
     ap.add_argument("--expire-keep-last", type=int, default=10)
     args = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.appName("caterpillar-maintain")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = get_spark("caterpillar-maintain")
     table = SnapshotTable(spark, args.table, n_buckets=args.n_buckets or 256)
     v0 = table.current_version()
     if args.full_compact:

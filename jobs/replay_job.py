@@ -15,10 +15,11 @@ Packaging + launch (the north rule's spark-submit form):
 ``--table`` must be a POSIX path on a filesystem shared by the driver
 (SnapshotTable's snapshot log uses local-file ``os.link`` atomic creates —
 valid on a POSIX shared mount, NOT on s3:// object stores or NFS without
-atomic link semantics). For object-store deployments point the sink at
-``sinks.IcebergTable`` instead, which carries the same merge/ledger
-surface over a real Iceberg catalog. ``--log-dir`` is read through Spark,
-so any Hadoop-filesystem URI works there.
+atomic link semantics). This job drives SnapshotTable only; an
+object-store deployment uses ``sinks.IcebergTable``, the same ledger
+contract over a real Iceberg catalog, driven batch by batch through its
+own ``merge()``. ``--log-dir`` is read through Spark, so any
+Hadoop-filesystem URI works there.
 
 Identical code runs at N and 4N executors; throughput/lineage land in the
 table manifest, so scaling efficiency is read straight from
@@ -31,9 +32,8 @@ import argparse
 import json
 import os
 
-from pyspark.sql import SparkSession
-
 from caterpillar_spark.cdc import replay_chunks
+from caterpillar_spark.session import get_spark
 from caterpillar_spark.sinks.snapshot_table import SnapshotTable
 from caterpillar_spark.streaming import (
     TRANSCRIPT_SCHEMA,
@@ -58,12 +58,7 @@ def main() -> None:
     ap.add_argument("--create", action="store_true")
     args = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.appName("caterpillar-cdc-replay")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = get_spark("caterpillar-cdc-replay")
     table = SnapshotTable(spark, args.table, n_buckets=args.n_buckets or 256)
     if args.create and not table.exists():
         table.create(TRANSCRIPT_SCHEMA)

@@ -3,11 +3,13 @@ schema evolution, compaction, lineage manifest."""
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from caterpillar_spark import session
-from caterpillar_spark.cdc import apply_changes, replay_chunks
+from caterpillar_spark.cdc import apply_changes, replay_chunks, segment_footer_stats
 from caterpillar_spark.generator import (
     GeneratorSpec,
     change_events,
@@ -58,6 +60,11 @@ def test_chunked_replay_matches_oracle(spark, tmp_path):
     results = replay_chunks(spark, chunks, tbl)
     assert [r.snapshot_version for r in results] == [1, 2, 3, 4, 5]
     assert _final_state_canon(tbl.read()) == _expected_canon(spark, SPEC)
+    # every chunk has at least the table's rows (the table holds at most
+    # n_convs x turns keys): such footer batches skip the stats pass and
+    # merge copy-on-write, so no commit added delta files
+    assert min(r.rows_in for r in results) >= SPEC.n_convs * SPEC.turns_per_conv
+    assert not tbl.snapshot().has_deltas()
 
 
 def test_replay_idempotent(spark, tmp_path):
@@ -261,11 +268,55 @@ def test_manifest_lineage(spark, tmp_path):
     lo, hi = m.agg(F.min("offset_start"), F.max("offset_end")).collect()[0]
     assert (lo, hi) == (0, SPEC.n_events - 1)
 
+    # a direct merge() with a known range and no counts: the counts come
+    # from the merge's own stats pass, one lineage row per source partition
+    tbl2 = SnapshotTable(spark, str(tmp_path / "t2"), n_buckets=8).create(PAYLOAD)
+    ev = change_events(spark, SPEC)
+    _, counts = tbl2.merge(ev, 0, (0, SPEC.n_events - 1))
+    per_sp = {
+        r["source_partition"]: r["count"]
+        for r in ev.groupBy("source_partition").count().collect()
+    }
+    got = {r["partition"]: r["rows_applied"] for r in tbl2.manifest().collect()}
+    assert got == per_sp == dict(counts)
+    assert sum(got.values()) == SPEC.n_events
+
+
+def test_covered_footer_range_launches_no_spark_job(spark, tmp_path):
+    """A segment whose footer range the ledger already covers is skipped
+    by the merge's ledger check alone — no stats pass, no Spark job."""
+    tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=8).create(PAYLOAD)
+    chunks = write_changelog_chunks(spark, SPEC, str(tmp_path / "log"), n_chunks=2)
+    replay_chunks(spark, chunks, tbl)
+    lo, hi, rows = segment_footer_stats(chunks[0])
+    events = spark.read.parquet(chunks[0])
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("covered-footer", "ledger-skipped apply")
+        res = apply_changes(
+            events, tbl, batch_id=0, offset_range=(lo, hi), batch_rows=rows
+        )
+        # job events reach the status store in order: once this probe job
+        # shows up, every job the apply launched before it has too
+        sc.setJobGroup("covered-footer-probe", "status store probe")
+        spark.range(3).count()
+        deadline = time.time() + 60
+        while not sc.statusTracker().getJobIdsForGroup("covered-footer-probe"):
+            assert time.time() < deadline, "probe job never reached the status store"
+            time.sleep(0.05)
+        jobs = sc.statusTracker().getJobIdsForGroup("covered-footer")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert (res.snapshot_version, res.rows_in) == (-1, 0)
+    assert list(jobs) == []
+
 
 def test_apply_changes_null_key_group_stats(spark, tmp_path):
     """ADVICE r2: a bucket whose stats groups mix all-NULL conv_id with
     non-null ones must degrade its key range to unknown (conservative),
-    not crash on min(str, None)."""
+    not crash on min(str, None); likewise a NULL source_partition is
+    counted as lineage partition -1, not a crash on int(None)."""
     import datetime
 
     from caterpillar_spark.cdc import apply_changes
@@ -280,6 +331,7 @@ def test_apply_changes_null_key_group_stats(spark, tmp_path):
     ] + [
         (8, 2, "U", None, 1, "user", "c", None, ts),
         (9, 2, "U", None, 2, "user", "d", None, ts),
+        (10, None, "U", "c10", 0, "user", "e", None, ts),
     ]
     events = spark.createDataFrame(
         rows,
@@ -289,6 +341,9 @@ def test_apply_changes_null_key_group_stats(spark, tmp_path):
     res = apply_changes(events, tbl, batch_id=0)  # offset_range=None path
     assert res.snapshot_version >= 1
     assert tbl.read().count() >= 1
+    # a row without a source partition is counted as partition -1
+    got = {r["partition"]: r["rows_applied"] for r in tbl.manifest().collect()}
+    assert got == {-1: 1, 1: 8, 2: 2}
 
 
 def test_merge_column_cache_reused_across_batches_and_handles(spark, tmp_path):

@@ -9,6 +9,7 @@ single-event keys, all-delete keys...)."""
 from __future__ import annotations
 
 import datetime as dt
+from unittest.mock import patch
 
 import pandas as pd
 from hypothesis import HealthCheck, given, settings
@@ -16,6 +17,7 @@ from hypothesis import strategies as st
 from pyspark.sql import types as T
 
 from caterpillar_spark.cdc import apply_changes
+from caterpillar_spark.sinks import snapshot_table
 from caterpillar_spark.sinks.snapshot_table import SnapshotTable
 
 PAYLOAD = T.StructType(
@@ -28,6 +30,14 @@ PAYLOAD = T.StructType(
         T.StructField("ts", T.TimestampType()),
     ]
 )
+
+# a merge path is pinned through the delta threshold: infinite never picks
+# delta, negative always does, the default lets the merge decide
+THRESHOLD = {
+    "auto": snapshot_table._DELTA_THRESHOLD,
+    "cow": float("inf"),
+    "delta": -1,
+}
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -98,24 +108,23 @@ def test_any_stream_reduces_correctly(spark, tmp_path_factory, stream):
         if not chunk:
             continue
         df = spark.createDataFrame(chunk, EVENT_SCHEMA)
-        apply_changes(df, tbl, batch_id=i, mode=modes[i])
+        with patch.object(snapshot_table, "_DELTA_THRESHOLD", THRESHOLD[modes[i]]):
+            apply_changes(df, tbl, batch_id=i)
     got = sorted(
         (r["conv_id"], r["turn_idx"], r["text"])
         for r in tbl.read().collect()
     )
     assert got == _expected(events)
-    # idempotence: re-apply every chunk (different mode draw is fine — a
+    # idempotence: re-apply every chunk (a different path draw is fine — a
     # covered range must no-op regardless of path); state unchanged
     for i in range(n_chunks):
         chunk = events[i * sz : (i + 1) * sz]
         if not chunk:
             continue
-        apply_changes(
-            spark.createDataFrame(chunk, EVENT_SCHEMA),
-            tbl,
-            batch_id=i,
-            mode=modes[n_chunks - 1 - i],
-        )
+        with patch.object(
+            snapshot_table, "_DELTA_THRESHOLD", THRESHOLD[modes[n_chunks - 1 - i]]
+        ):
+            apply_changes(spark.createDataFrame(chunk, EVENT_SCHEMA), tbl, batch_id=i)
     again = sorted(
         (r["conv_id"], r["turn_idx"], r["text"])
         for r in tbl.read().collect()

@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from caterpillar_spark.sinks import snapshot_table
 from caterpillar_spark.sinks.snapshot_table import (
     SnapshotTable,
     murmur3_hash_bytes,
@@ -116,10 +117,11 @@ def test_one_bucket_per_file(spark, tmp_path):
         assert got == {b}, f"{p} holds buckets {got}, pointer says {b}"
 
 
-def test_stale_row_regression_single_key_update(spark, tmp_path):
+def test_stale_row_regression_single_key_update(spark, tmp_path, monkeypatch):
     """ADVICE r1 (high): wide insert, then a single-key update, then full
     read — must return exactly one row per key with the updated value
     (round-1 returned stale duplicates out of co-hashed files)."""
+    monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", float("inf"))  # CoW
     tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=4).create(PAYLOAD)
     convs = [f"conv_{i:06d}" for i in range(20)]
     tbl.merge(_insert_batch(spark, convs, 0), 0, (0, 19))
@@ -127,7 +129,6 @@ def test_stale_row_regression_single_key_update(spark, tmp_path):
         _events(spark, [(100, "U", "conv_000007", 0, "v2:conv_000007")]),
         1,
         (100, 100),
-        mode="cow",
     )
     rows = tbl.read().collect()
     assert len(rows) == 20
@@ -141,10 +142,11 @@ def test_stale_row_regression_single_key_update(spark, tmp_path):
     assert rows2 == sorted(by_conv.items())
 
 
-def test_file_pruning_bounds_write_amplification(spark, tmp_path):
+def test_file_pruning_bounds_write_amplification(spark, tmp_path, monkeypatch):
     """A single-key CoW update against a table with several files per
     bucket must rewrite only the files whose key range contains the key —
     commit bytes ≪ table bytes, untouched files stay referenced."""
+    monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", float("inf"))  # CoW
     tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=4).create(PAYLOAD)
     lo_range = [f"conv_{i:06d}" for i in range(150)]
     hi_range = [f"conv_{i:06d}" for i in range(500, 650)]
@@ -158,7 +160,6 @@ def test_file_pruning_bounds_write_amplification(spark, tmp_path):
         _events(spark, [(1000, "U", "conv_000050", 0, "v2")]),
         2,
         (1000, 1000),
-        mode="cow",
     )
     after_snap = tbl.snapshot()
     _, after_paths = _table_bytes(tbl)
@@ -310,7 +311,9 @@ def test_point_lookup_float_key_uses_native_values(spark, tmp_path):
     ) == [1e-3, 7.0]
 
 
-def test_point_lookup_skips_reduce_on_delta_free_pruned_set(spark, tmp_path):
+def test_point_lookup_skips_reduce_on_delta_free_pruned_set(
+    spark, tmp_path, monkeypatch
+):
     """A point lookup whose pruned file set carries no deltas must read
     with zero aggregates even when OTHER buckets hold deltas — and a
     lookup that does hit deltas still LWW-reduces correctly."""
@@ -319,12 +322,8 @@ def test_point_lookup_skips_reduce_on_delta_free_pruned_set(spark, tmp_path):
     tbl.merge(_insert_batch(spark, convs, 0), 0, (0, 63))
     # delta-update ONE key -> exactly one bucket gains a delta file
     upd_key = "conv_000007"
-    tbl.merge(
-        _events(spark, [(100, "U", upd_key, 0, "v2")]),
-        1,
-        (100, 100),
-        mode="delta",
-    )
+    monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", -1)  # delta
+    tbl.merge(_events(spark, [(100, "U", upd_key, 0, "v2")]), 1, (100, 100))
     snap = tbl.snapshot()
     assert snap.has_deltas()
     delta_bucket = tbl.bucket_for_key(upd_key)
@@ -339,13 +338,14 @@ def test_point_lookup_skips_reduce_on_delta_free_pruned_set(spark, tmp_path):
 
 
 def test_delta_merge_is_o_batch_and_compacts(spark, tmp_path):
-    """mode='delta' (and 'auto' for a tiny batch): write volume is O(batch),
-    base files untouched; reads LWW-reduce; compact folds deltas back."""
+    """A tiny batch against a big table takes the delta path: write volume
+    is O(batch), base files untouched; reads LWW-reduce; compact folds
+    deltas back."""
     tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=4).create(PAYLOAD)
     convs = [f"conv_{i:06d}" for i in range(1000)]
     tbl.merge(_insert_batch(spark, convs, 0), 0, (0, 999))
     base_bytes, base_paths = _table_bytes(tbl)
-    # auto mode must choose delta: candidate rows (1000) > 3x batch (2)
+    # the merge must choose delta: candidate rows (1000) > 3x batch (2)
     tbl.merge(
         _events(
             spark,
@@ -353,7 +353,6 @@ def test_delta_merge_is_o_batch_and_compacts(spark, tmp_path):
         ),
         1,
         (5000, 5001),
-        mode="auto",
     )
     snap = tbl.snapshot()
     assert snap.has_deltas()
@@ -406,7 +405,7 @@ def test_concurrent_commit_loser_cannot_clobber(spark, tmp_path, monkeypatch):
     assert all("data" in d for d in removed)
 
 
-def test_selective_compaction_and_maintain(spark, tmp_path):
+def test_selective_compaction_and_maintain(spark, tmp_path, monkeypatch):
     """Per-bucket compaction folds only the selected buckets' deltas; cold
     buckets stay byte-untouched; maintain() picks buckets over threshold."""
     tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=4).create(PAYLOAD)
@@ -414,12 +413,12 @@ def test_selective_compaction_and_maintain(spark, tmp_path):
     tbl.merge(_insert_batch(spark, convs, 0), 0, (0, 199))
     # pile deltas onto ONE key's bucket
     hot = "conv_000001"
+    monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", -1)  # delta
     for i in range(5):
         tbl.merge(
             _events(spark, [(1000 + i, "U", hot, 0, f"v{i}")]),
             1 + i,
             (1000 + i, 1000 + i),
-            mode="delta",
         )
     snap = tbl.snapshot()
     hot_b = [b for b, fs in snap.deltas.items() if fs]
@@ -449,9 +448,11 @@ def test_selective_compaction_and_maintain(spark, tmp_path):
     assert tbl.maintain(max_delta_files=4) == v
 
 
-def test_full_delta_replay_matches_cow_replay(spark, tmp_path):
+def test_full_delta_replay_matches_cow_replay(spark, tmp_path, monkeypatch):
     """The two merge paths are semantically interchangeable: replaying the
-    same chunked log all-delta vs all-CoW converges to identical state."""
+    same chunked log all-delta vs all-CoW converges to identical state.
+    The path is pinned through the delta threshold: infinite never picks
+    delta, negative always does."""
     from caterpillar_spark.cdc import replay_chunks
     from caterpillar_spark.generator import GeneratorSpec, write_changelog_chunks
 
@@ -459,9 +460,13 @@ def test_full_delta_replay_matches_cow_replay(spark, tmp_path):
     chunks = write_changelog_chunks(spark, spec, str(tmp_path / "log"), n_chunks=3)
 
     t_cow = SnapshotTable(spark, str(tmp_path / "cow"), n_buckets=8).create(PAYLOAD)
-    replay_chunks(spark, chunks, t_cow, mode="cow")
+    monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", float("inf"))
+    replay_chunks(spark, chunks, t_cow)
     t_mor = SnapshotTable(spark, str(tmp_path / "mor"), n_buckets=8).create(PAYLOAD)
-    replay_chunks(spark, chunks, t_mor, mode="delta")
+    monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", -1)
+    replay_chunks(spark, chunks, t_mor)
+    assert not t_cow.snapshot().has_deltas()
+    assert not t_mor.snapshot().buckets  # every file a delta file
 
     cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
     a = sorted(tuple(r) for r in t_cow.read().select(*cols).collect())

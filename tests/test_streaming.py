@@ -12,6 +12,7 @@ from caterpillar_spark.generator import (
     expected_final_state,
     write_changelog_chunks,
 )
+from caterpillar_spark.sinks import snapshot_table
 from caterpillar_spark.sinks.snapshot_table import SnapshotTable
 from caterpillar_spark.streaming import apply_stream, stream_changelog
 
@@ -59,18 +60,18 @@ def test_stream_available_now_full_replay(spark, tmp_path):
     assert tbl.current_version() >= 3
 
 
-def test_stream_delta_mode_with_maintenance(spark, tmp_path):
+def test_stream_delta_mode_with_maintenance(spark, tmp_path, monkeypatch):
     """Merge-on-read micro-batches + periodic incremental compaction:
     state converges to the batch oracle and the delta backlog is bounded
     by the maintenance loop."""
     chunks_dir = str(tmp_path / "log")
     write_changelog_chunks(spark, SPEC, chunks_dir, n_chunks=6)
     tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=8).create(PAYLOAD)
+    monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", -1)  # delta
     q = apply_stream(
         stream_changelog(spark, chunks_dir, max_files_per_trigger=1),
         tbl,
         str(tmp_path / "ckpt"),
-        mode="delta",
         maintain_every=2,
     )
     q.awaitTermination(300)

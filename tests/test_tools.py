@@ -1,5 +1,6 @@
-"""The measurement scripts: every one imports, and big_replay's merge
-phase capture times each data-writing merge of a real replay."""
+"""The measurement scripts: every one imports, big_replay's merge phase
+capture times each data-writing merge of a real replay, and perfbench's
+tracer finds every engine attribute it wraps."""
 
 from __future__ import annotations
 
@@ -60,3 +61,18 @@ def test_big_replay_captures_one_phase_per_merge(spark, tmp_path):
         with big_replay.merge_phases(2):
             replay_chunks(spark, chunks, tbl)
     assert SnapshotTable.__dict__["merge"] is merge
+
+
+def test_perfbench_tracer_installs(spark, monkeypatch):
+    """perfbench's tracer wraps engine attributes by name (``cdc``,
+    ``streaming.apply`` and ``SnapshotTable`` methods). Renaming or
+    deleting one of them fails here instead of in every benchmark run;
+    leaving the block restores every original."""
+    from caterpillar_spark import cdc
+
+    monkeypatch.syspath_prepend(os.path.join(ROOT, "perfbench"))
+    tracing = importlib.import_module("tracing")
+    before = (dict(vars(SnapshotTable)), dict(vars(cdc)))
+    with tracing.Tracer(spark).installed():
+        assert SnapshotTable.__dict__["merge"] is not before[0]["merge"]
+    assert (dict(vars(SnapshotTable)), dict(vars(cdc))) == before
