@@ -20,7 +20,15 @@ per-partition lineage, resumable replay.
 
 __version__ = "0.1.0"
 
-from caterpillar_spark.session import get_spark  # noqa: F401
-
 TRANSCRIPT_COLUMNS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 CHANGE_KEY = ["conv_id", "turn_idx"]
+
+
+def __getattr__(name: str):
+    # loaded on first access so that Spark-free modules (sinks.table_log)
+    # import without pyspark
+    if name == "get_spark":
+        from caterpillar_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -16,12 +16,14 @@ exactly-once because offsets and data commit atomically.
 
 from __future__ import annotations
 
+import os
 import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
 from caterpillar_spark.sinks.snapshot_table import SnapshotTable
+from caterpillar_spark.sinks.table_log import footer_range
 
 
 @dataclass
@@ -81,30 +83,25 @@ def apply_changes(
 
 def segment_footer_stats(path: str) -> tuple[int, int, int] | None:
     """(lsn_lo, lsn_hi, rows) of a log segment from parquet footers —
-    driver-side milliseconds, no Spark job. Binlog segments carry their
-    offset range in metadata, exactly like real binlog files carry their
-    LSN span in the header."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    lo = hi = None
-    rows = 0
-    for f in os.listdir(path):
-        if not f.endswith(".parquet"):
-            continue
-        md = pq.ParquetFile(os.path.join(path, f)).metadata
-        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-        if "lsn" not in idx:
-            return None
-        rows += md.num_rows
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx["lsn"]).statistics
-            if st is None or not st.has_min_max:
-                return None
-            lo = st.min if lo is None else min(lo, st.min)
-            hi = st.max if hi is None else max(hi, st.max)
-    return None if lo is None else (int(lo), int(hi), rows)
+    driver-side milliseconds, no Spark job — or None when a file with rows
+    lacks ``lsn`` stats. Binlog segments carry their offset range in
+    metadata, exactly like real binlog files carry their LSN span in the
+    header."""
+    files = [
+        footer_range(os.path.join(path, f), "lsn")
+        for f in os.listdir(path)
+        if f.endswith(".parquet")
+    ]
+    if any(lo is None and rows for lo, _, rows in files):
+        return None
+    known = [(lo, hi) for lo, hi, _ in files if lo is not None]
+    if not known:
+        return None
+    return (
+        int(min(lo for lo, _ in known)),
+        int(max(hi for _, hi in known)),
+        sum(rows for _, _, rows in files),
+    )
 
 
 def replay_chunks(

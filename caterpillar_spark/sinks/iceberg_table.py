@@ -41,7 +41,7 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 
-from caterpillar_spark.sinks.snapshot_table import _covered, _merge_ranges
+from caterpillar_spark.sinks.table_log import updated_ledger
 
 APPLIED_PROP = "caterpillar.applied-ranges"
 LINEAGE_PROP = "caterpillar.lineage"
@@ -82,23 +82,6 @@ def merge_sql(identifier: str, updates_view: str = "_caterpillar_updates") -> st
               VALUES (u.conv_id, u.turn_idx, u.role, u.text, u.tool, u.ts,
                       u.lsn, u.op = 'D')
             """
-
-
-def updated_ledger(
-    summary: dict, stream_id: str, lo: int, hi: int
-) -> dict | None:
-    """Next value of the applied-ranges ledger property, or None when
-    [lo, hi] is already covered (=> the merge is a no-op). Merges into the
-    FULL summary ledger — all streams — because each commit REPLACES the
-    property: writing only the current stream would erase other streams'
-    applied ranges (the round-1 Iceberg ledger-erasure bug, fixed r2)."""
-    raw = summary.get(APPLIED_PROP)
-    applied: dict = json.loads(raw) if raw else {}
-    prior = applied.get(stream_id, [])
-    if _covered(prior, lo, hi):
-        return None
-    applied[stream_id] = _merge_ranges(prior + [[lo, hi]])
-    return applied
 
 
 class IcebergTable:
@@ -143,9 +126,12 @@ class IcebergTable:
         ).collect()
         return dict(rows[0]["summary"]) if rows else {}
 
-    def applied_ranges(self, stream_id: str = "default") -> list[list[int]]:
+    def _ledger(self) -> dict[str, list[list[int]]]:
         raw = self._latest_summary().get(APPLIED_PROP)
-        return json.loads(raw).get(stream_id, []) if raw else []
+        return json.loads(raw) if raw else {}
+
+    def applied_ranges(self, stream_id: str = "default") -> list[list[int]]:
+        return self._ledger().get(stream_id, [])
 
     # ------------------------------------------------------------- merge
     def merge(
@@ -164,7 +150,7 @@ class IcebergTable:
         # full-summary read, not just this stream: a commit rewriting the
         # ledger with ONLY the current stream would erase other streams'
         # applied ranges (each commit snapshot-props replace the property)
-        applied = updated_ledger(self._latest_summary(), stream_id, lo, hi)
+        applied = updated_ledger(self._ledger(), stream_id, lo, hi)
         if applied is None:
             return -1, None
         lineage = [

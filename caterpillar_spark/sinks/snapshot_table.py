@@ -3,14 +3,9 @@ on plain parquet. The sandbox stand-in for Iceberg with the same contract:
 atomic commits, exactly-once via an offset ledger stored IN the snapshot,
 additive schema evolution, tombstoned deletes, per-partition lineage.
 
-Layout::
-
-    <root>/
-      _log/v000000000042.json        # snapshot files; commit = atomic create
-      data/v42-<token>/part-*.parquet  # ONE bucket per file (see routing);
-                                       # dir token is collision-free so a
-                                       # losing concurrent writer can never
-                                       # clobber a winner's committed files
+This module is the Spark half: routing, reads, merge and compaction. The
+layout, commit protocol, offset ledger, manifests and per-file footer
+stats live in :mod:`caterpillar_spark.sinks.table_log` (no Spark).
 
 File/bucket invariant: every data file contains rows of EXACTLY ONE bucket.
 A row's bucket is ``pmod(hash(conv_id), n)`` — Spark's own HashPartitioning
@@ -20,43 +15,19 @@ id. The bucket -> files pointers are exact (no co-hashed stale rows can
 survive a bucket rewrite), no per-row bucket column is stored, and the same
 exchange satisfies the LWW aggregate's clustering.
 
-Concurrency/atomicity model (single writer, many readers — same posture as
-a Structured Streaming ``foreachBatch`` sink): a commit writes its data
-files into a fresh uniquely-named directory first, then creates the next
-snapshot JSON with ``os.link`` (fails if the version already exists →
-optimistic-concurrency conflict, like Iceberg's commit protocol). A losing
-or crashed writer leaves only an unreferenced data dir (garbage-collected
-by ``expire_snapshots``), never a torn table.
-
-Exactly-once (the upgrade over the reference's store-offset-after-delivery
-at-least-once rule, ``internal/pkg/pipeline/task/kafka/kafka.go:288-293,
-404-406``): each snapshot embeds the cumulative set of applied
-``(stream_id, [lo, hi])`` LSN ranges. A merge whose range is already
-applied is a no-op; offsets and data commit in ONE atomic rename, so replay
-from any checkpoint converges. Deletes are tombstones (``_deleted``), which
-makes row-level merge idempotent and commutative under re-delivery as well;
-``compact()`` physically drops tombstones later.
-
 Scale design (100 TB / 1000 executors):
-- rows hash-bucketed by ``conv_id`` into ``n_buckets`` fixed buckets;
-- the snapshot records per-file key ranges (min/max ``conv_id``, the same
-  stats Iceberg keeps in manifests), so a merge prunes at FILE granularity:
-  only files whose key range overlaps the incoming batch are rewritten —
-  a 1%-of-keyspace batch rewrites ~1% of table bytes, not the whole table;
+- a merge prunes at FILE granularity on the per-file ``conv_id`` min/max
+  the log records: only files whose key range overlaps the batch are
+  rewritten — a 1%-of-keyspace batch rewrites ~1% of table bytes;
 - small batches take the **merge-on-read delta path**: the reduced batch is
   appended as per-bucket delta files (write volume O(batch), zero table
   rewrite); the read path LWW-reduces base∪delta by ``_lsn`` and
   ``compact()`` folds deltas back into unique-key base files — Iceberg's
   MoR/compaction lifecycle;
+- deletes are tombstones (``_deleted``), so row-level merge is idempotent
+  and commutative under re-delivery; ``compact()`` drops them later;
 - the merge reduction is a hash aggregate (``max_by``) with map-side
-  partial combine — hot conv_ids pre-reduce before the shuffle;
-- the snapshot JSON holds the ledger, lineage and an O(n_buckets) map of
-  bucket → immutable manifest file; the manifests hold the bucket→file
-  pointers + per-file stats (Iceberg's manifest/manifest-list pattern).
-  A commit therefore writes O(touched buckets) metadata — at 10^6 files a
-  one-bucket merge serializes kilobytes, not a multi-hundred-MB stats map
-  on the serial path. No directory listing on the read path; manifest
-  contents cache per handle (they are immutable once referenced).
+  partial combine — hot conv_ids pre-reduce before the shuffle.
 """
 
 from __future__ import annotations
@@ -64,8 +35,6 @@ from __future__ import annotations
 import json
 import os
 import time
-import uuid
-from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -73,6 +42,7 @@ from pyspark.sql import types as T
 
 from caterpillar_spark.operators.dedup import last_writer_wins
 from caterpillar_spark.session import cached_columns
+from caterpillar_spark.sinks.table_log import Snapshot, TableLog, updated_ledger
 
 KEY = ["conv_id", "turn_idx"]
 _SYS_COLS = ["_lsn", "_deleted"]
@@ -85,50 +55,8 @@ _DELTA_THRESHOLD = 3.0
 # a batch's per-bucket (min conv_id, max conv_id, rows); None = unknown range
 KeyStats = dict[int, tuple[str | None, str | None, int]]
 
-
-@dataclass
-class LineageEntry:
-    """One per (batch, source_partition): FIXTURES.md §3 manifest row."""
-
-    batch_id: int
-    offset_start: int
-    offset_end: int
-    snapshot_id: int
-    rows_applied: int
-    partition: int
-    t_start: float
-    t_end: float
-
-
-@dataclass
-class Snapshot:
-    version: int
-    schema_json: str  # Spark StructType json of PAYLOAD columns (no sys cols)
-    buckets: dict[str, list[str]]  # bucket id (str) -> base data file paths
-    applied: dict[str, list[list[int]]]  # stream_id -> merged [lo, hi] ranges
-    lineage: list[dict] = field(default_factory=list)  # this commit's entries
-    parent: int | None = None
-    properties: dict = field(default_factory=dict)
-    # bucket id (str) -> merge-on-read delta file paths (LWW by _lsn at read)
-    deltas: dict[str, list[str]] = field(default_factory=dict)
-    # file path -> {"min_key", "max_key", "rows"} (Iceberg-manifest-style
-    # column stats; None min/max => unknown => file always a merge candidate)
-    file_stats: dict[str, dict] = field(default_factory=dict)
-    # bucket id (str) -> path of the IMMUTABLE manifest file holding that
-    # bucket's complete current state (base + delta files + their stats) —
-    # Iceberg's manifest-list pattern. The buckets/deltas/file_stats fields
-    # above are resolved VIEWS (populated at load, empty in the serialized
-    # JSON): a commit re-manifests only the buckets it touched, so commit
-    # metadata is O(touched buckets), not O(table files).
-    # SERIALIZED inverted and relative — {manifest filename: [bucket ids]} —
-    # so shared pointers dedupe (the map costs bytes per MANIFEST, not per
-    # bucket-path pair) and the table stays relocatable.
-    manifests: dict[str, str] = field(default_factory=dict)
-
-    def has_deltas(self) -> bool:
-        return any(self.deltas.values())
-
-
+# the one declaration of a lineage row (stored as a JSON object in this
+# field order in each snapshot's ``lineage``)
 MANIFEST_SCHEMA = T.StructType(
     [
         T.StructField("batch_id", T.LongType()),
@@ -141,20 +69,6 @@ MANIFEST_SCHEMA = T.StructType(
         T.StructField("t_end", T.DoubleType()),
     ]
 )
-
-
-def _merge_ranges(ranges: list[list[int]]) -> list[list[int]]:
-    out: list[list[int]] = []
-    for lo, hi in sorted(ranges):
-        if out and lo <= out[-1][1] + 1:
-            out[-1][1] = max(out[-1][1], hi)
-        else:
-            out.append([lo, hi])
-    return out
-
-
-def _covered(ranges: list[list[int]], lo: int, hi: int) -> bool:
-    return any(a <= lo and hi <= b for a, b in ranges)
 
 
 # --------------------------------------------------------------- routing
@@ -196,232 +110,50 @@ def murmur3_hash_bytes(data: bytes, seed: int = 42) -> int:
     return h1 - (1 << 32) if h1 >= (1 << 31) else h1
 
 
-def _overlaps(stats: dict | None, klo: str | None, khi: str | None) -> bool:
-    """Conservative key-range overlap: unknown stats => candidate."""
-    if not stats or stats.get("min_key") is None or stats.get("max_key") is None:
-        return True
-    if klo is None or khi is None:
-        return True
-    return stats["max_key"] >= klo and stats["min_key"] <= khi
-
-
 class SnapshotTable:
     def __init__(self, spark: SparkSession, root: str, n_buckets: int = 64):
         self.spark = spark
         self.root = root
         self.n_buckets = n_buckets
-        self._log_dir = os.path.join(root, "_log")
-        # manifest files are immutable once a snapshot references them, so
-        # their parsed contents cache per instance: after the first load, a
-        # replay loop re-reads only the manifests its last commit created
-        self._manifest_cache: dict[str, dict] = {}
-        if self.exists():
+        self.log = TableLog(root)
+        if self.log.exists():
             # adopt the stored n_buckets NOW: apply_changes runs
             # _batch_stats (a bucket expression) before the first
             # snapshot() load, and a mismatched count mis-buckets it
             try:
                 self.snapshot()
             except (RuntimeError, FileNotFoundError, json.JSONDecodeError):
-                # inline-pointer snapshot / crashed-create leftovers (a _log
-                # dir with no loadable v*.json) / corrupt latest snapshot: defer —
-                # the first actual use re-raises, and create/repair flows
-                # stay able to construct the object (ADVICE r3)
+                # inline-pointer / corrupt latest snapshot: defer — the
+                # first actual use re-raises, and repair flows stay able
+                # to construct the object (ADVICE r3)
                 pass
 
-    # ------------------------------------------------------------- log io
-    def _snap_path(self, v: int) -> str:
-        return os.path.join(self._log_dir, f"v{v:012d}.json")
-
-    def exists(self) -> bool:
-        return os.path.isdir(self._log_dir) and bool(os.listdir(self._log_dir))
+    # ------------------------------------------------------------ metadata
+    def snapshot(self, version: int | None = None) -> Snapshot:
+        snap = self.log.snapshot(self.current_version() if version is None else version)
+        # the STORED bucket count is authoritative (ADVICE r2): a handle
+        # opened with a mismatched n_buckets would silently under-read
+        # (read() iterates range(self.n_buckets)) or mis-bucket merges
+        self.n_buckets = int(snap.properties.get("n_buckets") or self.n_buckets)
+        return snap
 
     def current_version(self) -> int:
-        versions = [
-            int(f[1:13])
-            for f in os.listdir(self._log_dir)
-            if f.endswith(".json") and f.startswith("v")
-        ]
-        if not versions:
-            raise FileNotFoundError(f"no snapshots in {self._log_dir}")
-        return max(versions)
+        return self.log.current_version()
 
-    def _snapshot_raw(self, version: int | None = None) -> Snapshot:
-        """Snapshot WITHOUT manifest resolution — applied ledger, lineage
-        and properties are inline; callers that never touch file pointers
-        (ledger checks, the lineage walk) skip the manifest reads."""
-        v = self.current_version() if version is None else version
-        with open(self._snap_path(v)) as f:
-            data = json.load(f)
-        # every writer of this engine keeps bucket pointers in manifests;
-        # inline ones come from a retired writer, and committing on top of
-        # them would silently drop every bucket the commit does not touch
-        if any(data.get("buckets", {}).values()) or any(
-            data.get("deltas", {}).values()
-        ):
-            raise RuntimeError(
-                f"{self._snap_path(v)} stores inline bucket pointers (a "
-                "retired snapshot format); rewrite the table: read its data "
-                "via spark.read.parquet + LWW-reduce, then create() + merge() "
-                "into a new table"
-            )
-        stored_manifests = data.get("manifests") or {}
-        data["manifests"] = {}
-        snap = Snapshot(**data)
-        mdir = os.path.join(self._log_dir, "manifests")
-        for fname, blist in stored_manifests.items():
-            full = os.path.join(mdir, fname)
-            for b in blist:
-                snap.manifests[str(b)] = full
-        # the STORED bucket count is authoritative (ADVICE r2): an instance
-        # opened with a mismatched n_buckets would silently under-read
-        # (read() iterates range(self.n_buckets)) or mis-bucket merges.
-        stored_n = snap.properties.get("n_buckets")
-        if stored_n is not None:
-            self.n_buckets = int(stored_n)
-        return snap
+    def applied_ranges(self, stream_id: str = "default") -> list[list[int]]:
+        return self.log.applied_ranges(stream_id)
 
-    def snapshot(self, version: int | None = None) -> Snapshot:
-        snap = self._snapshot_raw(version)
-        if snap.manifests:
-            buckets: dict[str, list[str]] = {}
-            deltas: dict[str, list[str]] = {}
-            stats: dict[str, dict] = {}
-            for bs, mpath in snap.manifests.items():
-                e = self._load_manifest(mpath)[bs]
-                if e["base"]:
-                    buckets[bs] = list(e["base"])
-                if e["deltas"]:
-                    deltas[bs] = list(e["deltas"])
-                stats.update(e["file_stats"])
-            snap.buckets, snap.deltas, snap.file_stats = buckets, deltas, stats
-        return snap
-
-    def _load_manifest(self, path: str) -> dict:
-        m = self._manifest_cache.get(path)
-        if m is None:
-            with open(path) as f:
-                m = json.load(f)
-            self._manifest_cache[path] = m
-        return m
-
-    def _shard_metadata(self, snap: Snapshot, touched) -> None:
-        """Write ONE immutable manifest file carrying the complete state
-        (base + delta files + per-file stats) of every bucket this commit
-        touched; point ``snap.manifests`` at it for those buckets and at
-        the parent's manifests for the rest. A merge into 1 of 10^6 files'
-        worth of buckets serializes kilobytes, not the whole file_stats map
-        (VERDICT r2 what's-wrong #1 — the O(table-files)-per-commit Amdahl
-        term)."""
-        new_manifests = dict(snap.manifests)
-        entries: dict[str, dict] = {}
-        for b in sorted({int(b) for b in touched}):
-            bs = str(b)
-            base = snap.buckets.get(bs, [])
-            delt = snap.deltas.get(bs, [])
-            if not base and not delt:
-                new_manifests.pop(bs, None)  # bucket emptied out
-                continue
-            entries[bs] = {
-                "base": base,
-                "deltas": delt,
-                "file_stats": {
-                    p: snap.file_stats[p]
-                    for p in base + delt
-                    if p in snap.file_stats
-                },
-            }
-        if entries:
-            mdir = os.path.join(self._log_dir, "manifests")
-            os.makedirs(mdir, exist_ok=True)
-            mpath = os.path.join(
-                mdir, f"m{snap.version:012d}-{uuid.uuid4().hex[:12]}.json"
-            )
-            with open(mpath, "w") as f:
-                json.dump(entries, f)
-            self._manifest_cache[mpath] = entries
-            for bs in entries:
-                new_manifests[bs] = mpath
-        snap.manifests = new_manifests
-
-    def _commit(self, snap: Snapshot, touched) -> None:
-        """Atomic create of the next snapshot file (fails on conflict).
-        ``touched`` = bucket ids whose state this commit changed: their
-        pointers+stats are sharded into an immutable manifest file and the
-        snapshot JSON stores only the O(n_buckets) manifest map."""
-        os.makedirs(self._log_dir, exist_ok=True)
-        self._shard_metadata(snap, touched)
-        # resolved views live in the manifests; don't double-store
-        payload = {**asdict(snap), "buckets": {}, "deltas": {}, "file_stats": {}}
-        inv: dict[str, list[int]] = {}
-        for bs, mpath in snap.manifests.items():
-            inv.setdefault(os.path.basename(mpath), []).append(int(bs))
-        payload["manifests"] = {k: sorted(v) for k, v in inv.items()}
-        final = self._snap_path(snap.version)
-        tmp = final + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(payload, f)
-        try:
-            os.link(tmp, final)  # atomic; raises FileExistsError on conflict
-        finally:
-            os.unlink(tmp)
-
-    def _commit_next(
-        self,
-        snap: Snapshot,
-        buckets: dict[str, list[str]],
-        deltas: dict[str, list[str]],
-        applied: dict[str, list[list[int]]],
-        lineage: list[dict],
-        schema_json: str,
-        touched,
-    ) -> int:
-        """Commit the successor of ``snap`` with the given file pointers and
-        return its version. ``file_stats`` keeps the parent's entries for
-        files still referenced and reads parquet footers for the new ones;
-        the bucket count is (re-)stamped into the properties."""
-        referenced = [p for ps in (*buckets.values(), *deltas.values()) for p in ps]
-        file_stats = {p: snap.file_stats[p] for p in referenced if p in snap.file_stats}
-        file_stats.update(
-            self._collect_file_stats([p for p in referenced if p not in file_stats])
-        )
-        version = snap.version + 1
-        self._commit(
-            Snapshot(
-                version=version,
-                schema_json=schema_json,
-                buckets=buckets,
-                applied=applied,
-                lineage=lineage,
-                parent=snap.version,
-                properties={**snap.properties, "n_buckets": self.n_buckets},
-                deltas=deltas,
-                file_stats=file_stats,
-                manifests=snap.manifests,
-            ),
-            touched,
-        )
-        return version
-
-    def _new_data_dir(self, version: int) -> str:
-        # collision-free per writer: a losing concurrent committer's files
-        # can never overwrite the winner's (ADVICE r1: version-keyed dirs +
-        # mode("overwrite") let the loser destroy committed data). The token
-        # names a directory only — table DATA stays deterministic.
-        return os.path.join(self.root, "data", f"v{version}-{uuid.uuid4().hex[:12]}")
+    def expire_snapshots(
+        self, keep_last: int = 10, grace_seconds: float = 3600.0
+    ) -> list[str]:
+        return self.log.expire_snapshots(keep_last, grace_seconds)
 
     # ------------------------------------------------------------- create
     def create(self, payload_schema: T.StructType) -> "SnapshotTable":
-        if self.exists():
+        if self.log.exists():
             raise FileExistsError(f"table already exists at {self.root}")
-        snap = Snapshot(
-            version=0,
-            schema_json=payload_schema.json(),
-            buckets={},
-            applied={},
-            parent=None,
-            properties={"n_buckets": self.n_buckets},
-        )
-        self._commit(snap, touched=())
+        props = {"n_buckets": self.n_buckets}
+        self.log.commit(Snapshot(0, payload_schema.json(), properties=props), ())
         return self
 
     # -------------------------------------------------------------- reads
@@ -488,13 +220,13 @@ class SnapshotTable:
             p
             for b in buckets
             for p in snap.buckets.get(str(b), [])
-            if _overlaps(snap.file_stats.get(p), klo, khi)
+            if snap.overlaps(p, klo, khi)
         ]
         deltas = [
             p
             for b in buckets
             for p in snap.deltas.get(str(b), [])
-            if _overlaps(snap.file_stats.get(p), klo, khi)
+            if snap.overlaps(p, klo, khi)
         ]
         return base + deltas, bool(deltas)
 
@@ -569,20 +301,13 @@ class SnapshotTable:
 
     def manifest(self) -> DataFrame:
         """All lineage entries across the snapshot history (FIXTURES.md §3)."""
-        rows = []
-        v = self.current_version()
-        while v is not None:
-            snap = self._snapshot_raw(v)  # lineage is inline; skip manifests
-            rows.extend(snap.lineage)
-            v = snap.parent
         return self.spark.createDataFrame(
-            [tuple(r[f.name] for f in MANIFEST_SCHEMA.fields) for r in rows],
+            [
+                tuple(r[f.name] for f in MANIFEST_SCHEMA.fields)
+                for r in self.log.lineage()
+            ],
             MANIFEST_SCHEMA,
         )
-
-    def applied_ranges(self, stream_id: str = "default") -> list[list[int]]:
-        # ledger is inline in the snapshot JSON — zero manifest reads
-        return self._snapshot_raw().applied.get(stream_id, [])
 
     # -------------------------------------------------------------- write
     def bucket_expr(self) -> F.Column:
@@ -619,45 +344,6 @@ class SnapshotTable:
                 )
         return out
 
-    @staticmethod
-    def _collect_file_stats(paths: list[str]) -> dict[str, dict]:
-        """Per-file (min_key, max_key, rows) from parquet footers —
-        driver-side, the stats an Iceberg writer would put in the
-        manifest. Footer reads are I/O-bound and independent, so they run
-        in a thread pool: this sits on the per-batch SERIAL path, and
-        serial driver time is what caps scaling efficiency (Amdahl).
-        Parquet string stats may be truncated-but-safe (min is a ≤-prefix,
-        max is padded up), which pruning tolerates."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        import pyarrow.parquet as pq
-
-        def one(p: str) -> tuple[str, dict]:
-            md = pq.ParquetFile(p).metadata
-            idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            lo = hi = None
-            ok = "conv_id" in idx
-            if ok:
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(idx["conv_id"]).statistics
-                    if st is None or not st.has_min_max:
-                        ok = False
-                        break
-                    mn = st.min.decode() if isinstance(st.min, bytes) else st.min
-                    mx = st.max.decode() if isinstance(st.max, bytes) else st.max
-                    lo = mn if lo is None else min(lo, mn)
-                    hi = hi if hi is not None and hi >= mx else mx
-            return p, {
-                "min_key": lo if ok else None,
-                "max_key": hi if ok else None,
-                "rows": md.num_rows,
-            }
-
-        if not paths:
-            return {}
-        with ThreadPoolExecutor(min(16, len(paths))) as ex:
-            return dict(ex.map(one, paths))
-
     # -------------------------------------------------------------- merge
     def _batch_stats(
         self, df: DataFrame
@@ -688,7 +374,7 @@ class SnapshotTable:
             by_sp[r["sp"]] = by_sp.get(r["sp"], 0) + r["n"]
             by_b.setdefault(r["b"], []).append(r)
         # a group whose conv_ids are all NULL has no min/max: its bucket's
-        # key range degrades to unknown (conservative: _overlaps keeps
+        # key range degrades to unknown (conservative: overlaps() keeps
         # every file a candidate) instead of raising min(str, None)
         # (ADVICE r2)
         incoming: KeyStats = {}
@@ -742,25 +428,18 @@ class SnapshotTable:
         t0 = t_start if t_start is not None else time.time()
         snap = self.snapshot()
         lo, hi = offset_range
-        prior = snap.applied.get(stream_id, [])
-        if _covered(prior, lo, hi):
+        applied = updated_ledger(snap.applied, stream_id, lo, hi)
+        if applied is None:
             return -1, None  # exactly-once: already applied
-        applied = {**snap.applied, stream_id: _merge_ranges(prior + [[lo, hi]])}
         new_version = snap.version + 1
 
         def lineage(counts: list[tuple[int, int]]) -> list[dict]:
             t_end = time.time()
             return [
-                asdict(
-                    LineageEntry(
-                        batch_id=batch_id,
-                        offset_start=lo,
-                        offset_end=hi,
-                        snapshot_id=new_version,
-                        rows_applied=int(n),
-                        partition=int(p),
-                        t_start=t0,
-                        t_end=t_end,
+                dict(
+                    zip(
+                        MANIFEST_SCHEMA.fieldNames(),
+                        (batch_id, lo, hi, new_version, int(n), int(p), t0, t_end),
                     )
                 )
                 for p, n in counts
@@ -783,14 +462,8 @@ class SnapshotTable:
             # REAL offset range: commit a data-less snapshot that records
             # the range, else the ledger keeps a permanent hole and replay-
             # completeness checks report the stream as unfinished
-            self._commit_next(
-                snap,
-                snap.buckets,
-                snap.deltas,
-                applied,
-                lineage([(-1, 0)]),
-                snap.schema_json,
-                touched=(),  # data untouched: reuse parent manifests as-is
+            self.log.commit_next(  # touches no bucket: parent manifests as-is
+                snap, (), self.n_buckets, applied=applied, lineage=lineage([(-1, 0)])
             )
             return new_version, [(-1, 0)]
 
@@ -854,7 +527,7 @@ class SnapshotTable:
         for b, (klo, khi, _n) in incoming_stats.items():
             cand, keep = [], []
             for p in snap.buckets.get(str(b), []):
-                if _overlaps(snap.file_stats.get(p), klo, khi):
+                if snap.overlaps(p, klo, khi):
                     cand.append(p)
                 else:
                     keep.append(p)
@@ -883,7 +556,7 @@ class SnapshotTable:
             rows = rows.select(*upd.columns).unionByName(upd)
         winner = last_writer_wins(self._partition_by_bucket(rows), KEY, "_lsn")
 
-        by_bucket = self._write_bucketed(winner, self._new_data_dir(new_version))
+        by_bucket = self._write_bucketed(winner, self.log.new_data_dir(new_version))
 
         buckets, deltas = dict(snap.buckets), dict(snap.deltas)
         for b in incoming_stats:
@@ -904,77 +577,17 @@ class SnapshotTable:
             if got.get("rest"):
                 counts.append((-1, int(got["rest"])))
             partition_counts = sorted(counts) or [(-1, 0)]
-        self._commit_next(
+        self.log.commit_next(
             snap,
-            buckets,
-            deltas,
-            applied,
-            lineage(partition_counts),
-            evolved.json(),
-            touched=incoming_stats.keys(),
+            incoming_stats.keys(),
+            self.n_buckets,
+            buckets=buckets,
+            deltas=deltas,
+            applied=applied,
+            lineage=lineage(partition_counts),
+            schema_json=evolved.json(),
         )
         return new_version, partition_counts
-
-    # ------------------------------------------------------------ expire
-    def expire_snapshots(
-        self, keep_last: int = 10, grace_seconds: float = 3600.0
-    ) -> list[str]:
-        """Delete data directories referenced ONLY by snapshots older than
-        the ``keep_last`` most recent (Iceberg's expire_snapshots). Also
-        collects orphan dirs from losing/crashed writers — but never dirs
-        younger than ``grace_seconds``: an IN-FLIGHT merge has written its
-        data dir before linking the snapshot JSON, and vacuuming it mid-
-        commit would produce a snapshot referencing deleted files (the
-        ``older_than`` pattern of Iceberg's remove_orphan_files; ADVICE
-        r2). Snapshot JSONs are kept (they are tiny and hold the lineage
-        history); their data becomes unreadable. Returns removed dirs."""
-        import shutil
-
-        current = self.current_version()
-        keep_versions = range(max(0, current - keep_last + 1), current + 1)
-        live_dirs: set[str] = set()
-        for v in keep_versions:
-            snap = self.snapshot(v)
-            for files in list(snap.buckets.values()) + list(snap.deltas.values()):
-                live_dirs.update(os.path.dirname(f) for f in files)
-        data_root = os.path.join(self.root, "data")
-        removed = []
-        now = time.time()
-        if os.path.isdir(data_root):
-            for d in sorted(os.listdir(data_root)):
-                full = os.path.join(data_root, d)
-                if full in live_dirs:
-                    continue
-                try:
-                    if now - os.path.getmtime(full) < grace_seconds:
-                        continue  # possibly an in-flight writer's dir
-                except OSError:
-                    continue  # vanished concurrently
-                shutil.rmtree(full, ignore_errors=True)
-                removed.append(full)
-        # manifest files referenced by NO snapshot JSON are leftovers of
-        # crashed/losing writers (manifest written, snapshot link failed);
-        # referenced ones stay forever — snapshot JSONs are kept and must
-        # remain loadable for the lineage walk. Same grace window applies.
-        mdir = os.path.join(self._log_dir, "manifests")
-        if os.path.isdir(mdir):
-            referenced: set[str] = set()  # manifest FILENAMES (stored form)
-            for f in os.listdir(self._log_dir):
-                if f.startswith("v") and f.endswith(".json"):
-                    with open(os.path.join(self._log_dir, f)) as fh:
-                        referenced.update(json.load(fh).get("manifests", {}))
-            for f in sorted(os.listdir(mdir)):
-                if f in referenced:
-                    continue
-                full = os.path.join(mdir, f)
-                try:
-                    if now - os.path.getmtime(full) < grace_seconds:
-                        continue
-                    os.unlink(full)
-                except OSError:
-                    continue
-                removed.append(full)
-        return removed
 
     # ------------------------------------------------------------ compact
     def compact(
@@ -997,13 +610,13 @@ class SnapshotTable:
         )
         if drop_tombstones:
             df = df.filter(~F.col("_deleted"))
-        by_bucket = self._write_bucketed(df, self._new_data_dir(snap.version + 1))
+        by_bucket = self._write_bucketed(df, self.log.new_data_dir(snap.version + 1))
         buckets, deltas = dict(snap.buckets), dict(snap.deltas)
         for b in sel:
             buckets[str(b)] = by_bucket.get(b, [])
             deltas.pop(str(b), None)
-        return self._commit_next(
-            snap, buckets, deltas, snap.applied, [], snap.schema_json, touched=sel
+        return self.log.commit_next(
+            snap, sel, self.n_buckets, buckets=buckets, deltas=deltas
         )
 
     def maintain(

@@ -60,7 +60,7 @@ def main() -> None:
 
     spark = get_spark("caterpillar-cdc-replay")
     table = SnapshotTable(spark, args.table, n_buckets=args.n_buckets or 256)
-    if args.create and not table.exists():
+    if args.create and not table.log.exists():
         table.create(TRANSCRIPT_SCHEMA)
 
     if args.mode == "batch":

@@ -1,18 +1,15 @@
 """Regression guard for the jar-gated Iceberg path (VERDICT r2 #8): the
-MERGE statement and ledger-property logic are pure functions, so their
-exactly-once / LWW / tombstone semantics are pinned here even though no
-Iceberg runtime exists in this sandbox to execute them."""
+MERGE statement and the ledger update (``table_log.updated_ledger``, shared
+with SnapshotTable) are pure functions, so their exactly-once / LWW /
+tombstone semantics are pinned here even though no Iceberg runtime exists
+in this sandbox to execute them."""
 
 from __future__ import annotations
 
-import json
 import re
 
-from caterpillar_spark.sinks.iceberg_table import (
-    APPLIED_PROP,
-    merge_sql,
-    updated_ledger,
-)
+from caterpillar_spark.sinks.iceberg_table import merge_sql
+from caterpillar_spark.sinks.table_log import updated_ledger
 
 
 def test_merge_sql_lww_guard_and_tombstones():
@@ -40,25 +37,23 @@ def test_merge_sql_lww_guard_and_tombstones():
 
 
 def test_updated_ledger_covered_is_noop():
-    summary = {APPLIED_PROP: json.dumps({"default": [[0, 99]]})}
-    assert updated_ledger(summary, "default", 10, 50) is None
-    assert updated_ledger(summary, "default", 0, 99) is None
+    ledger = {"default": [[0, 99]]}
+    assert updated_ledger(ledger, "default", 10, 50) is None
+    assert updated_ledger(ledger, "default", 0, 99) is None
 
 
 def test_updated_ledger_merges_and_preserves_other_streams():
-    summary = {
-        APPLIED_PROP: json.dumps(
-            {"default": [[0, 49]], "other": [[1000, 1999]]}
-        )
-    }
-    out = updated_ledger(summary, "default", 50, 99)
+    ledger = {"default": [[0, 49]], "other": [[1000, 1999]]}
+    out = updated_ledger(ledger, "default", 50, 99)
     assert out["default"] == [[0, 99]]  # adjacent ranges coalesce
     # the round-1 erasure bug: other streams' ranges must survive
     assert out["other"] == [[1000, 1999]]
     # partial overlap is NOT covered -> re-applied (merge() relies on the
     # u.lsn > t.lsn guard for idempotence in that case)
-    out2 = updated_ledger(summary, "default", 25, 75)
+    out2 = updated_ledger(ledger, "default", 25, 75)
     assert out2["default"] == [[0, 75]]
+    # the input ledger is never mutated (it is the parent snapshot's)
+    assert ledger == {"default": [[0, 49]], "other": [[1000, 1999]]}
 
 
 def test_updated_ledger_empty_summary():

@@ -33,9 +33,9 @@ def test_concurrent_commit_conflict(spark, tmp_path):
     chunks = write_changelog_chunks(spark, SPEC, str(tmp_path / "log"), n_chunks=2)
     replay_chunks(spark, chunks[:1], tbl)
     # competing writer sneaks in version 2
-    v2 = tbl._snap_path(2)
+    v2 = tbl.log.snap_path(2)
     with open(v2, "w") as f:
-        json.dump(json.load(open(tbl._snap_path(1))), f)
+        json.dump(json.load(open(tbl.log.snap_path(1))), f)
     with pytest.raises(FileExistsError):
         replay_chunks(spark, chunks[1:], tbl)
 
@@ -111,7 +111,7 @@ def test_format2_stamped_on_commit_into_format1_empty(spark, tmp_path):
     root = str(tmp_path / "t")
     tbl = SnapshotTable(spark, root, n_buckets=4).create(PAYLOAD)
     # rewrite v0 as a legacy snapshot: no format / n_buckets properties
-    p0 = tbl._snap_path(0)
+    p0 = tbl.log.snap_path(0)
     raw = json.load(open(p0))
     raw["properties"] = {}
     os.unlink(p0)
@@ -131,14 +131,14 @@ def test_inline_bucket_pointers_raise_on_load(spark, tmp_path):
     root = str(tmp_path / "t")
     tbl = SnapshotTable(spark, root, n_buckets=4).create(PAYLOAD)
     for field in ("buckets", "deltas"):
-        raw = json.load(open(tbl._snap_path(0)))
+        raw = json.load(open(tbl.log.snap_path(0)))
         raw.update(version=1, parent=0, **{field: {"2": ["data/x/part-00002.parquet"]}})
-        with open(tbl._snap_path(1), "w") as f:
+        with open(tbl.log.snap_path(1), "w") as f:
             json.dump(raw, f)
         reopened = SnapshotTable(spark, root)  # deferred, not raised
         with pytest.raises(RuntimeError, match="inline bucket pointers"):
             reopened.snapshot()
         with pytest.raises(RuntimeError, match="inline bucket pointers"):
             reopened.read()
-        os.unlink(tbl._snap_path(1))
+        os.unlink(tbl.log.snap_path(1))
     assert tbl.snapshot().version == 0  # empty inline maps load fine

@@ -102,7 +102,7 @@ def test_two_streams_interleaved_with_crash_retry(spark, tmp_path):
     exactly-once gate."""
     import datetime as dt
 
-    from caterpillar_spark.sinks.snapshot_table import SnapshotTable as ST
+    from caterpillar_spark.sinks.table_log import TableLog
 
     TS = dt.datetime(2024, 1, 1)
 
@@ -134,7 +134,7 @@ def test_two_streams_interleaved_with_crash_retry(spark, tmp_path):
 
     # stream A's next commit CRASHES after writing data files, before the
     # atomic snapshot link — nothing may become visible
-    real_commit = ST._commit
+    real_commit = TableLog.commit
     boom = {"armed": True}
 
     def crashing_commit(self, snap, touched=None):
@@ -143,7 +143,7 @@ def test_two_streams_interleaved_with_crash_retry(spark, tmp_path):
             raise RuntimeError("simulated crash before atomic commit")
         return real_commit(self, snap, touched)
 
-    ST._commit = crashing_commit
+    TableLog.commit = crashing_commit
     try:
         try:
             tbl.merge(a1, 1, (100, 150), stream_id="A")
@@ -151,7 +151,7 @@ def test_two_streams_interleaved_with_crash_retry(spark, tmp_path):
         except RuntimeError as e:
             assert "simulated crash" in str(e)
     finally:
-        ST._commit = real_commit
+        TableLog.commit = real_commit
     # the crashed commit is invisible: version unmoved, range unapplied
     fresh = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=8)
     assert fresh.current_version() == 2

@@ -489,7 +489,7 @@ def test_commit_metadata_is_o_touched_buckets(spark, tmp_path):
     tbl.merge(_insert_batch(spark, convs, 0), 0, (0, 1999))
 
     def commit_meta_bytes(version):
-        sp = tbl._snap_path(version)
+        sp = tbl.log.snap_path(version)
         mans = glob.glob(
             os.path.join(str(tmp_path / "t"), "_log", "manifests",
                          f"m{version:012d}-*.json")
@@ -511,7 +511,7 @@ def test_commit_metadata_is_o_touched_buckets(spark, tmp_path):
     assert small2 < bulk_bytes / 8, (small2, bulk_bytes)
     assert abs(small1 - small2) < 0.5 * max(small1, small2)
     # snapshot JSON itself carries no file pointers
-    raw = _json.load(open(tbl._snap_path(3)))
+    raw = _json.load(open(tbl.log.snap_path(3)))
     assert raw["buckets"] == {} and raw["file_stats"] == {}
     assert len(raw["manifests"]) <= 64
     # each small commit's manifest holds exactly the touched bucket

@@ -1,0 +1,304 @@
+"""TableLog, the Spark-free metadata half of SnapshotTable. No JVM: data
+files are tiny pyarrow-written parquet files standing in for the Spark
+write, and crashes are injected into table_log's own filesystem calls."""
+
+from __future__ import annotations
+
+import contextlib
+import os
+import shutil
+import subprocess
+import sys
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from caterpillar_spark.cdc import segment_footer_stats
+from caterpillar_spark.sinks import table_log
+from caterpillar_spark.sinks.table_log import Snapshot, TableLog, updated_ledger
+
+N_BUCKETS = 4
+
+
+class Died(Exception):
+    """The simulated process death."""
+
+
+class _Death:
+    """Lets the first ``k`` filesystem calls through; that call and every
+    later one raise, as they would in a process killed at that point."""
+
+    def __init__(self, k: int):
+        self.k, self.calls = k, 0
+
+    def wrap(self, fn):
+        def call(*args, **kwargs):
+            self.calls += 1
+            if self.calls > self.k:
+                raise Died(fn.__name__)
+            return fn(*args, **kwargs)
+
+        return call
+
+
+class _FS:
+    """A module as table_log sees it: every callable but the pure path
+    helpers is a filesystem call that goes through ``death``."""
+
+    PURE = {"join", "basename", "dirname"}
+
+    def __init__(self, real, death: _Death):
+        self._real, self._death = real, death
+
+    def __getattr__(self, name):
+        attr = getattr(self._real, name)
+        if name == "path":
+            return _FS(attr, self._death)
+        if callable(attr) and name not in self.PURE:
+            return self._death.wrap(attr)
+        return attr
+
+
+@contextlib.contextmanager
+def _dying(k: int):
+    death = _Death(k)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(table_log, "os", _FS(os, death))
+        mp.setattr(table_log, "shutil", _FS(shutil, death))
+        mp.setattr(table_log, "open", death.wrap(open), raising=False)
+        yield death
+
+
+# ------------------------------------------------------------ the scenario
+def _write(log: TableLog, version: int, rows: dict[int, list[str]]) -> dict:
+    """One parquet file per bucket in a fresh data dir (the Spark write)."""
+    d = log.new_data_dir(version)
+    os.makedirs(d)
+    out = {}
+    for b, keys in rows.items():
+        p = os.path.join(d, f"part-{b:05d}-t.c000.snappy.parquet")
+        pq.write_table(pa.table({"conv_id": sorted(keys)}), p)
+        out[str(b)] = [p]
+    return out
+
+
+def _create(log):
+    if not log.exists():
+        props = {"n_buckets": N_BUCKETS}
+        log.commit(Snapshot(0, '{"fields": []}', properties=props), ())
+
+
+def _merge(lo, hi, rows, delta=False):
+    def step(log):
+        snap = log.snapshot()
+        applied = updated_ledger(snap.applied, "s", lo, hi)
+        if applied is None:
+            return  # the retry of a batch that committed
+        new = _write(log, snap.version + 1, rows)
+        buckets, deltas = dict(snap.buckets), dict(snap.deltas)
+        for b, ps in new.items():
+            if delta:
+                deltas[b] = deltas.get(b, []) + ps
+            else:
+                buckets[b] = ps
+        log.commit_next(
+            snap,
+            rows,
+            N_BUCKETS,
+            buckets=buckets,
+            deltas=deltas,
+            applied=applied,
+            lineage=[{"batch_id": lo, "rows_applied": sum(map(len, rows.values()))}],
+        )
+
+    return step
+
+
+def _compact(log):
+    snap = log.snapshot()
+    due = sorted(int(b) for b, ps in snap.deltas.items() if ps)
+    if not due:
+        return  # the retry of a compaction that committed
+    # the rewrite's content only has to be deterministic: the old files'
+    # footer key ranges stand in for their rows
+    rows = {
+        b: [
+            snap.file_stats[p][k]
+            for p in snap.buckets.get(str(b), []) + snap.deltas[str(b)]
+            for k in ("min_key", "max_key")
+        ]
+        for b in due
+    }
+    new = _write(log, snap.version + 1, rows)
+    buckets = {**snap.buckets, **new}
+    deltas = {b: ps for b, ps in snap.deltas.items() if int(b) not in due}
+    log.commit_next(snap, due, N_BUCKETS, buckets=buckets, deltas=deltas)
+
+
+def _expire(log):
+    log.expire_snapshots(keep_last=1, grace_seconds=0)
+
+
+STEPS = [
+    _create,
+    _merge(0, 9, {0: ["a", "e"], 1: ["b"]}),
+    _merge(10, 19, {1: ["c", "f"]}, delta=True),
+    _merge(20, 29, {}),  # an empty batch: ledger only, no bucket touched
+    _compact,
+    _expire,
+]
+
+
+def _state(root: str):
+    """What a fresh process sees: None before create, else the snapshot
+    with file pointers replaced by their footer stats (min/max key, rows),
+    after checking that every referenced file and manifest exists."""
+    log = TableLog(root)
+    if not log.exists():
+        return None
+    snap = log.snapshot()
+    for p in {*snap.manifests.values(), *snap.file_stats}:
+        assert os.path.isfile(p), p
+
+    def files(by_bucket):
+        return {b: [snap.file_stats[p] for p in ps] for b, ps in by_bucket.items() if ps}
+
+    return (
+        snap.version,
+        snap.applied,
+        snap.lineage,
+        snap.properties,
+        files(snap.buckets),
+        files(snap.deltas),
+    )
+
+
+def _leftovers(root: str) -> tuple[int, int, int, int]:
+    """(snapshot JSONs, manifests, tmp files, data dirs) on disk."""
+
+    def ls(*parts):
+        path = os.path.join(root, *parts)
+        return os.listdir(path) if os.path.isdir(path) else []
+
+    log = ls("_log")
+    return (
+        sum(f.endswith(".json") for f in log),
+        len(ls("_log", "manifests")),
+        sum(".tmp-" in f for f in log),
+        len(ls("data")),
+    )
+
+
+def _run(root, steps):
+    for step in steps:
+        step(TableLog(root))  # a fresh handle per step, like a restarted job
+
+
+def test_crash_matrix_parent_or_child_then_retry_converges(tmp_path):
+    """Kill the process at every filesystem call of every step (create,
+    a bucket-touching commit, a delta commit, an empty-batch commit, a
+    compaction and expire): a fresh TableLog then loads exactly the parent
+    or the child, and every file it references exists. Retrying the step
+    then yields the child, and expire leaves exactly what it leaves after
+    the uncrashed step."""
+    after, clean = [], []
+    for i in range(len(STEPS)):
+        ref = str(tmp_path / f"ref{i}")
+        _run(ref, STEPS[: i + 1])
+        after.append(_state(ref))
+        _run(ref, [_expire])
+        clean.append(_leftovers(ref))
+    assert after[-1][0] == 4 and after[-1][1] == {"s": [[0, 29]]}
+    assert not after[-1][5]  # compacted: no deltas left
+    assert clean[-1] == (5, 3, 0, 2)
+
+    root, crash_points = str(tmp_path / "t"), 0
+    for i, step in enumerate(STEPS):
+        parent = after[i - 1] if i else None
+        prefix = str(tmp_path / f"prefix{i}")
+        _run(root, STEPS[:i])
+        if os.path.exists(root):
+            os.rename(root, prefix)  # same root for every k: paths are absolute
+        for k in range(1000):
+            if os.path.exists(prefix):
+                shutil.copytree(prefix, root)
+            with _dying(k) as death:
+                try:
+                    step(TableLog(root))
+                except Died:
+                    pass
+            if death.calls <= k:
+                break  # the step finished before call k: every point done
+            crash_points += 1
+            assert _state(root) in (parent, after[i]), (i, k)
+            _run(root, [step])
+            assert _state(root) == after[i], (i, k)
+            _run(root, [_expire])
+            assert _leftovers(root) == clean[i], (i, k)
+            os.rename(root, str(tmp_path / f"done{i}-{k}"))  # cheaper than rmtree
+        os.rename(root, str(tmp_path / f"done{i}"))
+    assert crash_points > 50
+
+
+def test_expire_keep_last_below_one_raises_before_deleting(tmp_path):
+    """keep_last=0 used to leave no version to keep, so every data dir,
+    the live snapshot's included, was collected."""
+    root = str(tmp_path / "t")
+    _run(root, STEPS[:3])
+    before = sorted(os.walk(root))
+    for keep_last in (0, -1):
+        with pytest.raises(ValueError, match="keep_last"):
+            TableLog(root).expire_snapshots(keep_last=keep_last, grace_seconds=0)
+    assert sorted(os.walk(root)) == before
+
+
+def test_killed_create_does_not_brick_the_path(tmp_path):
+    """A create killed after writing its tmp file (before the link) leaves
+    ``_log/`` non-empty but no snapshot: the table does not exist, create
+    succeeds, and expire collects the leftover."""
+    root = str(tmp_path / "t")
+    with _dying(3):  # exists(), makedirs(_log), open(tmp); dead at the link
+        with pytest.raises(Died):
+            _create(TableLog(root))
+    log = TableLog(root)
+    (tmp,) = os.listdir(log.log_dir)
+    assert ".tmp-" in tmp and not log.exists()
+    with pytest.raises(FileNotFoundError):
+        log.current_version()
+    _create(log)
+    assert log.current_version() == 0
+    assert log.expire_snapshots(keep_last=1, grace_seconds=0) == [
+        os.path.join(log.log_dir, tmp)
+    ]
+
+
+def test_segment_footer_stats_over_the_shared_footer_reader(tmp_path):
+    seg = tmp_path / "seg"
+    seg.mkdir()
+    pq.write_table(pa.table({"lsn": [5, 9, 7]}), seg / "a.parquet")
+    pq.write_table(pa.table({"lsn": [12, 10]}), seg / "b.parquet")
+    pq.write_table(pa.table({"lsn": pa.array([], pa.int64())}), seg / "c.parquet")
+    (seg / "_SUCCESS").write_text("")
+    assert segment_footer_stats(str(seg)) == (5, 12, 5)  # empty file skipped
+    pq.write_table(pa.table({"other": [1]}), seg / "d.parquet")
+    assert segment_footer_stats(str(seg)) is None  # rows without lsn stats
+
+
+def test_table_log_imports_without_pyspark():
+    """The metadata layer stays Spark-free: it imports with pyspark
+    blocked, and pulls in no Spark module."""
+    code = (
+        "import sys; sys.modules['pyspark'] = None\n"
+        "import caterpillar_spark.sinks.table_log\n"
+        "assert not [m for m in sys.modules if m.startswith('pyspark.')]\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=root,
+        capture_output=True,
+        text=True,
+        timeout=60,
+    )
+    assert out.returncode == 0, out.stderr
