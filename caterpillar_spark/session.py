@@ -66,6 +66,11 @@ def get_spark(
         .config("spark.io.compression.codec", "zstd")
         # pandas UDF batches: bounded memory per Arrow batch at scale
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        # a read of more than `threshold` paths lists them in a Spark job
+        # of one task per path (default 32). The engine reads only files
+        # its snapshot lists: stat them on the driver instead (building a
+        # 220-file read() on local[4], 4 vCPU: 1.3-2.2 s -> 0.12-0.19 s)
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

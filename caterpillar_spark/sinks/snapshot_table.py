@@ -7,23 +7,26 @@ This module is the Spark half: routing, reads, merge and compaction. The
 layout, commit protocol, offset ledger, manifests and per-file footer
 stats live in :mod:`caterpillar_spark.sinks.table_log` (no Spark).
 
-File/bucket invariant: every data file contains rows of EXACTLY ONE bucket.
+File/bucket invariant: every BASE file contains rows of EXACTLY ONE bucket.
 A row's bucket is ``pmod(hash(conv_id), n)`` — Spark's own HashPartitioning
 placement — so one ``repartition(n, conv_id)`` puts bucket b in shuffle
 partition b, and the part-file index of a flat parquet write IS the bucket
 id. The bucket -> files pointers are exact (no co-hashed stale rows can
 survive a bucket rewrite), no per-row bucket column is stored, and the same
-exchange satisfies the LWW aggregate's clustering.
+exchange satisfies the LWW aggregate's clustering. A DELTA file holds one
+residue class ``b % m`` (``repartition(m, conv_id)``, m dividing n and at
+most the session's cores) and is listed by exactly the buckets with rows in
+it; ``compact()`` drops it from all of them at once.
 
 Scale design (100 TB / 1000 executors):
 - a merge prunes at FILE granularity on the per-file ``conv_id`` min/max
   the log records: only files whose key range overlaps the batch are
   rewritten — a 1%-of-keyspace batch rewrites ~1% of table bytes;
 - small batches take the **merge-on-read delta path**: the reduced batch is
-  appended as per-bucket delta files (write volume O(batch), zero table
-  rewrite); the read path LWW-reduces base∪delta by ``_lsn`` and
-  ``compact()`` folds deltas back into unique-key base files — Iceberg's
-  MoR/compaction lifecycle;
+  appended as residue-class delta files, at most one per core (write
+  volume O(batch), zero table rewrite); the read path LWW-reduces
+  base∪delta by ``_lsn`` and ``compact()`` folds deltas back into
+  unique-key base files — Iceberg's MoR/compaction lifecycle;
 - deletes are tombstones (``_deleted``), so row-level merge is idempotent
   and commutative under re-delivery; ``compact()`` drops them later;
 - the merge reduction is a hash aggregate (``max_by``) with map-side
@@ -177,9 +180,9 @@ class SnapshotTable:
         An explicit read schema makes additive evolution free: files written
         before a column existed return null for it — no rewrite — and
         columns the schema no longer names (the bucket column ``_b`` older
-        writers stored) are skipped. No bucket
-        filter is needed: every file holds exactly one bucket (routing
-        invariant), so the path list IS the bucket pruning.
+        writers stored) are skipped. No bucket filter is needed: a base
+        file holds one bucket and a delta file only buckets that list it,
+        so the de-duplicated path list IS the bucket pruning.
         """
         schema = self._stored_schema(snap)
         if not paths:
@@ -209,9 +212,10 @@ class SnapshotTable:
     ) -> tuple[list[str], bool]:
         """(file paths a conv_id-equality read must scan, whether any are
         delta files). Two pruning levels, both metadata-only: bucket
-        routing (each file holds exactly ONE bucket — part index ==
-        bucket id invariant) then per-file conv_id min/max from
-        file_stats — the read-side twin of merge's CoW pruning. At 10^6
+        routing (a base file holds ONE bucket, a delta file its residue
+        class, whose other buckets' rows the read's equality filter
+        drops) then per-file conv_id min/max from file_stats — the
+        read-side twin of merge's CoW pruning. At 10^6
         files this turns "fetch one conversation" from a full-table scan
         into reading a handful of files."""
         buckets = sorted({self.bucket_for_key(k) for k in conv_ids})
@@ -320,21 +324,34 @@ class SnapshotTable:
         merge reduce+route runs on a single exchange of the payload."""
         return F.pmod(F.hash(F.col("conv_id")), F.lit(self.n_buckets)).cast("int")
 
-    def _partition_by_bucket(self, df: DataFrame) -> DataFrame:
+    def _partition_by_bucket(self, df: DataFrame, m: int | None = None) -> DataFrame:
         """Shuffle ``df`` so partition index == bucket id (see
-        :meth:`bucket_expr`). AQE never coalesces an explicit
-        ``repartition(n, col)`` (REPARTITION_BY_NUM), so the mapping
-        holds, and a following groupBy on (conv_id, ...) reuses this
-        exchange instead of adding its own."""
-        return df.repartition(self.n_buckets, F.col("conv_id"))
+        :meth:`bucket_expr`), or with ``m`` (a divisor of n_buckets) so
+        partition r holds exactly the buckets ``b % m == r``: for m
+        dividing n, ``pmod(h, n) mod m == pmod(h, m)``. AQE never
+        coalesces an explicit ``repartition(n, col)`` (REPARTITION_BY_NUM),
+        so the mapping holds, and a following groupBy on (conv_id, ...)
+        reuses this exchange instead of adding its own."""
+        return df.repartition(m or self.n_buckets, F.col("conv_id"))
+
+    def _delta_classes(self) -> int:
+        """Residue classes of a delta write: the largest divisor of
+        n_buckets that is at most the session's cores, so a micro-batch
+        writes at most one file per core. Equals n_buckets (one bucket
+        per delta file) when the session has that many cores."""
+        cores = self.spark.sparkContext.defaultParallelism
+        return max(
+            d for d in range(1, min(cores, self.n_buckets) + 1)
+            if self.n_buckets % d == 0
+        )
 
     @staticmethod
     def _write_bucketed(df: DataFrame, data_dir: str) -> dict[int, list[str]]:
         """Flat parquet write of ``df``, which must already be partitioned
         by :meth:`_partition_by_bucket` (the LWW reducer's output, whose
-        aggregation preserved that exchange): shuffle partition b ==
-        bucket b, so file index == bucket id. Returns bucket -> new file
-        paths."""
+        aggregation preserved that exchange): file index == shuffle
+        partition == bucket id (or residue class, for a delta write).
+        Returns partition index -> new file paths."""
         df.write.mode("errorifexists").parquet(data_dir)
         out: dict[int, list[str]] = {}
         for f in os.listdir(data_dir):
@@ -414,10 +431,11 @@ class SnapshotTable:
           write job via ``observe()``.
         - The CoW candidates are the files whose key range overlaps the
           batch. If they hold more than ``_DELTA_THRESHOLD``× the incoming
-          rows, the reduced batch is appended as per-bucket merge-on-read
-          delta files (zero table rewrite; reads LWW-reduce until
-          ``compact()``); else the candidates are rewritten copy-on-write
-          with the batch. A table-sized batch therefore always takes CoW.
+          rows, the reduced batch is appended as merge-on-read delta
+          files, one per residue class (:meth:`_delta_classes`; zero table
+          rewrite; reads LWW-reduce until ``compact()``); else the
+          candidates are rewritten copy-on-write with the batch. A
+          table-sized batch therefore always takes CoW.
 
         Either path commits data + offset ledger + lineage in ONE atomic
         snapshot create. Semantics = Iceberg ``MERGE INTO t USING u ON key
@@ -545,22 +563,23 @@ class SnapshotTable:
         # requirement (conv_id is a prefix of the agg key), so the
         # aggregate runs in place and the write needs no further exchange
         if use_delta:
-            # in-batch LWW only: O(batch) write volume, table untouched
-            rows = upd
+            # in-batch LWW only: O(batch) write volume, table untouched;
+            # one file per residue class, not per bucket
+            rows, m = upd, self._delta_classes()
         else:
             rows = self._read_files(
                 snap, [p for ps in candidates.values() for p in ps]
             )
             for f in new_fields:  # stored side lacks brand-new columns
                 rows = rows.withColumn(f.name, F.lit(None).cast(f.dataType))
-            rows = rows.select(*upd.columns).unionByName(upd)
-        winner = last_writer_wins(self._partition_by_bucket(rows), KEY, "_lsn")
+            rows, m = rows.select(*upd.columns).unionByName(upd), self.n_buckets
+        winner = last_writer_wins(self._partition_by_bucket(rows, m), KEY, "_lsn")
 
-        by_bucket = self._write_bucketed(winner, self.log.new_data_dir(new_version))
+        by_part = self._write_bucketed(winner, self.log.new_data_dir(new_version))
 
         buckets, deltas = dict(snap.buckets), dict(snap.deltas)
         for b in incoming_stats:
-            new = by_bucket.get(b, [])
+            new = by_part.get(b % m, [])
             if not use_delta:
                 buckets[str(b)] = untouched[b] + new
             elif new:
@@ -599,9 +618,16 @@ class SnapshotTable:
         compaction in one. ``buckets`` limits the rewrite to a subset (the
         unit of incremental maintenance at 100 TB: compact the buckets
         whose delta backlog grew, leave the cold ones byte-untouched).
-        After a FULL compact the read path is reduction-free again."""
+        The subset is widened to its closure over shared delta files: a
+        delta file holds one residue class, so every bucket that lists it
+        is rewritten too — cold class-mates included — and the file is
+        dropped from all of them at once. Dropping it from only some would
+        let a full read see an update whose tombstone the compaction
+        purged. After a FULL compact the read path is reduction-free
+        again."""
         snap = self.snapshot()
-        sel = list(range(self.n_buckets)) if buckets is None else sorted(buckets)
+        sel = list(range(self.n_buckets)) if buckets is None else buckets
+        sel = sorted(self._delta_closure(snap, sel))
         paths = self._bucket_paths(snap, sel)
         if not paths:
             return snap.version
@@ -619,11 +645,30 @@ class SnapshotTable:
             snap, sel, self.n_buckets, buckets=buckets, deltas=deltas
         )
 
+    @staticmethod
+    def _delta_closure(snap: Snapshot, buckets) -> set[int]:
+        """``buckets`` plus every bucket that shares a delta file with one
+        already in the set, to a fixed point."""
+        by_file: dict[str, set[int]] = {}
+        for bs, ps in snap.deltas.items():
+            for p in ps:
+                by_file.setdefault(p, set()).add(int(bs))
+        closure, todo = set(), list(buckets)
+        while todo:
+            b = todo.pop()
+            if b not in closure:
+                closure.add(b)
+                for p in snap.deltas.get(str(b), []):
+                    todo.extend(by_file[p])
+        return closure
+
     def maintain(
         self, max_delta_files: int = 4, max_base_files: int = 8
     ) -> int:
         """Incremental maintenance policy: compact ONLY the buckets whose
-        delta backlog (or base-file fragmentation) crossed the thresholds.
+        delta backlog (or base-file fragmentation) crossed the thresholds,
+        plus the class-mates that share their delta files (see
+        :meth:`compact`).
         Returns the new version, or the current one if nothing qualified.
         This is the background loop a 10^10-event deployment runs between
         merges so read-side reduction cost stays bounded while hot buckets

@@ -9,7 +9,10 @@ Layout::
     <root>/
       _log/v000000000042.json                    # snapshot; commit = atomic create
       _log/manifests/m000000000042-<token>.json  # bucket -> files + stats
-      data/v42-<token>/part-*.parquet            # ONE bucket per file (the sink)
+      data/v42-<token>/part-*.parquet            # base: ONE bucket per file;
+                                                 # delta: one residue class
+                                                 # b % m, listed by each of
+                                                 # its buckets (the sink)
 
 Concurrency/atomicity model (single writer, many readers — same posture as
 a Structured Streaming ``foreachBatch`` sink): a commit writes its data
@@ -311,9 +314,11 @@ class TableLog:
             parent=parent.version,
             properties={**parent.properties, "n_buckets": n_buckets},
         )
-        referenced = [
+        # a delta file shared by the buckets of its class is listed once
+        # per bucket: read its footer once
+        referenced = {
             p for ps in (*child.buckets.values(), *child.deltas.values()) for p in ps
-        ]
+        }
         stats = {p: parent.file_stats[p] for p in referenced if p in parent.file_stats}
         new = [p for p in referenced if p not in stats]
         if new:

@@ -27,13 +27,6 @@ from caterpillar_spark.sinks.snapshot_table import SnapshotTable
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--table", required=True)
-    ap.add_argument(
-        "--n-buckets",
-        type=int,
-        default=None,
-        help="bucket count for NEW tables (default 256); an existing "
-        "table's stored count is authoritative and always adopted",
-    )
     ap.add_argument("--max-delta-files", type=int, default=4)
     ap.add_argument("--max-base-files", type=int, default=8)
     ap.add_argument("--full-compact", action="store_true")
@@ -42,7 +35,8 @@ def main() -> None:
     args = ap.parse_args()
 
     spark = get_spark("caterpillar-maintain")
-    table = SnapshotTable(spark, args.table, n_buckets=args.n_buckets or 256)
+    # the table's stored bucket count is adopted on open
+    table = SnapshotTable(spark, args.table)
     v0 = table.current_version()
     if args.full_compact:
         v1 = table.compact(drop_tombstones=args.drop_tombstones)

@@ -3,8 +3,6 @@ schema evolution, compaction, lineage manifest."""
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -282,7 +280,7 @@ def test_manifest_lineage(spark, tmp_path):
     assert sum(got.values()) == SPEC.n_events
 
 
-def test_covered_footer_range_launches_no_spark_job(spark, tmp_path):
+def test_covered_footer_range_launches_no_spark_job(spark, tmp_path, spark_jobs):
     """A segment whose footer range the ledger already covers is skipped
     by the merge's ledger check alone — no stats pass, no Spark job."""
     tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=8).create(PAYLOAD)
@@ -290,26 +288,12 @@ def test_covered_footer_range_launches_no_spark_job(spark, tmp_path):
     replay_chunks(spark, chunks, tbl)
     lo, hi, rows = segment_footer_stats(chunks[0])
     events = spark.read.parquet(chunks[0])
-    sc = spark.sparkContext
-    try:
-        sc.setJobGroup("covered-footer", "ledger-skipped apply")
+    with spark_jobs("covered-footer") as jobs:
         res = apply_changes(
             events, tbl, batch_id=0, offset_range=(lo, hi), batch_rows=rows
         )
-        # job events reach the status store in order: once this probe job
-        # shows up, every job the apply launched before it has too
-        sc.setJobGroup("covered-footer-probe", "status store probe")
-        spark.range(3).count()
-        deadline = time.time() + 60
-        while not sc.statusTracker().getJobIdsForGroup("covered-footer-probe"):
-            assert time.time() < deadline, "probe job never reached the status store"
-            time.sleep(0.05)
-        jobs = sc.statusTracker().getJobIdsForGroup("covered-footer")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
     assert (res.snapshot_version, res.rows_in) == (-1, 0)
-    assert list(jobs) == []
+    assert jobs == []
 
 
 def test_apply_changes_null_key_group_stats(spark, tmp_path):

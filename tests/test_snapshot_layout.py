@@ -524,3 +524,141 @@ def test_commit_metadata_is_o_touched_buckets(spark, tmp_path):
     assert got["conv_000050"] == "v2" and got["conv_001700"] == "v2"
     v1 = {r["conv_id"]: r["text"] for r in tbl.read(version=1).collect()}
     assert v1["conv_000050"] == "v1:conv_000050"
+
+
+# --------------------------------------------- residue-class delta files
+def _sharing_buckets(spark) -> int:
+    """A bucket count that makes delta files shared on any host: four
+    buckets per core, so a delta write has n/4 classes of 4 buckets."""
+    return 4 * spark.sparkContext.defaultParallelism
+
+
+def _real(path: str) -> str:
+    return os.path.realpath(path.removeprefix("file:"))
+
+
+def _file_buckets(spark, paths, n) -> dict[str, set[int]]:
+    """Real file path -> the buckets its rows fall in (one scan)."""
+    rows = (
+        spark.read.parquet(*paths)
+        .select(
+            F.col("_metadata.file_path").alias("f"),
+            F.pmod(F.hash("conv_id"), F.lit(n)).alias("b"),
+        )
+        .distinct()
+        .collect()
+    )
+    out: dict[str, set[int]] = {}
+    for r in rows:
+        out.setdefault(_real(r["f"]), set()).add(r["b"])
+    return out
+
+
+def _delta_listings(snap) -> dict[str, set[int]]:
+    """Delta file -> the buckets that list it."""
+    out: dict[str, set[int]] = {}
+    for b, ps in snap.deltas.items():
+        for p in ps:
+            out.setdefault(p, set()).add(int(b))
+    return out
+
+
+def _state(tbl):
+    return sorted((r["conv_id"], r["text"]) for r in tbl.read().collect())
+
+
+def test_delta_files_hold_one_residue_class(spark, tmp_path, monkeypatch):
+    """Base files hold one bucket each; a delta file holds one residue
+    class ``b % m`` (m = the session's cores here), and exactly the
+    buckets with rows in it list it."""
+    n, m = _sharing_buckets(spark), spark.sparkContext.defaultParallelism
+    tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=n).create(PAYLOAD)
+    assert tbl._delta_classes() == m
+    convs = [f"conv_{i:06d}" for i in range(600)]
+    tbl.merge(_insert_batch(spark, convs, 0), 0, (0, 599))
+    monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", -1)  # delta
+    tbl.merge(_insert_batch(spark, convs[::4], 1000, "v2"), 1, (1000, 1149))
+    tbl.merge(_insert_batch(spark, convs[1::9], 2000, "v3"), 2, (2000, 2066))
+    snap = tbl.snapshot()
+    base = {p: int(b) for b, ps in snap.buckets.items() for p in ps}
+    listed = _delta_listings(snap)
+    assert len(listed) <= 2 * m  # at most one file per class and batch
+    assert any(len(bs) > 1 for bs in listed.values()), "no delta file shared"
+    held = _file_buckets(spark, [*base, *listed], n)
+    for p, b in base.items():
+        assert held[_real(p)] == {b}, f"base file {p} holds {held[_real(p)]}"
+    for p, bs in listed.items():
+        assert len({b % m for b in held[_real(p)]}) == 1, p
+        assert held[_real(p)] == bs, f"{p} holds {held[_real(p)]}, listed by {bs}"
+
+
+def test_partial_compaction_of_a_shared_class_resurrects_nothing(
+    spark, tmp_path, monkeypatch
+):
+    """Compacting one bucket whose delta files it shares with class-mates,
+    with tombstones dropped, must compact the class-mates too: dropping a
+    shared update file from only that bucket would let a full read see
+    the update whose tombstone the compaction purged."""
+    n = _sharing_buckets(spark)
+    tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=n).create(PAYLOAD)
+    convs = [f"conv_{i:06d}" for i in range(600)]
+    tbl.merge(_insert_batch(spark, convs, 0), 0, (0, 599))
+    monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", -1)  # delta
+    updated = convs[::2]
+    tbl.merge(_insert_batch(spark, updated, 1000, "v2"), 1, (1000, 1299))
+    b = tbl.bucket_for_key(updated[0])
+    gone = [c for c in updated if tbl.bucket_for_key(c) == b]
+    tbl.merge(
+        _events(spark, [(2000 + i, "D", c, 0, None) for i, c in enumerate(gone)]),
+        2,
+        (2000, 2000 + len(gone) - 1),
+    )
+    snap = tbl.snapshot()
+    listed = _delta_listings(snap)
+    assert any(len(listed[p]) > 1 for p in snap.deltas[str(b)]), "nothing shared"
+    before = _state(tbl)
+    assert len(before) == len(convs) - len(gone)
+
+    tbl.compact(buckets=[b], drop_tombstones=True)
+    assert _state(tbl) == before
+    assert tbl.read(conv_id=gone).count() == 0
+    after = tbl.snapshot()
+    assert not set(_delta_listings(after)) & set(snap.deltas[str(b)])
+
+
+def test_delta_write_runs_one_task_per_class(spark, tmp_path, monkeypatch, spark_jobs):
+    """A delta merge's write stage runs m tasks, one per residue class,
+    not one per bucket."""
+    n, m = _sharing_buckets(spark), spark.sparkContext.defaultParallelism
+    tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=n).create(PAYLOAD)
+    convs = [f"conv_{i:06d}" for i in range(600)]
+    tbl.merge(_insert_batch(spark, convs, 0), 0, (0, 599))
+    monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", -1)  # delta
+    with spark_jobs("delta-merge") as jobs:
+        tbl.merge(_insert_batch(spark, convs[::3], 1000, "v2"), 1, (1000, 1199))
+    tasks = {s: t for j in jobs for s, t in j.stage_tasks.items()}
+    assert tasks[max(tasks)] == m  # the write is the merge's last stage
+    assert 0 < len(_delta_listings(tbl.snapshot())) <= m
+
+
+def test_engine_reads_list_their_files_without_a_spark_job(
+    spark, tmp_path, monkeypatch, spark_jobs
+):
+    """Spark lists more than 32 read paths in a job of one task per path;
+    the engine reads only files its snapshot lists, so neither a read nor
+    a compaction of more than 32 files runs that job."""
+    tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=32).create(PAYLOAD)
+    convs = [f"conv_{i:06d}" for i in range(600)]
+    tbl.merge(_insert_batch(spark, convs, 0), 0, (0, 599))
+    monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", -1)  # delta
+    tbl.merge(_insert_batch(spark, convs[::5], 1000, "v2"), 1, (1000, 1119))
+    tbl.merge(_insert_batch(spark, convs[2::5], 2000, "v3"), 2, (2000, 2119))
+    _, paths = _table_bytes(tbl)
+    assert len(paths) > 32
+    with spark_jobs("read") as read_jobs:
+        tbl.read()
+    assert read_jobs == []
+    with spark_jobs("compact") as compact_jobs:
+        tbl.compact()
+    assert compact_jobs, "the compaction wrote nothing"
+    assert not [j for j in compact_jobs if j.description.startswith("Listing")]

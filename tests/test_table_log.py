@@ -71,10 +71,18 @@ def _dying(k: int):
 
 
 # ------------------------------------------------------------ the scenario
-def _write(log: TableLog, version: int, rows: dict[int, list[str]]) -> dict:
-    """One parquet file per bucket in a fresh data dir (the Spark write)."""
+def _write(
+    log: TableLog, version: int, rows: dict[int, list[str]], shared: bool = False
+) -> dict:
+    """One parquet file per bucket in a fresh data dir (the Spark write),
+    or with ``shared`` one file for all of them, listed by each bucket (a
+    residue-class delta file)."""
     d = log.new_data_dir(version)
     os.makedirs(d)
+    if shared:
+        p = os.path.join(d, "part-00000-t.c000.snappy.parquet")
+        pq.write_table(pa.table({"conv_id": sorted(sum(rows.values(), []))}), p)
+        return {str(b): [p] for b in rows}
     out = {}
     for b, keys in rows.items():
         p = os.path.join(d, f"part-{b:05d}-t.c000.snappy.parquet")
@@ -89,13 +97,13 @@ def _create(log):
         log.commit(Snapshot(0, '{"fields": []}', properties=props), ())
 
 
-def _merge(lo, hi, rows, delta=False):
+def _merge(lo, hi, rows, delta=False, shared=False):
     def step(log):
         snap = log.snapshot()
         applied = updated_ledger(snap.applied, "s", lo, hi)
         if applied is None:
             return  # the retry of a batch that committed
-        new = _write(log, snap.version + 1, rows)
+        new = _write(log, snap.version + 1, rows, shared)
         buckets, deltas = dict(snap.buckets), dict(snap.deltas)
         for b, ps in new.items():
             if delta:
@@ -144,7 +152,8 @@ STEPS = [
     _create,
     _merge(0, 9, {0: ["a", "e"], 1: ["b"]}),
     _merge(10, 19, {1: ["c", "f"]}, delta=True),
-    _merge(20, 29, {}),  # an empty batch: ledger only, no bucket touched
+    _merge(20, 29, {0: ["g"], 2: ["h"]}, delta=True, shared=True),
+    _merge(30, 39, {}),  # an empty batch: ledger only, no bucket touched
     _compact,
     _expire,
 ]
@@ -197,8 +206,9 @@ def _run(root, steps):
 
 def test_crash_matrix_parent_or_child_then_retry_converges(tmp_path):
     """Kill the process at every filesystem call of every step (create,
-    a bucket-touching commit, a delta commit, an empty-batch commit, a
-    compaction and expire): a fresh TableLog then loads exactly the parent
+    a bucket-touching commit, a delta commit, a commit of one delta file
+    shared by two buckets, an empty-batch commit, a compaction and
+    expire): a fresh TableLog then loads exactly the parent
     or the child, and every file it references exists. Retrying the step
     then yields the child, and expire leaves exactly what it leaves after
     the uncrashed step."""
@@ -209,9 +219,9 @@ def test_crash_matrix_parent_or_child_then_retry_converges(tmp_path):
         after.append(_state(ref))
         _run(ref, [_expire])
         clean.append(_leftovers(ref))
-    assert after[-1][0] == 4 and after[-1][1] == {"s": [[0, 29]]}
+    assert after[-1][0] == 5 and after[-1][1] == {"s": [[0, 39]]}
     assert not after[-1][5]  # compacted: no deltas left
-    assert clean[-1] == (5, 3, 0, 2)
+    assert clean[-1] == (6, 4, 0, 1)
 
     root, crash_points = str(tmp_path / "t"), 0
     for i, step in enumerate(STEPS):
@@ -239,6 +249,44 @@ def test_crash_matrix_parent_or_child_then_retry_converges(tmp_path):
             os.rename(root, str(tmp_path / f"done{i}-{k}"))  # cheaper than rmtree
         os.rename(root, str(tmp_path / f"done{i}"))
     assert crash_points > 50
+
+
+def test_commit_next_reads_a_shared_file_footer_once(tmp_path, monkeypatch):
+    """A delta file listed under two buckets gets one footer read and one
+    file_stats entry."""
+    root = str(tmp_path / "t")
+    _run(root, [_create])
+    log = TableLog(root)
+    snap = log.snapshot()
+    new = _write(log, 1, {0: ["a", "c"], 2: ["b"]}, shared=True)
+    (path,) = set(new["0"])
+    calls = []
+    real = table_log.footer_range
+    monkeypatch.setattr(
+        table_log, "footer_range", lambda p, col: calls.append(p) or real(p, col)
+    )
+    log.commit_next(snap, [0, 2], N_BUCKETS, deltas=new)
+    assert calls == [path]
+    snap = TableLog(root).snapshot()
+    assert snap.deltas == {"0": [path], "2": [path]}
+    assert snap.file_stats == {path: {"min_key": "a", "max_key": "c", "rows": 3}}
+
+
+def test_expire_keeps_a_shared_file_while_any_bucket_lists_it(tmp_path):
+    """A delta file shared by two buckets survives expire while one bucket
+    of a kept snapshot still lists it, and goes once none does."""
+    root = str(tmp_path / "t")
+    _run(root, [_create, _merge(0, 9, {0: ["a"], 2: ["b"]}, delta=True, shared=True)])
+    log = TableLog(root)
+    snap = log.snapshot()
+    (path,) = snap.deltas["0"]
+    log.commit_next(snap, [0], N_BUCKETS, deltas={"2": [path]})
+    assert log.expire_snapshots(keep_last=1, grace_seconds=0) == []
+    assert os.path.isfile(path)
+    log.commit_next(log.snapshot(), [2], N_BUCKETS, deltas={})
+    assert log.expire_snapshots(keep_last=1, grace_seconds=0) == [
+        os.path.dirname(path)
+    ]
 
 
 def test_expire_keep_last_below_one_raises_before_deleting(tmp_path):
