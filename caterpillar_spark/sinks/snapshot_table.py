@@ -9,14 +9,17 @@ stats live in :mod:`caterpillar_spark.sinks.table_log` (no Spark).
 
 File/bucket invariant: every BASE file contains rows of EXACTLY ONE bucket.
 A row's bucket is ``pmod(hash(conv_id), n)`` — Spark's own HashPartitioning
-placement — so one ``repartition(n, conv_id)`` puts bucket b in shuffle
-partition b, and the part-file index of a flat parquet write IS the bucket
-id. The bucket -> files pointers are exact (no co-hashed stale rows can
-survive a bucket rewrite), no per-row bucket column is stored, and the same
-exchange satisfies the LWW aggregate's clustering. A DELTA file holds one
-residue class ``b % m`` (``repartition(m, conv_id)``, m dividing n and at
-most the session's cores) and is listed by exactly the buckets with rows in
-it; ``compact()`` drops it from all of them at once.
+placement. Every write shuffles once, with ``repartition(m, conv_id)``: m
+divides n and is at most the session's cores, and since ``pmod(h, n) mod m
+== pmod(h, m)``, shuffle partition r holds exactly the buckets ``b % m ==
+r`` (one residue class). The same exchange satisfies the LWW aggregate's
+clustering. A base write partitions each task's output by bucket id, so a
+task writes one file per bucket of its class into a ``<col>=<b>/``
+directory that names the bucket; no per-row bucket column is stored. The
+bucket -> files pointers are exact (no co-hashed stale rows can survive a
+bucket rewrite). A DELTA file holds a whole residue class and is listed by
+exactly the buckets with rows in it; ``compact()`` drops it from all of
+them at once.
 
 Scale design (100 TB / 1000 executors):
 - a merge prunes at FILE granularity on the per-file ``conv_id`` min/max
@@ -317,28 +320,29 @@ class SnapshotTable:
     def bucket_expr(self) -> F.Column:
         """Bucket id = ``pmod(hash(conv_id), n_buckets)`` — exactly Spark's
         own HashPartitioning placement for ``repartition(n_buckets,
-        conv_id)``. That identity is the r7 merge-path optimization: one
-        explicit repartition on conv_id IS the bucket routing (partition
-        index == bucket id, no inverse-hash column) AND satisfies the LWW
-        aggregation's (conv_id, turn_idx) clustering requirement, so the
-        merge reduce+route runs on a single exchange of the payload."""
+        conv_id)``. So one explicit repartition on conv_id into m classes
+        (m dividing n_buckets, see :meth:`_partition_by_bucket`) puts each
+        bucket in one task AND satisfies the LWW aggregation's (conv_id,
+        turn_idx) clustering requirement: the merge reduce+route runs on a
+        single exchange of the payload, and a base write names each file's
+        bucket by partitioning on this expression within the task."""
         return F.pmod(F.hash(F.col("conv_id")), F.lit(self.n_buckets)).cast("int")
 
-    def _partition_by_bucket(self, df: DataFrame, m: int | None = None) -> DataFrame:
-        """Shuffle ``df`` so partition index == bucket id (see
-        :meth:`bucket_expr`), or with ``m`` (a divisor of n_buckets) so
-        partition r holds exactly the buckets ``b % m == r``: for m
-        dividing n, ``pmod(h, n) mod m == pmod(h, m)``. AQE never
-        coalesces an explicit ``repartition(n, col)`` (REPARTITION_BY_NUM),
-        so the mapping holds, and a following groupBy on (conv_id, ...)
-        reuses this exchange instead of adding its own."""
-        return df.repartition(m or self.n_buckets, F.col("conv_id"))
+    def _partition_by_bucket(self, df: DataFrame, m: int) -> DataFrame:
+        """Shuffle ``df`` into ``m`` partitions (m divides n_buckets, see
+        :meth:`_write_classes`) so partition r holds exactly the buckets
+        ``b % m == r``: for m dividing n, ``pmod(h, n) mod m == pmod(h,
+        m)``. AQE never coalesces an explicit ``repartition(m, col)``
+        (REPARTITION_BY_NUM), so the mapping holds, and a following
+        groupBy on (conv_id, ...) reuses this exchange instead of adding
+        its own."""
+        return df.repartition(m, F.col("conv_id"))
 
-    def _delta_classes(self) -> int:
-        """Residue classes of a delta write: the largest divisor of
-        n_buckets that is at most the session's cores, so a micro-batch
-        writes at most one file per core. Equals n_buckets (one bucket
-        per delta file) when the session has that many cores."""
+    def _write_classes(self) -> int:
+        """Residue classes of every write, base and delta: the largest
+        divisor of n_buckets that is at most the session's cores, so a
+        write runs at most one task per core. Equals n_buckets (one
+        bucket per task) when the session has that many cores."""
         cores = self.spark.sparkContext.defaultParallelism
         return max(
             d for d in range(1, min(cores, self.n_buckets) + 1)
@@ -346,20 +350,49 @@ class SnapshotTable:
         )
 
     @staticmethod
-    def _write_bucketed(df: DataFrame, data_dir: str) -> dict[int, list[str]]:
-        """Flat parquet write of ``df``, which must already be partitioned
-        by :meth:`_partition_by_bucket` (the LWW reducer's output, whose
-        aggregation preserved that exchange): file index == shuffle
-        partition == bucket id (or residue class, for a delta write).
-        Returns partition index -> new file paths."""
-        df.write.mode("errorifexists").parquet(data_dir)
-        out: dict[int, list[str]] = {}
-        for f in os.listdir(data_dir):
-            if f.startswith("part-") and f.endswith(".parquet"):
-                out.setdefault(int(f.split("-")[1]), []).append(
-                    os.path.join(data_dir, f)
-                )
-        return out
+    def _write_bucketed(
+        df: DataFrame, data_dir: str, bucket: F.Column | None
+    ) -> dict[int, list[str]]:
+        """Parquet write of ``df``, which must already be partitioned by
+        :meth:`_partition_by_bucket` (the LWW reducer's output, whose
+        aggregation preserved that exchange): each task holds one residue
+        class.
+
+        A base write passes ``bucket`` (:meth:`bucket_expr`): each task
+        writes one file per bucket of its class under ``<col>=<b>/``, and
+        the result maps bucket id -> new file paths, read from those
+        directory names. A delta write passes None: a flat write of one
+        file per class, mapped class -> new file paths by the file's
+        ``part-NNNNN`` index. Reads pass the file paths and a schema, so
+        the directory adds no column."""
+
+        def part_files(d: str) -> list[str]:
+            return [
+                os.path.join(d, f)
+                for f in os.listdir(d)
+                if f.startswith("part-") and f.endswith(".parquet")
+            ]
+
+        if bucket is None:
+            df.write.mode("errorifexists").parquet(data_dir)
+            out: dict[int, list[str]] = {}
+            for p in part_files(data_dir):
+                out.setdefault(int(os.path.basename(p).split("-")[1]), []).append(p)
+            return out
+        # a partition column no payload column shadows (names compare
+        # case-insensitively)
+        col, taken = "_bucket", {c.lower() for c in df.columns}
+        while col in taken:
+            col = "_" + col
+        df.withColumn(col, bucket).write.mode("errorifexists").partitionBy(
+            col
+        ).parquet(data_dir)
+        prefix = col + "="
+        return {
+            int(d[len(prefix):]): part_files(os.path.join(data_dir, d))
+            for d in os.listdir(data_dir)
+            if d.startswith(prefix)
+        }
 
     # -------------------------------------------------------------- merge
     def _batch_stats(
@@ -432,10 +465,13 @@ class SnapshotTable:
         - The CoW candidates are the files whose key range overlaps the
           batch. If they hold more than ``_DELTA_THRESHOLD``× the incoming
           rows, the reduced batch is appended as merge-on-read delta
-          files, one per residue class (:meth:`_delta_classes`; zero table
-          rewrite; reads LWW-reduce until ``compact()``); else the
-          candidates are rewritten copy-on-write with the batch. A
+          files, one per residue class (zero table rewrite; reads
+          LWW-reduce until ``compact()``); else the candidates are
+          rewritten copy-on-write with the batch, one file per bucket. A
           table-sized batch therefore always takes CoW.
+
+        Both paths shuffle into the :meth:`_write_classes` residue
+        classes, so the write runs one task per class, not per bucket.
 
         Either path commits data + offset ledger + lineage in ONE atomic
         snapshot create. Semantics = Iceberg ``MERGE INTO t USING u ON key
@@ -557,33 +593,38 @@ class SnapshotTable:
         use_delta = cand_rows > _DELTA_THRESHOLD * max(incoming_rows, 1)
 
         # ---- reduce + write ----------------------------------------------
-        # the explicit bucket repartition BEFORE the reduce is the whole
-        # merge pipeline's only payload shuffle: it routes rows to their
-        # bucket partition AND satisfies the LWW groupBy's clustering
-        # requirement (conv_id is a prefix of the agg key), so the
-        # aggregate runs in place and the write needs no further exchange
+        # the explicit residue-class repartition BEFORE the reduce is the
+        # whole merge pipeline's only payload shuffle: it routes each
+        # bucket to the task of its class AND satisfies the LWW groupBy's
+        # clustering requirement (conv_id is a prefix of the agg key), so
+        # the aggregate runs in place and the write needs no further
+        # exchange
+        m = self._write_classes()
         if use_delta:
             # in-batch LWW only: O(batch) write volume, table untouched;
             # one file per residue class, not per bucket
-            rows, m = upd, self._delta_classes()
+            rows = upd
         else:
             rows = self._read_files(
                 snap, [p for ps in candidates.values() for p in ps]
             )
             for f in new_fields:  # stored side lacks brand-new columns
                 rows = rows.withColumn(f.name, F.lit(None).cast(f.dataType))
-            rows, m = rows.select(*upd.columns).unionByName(upd), self.n_buckets
+            rows = rows.select(*upd.columns).unionByName(upd)
         winner = last_writer_wins(self._partition_by_bucket(rows, m), KEY, "_lsn")
 
-        by_part = self._write_bucketed(winner, self.log.new_data_dir(new_version))
+        written = self._write_bucketed(
+            winner,
+            self.log.new_data_dir(new_version),
+            None if use_delta else self.bucket_expr(),
+        )
 
         buckets, deltas = dict(snap.buckets), dict(snap.deltas)
         for b in incoming_stats:
-            new = by_part.get(b % m, [])
             if not use_delta:
-                buckets[str(b)] = untouched[b] + new
-            elif new:
-                deltas[str(b)] = deltas.get(str(b), []) + new
+                buckets[str(b)] = untouched[b] + written.get(b, [])
+            elif written.get(b % m):
+                deltas[str(b)] = deltas.get(str(b), []) + written[b % m]
 
         # ---- lineage + ledger -------------------------------------------
         if observation is not None:
@@ -632,11 +673,17 @@ class SnapshotTable:
         if not paths:
             return snap.version
         df = last_writer_wins(
-            self._partition_by_bucket(self._read_files(snap, paths)), KEY, "_lsn"
+            self._partition_by_bucket(
+                self._read_files(snap, paths), self._write_classes()
+            ),
+            KEY,
+            "_lsn",
         )
         if drop_tombstones:
             df = df.filter(~F.col("_deleted"))
-        by_bucket = self._write_bucketed(df, self.log.new_data_dir(snap.version + 1))
+        by_bucket = self._write_bucketed(
+            df, self.log.new_data_dir(snap.version + 1), self.bucket_expr()
+        )
         buckets, deltas = dict(snap.buckets), dict(snap.deltas)
         for b in sel:
             buckets[str(b)] = by_bucket.get(b, [])

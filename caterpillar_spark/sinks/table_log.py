@@ -9,8 +9,9 @@ Layout::
     <root>/
       _log/v000000000042.json                    # snapshot; commit = atomic create
       _log/manifests/m000000000042-<token>.json  # bucket -> files + stats
-      data/v42-<token>/part-*.parquet            # base: ONE bucket per file;
-                                                 # delta: one residue class
+      data/v42-<token>/<col>=<b>/part-*.parquet  # base: ONE bucket per
+                                                 # file, b named by its dir
+      data/v42-<token>/part-*.parquet            # delta: one residue class
                                                  # b % m, listed by each of
                                                  # its buckets (the sink)
 
@@ -350,11 +351,13 @@ class TableLog:
                 "(keep_last >= 1), or its data would be deleted"
             )
         current = self.current_version()
-        live: set[str] = set()
+        live: set[str] = set()  # top-level entries of data/ that hold a live file
         for v in range(max(0, current - keep_last + 1), current + 1):
             snap = self.snapshot(v)
             for files in (*snap.buckets.values(), *snap.deltas.values()):
-                live.update(os.path.dirname(f) for f in files)
+                live.update(
+                    os.path.relpath(f, self.data_dir).split(os.sep)[0] for f in files
+                )
         referenced: set[str] = set()  # manifest FILENAMES (stored form)
         garbage = []
         for f in os.listdir(self.log_dir):
@@ -372,7 +375,7 @@ class TableLog:
         garbage += [
             os.path.join(self.data_dir, d)
             for d in _listdir(self.data_dir)
-            if os.path.join(self.data_dir, d) not in live
+            if d not in live
         ]
         removed = []
         now = time.time()

@@ -1,5 +1,5 @@
-"""SnapshotTable v2 layout invariants: one bucket per file (partition
-index == pmod(hash(conv_id), n) == bucket id), per-file key stats +
+"""SnapshotTable v2 layout invariants: one bucket per base file (its
+directory names the bucket pmod(hash(conv_id), n)), per-file key stats +
 file-level merge pruning, merge-on-read deltas, collision-free commit dirs. Regression coverage for the round-1
 advice findings (co-hashed stale-row resurrection; concurrent-commit
 clobber)."""
@@ -69,8 +69,9 @@ def _table_bytes(tbl):
 def test_repartition_places_bucket_in_matching_partition(spark):
     """``repartition(n, conv_id)`` must land every row whose
     ``bucket_expr`` value is b in shuffle partition b — the identity the
-    r7 single-exchange merge write rests on (partition index == bucket
-    id with no inverse-hash routing column)."""
+    single-exchange write rests on: with m dividing n, ``repartition(m,
+    conv_id)`` then puts bucket b in partition ``b % m``, with no
+    inverse-hash routing column."""
     from pyspark.sql import functions as F
 
     n = 16
@@ -115,6 +116,21 @@ def test_one_bucket_per_file(spark, tmp_path):
             for r in df.select(F.pmod(F.hash("conv_id"), F.lit(8)).alias("b")).collect()
         }
         assert got == {b}, f"{p} holds buckets {got}, pointer says {b}"
+
+
+def test_payload_column_named_like_the_bucket_column_survives(spark, tmp_path):
+    """A base write adds a bucket column to partition by; a payload column
+    of the same name (in any case) must keep its values, not be
+    overwritten by the bucket id."""
+    schema = T.StructType(PAYLOAD.fields + [T.StructField("_Bucket", T.StringType())])
+    tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=8).create(schema)
+    rows = [(i, "I", f"conv_{i:04d}", 0, "user", "x", None, TS, f"p{i}") for i in range(40)]
+    events = spark.createDataFrame(
+        rows, T.StructType(EVENT_SCHEMA.fields + [schema["_Bucket"]])
+    )
+    tbl.merge(events, 0, (0, 39))
+    got = {r["conv_id"]: r["_Bucket"] for r in tbl.read().collect()}
+    assert got == {f"conv_{i:04d}": f"p{i}" for i in range(40)}
 
 
 def test_stale_row_regression_single_key_update(spark, tmp_path, monkeypatch):
@@ -573,7 +589,7 @@ def test_delta_files_hold_one_residue_class(spark, tmp_path, monkeypatch):
     buckets with rows in it list it."""
     n, m = _sharing_buckets(spark), spark.sparkContext.defaultParallelism
     tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=n).create(PAYLOAD)
-    assert tbl._delta_classes() == m
+    assert tbl._write_classes() == m
     convs = [f"conv_{i:06d}" for i in range(600)]
     tbl.merge(_insert_batch(spark, convs, 0), 0, (0, 599))
     monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", -1)  # delta
@@ -626,19 +642,75 @@ def test_partial_compaction_of_a_shared_class_resurrects_nothing(
     assert not set(_delta_listings(after)) & set(snap.deltas[str(b)])
 
 
-def test_delta_write_runs_one_task_per_class(spark, tmp_path, monkeypatch, spark_jobs):
-    """A delta merge's write stage runs m tasks, one per residue class,
-    not one per bucket."""
+@pytest.mark.parametrize("write", ["delta", "cow", "compact"])
+def test_write_runs_one_task_per_class(
+    spark, tmp_path, monkeypatch, spark_jobs, write
+):
+    """The write stage of a delta merge, a copy-on-write merge and a
+    compaction runs m tasks, one per residue class, not one per bucket."""
     n, m = _sharing_buckets(spark), spark.sparkContext.defaultParallelism
     tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=n).create(PAYLOAD)
     convs = [f"conv_{i:06d}" for i in range(600)]
     tbl.merge(_insert_batch(spark, convs, 0), 0, (0, 599))
-    monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", -1)  # delta
-    with spark_jobs("delta-merge") as jobs:
-        tbl.merge(_insert_batch(spark, convs[::3], 1000, "v2"), 1, (1000, 1199))
+    cow_threshold = float("inf") if write == "cow" else -1
+    monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", cow_threshold)
+    update = _insert_batch(spark, convs[::3], 1000, "v2")
+    if write == "compact":
+        tbl.merge(update, 1, (1000, 1199))  # a delta merge to fold in
+    with spark_jobs(write) as jobs:
+        if write == "compact":
+            tbl.compact()
+        else:
+            tbl.merge(update, 1, (1000, 1199))
     tasks = {s: t for j in jobs for s, t in j.stage_tasks.items()}
-    assert tasks[max(tasks)] == m  # the write is the merge's last stage
-    assert 0 < len(_delta_listings(tbl.snapshot())) <= m
+    assert tasks[max(tasks)] == m  # the write is the last stage
+    snap = tbl.snapshot()
+    assert snap.has_deltas() == (write == "delta")
+    if write == "delta":
+        assert 0 < len(_delta_listings(snap)) <= m
+
+
+def test_base_files_hold_one_bucket_when_a_task_writes_several(
+    spark, tmp_path, monkeypatch
+):
+    """With four buckets per core a write task holds several buckets. After
+    a copy-on-write merge and after a full compaction, every base file
+    holds exactly the bucket that lists it, no write gives a bucket two
+    files, and the delta-free table reads back the reference state."""
+    n, m = _sharing_buckets(spark), spark.sparkContext.defaultParallelism
+    tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=n).create(PAYLOAD)
+    convs = [f"conv_{i:06d}" for i in range(600)]
+    want = {c: f"v1:{c}" for c in convs}
+    tbl.merge(_insert_batch(spark, convs, 0), 0, (0, 599))
+    monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", float("inf"))  # CoW
+    tbl.merge(_insert_batch(spark, convs[::4], 1000, "v2"), 1, (1000, 1149))
+    want.update((c, f"v2:{c}") for c in convs[::4])
+
+    def check():
+        snap = tbl.snapshot()
+        assert not snap.has_deltas()
+        base = {p: int(b) for b, ps in snap.buckets.items() for p in ps}
+        held = _file_buckets(spark, list(base), n)
+        for p, b in base.items():
+            assert held[_real(p)] == {b}, f"base file {p} holds {held[_real(p)]}"
+        by_write: dict[str, list[str]] = {}
+        for b, ps in snap.buckets.items():
+            writes = [os.path.relpath(p, tbl.log.data_dir).split(os.sep)[0] for p in ps]
+            assert len(writes) == len(set(writes)), f"bucket {b}: {ps}"
+            for w, p in zip(writes, ps):
+                by_write.setdefault(w, []).append(p)
+        # the newest write's tasks wrote several buckets each
+        newest = by_write[max(by_write, key=lambda w: int(w[1:].split("-")[0]))]
+        classes = {os.path.basename(p).split("-")[1] for p in newest}
+        assert len(classes) <= m < len(newest)
+        assert _state(tbl) == sorted(want.items())
+
+    check()
+    monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", -1)  # delta
+    tbl.merge(_insert_batch(spark, convs[1::9], 2000, "v3"), 2, (2000, 2066))
+    want.update((c, f"v3:{c}") for c in convs[1::9])
+    tbl.compact()
+    check()
 
 
 def test_engine_reads_list_their_files_without_a_spark_job(

@@ -72,11 +72,16 @@ def _dying(k: int):
 
 # ------------------------------------------------------------ the scenario
 def _write(
-    log: TableLog, version: int, rows: dict[int, list[str]], shared: bool = False
+    log: TableLog,
+    version: int,
+    rows: dict[int, list[str]],
+    shared: bool = False,
+    nested: bool = True,
 ) -> dict:
-    """One parquet file per bucket in a fresh data dir (the Spark write),
-    or with ``shared`` one file for all of them, listed by each bucket (a
-    residue-class delta file)."""
+    """One parquet file per bucket in a fresh data dir, in a subdirectory
+    that names the bucket (the Spark base write; flat without ``nested``),
+    or with ``shared`` one flat file for all of them, listed by each bucket
+    (a residue-class delta file)."""
     d = log.new_data_dir(version)
     os.makedirs(d)
     if shared:
@@ -85,7 +90,9 @@ def _write(
         return {str(b): [p] for b in rows}
     out = {}
     for b, keys in rows.items():
-        p = os.path.join(d, f"part-{b:05d}-t.c000.snappy.parquet")
+        sub = os.path.join(d, f"_bucket={b}") if nested else d
+        os.makedirs(sub, exist_ok=True)
+        p = os.path.join(sub, f"part-{b:05d}-t.c000.snappy.parquet")
         pq.write_table(pa.table({"conv_id": sorted(keys)}), p)
         out[str(b)] = [p]
     return out
@@ -103,7 +110,7 @@ def _merge(lo, hi, rows, delta=False, shared=False):
         applied = updated_ledger(snap.applied, "s", lo, hi)
         if applied is None:
             return  # the retry of a batch that committed
-        new = _write(log, snap.version + 1, rows, shared)
+        new = _write(log, snap.version + 1, rows, shared, nested=not delta)
         buckets, deltas = dict(snap.buckets), dict(snap.deltas)
         for b, ps in new.items():
             if delta:
@@ -208,8 +215,9 @@ def test_crash_matrix_parent_or_child_then_retry_converges(tmp_path):
     """Kill the process at every filesystem call of every step (create,
     a bucket-touching commit, a delta commit, a commit of one delta file
     shared by two buckets, an empty-batch commit, a compaction and
-    expire): a fresh TableLog then loads exactly the parent
-    or the child, and every file it references exists. Retrying the step
+    expire; base files sit in per-bucket subdirectories): a fresh
+    TableLog then loads exactly the parent or the child, and every file
+    it references exists. Retrying the step
     then yields the child, and expire leaves exactly what it leaves after
     the uncrashed step."""
     after, clean = [], []
@@ -287,6 +295,21 @@ def test_expire_keeps_a_shared_file_while_any_bucket_lists_it(tmp_path):
     assert log.expire_snapshots(keep_last=1, grace_seconds=0) == [
         os.path.dirname(path)
     ]
+
+
+def test_expire_keeps_a_data_dir_whose_live_files_sit_below_it(tmp_path):
+    """A base write puts each bucket's file in a subdirectory of its data
+    dir. Expire must count that data dir as live, not only the
+    subdirectory, or it deletes the current snapshot's files."""
+    root = str(tmp_path / "t")
+    _run(root, [_create, _merge(0, 9, {0: ["a"], 3: ["b"]})])
+    log = TableLog(root)
+    files = [p for ps in log.snapshot().buckets.values() for p in ps]
+    (data_dir,) = {os.path.dirname(os.path.dirname(p)) for p in files}
+    assert os.path.dirname(data_dir) == log.data_dir  # nested one level
+    assert log.expire_snapshots(keep_last=1, grace_seconds=0) == []
+    assert os.path.isdir(data_dir)
+    assert all(os.path.isfile(p) for p in files)
 
 
 def test_expire_keep_last_below_one_raises_before_deleting(tmp_path):
