@@ -29,9 +29,7 @@ from caterpillar_spark.sinks.table_log import footer_range
 @dataclass
 class BatchResult:
     batch_id: int
-    snapshot_version: int  # -1 => skipped (already applied)
-    offset_start: int
-    offset_end: int
+    snapshot_version: int  # -1 => skipped (already applied, or empty ad hoc)
     rows_in: int
     seconds: float
 
@@ -46,39 +44,25 @@ def apply_changes(
 ) -> BatchResult:
     """Apply one ordered change-event batch to the table, exactly once.
 
-    ``offset_range`` known up front (binlog segments carry their LSN range
-    and row count, ``batch_rows``, in parquet footers — see
-    ``replay_chunks``) goes straight to :meth:`SnapshotTable.merge`, whose
-    ledger check costs ZERO Spark jobs. Unknown (an ad-hoc batch): one
-    narrow stats pass (:meth:`SnapshotTable._batch_stats`) derives the
-    range, the lineage counts and the per-bucket key stats together, and
-    the merge consumes all three with no further pass.
-
-    How the batch merges — delta or copy-on-write, with or without a stats
-    pass — is decided by the merge alone, from the batch and table sizes.
+    A pass-through to :meth:`SnapshotTable.merge`, which derives every
+    batch statistic the caller does not supply. ``offset_range`` known
+    up front (binlog segments carry their LSN range and row count,
+    ``batch_rows``, in parquet footers — see ``replay_chunks``) lets the
+    merge's ledger check skip an applied batch with ZERO Spark jobs; an
+    ad-hoc batch (``None``) gets its range from the merge's one stats pass.
+    There is no pre-dedup: the merge's aggregation IS the last-writer-wins
+    reducer, and deduping here first would shuffle the batch twice.
     """
     t0 = time.time()
-    counts = incoming = None
-    if offset_range is None:
-        offset_range, counts, incoming = table._batch_stats(events)
-        if offset_range is None:
-            return BatchResult(batch_id, -1, 0, -1, 0, time.time() - t0)
-    # no pre-dedup: merge's union + max_by aggregation IS the last-writer-
-    # wins reducer — deduping here first would shuffle the batch twice
     version, counts = table.merge(
         events,
         batch_id=batch_id,
         offset_range=offset_range,
-        partition_counts=counts,
         stream_id=stream_id,
-        t_start=t0,
-        incoming_stats=incoming,
         batch_rows=batch_rows,
     )
     rows_in = 0 if version < 0 else sum(n for _, n in counts)
-    return BatchResult(
-        batch_id, version, offset_range[0], offset_range[1], rows_in, time.time() - t0
-    )
+    return BatchResult(batch_id, version, rows_in, time.time() - t0)
 
 
 def segment_footer_stats(path: str) -> tuple[int, int, int] | None:

@@ -87,9 +87,9 @@ def merge_sql(identifier: str, updates_view: str = "_caterpillar_updates") -> st
 class IcebergTable:
     """The ``read``/``applied_ranges``/``merge`` contract of SnapshotTable
     over an Iceberg catalog. It is driven through its own :meth:`merge`, not
-    through ``cdc.apply_changes``/``replay_chunks``: those call
-    SnapshotTable-only methods (``_batch_stats``, and a merge that takes
-    per-bucket stats and footer row counts).
+    through ``cdc.apply_changes``/``replay_chunks``: those may pass no
+    offset range (an ad-hoc batch) and pass footer ``batch_rows``, and only
+    ``SnapshotTable.merge`` accepts those.
 
     The Iceberg table must carry ``lsn BIGINT`` and ``_deleted BOOLEAN``
     columns alongside the payload — the analogues of SnapshotTable's
@@ -141,7 +141,6 @@ class IcebergTable:
         offset_range: tuple[int, int],
         partition_counts: list[tuple[int, int]] | None = None,
         stream_id: str = "default",
-        t_start: float | None = None,
     ) -> tuple[int, list[tuple[int, int]] | None]:
         """MERGE one change batch and commit the ledger + lineage with it;
         ``(-1, None)`` if ``offset_range`` is already applied. Iceberg's

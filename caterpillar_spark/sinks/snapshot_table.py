@@ -123,9 +123,9 @@ class SnapshotTable:
         self.n_buckets = n_buckets
         self.log = TableLog(root)
         if self.log.exists():
-            # adopt the stored n_buckets NOW: apply_changes runs
-            # _batch_stats (a bucket expression) before the first
-            # snapshot() load, and a mismatched count mis-buckets it
+            # adopt the stored n_buckets NOW: the public n_buckets and
+            # bucket_for_key read it before any snapshot() load, and so
+            # does an ad-hoc merge's stats pass (a bucket expression)
             try:
                 self.snapshot()
             except (RuntimeError, FileNotFoundError, json.JSONDecodeError):
@@ -260,6 +260,7 @@ class SnapshotTable:
         set actually contains deltas, so a point lookup on a compacted
         region of a delta-carrying table still skips the aggregate."""
         snap = self.snapshot(version)
+        paths = key_filter = None
         if conv_id is not None:
             orig_keys = list(
                 conv_id if isinstance(conv_id, (list, tuple, set)) else [conv_id]
@@ -278,28 +279,25 @@ class SnapshotTable:
             key_field = next(
                 f for f in self.payload_schema(snap).fields if f.name == "conv_id"
             )
+            # a non-string key keeps the full file set: the driver-side
+            # murmur3 twin hashes the STRING bytes, which diverges from the
+            # writer's native-typed routing — pruning would scan the wrong
+            # bucket and silently return nothing. The equality filter still
+            # pushes into the parquet scan.
             if isinstance(key_field.dataType, T.StringType):
                 paths, any_deltas = self._pruned_key_paths(snap, keys)
                 orig_keys = keys  # string column: compare str() forms
-            else:
-                # non-string key: the driver-side murmur3 twin hashes
-                # the STRING bytes, which diverges from the writer's
-                # native-typed routing — pruning would scan the wrong
-                # bucket and silently return nothing. Fall back to the
-                # full bucket set; the equality filter below still pushes
-                # into the parquet scan.
-                paths = self._bucket_paths(snap, list(range(self.n_buckets)))
-                any_deltas = snap.has_deltas()
-            df = self._read_files(snap, paths).filter(
+            key_filter = (
                 F.col("conv_id") == F.lit(orig_keys[0])
                 if len(orig_keys) == 1
                 else F.col("conv_id").isin(orig_keys)
             )
-        else:
+        if paths is None:
+            paths = self._bucket_paths(snap, list(range(self.n_buckets)))
             any_deltas = snap.has_deltas()
-            df = self._read_files(
-                snap, self._bucket_paths(snap, list(range(self.n_buckets)))
-            )
+        df = self._read_files(snap, paths)
+        if key_filter is not None:
+            df = df.filter(key_filter)
         if any_deltas:
             df = last_writer_wins(df, KEY, "_lsn")
         if not include_deleted:
@@ -441,27 +439,29 @@ class SnapshotTable:
         self,
         updates: DataFrame,
         batch_id: int,
-        offset_range: tuple[int, int],
-        partition_counts: list[tuple[int, int]] | None = None,
+        offset_range: tuple[int, int] | None = None,
         stream_id: str = "default",
-        t_start: float | None = None,
-        incoming_stats: KeyStats | None = None,
         batch_rows: int | None = None,
     ) -> tuple[int, list[tuple[int, int]] | None]:
         """Apply a change batch (``op`` + ``lsn`` columns; multiple events
         per key allowed — the merge aggregation is itself the last-writer-
         wins reducer). Returns ``(version, partition_counts)`` as recorded
         in the lineage; ``(-1, None)`` if the ledger already covers
-        ``offset_range`` (checked before any Spark job).
+        ``offset_range`` (checked before any Spark job) or if an ad-hoc
+        batch is empty (nothing is committed).
 
-        The one place that decides how a batch merges, from measurements:
+        The one place that derives a batch's statistics and decides how it
+        merges, from measurements:
 
-        - ``incoming_stats``/``partition_counts`` come from the caller if
-          it has them, else from one :meth:`_batch_stats` pass. A batch of
-          ``batch_rows`` (footer row count) ≥ the table's rows skips that
-          pass — pruning cannot save anything — and counts every bucket as
-          touched with an unknown key range; its lineage counts ride the
-          write job via ``observe()``.
+        - ``offset_range=None`` (an ad-hoc batch): one :meth:`_batch_stats`
+          pass gives the LSN range, the per-source-partition lineage counts
+          and the per-bucket key stats, and the ledger check follows. A
+          known range goes to the ledger check first; then a batch of
+          ``batch_rows`` (footer row count) ≥ the table's rows skips the
+          stats pass — pruning cannot save anything — and counts every
+          bucket as touched with an unknown key range, its lineage counts
+          riding the write job via ``observe()``; any other batch runs the
+          stats pass.
         - The CoW candidates are the files whose key range overlaps the
           batch. If they hold more than ``_DELTA_THRESHOLD``× the incoming
           rows, the reduced batch is appended as merge-on-read delta
@@ -479,7 +479,12 @@ class SnapshotTable:
         WHEN NOT MATCHED AND op<>'D' THEN INSERT`` (SURVEY.md §7.2) under
         LWW-by-``lsn``.
         """
-        t0 = t_start if t_start is not None else time.time()
+        t0 = time.time()
+        partition_counts = incoming_stats = None
+        if offset_range is None:
+            offset_range, partition_counts, incoming_stats = self._batch_stats(updates)
+            if offset_range is None:
+                return -1, None  # empty ad-hoc batch: no range to record
         snap = self.snapshot()
         lo, hi = offset_range
         applied = updated_ledger(snap.applied, stream_id, lo, hi)
@@ -499,7 +504,7 @@ class SnapshotTable:
                 for p, n in counts
             ]
 
-        # ---- incoming key stats (per bucket) ----------------------------
+        # ---- known range: the stats pass or the bulk shortcut -----------
         if incoming_stats is None:
             tbl_rows = sum(int(s.get("rows") or 0) for s in snap.file_stats.values())
             if batch_rows is not None and batch_rows >= tbl_rows:
@@ -508,9 +513,7 @@ class SnapshotTable:
                     b: (None, None, per_b) for b in range(self.n_buckets)
                 }
             else:
-                _, counts, incoming_stats = self._batch_stats(updates)
-                if partition_counts is None:
-                    partition_counts = counts
+                _, partition_counts, incoming_stats = self._batch_stats(updates)
         if not incoming_stats:
             # empty batch (e.g. everything quarantined upstream) with a
             # REAL offset range: commit a data-less snapshot that records
@@ -521,7 +524,7 @@ class SnapshotTable:
             )
             return new_version, [(-1, 0)]
 
-        # ---- lineage-by-observation (bulk batches: no stats pass) -------
+        # ---- lineage-by-observation (the bulk shortcut: no stats pass) --
         observation = None
         if partition_counts is None:
             from pyspark.sql import Observation

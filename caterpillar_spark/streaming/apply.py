@@ -82,11 +82,11 @@ def apply_stream(
     """Run the stream into the table via foreachBatch (MERGE is a batch op;
     this is the idiomatic Iceberg pattern too, SURVEY.md §7.5).
 
-    Each micro-batch goes through ``apply_changes``: dedup → merge → atomic
-    (data + offsets + lineage) snapshot commit. If Spark re-delivers a batch
-    after a crash (checkpoint wrote the WAL but the sink already committed),
-    the ledger skips it — that's the exactly-once half the checkpoint alone
-    can't give.
+    Each micro-batch goes through ``apply_changes``: merge (its aggregation
+    is the last-writer-wins reducer) → atomic (data + offsets + lineage)
+    snapshot commit. If Spark re-delivers a batch after a crash (checkpoint
+    wrote the WAL but the sink already committed), the ledger skips it —
+    that's the exactly-once half the checkpoint alone can't give.
 
     The merge picks the path per micro-batch: a batch that is small next
     to the files it overlaps takes the merge-on-read delta path (write

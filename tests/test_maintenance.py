@@ -91,6 +91,7 @@ def test_nbuckets_adopted_from_snapshot(spark, tmp_path):
     SnapshotTable(spark, root, n_buckets=8).create(PAYLOAD)
     chunks = write_changelog_chunks(spark, SPEC, str(tmp_path / "log"), n_chunks=2)
     tbl_w = SnapshotTable(spark, root)  # default 64 — wrong on purpose
+    assert tbl_w.n_buckets == 8  # adopted on open, before any merge
     replay_chunks(spark, chunks[:1], tbl_w)
     assert tbl_w.n_buckets == 8
     expected = sorted(tuple(r) for r in tbl_w.read().collect())

@@ -296,6 +296,66 @@ def test_covered_footer_range_launches_no_spark_job(spark, tmp_path, spark_jobs)
     assert jobs == []
 
 
+def test_adhoc_merge_derives_its_own_range(spark, tmp_path):
+    """merge() with no offset range runs the stats pass itself: the ledger
+    records [min lsn, max lsn] and the lineage matches apply_changes'.
+    An empty ad-hoc batch has no range to record and commits nothing."""
+    ev = change_events(spark, SPEC)
+    tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=8).create(PAYLOAD)
+    v, counts = tbl.merge(ev, 0, offset_range=None)
+    lo, hi = ev.agg(F.min("lsn"), F.max("lsn")).collect()[0]
+    assert v == 1 and tbl.applied_ranges() == [[lo, hi]]
+    ref = SnapshotTable(spark, str(tmp_path / "ref"), n_buckets=8).create(PAYLOAD)
+    assert apply_changes(ev, ref, batch_id=0).rows_in == SPEC.n_events
+
+    def lineage(t):
+        return sorted(
+            (r["partition"], r["rows_applied"], r["offset_start"], r["offset_end"])
+            for r in t.manifest().collect()
+        )
+
+    assert lineage(tbl) == lineage(ref)
+    assert sorted(counts) == [(p, n) for p, n, _, _ in lineage(tbl)]
+
+    assert tbl.merge(ev.filter(F.lit(False)), 1) == (-1, None)
+    assert tbl.current_version() == 1
+
+
+def test_stats_pass_runs_at_most_once_per_batch(spark, tmp_path, monkeypatch):
+    """The merge runs the one stats pass for an ad-hoc or a known-range
+    batch, and none for a covered range or a table-sized first chunk."""
+    calls = []
+    batch_stats = SnapshotTable._batch_stats
+
+    def counted(self, df):
+        calls.append(1)
+        return batch_stats(self, df)
+
+    monkeypatch.setattr(SnapshotTable, "_batch_stats", counted)
+
+    def stats_passes(run) -> int:
+        calls.clear()
+        run()
+        return len(calls)
+
+    chunks = write_changelog_chunks(spark, SPEC, str(tmp_path / "log"), n_chunks=2)
+    tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=8).create(PAYLOAD)
+    # bulk first chunk: its footer rows reach the (empty) table's rows
+    assert stats_passes(lambda: replay_chunks(spark, chunks[:1], tbl)) == 0
+    lo, hi, rows = segment_footer_stats(chunks[0])
+    covered = spark.read.parquet(chunks[0])
+    assert stats_passes(
+        lambda: apply_changes(covered, tbl, 0, offset_range=(lo, hi), batch_rows=rows)
+    ) == 0
+    lo, hi, _ = segment_footer_stats(chunks[1])
+    known = spark.read.parquet(chunks[1])
+    assert stats_passes(lambda: tbl.merge(known, 1, (lo, hi))) == 1
+    adhoc = SnapshotTable(spark, str(tmp_path / "t2"), n_buckets=8).create(PAYLOAD)
+    assert stats_passes(
+        lambda: apply_changes(change_events(spark, SPEC), adhoc, batch_id=0)
+    ) == 1
+
+
 def test_apply_changes_null_key_group_stats(spark, tmp_path):
     """ADVICE r2: a bucket whose stats groups mix all-NULL conv_id with
     non-null ones must degrade its key range to unknown (conservative),

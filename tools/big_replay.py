@@ -30,11 +30,11 @@ def merge_phases(batches: int):
     """Wrap ``SnapshotTable.merge`` and ``_write_bucketed`` for the block
     and yield a list that gains one ``{batch, plan_sec, write_sec,
     stats_sec}`` per merge that writes data: plan runs from the merge's
-    ``t_start`` (else its entry) to the write, write is the time inside
-    ``_write_bucketed``, stats runs from the write's exit to the merge's
-    return. After restoring both, raises unless exactly ``batches``
-    phases were captured: a merge that stopped calling the wrapped
-    writer must fail the record, not leave it empty."""
+    entry to the write, write is the time inside ``_write_bucketed``,
+    stats runs from the write's exit to the merge's return. After
+    restoring both, raises unless exactly ``batches`` phases were
+    captured: a merge that stopped calling the wrapped writer must fail
+    the record, not leave it empty."""
     merge = SnapshotTable.__dict__["merge"]
     write = SnapshotTable.__dict__["_write_bucketed"]
     bind = inspect.signature(merge).bind
@@ -43,8 +43,7 @@ def merge_phases(batches: int):
 
     def timed_merge(self, *args, **kwargs):
         call = bind(self, *args, **kwargs).arguments
-        t0 = call.get("t_start")
-        t0 = time.time() if t0 is None else t0
+        t0 = time.time()
         writes.clear()
         out = merge(self, *args, **kwargs)
         if writes:
