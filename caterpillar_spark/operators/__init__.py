@@ -10,6 +10,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
+from caterpillar_spark.plans import input_partitions
+
 _REGISTRY: dict[str, Callable[..., DataFrame]] = {}
 
 
@@ -22,13 +24,16 @@ def fan_out(df: DataFrame, key: str | None = None) -> DataFrame:
     No-op when the scan already has >= ``defaultParallelism`` partitions,
     so at production scale (thousands of splits) this never adds a
     shuffle; on a narrow input it costs one exchange of the projected
-    columns and buys back the whole cluster. Hash-partitioning on
+    columns and buys back the whole cluster. Also a no-op when counting
+    the partitions would run a Spark job
+    (:func:`~caterpillar_spark.plans.input_partitions` is None, e.g. for
+    an aggregated input). Hash-partitioning on
     ``key`` keeps the placement deterministic (guide §2.5 warns against
     rand-derived keys under task retry) and skips round-robin's
     sort-before-repartition pass."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
+    target = df.sparkSession.sparkContext.defaultParallelism
+    n = input_partitions(df)
+    if n is None or n >= target:
         return df
     from pyspark.sql import functions as F
 

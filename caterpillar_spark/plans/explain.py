@@ -3,7 +3,9 @@
 pruning happened). The reference has no optimizer to inspect
 (``pipeline.go:51-99`` executes the task list verbatim); for us Catalyst
 does the work and these helpers make its output testable so regressions in
-plan shape fail CI, not production."""
+plan shape fail CI, not production. One helper serves the engine itself:
+:func:`input_partitions` counts a frame's partitions from its physical
+plan, without a Spark job, for ``SnapshotTable``'s stats pass and ``fan_out``."""
 
 from __future__ import annotations
 
@@ -35,6 +37,31 @@ def read_schema_columns(df: DataFrame) -> list[list[str]]:
         cols = [c.split(":")[0].strip() for c in m.group(1).split(",") if c]
         schemas.append(cols)
     return schemas
+
+
+def input_partitions(df: DataFrame) -> int | None:
+    """Partitions of ``df``'s physical plan, counted on the driver without
+    running a Spark job, or None when counting could run one: an adaptive
+    (AQE) plan, any exchange, or a subquery. ``execute()`` only builds
+    the RDD of a plan free of those, but executing an AQE plan runs its
+    stages (and ``df.rdd`` builds and runs them too). A cached frame is
+    counted through the plan that fills its cache."""
+    plan = df._jdf.queryExecution().executedPlan()
+    todo = [plan]
+    while todo:
+        node = todo.pop()
+        name = node.getClass().getSimpleName()
+        if (
+            name == "AdaptiveSparkPlanExec"
+            or "Exchange" in name
+            or not node.subqueries().isEmpty()
+        ):
+            return None
+        if name == "InMemoryTableScanExec":
+            todo.append(node.relation().cachedPlan())
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return plan.execute().getNumPartitions()
 
 
 def has_partial_aggregate(df: DataFrame) -> bool:

@@ -9,25 +9,29 @@ stats live in :mod:`caterpillar_spark.sinks.table_log` (no Spark).
 
 File/bucket invariant: every BASE file contains rows of EXACTLY ONE bucket.
 A row's bucket is ``pmod(hash(conv_id), n)`` — Spark's own HashPartitioning
-placement. Every write shuffles once, with ``repartition(m, conv_id)``: m
-divides n and is at most the session's cores, and since ``pmod(h, n) mod m
-== pmod(h, m)``, shuffle partition r holds exactly the buckets ``b % m ==
-r`` (one residue class). The same exchange satisfies the LWW aggregate's
-clustering. A base write partitions each task's output by bucket id, so a
-task writes one file per bucket of its class into a ``<col>=<b>/``
-directory that names the bucket; no per-row bucket column is stored. The
-bucket -> files pointers are exact (no co-hashed stale rows can survive a
-bucket rewrite). A DELTA file holds a whole residue class and is listed by
-exactly the buckets with rows in it; ``compact()`` drops it from all of
-them at once.
+placement. A write runs one task per residue class: it shuffles once, with
+``repartition(m, conv_id)``, where m divides n and is at most the session's
+cores, and since ``pmod(h, n) mod m == pmod(h, m)``, shuffle partition r
+holds exactly the buckets ``b % m == r``. The same exchange satisfies the
+LWW aggregate's clustering. The one write without a shuffle is a delta
+merge of a batch Spark reads as one partition (a one-file streaming
+trigger): that partition is already the single class of m = 1, and
+``coalesce(1)`` satisfies the aggregate in place. A base write partitions
+each task's output by bucket id, so a task writes one file per bucket of
+its class into a ``<col>=<b>/`` directory that names the bucket; no
+per-row bucket column is stored. The bucket -> files pointers are exact
+(no co-hashed stale rows can survive a bucket rewrite). A DELTA file holds
+a whole residue class and is listed by exactly the buckets with rows in
+it; ``compact()`` drops it from all of them at once.
 
 Scale design (100 TB / 1000 executors):
 - a merge prunes at FILE granularity on the per-file ``conv_id`` min/max
   the log records: only files whose key range overlaps the batch are
   rewritten — a 1%-of-keyspace batch rewrites ~1% of table bytes;
 - small batches take the **merge-on-read delta path**: the reduced batch is
-  appended as residue-class delta files, at most one per core (write
-  volume O(batch), zero table rewrite); the read path LWW-reduces
+  appended as residue-class delta files, at most one per core, and one
+  for a one-partition batch (write volume O(batch), zero table rewrite);
+  the read path LWW-reduces
   base∪delta by ``_lsn`` and ``compact()`` folds deltas back into
   unique-key base files — Iceberg's MoR/compaction lifecycle;
 - deletes are tombstones (``_deleted``), so row-level merge is idempotent
@@ -47,6 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from caterpillar_spark.operators.dedup import last_writer_wins
+from caterpillar_spark.plans import input_partitions
 from caterpillar_spark.session import cached_columns
 from caterpillar_spark.sinks.table_log import Snapshot, TableLog, updated_ledger
 
@@ -333,14 +338,18 @@ class SnapshotTable:
         m)``. AQE never coalesces an explicit ``repartition(m, col)``
         (REPARTITION_BY_NUM), so the mapping holds, and a following
         groupBy on (conv_id, ...) reuses this exchange instead of adding
-        its own."""
+        its own. Every CoW merge, compaction and multi-partition delta
+        merge takes this shuffle; a one-partition delta batch skips it
+        (see :meth:`merge`)."""
         return df.repartition(m, F.col("conv_id"))
 
     def _write_classes(self) -> int:
-        """Residue classes of every write, base and delta: the largest
+        """Residue classes of a shuffled write, base or delta: the largest
         divisor of n_buckets that is at most the session's cores, so a
         write runs at most one task per core. Equals n_buckets (one
-        bucket per task) when the session has that many cores."""
+        bucket per task) when the session has that many cores. A delta
+        merge of a one-partition batch uses m = 1 instead: its one task
+        already holds every class."""
         cores = self.spark.sparkContext.defaultParallelism
         return max(
             d for d in range(1, min(cores, self.n_buckets) + 1)
@@ -351,55 +360,77 @@ class SnapshotTable:
     def _write_bucketed(
         df: DataFrame, data_dir: str, bucket: F.Column | None
     ) -> dict[int, list[str]]:
-        """Parquet write of ``df``, which must already be partitioned by
-        :meth:`_partition_by_bucket` (the LWW reducer's output, whose
-        aggregation preserved that exchange): each task holds one residue
-        class.
+        """Parquet write of ``df``, each of whose partitions holds one
+        residue class: :meth:`_partition_by_bucket`'s output (the LWW
+        reducer's, whose aggregation preserved that exchange), or a
+        one-partition batch, the single class of m = 1.
 
         A base write passes ``bucket`` (:meth:`bucket_expr`): each task
         writes one file per bucket of its class under ``<col>=<b>/``, and
-        the result maps bucket id -> new file paths, read from those
+        the result maps bucket id -> the new file, read from those
         directory names. A delta write passes None: a flat write of one
-        file per class, mapped class -> new file paths by the file's
+        file per class, mapped class -> the new file by the file's
         ``part-NNNNN`` index. Reads pass the file paths and a schema, so
         the directory adds no column."""
-
-        def part_files(d: str) -> list[str]:
-            return [
-                os.path.join(d, f)
-                for f in os.listdir(d)
-                if f.startswith("part-") and f.endswith(".parquet")
-            ]
-
         if bucket is None:
             df.write.mode("errorifexists").parquet(data_dir)
-            out: dict[int, list[str]] = {}
-            for p in part_files(data_dir):
-                out.setdefault(int(os.path.basename(p).split("-")[1]), []).append(p)
-            return out
-        # a partition column no payload column shadows (names compare
-        # case-insensitively)
-        col, taken = "_bucket", {c.lower() for c in df.columns}
-        while col in taken:
-            col = "_" + col
-        df.withColumn(col, bucket).write.mode("errorifexists").partitionBy(
-            col
-        ).parquet(data_dir)
-        prefix = col + "="
-        return {
-            int(d[len(prefix):]): part_files(os.path.join(data_dir, d))
-            for d in os.listdir(data_dir)
-            if d.startswith(prefix)
-        }
+        else:
+            # a partition column no payload column shadows (names compare
+            # case-insensitively)
+            col, taken = "_bucket", {c.lower() for c in df.columns}
+            while col in taken:
+                col = "_" + col
+            df.withColumn(col, bucket).write.mode("errorifexists").partitionBy(
+                col
+            ).parquet(data_dir)
+        return SnapshotTable._files_by_key(
+            data_dir,
+            [
+                os.path.relpath(os.path.join(d, f), data_dir)
+                for d, _, files in os.walk(data_dir)
+                for f in files
+                if f.startswith("part-") and f.endswith(".parquet")
+            ],
+        )
+
+    @staticmethod
+    def _files_by_key(data_dir: str, names: list[str]) -> dict[int, list[str]]:
+        """Key each part file one write left in ``data_dir`` (``names`` are
+        relative to it): a file under ``<col>=<b>/`` by its bucket b, a
+        top-level ``part-NNNNN-...`` by its class index NNNNN. A key has
+        one file; a second one (a retried task's leftover, say) would hold
+        the same rows again, and a delta-free read would return them
+        twice, so it raises."""
+        out: dict[int, list[str]] = {}
+        for name in names:
+            d, f = os.path.split(name)
+            key = int(d.split("=", 1)[1]) if d else int(f.split("-")[1])
+            if key in out:
+                raise RuntimeError(
+                    f"write to {data_dir} left two files for "
+                    f"{'bucket' if d else 'class'} {key}: {out[key][0]}, "
+                    f"{os.path.join(data_dir, name)}"
+                )
+            out[key] = [os.path.join(data_dir, name)]
+        return out
 
     # -------------------------------------------------------------- merge
     def _batch_stats(
         self, df: DataFrame
-    ) -> tuple[tuple[int, int] | None, list[tuple[int, int]], KeyStats]:
+    ) -> tuple[bool, tuple[int, int] | None, list[tuple[int, int]], KeyStats]:
         """One narrow pass over a change batch (source_partition, conv_id
-        and lsn only): its LSN range (None if empty), rows per source
-        partition (-1 for rows without one) and per-bucket ``(min_key,
-        max_key, rows)``."""
+        and lsn only): whether Spark reads the batch as one partition,
+        its LSN range (None if empty), rows per source partition (-1 for
+        rows without one) and per-bucket ``(min_key, max_key, rows)``.
+
+        A one-partition batch (a one-file streaming trigger) is counted
+        from its plan (:func:`~caterpillar_spark.plans.input_partitions`,
+        no job) and aggregated in its own task: ``coalesce(1)`` satisfies
+        the groupBy, so the pass is one job of one task, with no
+        shuffle."""
+        one_task = input_partitions(df) == 1
+        if one_task:
+            df = df.coalesce(1)
         sp = F.lit(-1)
         if "source_partition" in df.columns:
             sp = F.coalesce(F.col("source_partition"), sp)
@@ -415,7 +446,7 @@ class SnapshotTable:
             .collect()
         )
         if not stats:
-            return None, [], {}
+            return one_task, None, [], {}
         by_sp: dict[int, int] = {}
         by_b: dict[int, list] = {}
         for r in stats:
@@ -433,7 +464,7 @@ class SnapshotTable:
             else:
                 incoming[b] = (min(r["klo"] for r in g), max(r["khi"] for r in g), n)
         lsn_range = (min(r["lo"] for r in stats), max(r["hi"] for r in stats))
-        return lsn_range, sorted(by_sp.items()), incoming
+        return one_task, lsn_range, sorted(by_sp.items()), incoming
 
     def merge(
         self,
@@ -472,6 +503,12 @@ class SnapshotTable:
 
         Both paths shuffle into the :meth:`_write_classes` residue
         classes, so the write runs one task per class, not per bucket.
+        The exception is a batch that Spark reads as one partition
+        (:func:`~caterpillar_spark.plans.input_partitions`, counted only
+        where the stats pass runs): its stats pass runs on
+        ``coalesce(1)``, and if it goes delta, the LWW reduce and the
+        write run in that one task too and write one file, the class of
+        m = 1 — two one-task jobs and no shuffle.
 
         Either path commits data + offset ledger + lineage in ONE atomic
         snapshot create. Semantics = Iceberg ``MERGE INTO t USING u ON key
@@ -481,8 +518,11 @@ class SnapshotTable:
         """
         t0 = time.time()
         partition_counts = incoming_stats = None
+        one_task = False  # the stats pass found one partition
         if offset_range is None:
-            offset_range, partition_counts, incoming_stats = self._batch_stats(updates)
+            one_task, offset_range, partition_counts, incoming_stats = (
+                self._batch_stats(updates)
+            )
             if offset_range is None:
                 return -1, None  # empty ad-hoc batch: no range to record
         snap = self.snapshot()
@@ -513,7 +553,9 @@ class SnapshotTable:
                     b: (None, None, per_b) for b in range(self.n_buckets)
                 }
             else:
-                _, partition_counts, incoming_stats = self._batch_stats(updates)
+                one_task, _, partition_counts, incoming_stats = self._batch_stats(
+                    updates
+                )
         if not incoming_stats:
             # empty batch (e.g. everything quarantined upstream) with a
             # REAL offset range: commit a data-less snapshot that records
@@ -614,7 +656,14 @@ class SnapshotTable:
             for f in new_fields:  # stored side lacks brand-new columns
                 rows = rows.withColumn(f.name, F.lit(None).cast(f.dataType))
             rows = rows.select(*upd.columns).unionByName(upd)
-        winner = last_writer_wins(self._partition_by_bucket(rows, m), KEY, "_lsn")
+        if use_delta and one_task:
+            # a one-partition batch is already the one class of m = 1, and
+            # coalesce(1) satisfies the LWW groupBy: the reduce and the
+            # write run in the batch's own task, one delta file, no shuffle
+            m, rows = 1, rows.coalesce(1)
+        else:
+            rows = self._partition_by_bucket(rows, m)
+        winner = last_writer_wins(rows, KEY, "_lsn")
 
         written = self._write_bucketed(
             winner,

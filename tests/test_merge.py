@@ -14,6 +14,7 @@ from caterpillar_spark.generator import (
     expected_final_state,
     write_changelog_chunks,
 )
+from caterpillar_spark.sinks import snapshot_table
 from caterpillar_spark.sinks.snapshot_table import SnapshotTable
 
 PAYLOAD = T.StructType(
@@ -280,20 +281,25 @@ def test_manifest_lineage(spark, tmp_path):
     assert sum(got.values()) == SPEC.n_events
 
 
-def test_covered_footer_range_launches_no_spark_job(spark, tmp_path, spark_jobs):
+def test_covered_footer_range_launches_no_spark_job(
+    spark, tmp_path, monkeypatch, spark_jobs
+):
     """A segment whose footer range the ledger already covers is skipped
-    by the merge's ledger check alone — no stats pass, no Spark job."""
+    by the merge's ledger check alone — no stats pass, no Spark job, and
+    not even a plan built to count the batch's partitions."""
     tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=8).create(PAYLOAD)
     chunks = write_changelog_chunks(spark, SPEC, str(tmp_path / "log"), n_chunks=2)
     replay_chunks(spark, chunks, tbl)
     lo, hi, rows = segment_footer_stats(chunks[0])
     events = spark.read.parquet(chunks[0])
+    counted = []
+    monkeypatch.setattr(snapshot_table, "input_partitions", counted.append)
     with spark_jobs("covered-footer") as jobs:
         res = apply_changes(
             events, tbl, batch_id=0, offset_range=(lo, hi), batch_rows=rows
         )
     assert (res.snapshot_version, res.rows_in) == (-1, 0)
-    assert jobs == []
+    assert jobs == [] and counted == []
 
 
 def test_adhoc_merge_derives_its_own_range(spark, tmp_path):

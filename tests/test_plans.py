@@ -6,8 +6,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from caterpillar_spark.operators import fan_out
 from caterpillar_spark.plans import (
     has_partial_aggregate,
+    input_partitions,
     pushed_filters,
     read_schema_columns,
 )
@@ -107,3 +109,36 @@ def test_lsn_range_filter_pushdown(spark, tmp_path):
     q = df.filter((F.col("lsn") >= 1000) & (F.col("lsn") < 2000))
     pf = pushed_filters(q)
     assert any("lsn" in f and "GreaterThanOrEqual" in f for f in pf), pf
+
+
+def test_input_partitions_counts_from_the_plan_without_a_job(
+    spark, tmp_path, spark_jobs
+):
+    """A scan's partitions are counted on the driver; an aggregated frame,
+    whose AQE stages would have to run to be counted, reads as None."""
+    path = str(tmp_path / "one")
+    spark.range(100).coalesce(1).write.parquet(path)
+    one = spark.read.parquet(path)
+    rows = spark.createDataFrame([(i,) for i in range(100)], "id long")
+    agg = one.groupBy((F.col("id") % 7).alias("k")).count()
+    with spark_jobs("count") as jobs:
+        assert input_partitions(one) == 1
+        assert input_partitions(one.filter("id > 3")) == 1
+        assert input_partitions(rows) == spark.sparkContext.defaultParallelism
+        assert input_partitions(agg) is None
+    assert jobs == []
+
+
+def test_fan_out_launches_no_job(spark, tmp_path, spark_jobs):
+    """fan_out spreads a one-partition scan over the cores and leaves an
+    aggregated frame as it is, without a job to count either."""
+    path = str(tmp_path / "one")
+    spark.range(100).coalesce(1).write.parquet(path)
+    one = spark.read.parquet(path)
+    agg = one.groupBy((F.col("id") % 7).alias("k")).count()
+    with spark_jobs("fan-out") as jobs:
+        spread = fan_out(one, "id")
+        assert fan_out(agg) is agg
+    assert jobs == []
+    assert input_partitions(spread) is None  # a repartition: an exchange
+    assert spread.count() == 100

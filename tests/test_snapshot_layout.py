@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from caterpillar_spark.plans import input_partitions
 from caterpillar_spark.sinks import snapshot_table
 from caterpillar_spark.sinks.snapshot_table import (
     SnapshotTable,
@@ -667,7 +668,10 @@ def test_write_runs_one_task_per_class(
     snap = tbl.snapshot()
     assert snap.has_deltas() == (write == "delta")
     if write == "delta":
-        assert 0 < len(_delta_listings(snap)) <= m
+        # a createDataFrame batch spans the session's cores, so it keeps
+        # the shuffle into classes: every class has rows, one file each
+        assert input_partitions(update) == spark.sparkContext.defaultParallelism
+        assert len(_delta_listings(snap)) == m
 
 
 def test_base_files_hold_one_bucket_when_a_task_writes_several(
@@ -711,6 +715,97 @@ def test_base_files_hold_one_bucket_when_a_task_writes_several(
     want.update((c, f"v3:{c}") for c in convs[1::9])
     tbl.compact()
     check()
+
+
+# ------------------------------------------------- one-partition batches
+def _one_file(df, path: str):
+    """``df`` written as one parquet file and read back: a batch that
+    Spark reads as one partition, like a one-file streaming trigger."""
+    df.coalesce(1).write.parquet(path)
+    out = df.sparkSession.read.parquet(path)
+    assert input_partitions(out) == 1
+    return out
+
+
+def test_one_partition_batch_merges_in_its_own_task(
+    spark, tmp_path, monkeypatch, spark_jobs
+):
+    """An ad-hoc batch read as one partition runs its stats pass and its
+    delta write as one job of one task each, with no shuffle, and writes
+    one delta file (class 0 of m = 1), listed by exactly the buckets with
+    rows in it."""
+    n = _sharing_buckets(spark)
+    tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=n).create(PAYLOAD)
+    convs = [f"conv_{i:06d}" for i in range(600)]
+    tbl.merge(_insert_batch(spark, convs, 0), 0, (0, 599))
+    monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", -1)  # delta
+    batch = _one_file(_insert_batch(spark, convs[::7], 1000, "v2"), str(tmp_path / "b"))
+    with spark_jobs("one-partition") as jobs:
+        version, _ = tbl.merge(batch, 1)
+    assert version == 2
+    assert [list(j.stage_tasks.values()) for j in jobs] == [[1], [1]], jobs
+    listed = _delta_listings(tbl.snapshot())
+    assert len(listed) == 1
+    [(path, buckets)] = listed.items()
+    assert _file_buckets(spark, [path], n) == {_real(path): buckets}
+    assert buckets == {tbl.bucket_for_key(c) for c in convs[::7]}
+    assert len(buckets) > 1
+    want = {c: f"v1:{c}" for c in convs}
+    want.update((c, f"v2:{c}") for c in convs[::7])
+    assert _state(tbl) == sorted(want.items())
+
+
+def test_partial_compaction_after_a_one_file_delta_resurrects_nothing(
+    spark, tmp_path, monkeypatch
+):
+    """A one-file delta is listed by every bucket with rows in the batch.
+    Compacting one of them with tombstones dropped compacts them all, so
+    the deleted rows stay deleted in a full read and a point lookup."""
+    n = _sharing_buckets(spark)
+    tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=n).create(PAYLOAD)
+    convs = [f"conv_{i:06d}" for i in range(600)]
+    tbl.merge(_insert_batch(spark, convs, 0), 0, (0, 599))
+    monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", -1)  # delta
+    updated = convs[::2]
+    tbl.merge(
+        _one_file(_insert_batch(spark, updated, 1000, "v2"), str(tmp_path / "u")), 1
+    )
+    b = tbl.bucket_for_key(updated[0])
+    gone = [c for c in updated if tbl.bucket_for_key(c) == b]
+    deletes = _events(spark, [(2000 + i, "D", c, 0, None) for i, c in enumerate(gone)])
+    tbl.merge(_one_file(deletes, str(tmp_path / "d")), 2)
+    snap = tbl.snapshot()
+    listed = _delta_listings(snap)
+    assert len(listed) == 2 and any(len(bs) > 1 for bs in listed.values())
+    before = _state(tbl)
+    assert len(before) == len(convs) - len(gone)
+
+    tbl.compact(buckets=[b], drop_tombstones=True)
+    assert _state(tbl) == before
+    assert tbl.read(conv_id=gone).count() == 0
+    assert not set(_delta_listings(tbl.snapshot())) & set(snap.deltas[str(b)])
+
+
+def test_a_second_file_for_one_bucket_or_class_raises(tmp_path):
+    """A write maps each bucket directory (base) or class index (delta)
+    to one file; a second one would duplicate its rows, so it raises."""
+    d = str(tmp_path)
+    names = ["_bucket=3/part-00001-a.parquet", "_bucket=7/part-00001-a.parquet"]
+    assert SnapshotTable._files_by_key(d, names) == {
+        3: [os.path.join(d, names[0])],
+        7: [os.path.join(d, names[1])],
+    }
+    with pytest.raises(RuntimeError, match="two files for bucket 3"):
+        SnapshotTable._files_by_key(
+            d, ["_bucket=3/part-00001-a.parquet", "_bucket=3/part-00001-b.parquet"]
+        )
+    assert SnapshotTable._files_by_key(d, ["part-00002-a.parquet"]) == {
+        2: [os.path.join(d, "part-00002-a.parquet")]
+    }
+    with pytest.raises(RuntimeError, match="two files for class 2"):
+        SnapshotTable._files_by_key(
+            d, ["part-00002-a.parquet", "part-00002-b.parquet"]
+        )
 
 
 def test_engine_reads_list_their_files_without_a_spark_job(
