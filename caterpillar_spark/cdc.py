@@ -40,16 +40,15 @@ def apply_changes(
     batch_id: int,
     stream_id: str = "default",
     offset_range: tuple[int, int] | None = None,
-    batch_rows: int | None = None,
 ) -> BatchResult:
     """Apply one ordered change-event batch to the table, exactly once.
 
-    A pass-through to :meth:`SnapshotTable.merge`, which derives every
-    batch statistic the caller does not supply. ``offset_range`` known
-    up front (binlog segments carry their LSN range and row count,
-    ``batch_rows``, in parquet footers — see ``replay_chunks``) lets the
-    merge's ledger check skip an applied batch with ZERO Spark jobs; an
-    ad-hoc batch (``None``) gets its range from the merge's one stats pass.
+    A pass-through to :meth:`SnapshotTable.merge`, whose one stats pass
+    derives the batch's lineage counts and key stats. ``offset_range``
+    known up front (binlog segments carry their LSN range in parquet
+    footers — see ``replay_chunks``) lets the merge's ledger check skip an
+    applied batch with ZERO Spark jobs; an ad-hoc batch (``None``) gets its
+    range from that same stats pass, run before the ledger check.
     There is no pre-dedup: the merge's aggregation IS the last-writer-wins
     reducer, and deduping here first would shuffle the batch twice.
     """
@@ -59,7 +58,6 @@ def apply_changes(
         batch_id=batch_id,
         offset_range=offset_range,
         stream_id=stream_id,
-        batch_rows=batch_rows,
     )
     rows_in = 0 if version < 0 else sum(n for _, n in counts)
     return BatchResult(batch_id, version, rows_in, time.time() - t0)
@@ -98,8 +96,9 @@ def replay_chunks(
 
     Already-applied chunks are skipped via the snapshot ledger — using the
     segment's footer-derived LSN range, so a skipped chunk costs zero
-    Spark jobs. Calling this after a crash (or calling it twice) converges
-    to the same table state — the replay-certification invariant of
+    Spark jobs; every other chunk runs the merge's one stats pass.
+    Calling this after a crash (or calling it twice) converges to the
+    same table state — the replay-certification invariant of
     BASELINE.json.
 
     The stream schema is inferred ONCE from the latest chunk (segments may
@@ -122,7 +121,6 @@ def replay_chunks(
                 batch_id=i,
                 stream_id=stream_id,
                 offset_range=None if st is None else (st[0], st[1]),
-                batch_rows=None if st is None else st[2],
             )
         )
     return results

@@ -88,8 +88,8 @@ class IcebergTable:
     """The ``read``/``applied_ranges``/``merge`` contract of SnapshotTable
     over an Iceberg catalog. It is driven through its own :meth:`merge`, not
     through ``cdc.apply_changes``/``replay_chunks``: those may pass no
-    offset range (an ad-hoc batch) and pass footer ``batch_rows``, and only
-    ``SnapshotTable.merge`` accepts those.
+    offset range (an ad-hoc batch), and they read back the lineage counts
+    that only ``SnapshotTable.merge`` derives from the batch.
 
     The Iceberg table must carry ``lsn BIGINT`` and ``_deleted BOOLEAN``
     columns alongside the payload — the analogues of SnapshotTable's

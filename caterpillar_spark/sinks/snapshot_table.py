@@ -57,9 +57,6 @@ from caterpillar_spark.sinks.table_log import Snapshot, TableLog, updated_ledger
 
 KEY = ["conv_id", "turn_idx"]
 _SYS_COLS = ["_lsn", "_deleted"]
-# merge's lineage observe() counts source partitions 0.._OBSERVE_PARTITIONS-1
-# individually and the rest as partition -1
-_OBSERVE_PARTITIONS = 32
 # merges take the delta path when the files a CoW would rewrite hold more
 # than this many times the incoming rows (BENCH/delta_ab.json)
 _DELTA_THRESHOLD = 3.0
@@ -472,7 +469,6 @@ class SnapshotTable:
         batch_id: int,
         offset_range: tuple[int, int] | None = None,
         stream_id: str = "default",
-        batch_rows: int | None = None,
     ) -> tuple[int, list[tuple[int, int]] | None]:
         """Apply a change batch (``op`` + ``lsn`` columns; multiple events
         per key allowed — the merge aggregation is itself the last-writer-
@@ -484,28 +480,26 @@ class SnapshotTable:
         The one place that derives a batch's statistics and decides how it
         merges, from measurements:
 
-        - ``offset_range=None`` (an ad-hoc batch): one :meth:`_batch_stats`
-          pass gives the LSN range, the per-source-partition lineage counts
-          and the per-bucket key stats, and the ledger check follows. A
-          known range goes to the ledger check first; then a batch of
-          ``batch_rows`` (footer row count) ≥ the table's rows skips the
-          stats pass — pruning cannot save anything — and counts every
-          bucket as touched with an unknown key range, its lineage counts
-          riding the write job via ``observe()``; any other batch runs the
-          stats pass.
+        - Every batch the ledger does not skip runs one :meth:`_batch_stats`
+          pass, which gives its LSN range, its per-source-partition lineage
+          counts and its per-bucket key stats. An ad-hoc batch
+          (``offset_range=None``) runs it first, for the range the ledger
+          check needs; a known range goes to the ledger check first, so a
+          covered range costs zero Spark jobs.
         - The CoW candidates are the files whose key range overlaps the
           batch. If they hold more than ``_DELTA_THRESHOLD``× the incoming
           rows, the reduced batch is appended as merge-on-read delta
           files, one per residue class (zero table rewrite; reads
           LWW-reduce until ``compact()``); else the candidates are
           rewritten copy-on-write with the batch, one file per bucket. A
-          table-sized batch therefore always takes CoW.
+          batch with at least the table's rows therefore always takes CoW:
+          its candidates hold at most the table's rows.
 
         Both paths shuffle into the :meth:`_write_classes` residue
         classes, so the write runs one task per class, not per bucket.
         The exception is a batch that Spark reads as one partition
-        (:func:`~caterpillar_spark.plans.input_partitions`, counted only
-        where the stats pass runs): its stats pass runs on
+        (:func:`~caterpillar_spark.plans.input_partitions`, counted by the
+        stats pass): its stats pass runs on
         ``coalesce(1)``, and if it goes delta, the LWW reduce and the
         write run in that one task too and write one file, the class of
         m = 1 — two one-task jobs and no shuffle.
@@ -517,12 +511,10 @@ class SnapshotTable:
         LWW-by-``lsn``.
         """
         t0 = time.time()
-        partition_counts = incoming_stats = None
-        one_task = False  # the stats pass found one partition
+        stats = None
         if offset_range is None:
-            one_task, offset_range, partition_counts, incoming_stats = (
-                self._batch_stats(updates)
-            )
+            stats = self._batch_stats(updates)
+            offset_range = stats[1]
             if offset_range is None:
                 return -1, None  # empty ad-hoc batch: no range to record
         snap = self.snapshot()
@@ -530,6 +522,9 @@ class SnapshotTable:
         applied = updated_ledger(snap.applied, stream_id, lo, hi)
         if applied is None:
             return -1, None  # exactly-once: already applied
+        one_task, _, partition_counts, incoming_stats = (
+            stats or self._batch_stats(updates)
+        )
         new_version = snap.version + 1
 
         def lineage(counts: list[tuple[int, int]]) -> list[dict]:
@@ -544,18 +539,6 @@ class SnapshotTable:
                 for p, n in counts
             ]
 
-        # ---- known range: the stats pass or the bulk shortcut -----------
-        if incoming_stats is None:
-            tbl_rows = sum(int(s.get("rows") or 0) for s in snap.file_stats.values())
-            if batch_rows is not None and batch_rows >= tbl_rows:
-                per_b = max(1, batch_rows // self.n_buckets)
-                incoming_stats = {
-                    b: (None, None, per_b) for b in range(self.n_buckets)
-                }
-            else:
-                one_task, _, partition_counts, incoming_stats = self._batch_stats(
-                    updates
-                )
         if not incoming_stats:
             # empty batch (e.g. everything quarantined upstream) with a
             # REAL offset range: commit a data-less snapshot that records
@@ -566,26 +549,6 @@ class SnapshotTable:
             )
             return new_version, [(-1, 0)]
 
-        # ---- lineage-by-observation (the bulk shortcut: no stats pass) --
-        observation = None
-        if partition_counts is None:
-            from pyspark.sql import Observation
-
-            has_sp = "source_partition" in updates.columns
-            observation = Observation(f"lineage_b{batch_id}")
-
-            def _build_metrics() -> list:
-                sp = F.col("source_partition") if has_sp else F.lit(-1)
-                rest = (sp < 0) | (sp >= _OBSERVE_PARTITIONS)
-                return [
-                    F.sum(F.when(sp == i, 1).otherwise(0)).alias(f"p{i}")
-                    for i in range(_OBSERVE_PARTITIONS if has_sp else 0)
-                ] + [F.sum(F.when(rest, 1).otherwise(0)).alias("rest")]
-
-            metrics = cached_columns(
-                self.spark, "observe_metrics", (has_sp,), _build_metrics
-            )
-            updates = updates.observe(observation, *metrics)
         updates = updates.drop("source_partition")  # no-op when absent
 
         # ---- schema evolution (additive) --------------------------------
@@ -679,16 +642,6 @@ class SnapshotTable:
                 deltas[str(b)] = deltas.get(str(b), []) + written[b % m]
 
         # ---- lineage + ledger -------------------------------------------
-        if observation is not None:
-            got = observation.get  # blocks until the write action's metrics
-            counts = [
-                (int(k[1:]), int(v))
-                for k, v in got.items()
-                if k.startswith("p") and v
-            ]
-            if got.get("rest"):
-                counts.append((-1, int(got["rest"])))
-            partition_counts = sorted(counts) or [(-1, 0)]
         self.log.commit_next(
             snap,
             incoming_stats.keys(),

@@ -60,8 +60,8 @@ def test_chunked_replay_matches_oracle(spark, tmp_path):
     assert [r.snapshot_version for r in results] == [1, 2, 3, 4, 5]
     assert _final_state_canon(tbl.read()) == _expected_canon(spark, SPEC)
     # every chunk has at least the table's rows (the table holds at most
-    # n_convs x turns keys): such footer batches skip the stats pass and
-    # merge copy-on-write, so no commit added delta files
+    # n_convs x turns keys), so its CoW candidates hold at most its own
+    # rows: every chunk merges copy-on-write, and no commit added deltas
     assert min(r.rows_in for r in results) >= SPEC.n_convs * SPEC.turns_per_conv
     assert not tbl.snapshot().has_deltas()
 
@@ -280,6 +280,27 @@ def test_manifest_lineage(spark, tmp_path):
     assert got == per_sp == dict(counts)
     assert sum(got.values()) == SPEC.n_events
 
+    # more source partitions than any fixed-width counter would hold:
+    # every partition of a chunked replay is recorded as itself, none as -1
+    wide = GeneratorSpec(
+        n_events=4_000, n_convs=40, turns_per_conv=10, seed=17,
+        n_source_partitions=40,
+    )
+    chunks3 = write_changelog_chunks(spark, wide, str(tmp_path / "log3"), n_chunks=2)
+    tbl3 = SnapshotTable(spark, str(tmp_path / "t3"), n_buckets=8).create(PAYLOAD)
+    replay_chunks(spark, chunks3, tbl3)
+    log_parts = {
+        r[0]
+        for r in change_events(spark, wide)
+        .select("source_partition")
+        .distinct()
+        .collect()
+    }
+    assert max(log_parts) >= 32
+    m3 = tbl3.manifest()
+    assert {r[0] for r in m3.select("partition").distinct().collect()} == log_parts
+    assert m3.agg(F.sum("rows_applied")).collect()[0][0] == wide.n_events
+
 
 def test_covered_footer_range_launches_no_spark_job(
     spark, tmp_path, monkeypatch, spark_jobs
@@ -290,14 +311,12 @@ def test_covered_footer_range_launches_no_spark_job(
     tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=8).create(PAYLOAD)
     chunks = write_changelog_chunks(spark, SPEC, str(tmp_path / "log"), n_chunks=2)
     replay_chunks(spark, chunks, tbl)
-    lo, hi, rows = segment_footer_stats(chunks[0])
+    lo, hi, _ = segment_footer_stats(chunks[0])
     events = spark.read.parquet(chunks[0])
     counted = []
     monkeypatch.setattr(snapshot_table, "input_partitions", counted.append)
     with spark_jobs("covered-footer") as jobs:
-        res = apply_changes(
-            events, tbl, batch_id=0, offset_range=(lo, hi), batch_rows=rows
-        )
+        res = apply_changes(events, tbl, batch_id=0, offset_range=(lo, hi))
     assert (res.snapshot_version, res.rows_in) == (-1, 0)
     assert jobs == [] and counted == []
 
@@ -328,8 +347,9 @@ def test_adhoc_merge_derives_its_own_range(spark, tmp_path):
 
 
 def test_stats_pass_runs_at_most_once_per_batch(spark, tmp_path, monkeypatch):
-    """The merge runs the one stats pass for an ad-hoc or a known-range
-    batch, and none for a covered range or a table-sized first chunk."""
+    """The merge runs the one stats pass for every batch the ledger does
+    not skip — an ad-hoc batch, a known range, a table-sized first chunk —
+    and none for a covered range."""
     calls = []
     batch_stats = SnapshotTable._batch_stats
 
@@ -346,12 +366,12 @@ def test_stats_pass_runs_at_most_once_per_batch(spark, tmp_path, monkeypatch):
 
     chunks = write_changelog_chunks(spark, SPEC, str(tmp_path / "log"), n_chunks=2)
     tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=8).create(PAYLOAD)
-    # bulk first chunk: its footer rows reach the (empty) table's rows
-    assert stats_passes(lambda: replay_chunks(spark, chunks[:1], tbl)) == 0
-    lo, hi, rows = segment_footer_stats(chunks[0])
+    # bulk first chunk: its rows reach the (empty) table's rows
+    assert stats_passes(lambda: replay_chunks(spark, chunks[:1], tbl)) == 1
+    lo, hi, _ = segment_footer_stats(chunks[0])
     covered = spark.read.parquet(chunks[0])
     assert stats_passes(
-        lambda: apply_changes(covered, tbl, 0, offset_range=(lo, hi), batch_rows=rows)
+        lambda: apply_changes(covered, tbl, 0, offset_range=(lo, hi))
     ) == 0
     lo, hi, _ = segment_footer_stats(chunks[1])
     known = spark.read.parquet(chunks[1])
@@ -397,7 +417,7 @@ def test_apply_changes_null_key_group_stats(spark, tmp_path):
 
 
 def test_merge_column_cache_reused_across_batches_and_handles(spark, tmp_path):
-    """r7 serial-share shave: the observe/LWW/projection Column lists are
+    """r7 serial-share shave: the LWW/projection Column lists are
     built once per (applicationId, shape) and reused across batches AND
     table handles — rebuilding them was ~0.25s/batch of pure py4j driver-
     serial cost. Reuse must not change results (covered by the replay
@@ -408,7 +428,7 @@ def test_merge_column_cache_reused_across_batches_and_handles(spark, tmp_path):
     app, cache = session._column_cache
     assert app == spark.sparkContext.applicationId
     kinds = {k[0] for k in cache}
-    assert {"observe_metrics", "merge_sys_cols", "lww_agg", "lww_sel"} <= kinds
+    assert {"merge_sys_cols", "lww_agg", "lww_sel"} <= kinds
     n_entries = len(cache)
     # same shapes through a second handle + table: zero new cache entries,
     # identical final state

@@ -40,6 +40,7 @@ def test_big_replay_captures_one_phase_per_merge(spark, tmp_path):
         TRANSCRIPT_SCHEMA
     )
     merge = SnapshotTable.__dict__["merge"]
+    batch_stats = SnapshotTable.__dict__["_batch_stats"]
     write = SnapshotTable.__dict__["_write_bucketed"]
 
     with big_replay.merge_phases(len(chunks)) as phases:
@@ -47,9 +48,14 @@ def test_big_replay_captures_one_phase_per_merge(spark, tmp_path):
     assert [r.snapshot_version for r in results] == [1, 2]
     assert [p["batch"] for p in phases] == [0, 1]
     for p in phases:
-        assert set(p) == {"batch", "plan_sec", "write_sec", "stats_sec"}
+        assert set(p) == {
+            "batch", "plan_sec", "stats_pass_sec", "write_sec", "stats_sec"
+        }
         assert min(p.values()) >= 0
+    # every data batch runs one distributed stats pass, timed on its own
+    assert sum(p["stats_pass_sec"] for p in phases) > 0
     assert SnapshotTable.__dict__["merge"] is merge
+    assert SnapshotTable.__dict__["_batch_stats"] is batch_stats
     assert SnapshotTable.__dict__["_write_bucketed"] is write
 
     # a re-replay is skipped by the ledger: nothing is written, and a

@@ -1,8 +1,8 @@
 """10^8-event pinned replay record (VERDICT r2 next-round #7): measure —
 not assert — that the driver-serial merge phases amortize at large
-batches. Times each merge's plan/write/stats phases (``merge_phases``)
-and reports the serial share (everything outside the distributed write
-job) of replay wall time.
+batches. Times each merge's plan/write/stats phases and its stats pass
+(``merge_phases``) and reports the serial share (everything outside the
+distributed stats-pass and write jobs) of replay wall time.
 
 Usage: python tools/big_replay.py [--events 100000000] [--chunks 4]
        [--cores 16]
@@ -27,32 +27,45 @@ from caterpillar_spark.sinks.snapshot_table import SnapshotTable  # noqa: E402
 
 @contextlib.contextmanager
 def merge_phases(batches: int):
-    """Wrap ``SnapshotTable.merge`` and ``_write_bucketed`` for the block
-    and yield a list that gains one ``{batch, plan_sec, write_sec,
-    stats_sec}`` per merge that writes data: plan runs from the merge's
-    entry to the write, write is the time inside ``_write_bucketed``,
-    stats runs from the write's exit to the merge's return. After
-    restoring both, raises unless exactly ``batches`` phases were
-    captured: a merge that stopped calling the wrapped writer must fail
-    the record, not leave it empty."""
+    """Wrap ``SnapshotTable.merge``, ``_batch_stats`` and
+    ``_write_bucketed`` for the block and yield a list that gains one
+    ``{batch, plan_sec, stats_pass_sec, write_sec, stats_sec}`` per merge
+    that writes data: stats_pass is the time inside ``_batch_stats`` (a
+    distributed job), plan runs from the merge's entry to the write less
+    the stats pass, write is the time inside ``_write_bucketed``, stats
+    runs from the write's exit to the merge's return. After restoring
+    all three, raises unless exactly ``batches`` phases were captured: a
+    merge that stopped calling the wrapped writer must fail the record,
+    not leave it empty."""
     merge = SnapshotTable.__dict__["merge"]
+    batch_stats = SnapshotTable.__dict__["_batch_stats"]
     write = SnapshotTable.__dict__["_write_bucketed"]
     bind = inspect.signature(merge).bind
     phases: list[dict] = []
+    passes: list[float] = []
     writes: list[tuple[float, float]] = []
 
     def timed_merge(self, *args, **kwargs):
         call = bind(self, *args, **kwargs).arguments
         t0 = time.time()
+        passes.clear()
         writes.clear()
         out = merge(self, *args, **kwargs)
         if writes:
             (w0, _), (_, w1) = writes[0], writes[-1]
             phases.append({
-                "batch": call["batch_id"], "plan_sec": round(w0 - t0, 2),
+                "batch": call["batch_id"],
+                "plan_sec": round(w0 - t0 - sum(passes), 2),
+                "stats_pass_sec": round(sum(passes), 2),
                 "write_sec": round(w1 - w0, 2),
                 "stats_sec": round(time.time() - w1, 2),
             })
+        return out
+
+    def timed_batch_stats(self, df):
+        t = time.time()
+        out = batch_stats(self, df)
+        passes.append(time.time() - t)
         return out
 
     def timed_write(*args, **kwargs):
@@ -62,11 +75,14 @@ def merge_phases(batches: int):
         return out
 
     SnapshotTable.merge = timed_merge
+    SnapshotTable._batch_stats = timed_batch_stats
     SnapshotTable._write_bucketed = staticmethod(timed_write)
     try:
         yield phases
     finally:
-        SnapshotTable.merge, SnapshotTable._write_bucketed = merge, write
+        SnapshotTable.merge = merge
+        SnapshotTable._batch_stats = batch_stats
+        SnapshotTable._write_bucketed = write
     if len(phases) != batches:
         raise RuntimeError(
             f"captured {len(phases)} merge phases for {batches} data batches"
@@ -90,8 +106,8 @@ def main() -> None:
     if args.tmpfs:
         os.makedirs("/dev/shm/caterpillar_scaling", exist_ok=True)
         extra["spark.local.dir"] = "/dev/shm/caterpillar_scaling/spark_local"
-    batch_rows = args.events // args.chunks
-    shuffle_parts = max(16, batch_rows // 600_000)
+    chunk_rows = args.events // args.chunks
+    shuffle_parts = max(16, chunk_rows // 600_000)
     spark = get_spark(
         "big-replay", cores=args.cores, shuffle_partitions=shuffle_parts,
         extra_conf=extra,
