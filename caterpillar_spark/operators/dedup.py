@@ -141,8 +141,3 @@ def last_writer_wins_pandas(
         return pdf.loc[[pdf[lsn_col].idxmax()], cols]
 
     return df.groupBy(*key).applyInPandas(reduce_group, schema=schema)
-
-
-def drop_deleted(df: DataFrame, op_col: str = "op") -> DataFrame:
-    """Final-state filter: remove keys whose winning op is a delete."""
-    return df.filter(F.col(op_col) != "D")

@@ -80,9 +80,9 @@ def get_spark(
 
 
 # Unresolved Column objects are immutable and bind to attributes by name at
-# analysis time, so identical column lists (the merge's observe metrics and
-# projection, the LWW agg/select lists) are reusable across batches and
-# table handles. Rebuilding them each merge is pure py4j round-trip cost on
+# analysis time, so identical column lists (the LWW agg/select lists and the
+# merge's system-column projection) are reusable across batches and table
+# handles. Rebuilding them each merge is pure py4j round-trip cost on
 # the per-batch serial path (~23 ms for the LWW lists alone). A Column is a
 # py4j ref into one JVM, so the cache holds ONE application's lists and is
 # replaced when the applicationId changes. Unlocked: two threads racing on

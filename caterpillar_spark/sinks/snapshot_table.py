@@ -79,6 +79,13 @@ MANIFEST_SCHEMA = T.StructType(
 )
 
 
+def _timed(fn, *args):
+    """``fn(*args)`` and its wall seconds, rounded to 0.1 ms."""
+    t = time.perf_counter()
+    out = fn(*args)
+    return out, round(time.perf_counter() - t, 4)
+
+
 # --------------------------------------------------------------- routing
 def murmur3_hash_bytes(data: bytes, seed: int = 42) -> int:
     """Spark's ``F.hash`` of one string column: Murmur3_x86_32 over the
@@ -505,15 +512,19 @@ class SnapshotTable:
         m = 1 — two one-task jobs and no shuffle.
 
         Either path commits data + offset ledger + lineage in ONE atomic
-        snapshot create. Semantics = Iceberg ``MERGE INTO t USING u ON key
+        snapshot create, whose ``summary`` holds the merge's phase seconds:
+        ``stats_pass_s`` (the :meth:`_batch_stats` call), ``plan_s`` (entry
+        to the write, less the stats pass), ``write_s`` (the
+        :meth:`_write_bucketed` call; 0 for an empty batch) and the commit's
+        ``footer_s``. Semantics = Iceberg ``MERGE INTO t USING u ON key
         WHEN MATCHED AND op='D' THEN DELETE / WHEN MATCHED THEN UPDATE /
         WHEN NOT MATCHED AND op<>'D' THEN INSERT`` (SURVEY.md §7.2) under
         LWW-by-``lsn``.
         """
-        t0 = time.time()
+        t0, clock = time.time(), time.perf_counter()
         stats = None
         if offset_range is None:
-            stats = self._batch_stats(updates)
+            stats, stats_s = _timed(self._batch_stats, updates)
             offset_range = stats[1]
             if offset_range is None:
                 return -1, None  # empty ad-hoc batch: no range to record
@@ -522,10 +533,13 @@ class SnapshotTable:
         applied = updated_ledger(snap.applied, stream_id, lo, hi)
         if applied is None:
             return -1, None  # exactly-once: already applied
-        one_task, _, partition_counts, incoming_stats = (
-            stats or self._batch_stats(updates)
-        )
+        if stats is None:
+            stats, stats_s = _timed(self._batch_stats, updates)
+        one_task, _, partition_counts, incoming_stats = stats
         new_version = snap.version + 1
+
+        def plan_s() -> float:  # the merge so far, less the stats pass
+            return round(time.perf_counter() - clock - stats_s, 4)
 
         def lineage(counts: list[tuple[int, int]]) -> list[dict]:
             t_end = time.time()
@@ -545,7 +559,8 @@ class SnapshotTable:
             # the range, else the ledger keeps a permanent hole and replay-
             # completeness checks report the stream as unfinished
             self.log.commit_next(  # touches no bucket: parent manifests as-is
-                snap, (), self.n_buckets, applied=applied, lineage=lineage([(-1, 0)])
+                snap, (), self.n_buckets, applied=applied, lineage=lineage([(-1, 0)]),
+                summary={"stats_pass_s": stats_s, "plan_s": plan_s(), "write_s": 0},
             )
             return new_version, [(-1, 0)]
 
@@ -628,7 +643,9 @@ class SnapshotTable:
             rows = self._partition_by_bucket(rows, m)
         winner = last_writer_wins(rows, KEY, "_lsn")
 
-        written = self._write_bucketed(
+        phases = {"stats_pass_s": stats_s, "plan_s": plan_s()}
+        written, phases["write_s"] = _timed(
+            self._write_bucketed,
             winner,
             self.log.new_data_dir(new_version),
             None if use_delta else self.bucket_expr(),
@@ -651,6 +668,7 @@ class SnapshotTable:
             applied=applied,
             lineage=lineage(partition_counts),
             schema_json=evolved.json(),
+            summary=phases,
         )
         return new_version, partition_counts
 

@@ -32,8 +32,9 @@ whose range is already applied is a no-op; offsets and data commit in ONE
 atomic link, so replay from any checkpoint converges.
 
 Metadata is O(touched buckets) per commit: the snapshot JSON holds the
-ledger, lineage and a bucket → manifest map; the immutable manifests hold
-the bucket → file pointers and per-file stats, and cache per handle.
+ledger, lineage, the commit's summary (phase seconds, like Iceberg's
+snapshot summary) and a bucket → manifest map; the immutable manifests
+hold the bucket → file pointers and per-file stats, and cache per handle.
 """
 
 from __future__ import annotations
@@ -56,6 +57,10 @@ class Snapshot:
     # stream_id -> merged [lo, hi] ranges (the offset ledger)
     applied: dict[str, list[list[int]]] = field(default_factory=dict)
     lineage: list[dict] = field(default_factory=list)  # this commit's entries
+    # this commit's phase seconds: a merge's stats_pass_s, plan_s and
+    # write_s, plus footer_s (commit_next's footer reads) on every commit
+    # after create; {} in snapshots written before summaries existed
+    summary: dict[str, float] = field(default_factory=dict)
     parent: int | None = None
     properties: dict = field(default_factory=dict)
     # bucket id (str) -> merge-on-read delta file paths (LWW by _lsn at read)
@@ -304,13 +309,14 @@ class TableLog:
     ) -> int:
         """Commit the successor of ``parent`` and return its version.
         ``changes`` replace the parent's ``buckets``/``deltas``/``applied``/
-        ``schema_json``/``lineage`` (lineage defaults to empty). ``file_stats``
+        ``schema_json``/``lineage``/``summary`` (lineage and summary default
+        to empty: a child never inherits its parent's). ``file_stats``
         keeps the parent's entries for files still referenced and reads the
-        ``conv_id`` footer range of the new ones; ``n_buckets`` is
-        (re-)stamped into the properties."""
+        ``conv_id`` footer range of the new ones, timed as the summary's
+        ``footer_s``; ``n_buckets`` is (re-)stamped into the properties."""
         child = replace(
             parent,
-            **{"lineage": [], **changes},
+            **{"lineage": [], "summary": {}, **changes},
             version=parent.version + 1,
             parent=parent.version,
             properties={**parent.properties, "n_buckets": n_buckets},
@@ -320,6 +326,7 @@ class TableLog:
         referenced = {
             p for ps in (*child.buckets.values(), *child.deltas.values()) for p in ps
         }
+        t = time.perf_counter()
         stats = {p: parent.file_stats[p] for p in referenced if p in parent.file_stats}
         new = [p for p in referenced if p not in stats]
         if new:
@@ -330,6 +337,9 @@ class TableLog:
             for p, (lo, hi, rows) in zip(new, ranges):
                 stats[p] = {"min_key": lo, "max_key": hi, "rows": rows}
         child.file_stats = stats
+        child.summary = {
+            **child.summary, "footer_s": round(time.perf_counter() - t, 4)
+        }
         self.commit(child, touched)
         return child.version
 

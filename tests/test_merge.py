@@ -255,6 +255,33 @@ def test_empty_batch_still_commits_offset_range(spark, tmp_path):
     assert tbl.merge(empty, batch_id=0, offset_range=(100, 110))[0] == -1
 
 
+def test_merge_commits_record_their_phase_seconds(spark, tmp_path, monkeypatch):
+    """A CoW, a delta and an empty-batch merge each commit their phase
+    seconds in the snapshot summary; a batch the ledger skips commits no
+    snapshot at all."""
+    chunks = write_changelog_chunks(spark, SPEC, str(tmp_path / "log"), n_chunks=3)
+    tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=8).create(PAYLOAD)
+    monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", float("inf"))  # CoW
+    replay_chunks(spark, chunks[:1], tbl)
+    monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", -1)  # delta
+    replay_chunks(spark, chunks[1:2], tbl)
+    lo, hi, _ = segment_footer_stats(chunks[2])
+    empty = spark.read.parquet(chunks[2]).filter(F.lit(False))
+    assert tbl.merge(empty, 2, (lo, hi)) == (3, [(-1, 0)])
+
+    cow, delta, none = (tbl.snapshot(v) for v in (1, 2, 3))
+    assert cow.buckets and not cow.has_deltas() and delta.has_deltas()
+    for snap in (cow, delta, none):
+        assert set(snap.summary) == {"stats_pass_s", "plan_s", "write_s", "footer_s"}
+        assert min(snap.summary.values()) >= 0
+    assert min(cow.summary["write_s"], delta.summary["write_s"]) > 0
+    assert none.summary["write_s"] == 0
+
+    results = replay_chunks(spark, chunks, tbl)
+    assert [r.snapshot_version for r in results] == [-1, -1, -1]
+    assert tbl.current_version() == 3
+
+
 def test_manifest_lineage(spark, tmp_path):
     tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=8).create(PAYLOAD)
     chunks = write_changelog_chunks(spark, SPEC, str(tmp_path / "log"), n_chunks=3)

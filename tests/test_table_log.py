@@ -5,6 +5,7 @@ write, and crashes are injected into table_log's own filesystem calls."""
 from __future__ import annotations
 
 import contextlib
+import json
 import os
 import shutil
 import subprocess
@@ -278,6 +279,39 @@ def test_commit_next_reads_a_shared_file_footer_once(tmp_path, monkeypatch):
     snap = TableLog(root).snapshot()
     assert snap.deltas == {"0": [path], "2": [path]}
     assert snap.file_stats == {path: {"min_key": "a", "max_key": "c", "rows": 3}}
+
+
+def test_commit_next_stores_the_summary_plus_its_footer_seconds(tmp_path):
+    """A commit's summary is the one it is given plus ``footer_s``; a
+    commit given none gets only ``footer_s``, never its parent's keys."""
+    root = str(tmp_path / "t")
+    _run(root, [_create])
+    log = TableLog(root)
+    new = _write(log, 1, {0: ["a"], 1: ["b"]})
+    phases = {"stats_pass_s": 0.5, "plan_s": 0.25, "write_s": 1.0}
+    log.commit_next(log.snapshot(), [0, 1], N_BUCKETS, buckets=new, summary=phases)
+    summary = TableLog(root).snapshot().summary
+    assert set(summary) == {*phases, "footer_s"}
+    assert {k: summary[k] for k in phases} == phases and summary["footer_s"] >= 0
+    log.commit_next(log.snapshot(), (), N_BUCKETS)
+    assert list(TableLog(root).snapshot().summary) == ["footer_s"]
+
+
+def test_snapshot_written_without_a_summary_loads_with_none(tmp_path):
+    """Snapshots written before summaries existed have no ``summary`` key:
+    they load as ``{}``, and their child commits normally."""
+    root = str(tmp_path / "t")
+    _run(root, STEPS[:2])
+    log = TableLog(root)
+    path = log.snap_path(1)
+    with open(path) as f:
+        data = json.load(f)
+    assert "footer_s" in data.pop("summary")
+    with open(path, "w") as f:
+        json.dump(data, f)
+    assert TableLog(root).snapshot().summary == {}
+    _run(root, [STEPS[2]])
+    assert list(TableLog(root).snapshot().summary) == ["footer_s"]
 
 
 def test_expire_keeps_a_shared_file_while_any_bucket_lists_it(tmp_path):

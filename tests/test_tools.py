@@ -1,6 +1,6 @@
-"""The measurement scripts: every one imports, big_replay's merge phase
-capture times each data-writing merge of a real replay, and perfbench's
-tracer finds every engine attribute it wraps."""
+"""The measurement scripts: every one imports, big_replay reads one phase
+row per data-writing merge of a real replay from its snapshots, and
+perfbench's tracer finds every engine attribute it wraps."""
 
 from __future__ import annotations
 
@@ -8,6 +8,7 @@ import importlib.util
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from caterpillar_spark.cdc import replay_chunks
 from caterpillar_spark.generator import GeneratorSpec, write_changelog_chunks
@@ -34,18 +35,17 @@ def test_script_imports(path):
 
 
 def test_big_replay_captures_one_phase_per_merge(spark, tmp_path):
+    """big_replay reads one phase row per data-writing merge from the
+    snapshots: an empty batch, a compaction and a skipped re-replay add
+    none."""
     spec = GeneratorSpec(n_events=4_000, n_convs=40, turns_per_conv=10, seed=61)
     chunks = write_changelog_chunks(spark, spec, str(tmp_path / "log"), n_chunks=2)
     tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=4).create(
         TRANSCRIPT_SCHEMA
     )
-    merge = SnapshotTable.__dict__["merge"]
-    batch_stats = SnapshotTable.__dict__["_batch_stats"]
-    write = SnapshotTable.__dict__["_write_bucketed"]
-
-    with big_replay.merge_phases(len(chunks)) as phases:
-        results = replay_chunks(spark, chunks, tbl)
+    results = replay_chunks(spark, chunks, tbl)
     assert [r.snapshot_version for r in results] == [1, 2]
+    phases = big_replay.merge_phases(tbl.log)
     assert [p["batch"] for p in phases] == [0, 1]
     for p in phases:
         assert set(p) == {
@@ -54,19 +54,13 @@ def test_big_replay_captures_one_phase_per_merge(spark, tmp_path):
         assert min(p.values()) >= 0
     # every data batch runs one distributed stats pass, timed on its own
     assert sum(p["stats_pass_sec"] for p in phases) > 0
-    assert SnapshotTable.__dict__["merge"] is merge
-    assert SnapshotTable.__dict__["_batch_stats"] is batch_stats
-    assert SnapshotTable.__dict__["_write_bucketed"] is write
 
-    # a re-replay is skipped by the ledger: nothing is written, and a
-    # phase count that disagrees with the data batches is an error
-    with big_replay.merge_phases(0) as phases:
-        replay_chunks(spark, chunks, tbl)
-    assert phases == []
-    with pytest.raises(RuntimeError, match="captured 0 merge phases for 2"):
-        with big_replay.merge_phases(2):
-            replay_chunks(spark, chunks, tbl)
-    assert SnapshotTable.__dict__["merge"] is merge
+    empty = spark.read.parquet(chunks[0]).filter(F.lit(False))
+    assert tbl.merge(empty, 2, (10**9, 10**9))[0] == 3
+    tbl.compact()
+    replay_chunks(spark, chunks, tbl)
+    assert tbl.current_version() == 4
+    assert big_replay.merge_phases(tbl.log) == phases
 
 
 def test_perfbench_tracer_installs(spark, monkeypatch):
