@@ -30,10 +30,10 @@ Scale design (100 TB / 1000 executors):
   rewritten — a 1%-of-keyspace batch rewrites ~1% of table bytes;
 - small batches take the **merge-on-read delta path**: the reduced batch is
   appended as residue-class delta files, at most one per core, and one
-  for a one-partition batch (write volume O(batch), zero table rewrite);
-  the read path LWW-reduces
-  base∪delta by ``_lsn`` and ``compact()`` folds deltas back into
-  unique-key base files — Iceberg's MoR/compaction lifecycle;
+  for a one-partition batch (write volume and commit metadata O(batch),
+  zero table rewrite); the read path LWW-reduces base∪delta by ``_lsn``
+  and ``compact()`` folds deltas back into unique-key base files —
+  Iceberg's MoR/compaction lifecycle;
 - deletes are tombstones (``_deleted``), so row-level merge is idempotent
   and commutative under re-delivery; ``compact()`` drops them later;
 - the merge reduction is a hash aggregate (``max_by``) with map-side
@@ -168,7 +168,7 @@ class SnapshotTable:
         if self.log.exists():
             raise FileExistsError(f"table already exists at {self.root}")
         props = {"n_buckets": self.n_buckets}
-        self.log.commit(Snapshot(0, payload_schema.json(), properties=props), ())
+        self.log.commit(Snapshot(0, payload_schema.json(), properties=props))
         return self
 
     # -------------------------------------------------------------- reads
@@ -558,8 +558,8 @@ class SnapshotTable:
             # REAL offset range: commit a data-less snapshot that records
             # the range, else the ledger keeps a permanent hole and replay-
             # completeness checks report the stream as unfinished
-            self.log.commit_next(  # touches no bucket: parent manifests as-is
-                snap, (), self.n_buckets, applied=applied, lineage=lineage([(-1, 0)]),
+            self.log.commit_next(  # no file changed: keeps the parent's manifests
+                snap, self.n_buckets, applied=applied, lineage=lineage([(-1, 0)]),
                 summary={"stats_pass_s": stats_s, "plan_s": plan_s(), "write_s": 0},
             )
             return new_version, [(-1, 0)]
@@ -661,7 +661,6 @@ class SnapshotTable:
         # ---- lineage + ledger -------------------------------------------
         self.log.commit_next(
             snap,
-            incoming_stats.keys(),
             self.n_buckets,
             buckets=buckets,
             deltas=deltas,
@@ -712,7 +711,7 @@ class SnapshotTable:
             buckets[str(b)] = by_bucket.get(b, [])
             deltas.pop(str(b), None)
         return self.log.commit_next(
-            snap, sel, self.n_buckets, buckets=buckets, deltas=deltas
+            snap, self.n_buckets, buckets=buckets, deltas=deltas
         )
 
     @staticmethod

@@ -143,3 +143,26 @@ def test_inline_bucket_pointers_raise_on_load(spark, tmp_path):
             reopened.read()
         os.unlink(tbl.log.snap_path(1))
     assert tbl.snapshot().version == 0  # empty inline maps load fine
+
+
+def test_per_bucket_manifests_raise_on_load(spark, tmp_path):
+    """A snapshot in the retired per-bucket manifest format ({manifest:
+    [bucket ids]}, each manifest holding whole buckets' states) is refused
+    with the rewrite error by snapshot() and read(); the constructor
+    defers it so repair flows can still open the table."""
+    root = str(tmp_path / "t")
+    tbl = SnapshotTable(spark, root, n_buckets=4).create(PAYLOAD)
+    os.makedirs(os.path.join(root, "_log", "manifests"))
+    name = "m000000000001-0123456789ab.json"
+    path = os.path.join(root, "data", "v1-0123456789ab", "part-00002.parquet")
+    bucket = {"base": [path], "deltas": [], "file_stats": {path: {"rows": 1}}}
+    with open(os.path.join(root, "_log", "manifests", name), "w") as f:
+        json.dump({"2": bucket}, f)
+    raw = json.load(open(tbl.log.snap_path(0)))
+    raw.update(version=1, parent=0, manifests={name: [2]})
+    with open(tbl.log.snap_path(1), "w") as f:
+        json.dump(raw, f)
+    reopened = SnapshotTable(spark, root)  # deferred, not raised
+    for load in (reopened.snapshot, reopened.read):
+        with pytest.raises(RuntimeError, match="per-bucket manifests.*rewrite"):
+            load()

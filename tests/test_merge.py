@@ -136,11 +136,11 @@ def test_two_streams_interleaved_with_crash_retry(spark, tmp_path):
     real_commit = TableLog.commit
     boom = {"armed": True}
 
-    def crashing_commit(self, snap, touched=None):
+    def crashing_commit(self, snap, parent=None):
         if boom["armed"] and snap.version > 2:
             boom["armed"] = False
             raise RuntimeError("simulated crash before atomic commit")
-        return real_commit(self, snap, touched)
+        return real_commit(self, snap, parent)
 
     TableLog.commit = crashing_commit
     try:
@@ -272,7 +272,9 @@ def test_merge_commits_record_their_phase_seconds(spark, tmp_path, monkeypatch):
     cow, delta, none = (tbl.snapshot(v) for v in (1, 2, 3))
     assert cow.buckets and not cow.has_deltas() and delta.has_deltas()
     for snap in (cow, delta, none):
-        assert set(snap.summary) == {"stats_pass_s", "plan_s", "write_s", "footer_s"}
+        assert set(snap.summary) == {
+            "stats_pass_s", "plan_s", "write_s", "footer_s", "manifest_s"
+        }
         assert min(snap.summary.values()) >= 0
     assert min(cow.summary["write_s"], delta.summary["write_s"]) > 0
     assert none.summary["write_s"] == 0

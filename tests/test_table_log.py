@@ -102,7 +102,7 @@ def _write(
 def _create(log):
     if not log.exists():
         props = {"n_buckets": N_BUCKETS}
-        log.commit(Snapshot(0, '{"fields": []}', properties=props), ())
+        log.commit(Snapshot(0, '{"fields": []}', properties=props))
 
 
 def _merge(lo, hi, rows, delta=False, shared=False):
@@ -120,7 +120,6 @@ def _merge(lo, hi, rows, delta=False, shared=False):
                 buckets[b] = ps
         log.commit_next(
             snap,
-            rows,
             N_BUCKETS,
             buckets=buckets,
             deltas=deltas,
@@ -149,7 +148,7 @@ def _compact(log):
     new = _write(log, snap.version + 1, rows)
     buckets = {**snap.buckets, **new}
     deltas = {b: ps for b, ps in snap.deltas.items() if int(b) not in due}
-    log.commit_next(snap, due, N_BUCKETS, buckets=buckets, deltas=deltas)
+    log.commit_next(snap, N_BUCKETS, buckets=buckets, deltas=deltas)
 
 
 def _expire(log):
@@ -163,6 +162,9 @@ STEPS = [
     _merge(20, 29, {0: ["g"], 2: ["h"]}, delta=True, shared=True),
     _merge(30, 39, {}),  # an empty batch: ledger only, no bucket touched
     _compact,
+    # rewrites one bucket of the compaction's three-bucket manifest: the
+    # other two buckets' files must be carried into the new manifest
+    _merge(40, 49, {0: ["i"]}),
     _expire,
 ]
 
@@ -175,7 +177,8 @@ def _state(root: str):
     if not log.exists():
         return None
     snap = log.snapshot()
-    for p in {*snap.manifests.values(), *snap.file_stats}:
+    manifests = [os.path.join(log.log_dir, "manifests", m) for m in snap.manifests]
+    for p in {*manifests, *snap.file_stats}:
         assert os.path.isfile(p), p
 
     def files(by_bucket):
@@ -215,8 +218,9 @@ def _run(root, steps):
 def test_crash_matrix_parent_or_child_then_retry_converges(tmp_path):
     """Kill the process at every filesystem call of every step (create,
     a bucket-touching commit, a delta commit, a commit of one delta file
-    shared by two buckets, an empty-batch commit, a compaction and
-    expire; base files sit in per-bucket subdirectories): a fresh
+    shared by two buckets, an empty-batch commit, a compaction, a commit
+    that rewrites one bucket of the compaction's manifest, and expire;
+    base files sit in per-bucket subdirectories): a fresh
     TableLog then loads exactly the parent or the child, and every file
     it references exists. Retrying the step
     then yields the child, and expire leaves exactly what it leaves after
@@ -228,9 +232,14 @@ def test_crash_matrix_parent_or_child_then_retry_converges(tmp_path):
         after.append(_state(ref))
         _run(ref, [_expire])
         clean.append(_leftovers(ref))
-    assert after[-1][0] == 5 and after[-1][1] == {"s": [[0, 39]]}
+    assert after[-1][0] == 6 and after[-1][1] == {"s": [[0, 49]]}
     assert not after[-1][5]  # compacted: no deltas left
-    assert clean[-1] == (6, 4, 0, 1)
+    # buckets 1 and 2 survive the rewrite of bucket 0 with their files
+    compacted, rewritten = after[-3][4], after[-1][4]
+    assert sorted(rewritten) == sorted(compacted) == ["0", "1", "2"]
+    assert rewritten["0"] != compacted["0"]
+    assert {**rewritten, "0": None} == {**compacted, "0": None}
+    assert clean[-1] == (7, 5, 0, 2)
 
     root, crash_points = str(tmp_path / "t"), 0
     for i, step in enumerate(STEPS):
@@ -238,7 +247,7 @@ def test_crash_matrix_parent_or_child_then_retry_converges(tmp_path):
         prefix = str(tmp_path / f"prefix{i}")
         _run(root, STEPS[:i])
         if os.path.exists(root):
-            os.rename(root, prefix)  # same root for every k: paths are absolute
+            os.rename(root, prefix)
         for k in range(1000):
             if os.path.exists(prefix):
                 shutil.copytree(prefix, root)
@@ -274,7 +283,7 @@ def test_commit_next_reads_a_shared_file_footer_once(tmp_path, monkeypatch):
     monkeypatch.setattr(
         table_log, "footer_range", lambda p, col: calls.append(p) or real(p, col)
     )
-    log.commit_next(snap, [0, 2], N_BUCKETS, deltas=new)
+    log.commit_next(snap, N_BUCKETS, deltas=new)
     assert calls == [path]
     snap = TableLog(root).snapshot()
     assert snap.deltas == {"0": [path], "2": [path]}
@@ -282,22 +291,24 @@ def test_commit_next_reads_a_shared_file_footer_once(tmp_path, monkeypatch):
 
 
 def test_commit_next_stores_the_summary_plus_its_footer_seconds(tmp_path):
-    """A commit's summary is the one it is given plus ``footer_s``; a
-    commit given none gets only ``footer_s``, never its parent's keys."""
+    """A commit's summary is the one it is given plus ``footer_s`` and
+    ``manifest_s``; a commit given none gets only those two, never its
+    parent's keys."""
     root = str(tmp_path / "t")
     _run(root, [_create])
     log = TableLog(root)
     new = _write(log, 1, {0: ["a"], 1: ["b"]})
     phases = {"stats_pass_s": 0.5, "plan_s": 0.25, "write_s": 1.0}
-    log.commit_next(log.snapshot(), [0, 1], N_BUCKETS, buckets=new, summary=phases)
+    log.commit_next(log.snapshot(), N_BUCKETS, buckets=new, summary=phases)
     summary = TableLog(root).snapshot().summary
-    assert set(summary) == {*phases, "footer_s"}
-    assert {k: summary[k] for k in phases} == phases and summary["footer_s"] >= 0
-    log.commit_next(log.snapshot(), (), N_BUCKETS)
-    assert list(TableLog(root).snapshot().summary) == ["footer_s"]
+    assert set(summary) == {*phases, "footer_s", "manifest_s"}
+    assert {k: summary[k] for k in phases} == phases
+    assert min(summary["footer_s"], summary["manifest_s"]) >= 0
+    log.commit_next(log.snapshot(), N_BUCKETS)
+    assert list(TableLog(root).snapshot().summary) == ["footer_s", "manifest_s"]
 
 
-def test_snapshot_written_without_a_summary_loads_with_none(tmp_path):
+def test_snapshot_written_without_a_summary_loads_with_an_empty_summary(tmp_path):
     """Snapshots written before summaries existed have no ``summary`` key:
     they load as ``{}``, and their child commits normally."""
     root = str(tmp_path / "t")
@@ -311,7 +322,93 @@ def test_snapshot_written_without_a_summary_loads_with_none(tmp_path):
         json.dump(data, f)
     assert TableLog(root).snapshot().summary == {}
     _run(root, [STEPS[2]])
-    assert list(TableLog(root).snapshot().summary) == ["footer_s"]
+    assert list(TableLog(root).snapshot().summary) == ["footer_s", "manifest_s"]
+
+
+def test_a_delta_commit_writes_metadata_for_its_own_files_only(tmp_path):
+    """A commit that adds one delta file listed by two buckets writes a
+    one-entry manifest of the same size at 32 and at 512 buckets, after
+    one or after four earlier delta commits, each listed by 7/8 of the
+    buckets. Its snapshot JSON holds no file lists: less its summary, it
+    is its parent's plus one manifest name, and one name per live manifest
+    is all it grows by."""
+
+    def commit(log, n, rows, delta):
+        snap = log.snapshot()
+        new = _write(log, snap.version + 1, rows, shared=delta)
+        view = snap.deltas if delta else snap.buckets
+        merged = {b: view.get(b, []) + ps for b, ps in new.items()}
+        key = "deltas" if delta else "buckets"
+        log.commit_next(snap, n, **{key: {**view, **merged}})
+
+    def meta(log, v):
+        with open(log.snap_path(v)) as f:
+            raw = json.load(f)
+        assert not {"buckets", "deltas", "file_stats"} & set(raw)
+        return raw, len(json.dumps({**raw, "summary": {}}))
+
+    out = {}
+    for n in (32, 512):
+        for earlier in (1, 4):
+            log = TableLog(str(tmp_path / f"t{n}-{earlier}"))
+            _create(log)
+            commit(log, n, {b: [f"k{b:04d}"] for b in range(n)}, delta=False)
+            for i in range(earlier):
+                commit(log, n, {b: [f"d{i}-{b:04d}"] for b in range(n) if b % 8}, True)
+            commit(log, n, {0: ["x"], 1: ["y"]}, delta=True)
+            v = log.current_version()
+            (raw, size), (parent, parent_size) = meta(log, v), meta(log, v - 1)
+            (name,) = set(raw["manifests"]) - set(parent["manifests"])
+            assert raw["manifests"] == parent["manifests"] + [name]
+            assert size == parent_size + len(name) + 4  # ', "<name>"'
+            with open(os.path.join(log.log_dir, "manifests", name), "rb") as f:
+                manifest = f.read()
+            ((entry),) = json.loads(manifest).values()
+            assert entry == {
+                "buckets": [0, 1], "delta": True, "min_key": "x", "max_key": "y",
+                "rows": 2,
+            }
+            out[n, earlier] = manifest, size, len(raw["manifests"]), len(name) + 4
+    assert len({len(m) for m, *_ in out.values()}) == 1  # tokens differ
+    for n in (32, 512):
+        (_, size1, live1, per), (_, size4, live4, _) = out[n, 1], out[n, 4]
+        assert (live1, live4) == (out[32, 1][2], out[32, 4][2])
+        assert size4 - size1 <= (live4 - live1) * per
+
+
+def test_the_manifest_cache_holds_the_current_snapshots_manifests(tmp_path):
+    """One handle commits 20 times (delta merges, a compaction every
+    fifth): its cache then holds exactly the current snapshot's manifests,
+    not one per commit."""
+    root = str(tmp_path / "t")
+    log = TableLog(root)
+    _create(log)
+    for i in range(20):
+        if i % 5 == 4:
+            _compact(log)
+        else:
+            _merge(10 * i, 10 * i + 9, {i % N_BUCKETS: [f"k{i:02d}"]}, delta=True)(log)
+    assert log.current_version() == 20
+    assert set(log._manifest_cache) == set(log._snapshot_raw().manifests)
+    assert len(os.listdir(os.path.join(log.log_dir, "manifests"))) == 20
+
+
+def test_a_copied_table_reads_its_files_under_the_new_root(tmp_path):
+    """Manifests list root-relative paths: a table copied to a new root
+    loads with every view under that root, every listed file there, and
+    commits on."""
+    old, new = str(tmp_path / "old"), str(tmp_path / "new")
+    _run(old, STEPS[:4])
+    state = _state(old)
+    shutil.copytree(old, new)
+    shutil.rmtree(old)
+    snap = TableLog(new).snapshot()
+    listed = {p for ps in (*snap.buckets.values(), *snap.deltas.values()) for p in ps}
+    assert listed == set(snap.file_stats) and len(listed) == 4
+    assert all(p.startswith(os.path.join(new, "data", "")) for p in listed)
+    assert _state(new) == state  # _state checks every listed file exists
+    _run(new, STEPS[4:6])
+    assert not TableLog(new).snapshot().has_deltas()
 
 
 def test_expire_keeps_a_shared_file_while_any_bucket_lists_it(tmp_path):
@@ -322,10 +419,10 @@ def test_expire_keeps_a_shared_file_while_any_bucket_lists_it(tmp_path):
     log = TableLog(root)
     snap = log.snapshot()
     (path,) = snap.deltas["0"]
-    log.commit_next(snap, [0], N_BUCKETS, deltas={"2": [path]})
+    log.commit_next(snap, N_BUCKETS, deltas={"2": [path]})
     assert log.expire_snapshots(keep_last=1, grace_seconds=0) == []
     assert os.path.isfile(path)
-    log.commit_next(log.snapshot(), [2], N_BUCKETS, deltas={})
+    log.commit_next(log.snapshot(), N_BUCKETS, deltas={})
     assert log.expire_snapshots(keep_last=1, grace_seconds=0) == [
         os.path.dirname(path)
     ]

@@ -49,7 +49,8 @@ def test_big_replay_captures_one_phase_per_merge(spark, tmp_path):
     assert [p["batch"] for p in phases] == [0, 1]
     for p in phases:
         assert set(p) == {
-            "batch", "plan_sec", "stats_pass_sec", "write_sec", "stats_sec"
+            "batch", "plan_sec", "stats_pass_sec", "write_sec", "stats_sec",
+            "manifest_sec",
         }
         assert min(p.values()) >= 0
     # every data batch runs one distributed stats pass, timed on its own

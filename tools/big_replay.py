@@ -30,10 +30,10 @@ from caterpillar_spark.streaming.apply import TRANSCRIPT_SCHEMA  # noqa: E402
 
 
 def merge_phases(log: TableLog) -> list[dict]:
-    """One ``{batch, plan_sec, stats_pass_sec, write_sec, stats_sec}`` per
-    snapshot whose lineage records rows (a merge that wrote data), oldest
-    first, from the phase seconds its merge stored in the snapshot
-    summary: ``stats_sec`` is the commit's footer reads."""
+    """One ``{batch, plan_sec, stats_pass_sec, write_sec, stats_sec,
+    manifest_sec}`` per snapshot whose lineage records rows (a merge that
+    wrote data), oldest first, from its summary: ``stats_sec`` is the
+    commit's footer reads, ``manifest_sec`` its manifest diff and write."""
     phases = []
     for v in range(1, log.current_version() + 1):
         snap = log.snapshot(v)
@@ -46,6 +46,7 @@ def merge_phases(log: TableLog) -> list[dict]:
             "stats_pass_sec": round(s["stats_pass_s"], 2),
             "write_sec": round(s["write_s"], 2),
             "stats_sec": round(s["footer_s"], 2),
+            "manifest_sec": round(s["manifest_s"], 2),
         })
     return phases
 
@@ -96,7 +97,7 @@ def main() -> None:
     gen_sec = round(time.time() - t_gen0, 1)
 
     seconds, rows, phases = replay(spark, chunks, base)
-    serial = sum(p["plan_sec"] + p["stats_sec"] for p in phases)
+    serial = sum(p["plan_sec"] + p["stats_sec"] + p["manifest_sec"] for p in phases)
     record = {
         "events": args.events,
         "chunks": args.chunks,
