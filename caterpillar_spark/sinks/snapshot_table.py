@@ -34,6 +34,12 @@ Scale design (100 TB / 1000 executors):
   zero table rewrite); the read path LWW-reduces base∪delta by ``_lsn``
   and ``compact()`` folds deltas back into unique-key base files —
   Iceberg's MoR/compaction lifecycle;
+- ``maintain()`` bounds the delta backlog in two tiers, both decided from
+  the log's footer stats with no Spark job, like an LSM tree's minor and
+  major compactions: a **fold** LWW-reduces the live delta files alone
+  into ONE delta file (reads and writes O(backlog), never a base file),
+  and only a bucket whose delta rows reach a fraction of its base rows
+  (or whose base is fragmented) has its base rewritten by ``compact()``;
 - deletes are tombstones (``_deleted``), so row-level merge is idempotent
   and commutative under re-delivery; ``compact()`` drops them later;
 - the merge reduction is a hash aggregate (``max_by``) with map-side
@@ -60,6 +66,13 @@ _SYS_COLS = ["_lsn", "_deleted"]
 # merges take the delta path when the files a CoW would rewrite hold more
 # than this many times the incoming rows (BENCH/delta_ab.json)
 _DELTA_THRESHOLD = 3.0
+# maintain()'s tiers (the sweep behind k and f is in CHANGES.md): fold the
+# delta backlog into one delta file once this many distinct files are live
+_FOLD_FILES = 4
+# ... and rewrite a bucket's base once its delta rows reach this fraction
+# of its base rows, or its base is split into this many files
+_MAJOR_DELTA_FRAC = 0.5
+_MAX_BASE_FILES = 8
 # a batch's per-bucket (min conv_id, max conv_id, rows); None = unknown range
 KeyStats = dict[int, tuple[str | None, str | None, int]]
 
@@ -168,7 +181,12 @@ class SnapshotTable:
         if self.log.exists():
             raise FileExistsError(f"table already exists at {self.root}")
         props = {"n_buckets": self.n_buckets}
-        self.log.commit(Snapshot(0, payload_schema.json(), properties=props))
+        self.log.commit(
+            Snapshot(
+                0, payload_schema.json(), properties=props,
+                summary={"operation": "create"},
+            )
+        )
         return self
 
     # -------------------------------------------------------------- reads
@@ -512,14 +530,15 @@ class SnapshotTable:
         m = 1 — two one-task jobs and no shuffle.
 
         Either path commits data + offset ledger + lineage in ONE atomic
-        snapshot create, whose ``summary`` holds the merge's phase seconds:
-        ``stats_pass_s`` (the :meth:`_batch_stats` call), ``plan_s`` (entry
-        to the write, less the stats pass), ``write_s`` (the
-        :meth:`_write_bucketed` call; 0 for an empty batch) and the commit's
-        ``footer_s``. Semantics = Iceberg ``MERGE INTO t USING u ON key
-        WHEN MATCHED AND op='D' THEN DELETE / WHEN MATCHED THEN UPDATE /
-        WHEN NOT MATCHED AND op<>'D' THEN INSERT`` (SURVEY.md §7.2) under
-        LWW-by-``lsn``.
+        snapshot create, whose ``summary`` holds the merge's ``operation``
+        (``cow``, ``delta``, or ``empty`` for a batch with no rows) and
+        its phase seconds: ``stats_pass_s`` (the :meth:`_batch_stats`
+        call), ``plan_s`` (entry to the write, less the stats pass),
+        ``write_s`` (the :meth:`_write_bucketed` call; 0 for an empty
+        batch) and the commit's ``footer_s``. Semantics = Iceberg ``MERGE
+        INTO t USING u ON key WHEN MATCHED AND op='D' THEN DELETE / WHEN
+        MATCHED THEN UPDATE / WHEN NOT MATCHED AND op<>'D' THEN INSERT``
+        (SURVEY.md §7.2) under LWW-by-``lsn``.
         """
         t0, clock = time.time(), time.perf_counter()
         stats = None
@@ -560,7 +579,10 @@ class SnapshotTable:
             # completeness checks report the stream as unfinished
             self.log.commit_next(  # no file changed: keeps the parent's manifests
                 snap, self.n_buckets, applied=applied, lineage=lineage([(-1, 0)]),
-                summary={"stats_pass_s": stats_s, "plan_s": plan_s(), "write_s": 0},
+                summary={
+                    "operation": "empty", "stats_pass_s": stats_s,
+                    "plan_s": plan_s(), "write_s": 0,
+                },
             )
             return new_version, [(-1, 0)]
 
@@ -643,7 +665,11 @@ class SnapshotTable:
             rows = self._partition_by_bucket(rows, m)
         winner = last_writer_wins(rows, KEY, "_lsn")
 
-        phases = {"stats_pass_s": stats_s, "plan_s": plan_s()}
+        phases = {
+            "operation": "delta" if use_delta else "cow",
+            "stats_pass_s": stats_s,
+            "plan_s": plan_s(),
+        }
         written, phases["write_s"] = _timed(
             self._write_bucketed,
             winner,
@@ -675,19 +701,21 @@ class SnapshotTable:
     def compact(
         self, drop_tombstones: bool = True, buckets: list[int] | None = None
     ) -> int:
-        """Fold merge-on-read deltas into key-unique base files and rewrite
-        small files (optionally purging tombstones once replay protection
-        no longer needs them) — Iceberg's rewrite_data_files + MoR
-        compaction in one. ``buckets`` limits the rewrite to a subset (the
-        unit of incremental maintenance at 100 TB: compact the buckets
-        whose delta backlog grew, leave the cold ones byte-untouched).
-        The subset is widened to its closure over shared delta files: a
-        delta file holds one residue class, so every bucket that lists it
-        is rewritten too — cold class-mates included — and the file is
-        dropped from all of them at once. Dropping it from only some would
-        let a full read see an update whose tombstone the compaction
-        purged. After a FULL compact the read path is reduction-free
-        again."""
+        """Major compaction: fold merge-on-read deltas into key-unique base
+        files and rewrite small files (optionally purging tombstones once
+        replay protection no longer needs them) — Iceberg's
+        rewrite_data_files + MoR compaction in one. ``buckets`` limits the
+        rewrite to a subset (the unit of incremental maintenance at 100 TB:
+        :meth:`maintain` compacts the buckets whose delta rows grew, leaving
+        the cold ones byte-untouched). The subset is widened to its closure
+        over shared delta files: a delta file holds one residue class (a
+        one-partition batch's or a fold's file, every bucket it touched),
+        so every bucket that lists it is rewritten too — cold class-mates
+        included — and the file is dropped from all of them at once.
+        Dropping it from only some would let a full read see an update
+        whose tombstone the compaction purged. After a FULL compact the
+        read path is reduction-free again. The commit's ``summary`` holds
+        ``operation`` ``compact``."""
         snap = self.snapshot()
         sel = list(range(self.n_buckets)) if buckets is None else buckets
         sel = sorted(self._delta_closure(snap, sel))
@@ -711,7 +739,8 @@ class SnapshotTable:
             buckets[str(b)] = by_bucket.get(b, [])
             deltas.pop(str(b), None)
         return self.log.commit_next(
-            snap, self.n_buckets, buckets=buckets, deltas=deltas
+            snap, self.n_buckets, buckets=buckets, deltas=deltas,
+            summary={"operation": "compact"},
         )
 
     @staticmethod
@@ -731,24 +760,63 @@ class SnapshotTable:
                     todo.extend(by_file[p])
         return closure
 
-    def maintain(
-        self, max_delta_files: int = 4, max_base_files: int = 8
-    ) -> int:
-        """Incremental maintenance policy: compact ONLY the buckets whose
-        delta backlog (or base-file fragmentation) crossed the thresholds,
-        plus the class-mates that share their delta files (see
-        :meth:`compact`).
-        Returns the new version, or the current one if nothing qualified.
-        This is the background loop a 10^10-event deployment runs between
-        merges so read-side reduction cost stays bounded while hot buckets
-        never force cold-bucket rewrites."""
+    def maintain(self) -> int:
+        """Incremental maintenance in two tiers, each decided from the
+        snapshot's metadata alone (footer rows in ``file_stats``, no Spark
+        job) — an LSM tree's or Iceberg's major and minor compaction:
+
+        - **major**: compact (:meth:`compact`, tombstones kept, closure
+          over shared delta files) the buckets whose base is split into
+          ``_MAX_BASE_FILES`` files or whose delta rows reach
+          ``_MAJOR_DELTA_FRAC`` of their base rows. A bucket's delta rows
+          count each delta file it lists at ``rows / (buckets listing
+          it)``, the file's rows spread over its buckets.
+        - **minor (fold)**: else, once ``_FOLD_FILES`` distinct delta
+          files are live, LWW-reduce those files alone, in one task, into
+          ONE delta file and list it under every bucket that listed any of
+          them. The file keeps its tombstones: they still shadow base
+          rows. Since LWW by ``_lsn`` is associative and no base file is
+          touched, a full read reduces base ∪ that file to the same
+          winners; the fold reads and writes O(delta backlog), not
+          O(table). Its commit changes no ledger or lineage, and its
+          ``summary`` holds ``operation`` ``fold``.
+
+        Returns the new version, or the current one if neither tier is
+        due. This is the background loop a 10^10-event deployment runs
+        between merges: the fold keeps the read-side reduction bounded, and
+        a hot bucket's base rewrite never forces a cold bucket's beyond the
+        class-mates that share its delta files."""
         snap = self.snapshot()
-        due = [
-            b
-            for b in range(self.n_buckets)
-            if len(snap.deltas.get(str(b), [])) >= max_delta_files
-            or len(snap.buckets.get(str(b), [])) >= max_base_files
-        ]
-        if not due:
+        listings: dict[str, int] = {}  # live delta file -> buckets listing it
+        for ps in snap.deltas.values():
+            for p in ps:
+                listings[p] = listings.get(p, 0) + 1
+
+        def rows(p: str) -> int:
+            return int(snap.file_stats.get(p, {}).get("rows") or 0)
+
+        due = []
+        for b in range(self.n_buckets):
+            base, deltas = snap.buckets.get(str(b), []), snap.deltas.get(str(b), [])
+            delta_rows = sum(rows(p) / listings[p] for p in deltas)
+            if len(base) >= _MAX_BASE_FILES or (
+                deltas and delta_rows >= _MAJOR_DELTA_FRAC * sum(map(rows, base))
+            ):
+                due.append(b)
+        if due:
+            return self.compact(drop_tombstones=False, buckets=due)
+        if len(listings) < _FOLD_FILES:
             return snap.version
-        return self.compact(drop_tombstones=False, buckets=due)
+        # one task, no shuffle: coalesce(1) satisfies the LWW groupBy, and
+        # its one output partition is the single class of a flat write
+        folded = last_writer_wins(
+            self._read_files(snap, sorted(listings)).coalesce(1), KEY, "_lsn"
+        )
+        new = self._write_bucketed(
+            folded, self.log.new_data_dir(snap.version + 1), None
+        ).get(0, [])
+        return self.log.commit_next(
+            snap, self.n_buckets,
+            deltas={b: list(new) for b, ps in snap.deltas.items() if ps},
+            summary={"operation": "fold"},
+        )

@@ -32,12 +32,12 @@ whose range is already applied is a no-op; offsets and data commit in ONE
 atomic link, so replay from any checkpoint converges.
 
 Metadata is O(changed files) per commit: the snapshot JSON holds the
-ledger, lineage, the commit's summary (phase seconds, like Iceberg's
-snapshot summary) and the names of its manifests (Iceberg's manifest
-list), immutable lists of data files. A commit keeps each parent manifest
-whose files all stand unchanged and writes one for the rest: a delta
-commit lists only its new files, but a copy-on-write commit re-lists the
-survivors of each manifest it takes a file from.
+ledger, lineage, the commit's summary (its operation and phase seconds,
+like Iceberg's snapshot summary) and the names of its manifests
+(Iceberg's manifest list), immutable lists of data files. A commit keeps
+each parent manifest whose files all stand unchanged and writes one for
+the rest: a delta commit lists only its new files, but a copy-on-write
+commit re-lists the survivors of each manifest it takes a file from.
 """
 
 from __future__ import annotations
@@ -61,10 +61,11 @@ class Snapshot:
     # stream_id -> merged [lo, hi] ranges (the offset ledger)
     applied: dict[str, list[list[int]]] = field(default_factory=dict)
     lineage: list[dict] = field(default_factory=list)  # this commit's entries
-    # this commit's phase seconds: a merge's stats_pass_s, plan_s and
-    # write_s, commit_next's footer_s and commit's manifest_s; {} in
-    # snapshots written before summaries existed
-    summary: dict[str, float] = field(default_factory=dict)
+    # this commit's "operation" (create, cow, delta, empty, compact or
+    # fold; the table sink's) and phase seconds: a merge's stats_pass_s,
+    # plan_s and write_s, commit_next's footer_s and commit's manifest_s;
+    # {} in snapshots written before summaries existed
+    summary: dict[str, float | str] = field(default_factory=dict)
     parent: int | None = None
     properties: dict = field(default_factory=dict)
     # bucket id (str) -> merge-on-read delta file paths (LWW by _lsn at read)

@@ -91,9 +91,11 @@ def apply_stream(
     The merge picks the path per micro-batch: a batch that is small next
     to the files it overlaps takes the merge-on-read delta path (write
     volume O(batch)), a large one copy-on-write. With ``maintain_every=k``
-    the sink runs incremental compaction (``table.maintain()``) after every
-    k-th applied batch, bounding the read-side delta backlog — the
-    streaming deployment's maintenance loop."""
+    the sink runs ``table.maintain()`` after every k-th applied batch, the
+    streaming deployment's maintenance loop: it folds the live delta files
+    into one delta file (O(backlog) work, bounding the files a read
+    reduces), and rewrites a bucket's base only once its delta rows reach
+    a fraction of its base rows."""
 
     applied = {"n": 0}
 

@@ -256,9 +256,9 @@ def test_empty_batch_still_commits_offset_range(spark, tmp_path):
 
 
 def test_merge_commits_record_their_phase_seconds(spark, tmp_path, monkeypatch):
-    """A CoW, a delta and an empty-batch merge each commit their phase
-    seconds in the snapshot summary; a batch the ledger skips commits no
-    snapshot at all."""
+    """A CoW, a delta and an empty-batch merge each commit their operation
+    and phase seconds in the snapshot summary; a batch the ledger skips
+    commits no snapshot at all."""
     chunks = write_changelog_chunks(spark, SPEC, str(tmp_path / "log"), n_chunks=3)
     tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=8).create(PAYLOAD)
     monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", float("inf"))  # CoW
@@ -271,11 +271,16 @@ def test_merge_commits_record_their_phase_seconds(spark, tmp_path, monkeypatch):
 
     cow, delta, none = (tbl.snapshot(v) for v in (1, 2, 3))
     assert cow.buckets and not cow.has_deltas() and delta.has_deltas()
+    assert tbl.snapshot(0).summary["operation"] == "create"
+    assert [s.summary["operation"] for s in (cow, delta, none)] == [
+        "cow", "delta", "empty"
+    ]
     for snap in (cow, delta, none):
-        assert set(snap.summary) == {
+        seconds = {k: v for k, v in snap.summary.items() if k != "operation"}
+        assert set(seconds) == {
             "stats_pass_s", "plan_s", "write_s", "footer_s", "manifest_s"
         }
-        assert min(snap.summary.values()) >= 0
+        assert min(seconds.values()) >= 0
     assert min(cow.summary["write_s"], delta.summary["write_s"]) > 0
     assert none.summary["write_s"] == 0
 

@@ -422,14 +422,28 @@ def test_concurrent_commit_loser_cannot_clobber(spark, tmp_path, monkeypatch):
     assert all("data" in d for d in removed)
 
 
-def test_selective_compaction_and_maintain(spark, tmp_path, monkeypatch):
-    """Per-bucket compaction folds only the selected buckets' deltas; cold
-    buckets stay byte-untouched; maintain() picks buckets over threshold."""
+def _rows(tbl):
+    return sorted((r["conv_id"], r["text"]) for r in tbl.read().collect())
+
+
+def _file_bytes(paths):
+    out = {}
+    for p in paths:
+        with open(p, "rb") as f:
+            out[p] = f.read()
+    return out
+
+
+def test_maintain_folds_the_delta_backlog_into_one_file(spark, tmp_path, monkeypatch):
+    """maintain()'s minor tier: five one-key delta files, far below the
+    major tier's row fraction, fold into ONE delta file listed by exactly
+    the hot bucket. No base file is touched, the ledger and lineage do not
+    change, the read is unchanged, and a second maintain() is a no-op."""
     tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=4).create(PAYLOAD)
     convs = [f"conv_{i:06d}" for i in range(200)]
     tbl.merge(_insert_batch(spark, convs, 0), 0, (0, 199))
-    # pile deltas onto ONE key's bucket
     hot = "conv_000001"
+    hot_b = str(tbl.bucket_for_key(hot))
     monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", -1)  # delta
     for i in range(5):
         tbl.merge(
@@ -438,31 +452,118 @@ def test_selective_compaction_and_maintain(spark, tmp_path, monkeypatch):
             (1000 + i, 1000 + i),
         )
     snap = tbl.snapshot()
-    hot_b = [b for b, fs in snap.deltas.items() if fs]
-    assert len(hot_b) == 1
-    cold_files = {
-        p
-        for b, fs in snap.buckets.items()
-        if b not in hot_b
-        for p in fs
-    }
-    state_before = sorted(
-        (r["conv_id"], r["text"]) for r in tbl.read().collect()
-    )
-    v = tbl.maintain(max_delta_files=4)
-    assert v > snap.version
+    assert {b for b, fs in snap.deltas.items() if fs} == {hot_b}
+    assert len(snap.deltas[hot_b]) == 5
+    base = _file_bytes(p for fs in snap.buckets.values() for p in fs)
+    state_before = _rows(tbl)
+
+    v = tbl.maintain()
+    assert v == snap.version + 1
     snap2 = tbl.snapshot()
-    assert not snap2.deltas.get(hot_b[0])
-    # cold buckets byte-untouched
-    for b, fs in snap2.buckets.items():
-        if b not in hot_b:
-            assert set(fs) <= cold_files
-    assert (
-        sorted((r["conv_id"], r["text"]) for r in tbl.read().collect())
-        == state_before
+    assert snap2.summary["operation"] == "fold"
+    assert snap2.applied == snap.applied and snap2.lineage == []
+    (fold,) = snap2.deltas[hot_b]
+    assert fold not in snap.deltas[hot_b]
+    assert {b: fs for b, fs in snap2.deltas.items() if fs} == {hot_b: [fold]}
+    assert snap2.file_stats[fold]["rows"] == 1  # the five updates' winner
+    # every base file, hot bucket's included, byte-untouched
+    assert snap2.buckets == snap.buckets
+    assert _file_bytes(base) == base
+    assert _rows(tbl) == state_before
+    # one live delta file: nothing due anymore -> no-op
+    assert tbl.maintain() == v
+
+
+def test_maintain_compacts_the_closure_of_a_bucket_past_the_row_fraction(
+    spark, tmp_path, monkeypatch
+):
+    """maintain()'s major tier: delta rows past ``_MAJOR_DELTA_FRAC`` of
+    one bucket's base rows compact that bucket plus the class-mate that
+    shares a delta file with it (the closure), and only them: the other
+    buckets' files stay byte-untouched and the read is unchanged."""
+    tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=4).create(PAYLOAD)
+    convs = [f"conv_{i:06d}" for i in range(200)]
+    tbl.merge(_insert_batch(spark, convs, 0), 0, (0, 199))
+    by_bucket = {b: [c for c in convs if tbl.bucket_for_key(c) == b] for b in range(4)}
+    hot, mate = 0, 1
+    monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", -1)  # delta
+    # one key each of hot and mate in one one-partition batch: ONE delta
+    # file, listed by both buckets
+    one_file = str(tmp_path / "one_file")
+    _events(
+        spark,
+        [(1000, "U", by_bucket[hot][0], 0, "s"), (1001, "U", by_bucket[mate][0], 0, "s")],
+    ).coalesce(1).write.parquet(one_file)
+    tbl.merge(spark.read.parquet(one_file), 1, (1000, 1001))
+    # then updates of just over the fraction of the hot bucket's keys
+    n = int(len(by_bucket[hot]) * snapshot_table._MAJOR_DELTA_FRAC) + 1
+    tbl.merge(
+        _events(
+            spark,
+            [(2000 + i, "U", c, 0, "u") for i, c in enumerate(by_bucket[hot][:n])],
+        ),
+        2,
+        (2000, 2000 + n - 1),
     )
-    # nothing due anymore -> no-op
-    assert tbl.maintain(max_delta_files=4) == v
+    snap = tbl.snapshot()
+    shared = set(snap.deltas[str(hot)]) & set(snap.deltas[str(mate)])
+    assert len(shared) == 1 and len(snap.deltas[str(hot)]) == 2
+    assert {b for b, fs in snap.deltas.items() if fs} == {str(hot), str(mate)}
+    cold = _file_bytes(p for b in (2, 3) for p in snap.buckets[str(b)])
+    state_before = _rows(tbl)
+
+    v = tbl.maintain()
+    assert v == snap.version + 1
+    snap2 = tbl.snapshot()
+    assert snap2.summary["operation"] == "compact"
+    assert not snap2.has_deltas()
+    for b in (hot, mate):
+        assert not set(snap2.buckets[str(b)]) & set(snap.buckets[str(b)])
+    for b in (2, 3):
+        assert snap2.buckets[str(b)] == snap.buckets[str(b)]
+    assert _file_bytes(cold) == cold
+    assert _rows(tbl) == state_before
+    assert tbl.maintain() == v
+
+
+def test_a_fold_keeps_the_tombstone_that_shadows_a_base_row(spark, tmp_path, monkeypatch):
+    """A key whose delete lives only in a delta tombstone stays deleted
+    through a fold (the folded file keeps the tombstone, which still
+    shadows the key's base row) and through a later compact(); so do an
+    update, an insert and a delete-then-reinsert."""
+    tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=4).create(PAYLOAD)
+    convs = [f"conv_{i:06d}" for i in range(200)]
+    tbl.merge(_insert_batch(spark, convs, 0), 0, (0, 199))
+    ref = {c: f"v1:{c}" for c in convs}
+    monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", -1)  # delta
+    batches = [
+        ("D", "conv_000003", None),
+        ("U", "conv_000004", "v2"),
+        ("I", "conv_new", "new"),
+        ("D", "conv_000005", None),
+        ("I", "conv_000005", "back"),
+    ]
+    for i, (op, c, text) in enumerate(batches):
+        lsn = 1000 + i
+        tbl.merge(_events(spark, [(lsn, op, c, 0, text)]), 1 + i, (lsn, lsn))
+        if op == "D":
+            ref.pop(c)
+        else:
+            ref[c] = text
+    expected = sorted(ref.items())
+    assert _rows(tbl) == expected
+
+    tbl.maintain()
+    snap = tbl.snapshot()
+    assert snap.summary["operation"] == "fold"
+    assert len({p for fs in snap.deltas.values() for p in fs}) == 1
+    assert _rows(tbl) == expected
+    dead = tbl.read(include_deleted=True, conv_id="conv_000003").collect()
+    assert [(r["_deleted"], r["_lsn"]) for r in dead] == [(True, 1000)]
+
+    tbl.compact()
+    assert not tbl.snapshot().has_deltas()
+    assert _rows(tbl) == expected
 
 
 def test_full_delta_replay_matches_cow_replay(spark, tmp_path, monkeypatch):

@@ -151,6 +151,29 @@ def _compact(log):
     log.commit_next(snap, N_BUCKETS, buckets=buckets, deltas=deltas)
 
 
+def _fold(log):
+    """The minor compaction: the shared delta files become one flat file
+    listed by the union of their buckets."""
+    snap = log.snapshot()
+    listings: dict[str, list[str]] = {}
+    for b, ps in snap.deltas.items():
+        for p in ps:
+            listings.setdefault(p, []).append(b)
+    folded = sorted(p for p, bs in listings.items() if len(bs) > 1)
+    if len(folded) < 2:
+        return  # the retry of a fold that committed
+    union = sorted({int(b) for p in folded for b in listings[p]})
+    keys = [snap.file_stats[p][k] for p in folded for k in ("min_key", "max_key")]
+    rows = dict.fromkeys(union, [])
+    rows[union[0]] = keys  # a shared write lists every bucket it is given
+    new = _write(log, snap.version + 1, rows, shared=True)
+    deltas = {
+        b: [p for p in ps if p not in folded] + new.get(b, [])
+        for b, ps in snap.deltas.items()
+    }
+    log.commit_next(snap, N_BUCKETS, deltas=deltas)
+
+
 def _expire(log):
     log.expire_snapshots(keep_last=1, grace_seconds=0)
 
@@ -160,6 +183,8 @@ STEPS = [
     _merge(0, 9, {0: ["a", "e"], 1: ["b"]}),
     _merge(10, 19, {1: ["c", "f"]}, delta=True),
     _merge(20, 29, {0: ["g"], 2: ["h"]}, delta=True, shared=True),
+    _merge(50, 59, {1: ["j"], 3: ["k"]}, delta=True, shared=True),
+    _fold,  # bucket 1 keeps its own delta file next to the folded one
     _merge(30, 39, {}),  # an empty batch: ledger only, no bucket touched
     _compact,
     # rewrites one bucket of the compaction's three-bucket manifest: the
@@ -217,9 +242,10 @@ def _run(root, steps):
 
 def test_crash_matrix_parent_or_child_then_retry_converges(tmp_path):
     """Kill the process at every filesystem call of every step (create,
-    a bucket-touching commit, a delta commit, a commit of one delta file
-    shared by two buckets, an empty-batch commit, a compaction, a commit
-    that rewrites one bucket of the compaction's manifest, and expire;
+    a bucket-touching commit, a delta commit, two commits of one delta
+    file shared by two buckets, a fold of those two files into one, an
+    empty-batch commit, a compaction, a commit that rewrites one bucket
+    of the compaction's manifest, and expire;
     base files sit in per-bucket subdirectories): a fresh
     TableLog then loads exactly the parent or the child, and every file
     it references exists. Retrying the step
@@ -232,14 +258,21 @@ def test_crash_matrix_parent_or_child_then_retry_converges(tmp_path):
         after.append(_state(ref))
         _run(ref, [_expire])
         clean.append(_leftovers(ref))
-    assert after[-1][0] == 6 and after[-1][1] == {"s": [[0, 49]]}
+    assert after[-1][0] == 8 and after[-1][1] == {"s": [[0, 59]]}
     assert not after[-1][5]  # compacted: no deltas left
-    # buckets 1 and 2 survive the rewrite of bucket 0 with their files
+    # the fold lists one file under the union of the two shared files'
+    # buckets, next to bucket 1's own delta file; ledger and base stay
+    shared, folded = after[4], after[5]
+    fold = folded[5]["0"]
+    assert fold[0]["rows"] == 4
+    assert folded[5] == {"0": fold, "1": [shared[5]["1"][0], *fold], "2": fold, "3": fold}
+    assert folded[1:5] == (shared[1], [], shared[3], shared[4])
+    # buckets 1-3 survive the rewrite of bucket 0 with their files
     compacted, rewritten = after[-3][4], after[-1][4]
-    assert sorted(rewritten) == sorted(compacted) == ["0", "1", "2"]
+    assert sorted(rewritten) == sorted(compacted) == ["0", "1", "2", "3"]
     assert rewritten["0"] != compacted["0"]
     assert {**rewritten, "0": None} == {**compacted, "0": None}
-    assert clean[-1] == (7, 5, 0, 2)
+    assert clean[-1] == (9, 7, 0, 2)
 
     root, crash_points = str(tmp_path / "t"), 0
     for i, step in enumerate(STEPS):
@@ -407,7 +440,7 @@ def test_a_copied_table_reads_its_files_under_the_new_root(tmp_path):
     assert listed == set(snap.file_stats) and len(listed) == 4
     assert all(p.startswith(os.path.join(new, "data", "")) for p in listed)
     assert _state(new) == state  # _state checks every listed file exists
-    _run(new, STEPS[4:6])
+    _run(new, STEPS[4:8])  # through the compaction
     assert not TableLog(new).snapshot().has_deltas()
 
 

@@ -31,15 +31,16 @@ from caterpillar_spark.streaming.apply import TRANSCRIPT_SCHEMA  # noqa: E402
 
 def merge_phases(log: TableLog) -> list[dict]:
     """One ``{batch, plan_sec, stats_pass_sec, write_sec, stats_sec,
-    manifest_sec}`` per snapshot whose lineage records rows (a merge that
-    wrote data), oldest first, from its summary: ``stats_sec`` is the
-    commit's footer reads, ``manifest_sec`` its manifest diff and write."""
+    manifest_sec}`` per merge that wrote data (summary ``operation``
+    ``cow`` or ``delta``), oldest first, from its summary: ``stats_sec`` is
+    the commit's footer reads, ``manifest_sec`` its manifest diff and
+    write."""
     phases = []
     for v in range(1, log.current_version() + 1):
         snap = log.snapshot(v)
-        if not sum(e["rows_applied"] for e in snap.lineage):
-            continue  # compaction, empty batch
         s = snap.summary
+        if s.get("operation") not in ("cow", "delta"):
+            continue  # empty batch, compaction, fold
         phases.append({
             "batch": snap.lineage[0]["batch_id"],
             "plan_sec": round(s["plan_s"], 2),
