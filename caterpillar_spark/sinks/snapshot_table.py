@@ -151,9 +151,10 @@ class SnapshotTable:
             try:
                 self.snapshot()
             except (RuntimeError, FileNotFoundError, json.JSONDecodeError):
-                # inline-pointer / corrupt latest snapshot: defer — the
-                # first actual use re-raises, and repair flows stay able
-                # to construct the object (ADVICE r3)
+                # retired format (inline pointers, per-bucket manifests) or
+                # corrupt latest snapshot: defer — the first actual use
+                # re-raises, and repair flows stay able to construct the
+                # object (ADVICE r3)
                 pass
 
     # ------------------------------------------------------------ metadata
@@ -208,22 +209,23 @@ class SnapshotTable:
         """Raw stored rows (incl. tombstones + sys cols) of the given files.
 
         An explicit read schema makes additive evolution free: files written
-        before a column existed return null for it — no rewrite — and
-        columns the schema no longer names (the bucket column ``_b`` older
-        writers stored) are skipped. No bucket filter is needed: a base
-        file holds one bucket and a delta file only buckets that list it,
-        so the de-duplicated path list IS the bucket pruning.
+        before a column existed return null for it — no rewrite. No bucket
+        filter is needed: a base file holds one bucket and a delta file
+        only buckets that list it, so the path list IS the bucket pruning.
         """
         schema = self._stored_schema(snap)
         if not paths:
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(*sorted(set(paths)))
+        return self.spark.read.schema(schema).parquet(*sorted(paths))
 
-    def _bucket_paths(self, snap: Snapshot, bucket_ids: list[int]) -> list[str]:
+    @staticmethod
+    def _listed_by(snap: Snapshot, buckets: set[int], klo=None, khi=None) -> list[str]:
+        """The files any of ``buckets`` lists whose conv_id range overlaps
+        ``[klo, khi]`` (every one of them without a range)."""
         return [
             p
-            for b in bucket_ids
-            for p in snap.buckets.get(str(b), []) + snap.deltas.get(str(b), [])
+            for p, e in snap.files.items()
+            if not buckets.isdisjoint(e["buckets"]) and snap.overlaps(p, klo, khi)
         ]
 
     def bucket_for_key(self, conv_id: str) -> int:
@@ -244,25 +246,13 @@ class SnapshotTable:
         delta files). Two pruning levels, both metadata-only: bucket
         routing (a base file holds ONE bucket, a delta file its residue
         class, whose other buckets' rows the read's equality filter
-        drops) then per-file conv_id min/max from file_stats — the
-        read-side twin of merge's CoW pruning. At 10^6
+        drops) then per-file conv_id min/max from the manifest entries —
+        the read-side twin of merge's CoW pruning. At 10^6
         files this turns "fetch one conversation" from a full-table scan
         into reading a handful of files."""
-        buckets = sorted({self.bucket_for_key(k) for k in conv_ids})
-        klo, khi = min(conv_ids), max(conv_ids)
-        base = [
-            p
-            for b in buckets
-            for p in snap.buckets.get(str(b), [])
-            if snap.overlaps(p, klo, khi)
-        ]
-        deltas = [
-            p
-            for b in buckets
-            for p in snap.deltas.get(str(b), [])
-            if snap.overlaps(p, klo, khi)
-        ]
-        return base + deltas, bool(deltas)
+        buckets = {self.bucket_for_key(k) for k in conv_ids}
+        paths = self._listed_by(snap, buckets, min(conv_ids), max(conv_ids))
+        return paths, any(snap.files[p]["delta"] for p in paths)
 
     def read(
         self,
@@ -320,7 +310,7 @@ class SnapshotTable:
                 else F.col("conv_id").isin(orig_keys)
             )
         if paths is None:
-            paths = self._bucket_paths(snap, list(range(self.n_buckets)))
+            paths = list(snap.files)
             any_deltas = snap.has_deltas()
         df = self._read_files(snap, paths)
         if key_filter is not None:
@@ -620,20 +610,16 @@ class SnapshotTable:
         )
 
         # ---- file-level pruning -----------------------------------------
-        candidates: dict[int, list[str]] = {}
-        untouched: dict[int, list[str]] = {}
-        cand_rows = 0
-        for b, (klo, khi, _n) in incoming_stats.items():
-            cand, keep = [], []
-            for p in snap.buckets.get(str(b), []):
-                if snap.overlaps(p, klo, khi):
-                    cand.append(p)
-                else:
-                    keep.append(p)
-            candidates[b], untouched[b] = cand, keep
-            cand_rows += sum(
-                int(snap.file_stats.get(p, {}).get("rows") or 0) for p in cand
-            )
+        # the base files (one bucket each) whose key range overlaps the
+        # batch's in their bucket
+        candidates = [
+            p
+            for p, e in snap.files.items()
+            if not e["delta"]
+            and e["buckets"][0] in incoming_stats
+            and snap.overlaps(p, *incoming_stats[e["buckets"][0]][:2])
+        ]
+        cand_rows = sum(int(snap.files[p]["rows"] or 0) for p in candidates)
         incoming_rows = sum(n for _, _, n in incoming_stats.values())
         use_delta = cand_rows > _DELTA_THRESHOLD * max(incoming_rows, 1)
 
@@ -650,9 +636,7 @@ class SnapshotTable:
             # one file per residue class, not per bucket
             rows = upd
         else:
-            rows = self._read_files(
-                snap, [p for ps in candidates.values() for p in ps]
-            )
+            rows = self._read_files(snap, candidates)
             for f in new_fields:  # stored side lacks brand-new columns
                 rows = rows.withColumn(f.name, F.lit(None).cast(f.dataType))
             rows = rows.select(*upd.columns).unionByName(upd)
@@ -677,19 +661,27 @@ class SnapshotTable:
             None if use_delta else self.bucket_expr(),
         )
 
-        buckets, deltas = dict(snap.buckets), dict(snap.deltas)
-        for b in incoming_stats:
-            if not use_delta:
-                buckets[str(b)] = untouched[b] + written.get(b, [])
-            elif written.get(b % m):
-                deltas[str(b)] = deltas.get(str(b), []) + written[b % m]
+        if use_delta:
+            # a class file is listed by the batch's buckets of its class; a
+            # file no batch bucket lists (the empty one Spark's task 0 leaves
+            # for a batch without rows in class 0) stays out of the table
+            added = {
+                p: (bs, True)
+                for c, ps in written.items()
+                if (bs := [b for b in incoming_stats if b % m == c])
+                for p in ps
+            }
+            removed = []
+        else:
+            added = {p: ([b], False) for b, ps in written.items() for p in ps}
+            removed = candidates
 
         # ---- lineage + ledger -------------------------------------------
         self.log.commit_next(
             snap,
             self.n_buckets,
-            buckets=buckets,
-            deltas=deltas,
+            added=added,
+            removed=removed,
             applied=applied,
             lineage=lineage(partition_counts),
             schema_json=evolved.json(),
@@ -718,8 +710,7 @@ class SnapshotTable:
         ``operation`` ``compact``."""
         snap = self.snapshot()
         sel = list(range(self.n_buckets)) if buckets is None else buckets
-        sel = sorted(self._delta_closure(snap, sel))
-        paths = self._bucket_paths(snap, sel)
+        paths = self._listed_by(snap, self._delta_closure(snap, sel))
         if not paths:
             return snap.version
         df = last_writer_wins(
@@ -734,12 +725,10 @@ class SnapshotTable:
         by_bucket = self._write_bucketed(
             df, self.log.new_data_dir(snap.version + 1), self.bucket_expr()
         )
-        buckets, deltas = dict(snap.buckets), dict(snap.deltas)
-        for b in sel:
-            buckets[str(b)] = by_bucket.get(b, [])
-            deltas.pop(str(b), None)
         return self.log.commit_next(
-            snap, self.n_buckets, buckets=buckets, deltas=deltas,
+            snap, self.n_buckets,
+            added={p: ([b], False) for b, ps in by_bucket.items() for p in ps},
+            removed=paths,
             summary={"operation": "compact"},
         )
 
@@ -747,22 +736,18 @@ class SnapshotTable:
     def _delta_closure(snap: Snapshot, buckets) -> set[int]:
         """``buckets`` plus every bucket that shares a delta file with one
         already in the set, to a fixed point."""
-        by_file: dict[str, set[int]] = {}
-        for bs, ps in snap.deltas.items():
-            for p in ps:
-                by_file.setdefault(p, set()).add(int(bs))
         closure, todo = set(), list(buckets)
         while todo:
             b = todo.pop()
             if b not in closure:
                 closure.add(b)
                 for p in snap.deltas.get(str(b), []):
-                    todo.extend(by_file[p])
+                    todo.extend(snap.files[p]["buckets"])
         return closure
 
     def maintain(self) -> int:
         """Incremental maintenance in two tiers, each decided from the
-        snapshot's metadata alone (footer rows in ``file_stats``, no Spark
+        snapshot's metadata alone (footer rows in ``files``, no Spark
         job) — an LSM tree's or Iceberg's major and minor compaction:
 
         - **major**: compact (:meth:`compact`, tombstones kept, closure
@@ -787,36 +772,35 @@ class SnapshotTable:
         a hot bucket's base rewrite never forces a cold bucket's beyond the
         class-mates that share its delta files."""
         snap = self.snapshot()
-        listings: dict[str, int] = {}  # live delta file -> buckets listing it
-        for ps in snap.deltas.values():
-            for p in ps:
-                listings[p] = listings.get(p, 0) + 1
 
         def rows(p: str) -> int:
-            return int(snap.file_stats.get(p, {}).get("rows") or 0)
+            return int(snap.files[p]["rows"] or 0)
 
         due = []
         for b in range(self.n_buckets):
             base, deltas = snap.buckets.get(str(b), []), snap.deltas.get(str(b), [])
-            delta_rows = sum(rows(p) / listings[p] for p in deltas)
+            delta_rows = sum(rows(p) / len(snap.files[p]["buckets"]) for p in deltas)
             if len(base) >= _MAX_BASE_FILES or (
                 deltas and delta_rows >= _MAJOR_DELTA_FRAC * sum(map(rows, base))
             ):
                 due.append(b)
         if due:
             return self.compact(drop_tombstones=False, buckets=due)
-        if len(listings) < _FOLD_FILES:
+        live = [p for p, e in snap.files.items() if e["delta"]]
+        if len(live) < _FOLD_FILES:
             return snap.version
         # one task, no shuffle: coalesce(1) satisfies the LWW groupBy, and
         # its one output partition is the single class of a flat write
         folded = last_writer_wins(
-            self._read_files(snap, sorted(listings)).coalesce(1), KEY, "_lsn"
+            self._read_files(snap, live).coalesce(1), KEY, "_lsn"
         )
         new = self._write_bucketed(
             folded, self.log.new_data_dir(snap.version + 1), None
         ).get(0, [])
+        union = sorted({b for p in live for b in snap.files[p]["buckets"]})
         return self.log.commit_next(
             snap, self.n_buckets,
-            deltas={b: list(new) for b, ps in snap.deltas.items() if ps},
+            added={p: (union, True) for p in new},
+            removed=live,
             summary={"operation": "fold"},
         )

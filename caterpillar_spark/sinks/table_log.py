@@ -1,5 +1,5 @@
 """TableLog — the metadata of a :class:`SnapshotTable`: snapshot JSONs,
-bucket manifests, the offset ledger, lineage and per-file footer stats.
+manifests of data files, the offset ledger, lineage and per-file footer stats.
 Pure filesystem + pyarrow footer reads; no Spark, so every rule here is
 testable without a JVM (Iceberg draws the same line between
 ``TableOperations``/``TableMetadata`` and its data writers).
@@ -34,10 +34,11 @@ atomic link, so replay from any checkpoint converges.
 Metadata is O(changed files) per commit: the snapshot JSON holds the
 ledger, lineage, the commit's summary (its operation and phase seconds,
 like Iceberg's snapshot summary) and the names of its manifests
-(Iceberg's manifest list), immutable lists of data files. A commit keeps
-each parent manifest whose files all stand unchanged and writes one for
-the rest: a delta commit lists only its new files, but a copy-on-write
-commit re-lists the survivors of each manifest it takes a file from.
+(Iceberg's manifest list), immutable lists of data files. A commit is the
+files it adds and removes (Iceberg's ``RewriteFiles``/``RowDelta``): it
+keeps each parent manifest that lost no file and writes one for the rest,
+so a delta commit lists only its new files, but a copy-on-write commit
+re-lists the survivors of each manifest it takes a file from.
 """
 
 from __future__ import annotations
@@ -47,17 +48,16 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Collection, Iterable
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, field, fields, replace
+from functools import cached_property
 
 
 @dataclass
 class Snapshot:
     version: int
     schema_json: str  # Spark StructType json of PAYLOAD columns (no sys cols)
-    # bucket id (str) -> base data file paths: a view, like deltas and
-    # file_stats, folded from the manifests at load and never stored
-    buckets: dict[str, list[str]] = field(default_factory=dict)
     # stream_id -> merged [lo, hi] ranges (the offset ledger)
     applied: dict[str, list[list[int]]] = field(default_factory=dict)
     lineage: list[dict] = field(default_factory=list)  # this commit's entries
@@ -68,23 +68,39 @@ class Snapshot:
     summary: dict[str, float | str] = field(default_factory=dict)
     parent: int | None = None
     properties: dict = field(default_factory=dict)
-    # bucket id (str) -> merge-on-read delta file paths (LWW by _lsn at read)
-    deltas: dict[str, list[str]] = field(default_factory=dict)
-    # file path -> {"min_key", "max_key", "rows"} (Iceberg-manifest-style
-    # column stats; None min/max => unknown => file always a merge candidate)
-    file_stats: dict[str, dict] = field(default_factory=dict)
     # names of the IMMUTABLE manifests in _log/manifests/ listing this
     # snapshot's files, each {path relative to the table root: {"buckets":
     # [sorted ids], "delta": bool, "min_key", "max_key", "rows"}}
     manifests: list[str] = field(default_factory=list)
+    # absolute path -> its manifest entry, the snapshot's one file state:
+    # filled from the manifests at load, never stored in the JSON. A delta
+    # file is merge-on-read (LWW by _lsn at read); None min/max (Iceberg-
+    # manifest-style column stats) => unknown => always a merge candidate
+    files: dict[str, dict] = field(default_factory=dict)
+
+    def _view(self, delta: bool) -> dict[str, list[str]]:
+        out: dict[str, list[str]] = {}
+        for p, e in self.files.items():
+            if e["delta"] == delta:
+                for b in e["buckets"]:
+                    out.setdefault(str(b), []).append(p)
+        return out
+
+    @cached_property
+    def buckets(self) -> dict[str, list[str]]:  # bucket id -> base files
+        return self._view(False)
+
+    @cached_property
+    def deltas(self) -> dict[str, list[str]]:  # bucket id -> delta files
+        return self._view(True)
 
     def has_deltas(self) -> bool:
-        return any(self.deltas.values())
+        return any(e["delta"] for e in self.files.values())
 
     def overlaps(self, path: str, klo: str | None, khi: str | None) -> bool:
         """Conservative key-range overlap of one file with ``[klo, khi]``:
         unknown stats or an unknown range => candidate."""
-        st = self.file_stats.get(path) or {}
+        st = self.files.get(path) or {}
         if None in (st.get("min_key"), st.get("max_key"), klo, khi):
             return True
         return st["max_key"] >= klo and st["min_key"] <= khi
@@ -152,9 +168,9 @@ class TableLog:
         self.log_dir = os.path.join(root, "_log")
         self.data_dir = os.path.join(root, "data")
         self._manifest_dir = os.path.join(self.log_dir, "manifests")
-        # name -> _load_manifest() of the manifests of the snapshot last
-        # loaded or committed: a replay loop commits from the one it loaded
-        self._manifest_cache: dict[str, tuple] = {}
+        # name -> entries of the manifests of the snapshot last loaded or
+        # committed: a replay loop commits from the one it loaded
+        self._manifest_cache: dict[str, dict] = {}
 
     # ---------------------------------------------------------------- load
     def snap_path(self, version: int) -> str:
@@ -179,7 +195,7 @@ class TableLog:
         return max(versions)
 
     def _snapshot_raw(self, version: int | None = None) -> Snapshot:
-        """Snapshot WITHOUT its views — applied ledger, lineage and
+        """Snapshot WITHOUT its files — applied ledger, lineage and
         properties are inline; callers that never touch file pointers
         (ledger checks, the lineage walk) skip the manifest reads."""
         v = self.current_version() if version is None else version
@@ -198,39 +214,29 @@ class TableLog:
                 "data via spark.read.parquet + LWW-reduce, then create() + "
                 "merge() into a new table"
             )
+        for k in ("buckets", "deltas", "file_stats"):  # retired, list no file
+            data.pop(k, None)
         return Snapshot(**data)
 
     def snapshot(self, version: int | None = None) -> Snapshot:
-        """Snapshot ``version`` (default: the latest) with its views
-        (buckets, deltas, file_stats) folded from its manifests."""
+        """Snapshot ``version`` (default: the latest) with its ``files``
+        read from its manifests."""
         snap = self._snapshot_raw(version)
-        for name in snap.manifests:
-            _, buckets, deltas, stats = self._load_manifest(name)
-            for view, part in ((snap.buckets, buckets), (snap.deltas, deltas)):
-                for bs, ps in part.items():
-                    view[bs] = view[bs] + ps if bs in view else list(ps)
-            snap.file_stats.update(stats)
         # bounded by the table: keep this snapshot's manifests only
         self._manifest_cache = {n: self._load_manifest(n) for n in snap.manifests}
+        snap.files = {
+            self._root + rel: e
+            for m in self._manifest_cache.values()
+            for rel, e in m.items()
+        }
         return snap
 
-    def _load_manifest(self, name: str, entries: dict | None = None) -> tuple:
-        """``(entries, buckets, deltas, file_stats)`` of one manifest: its
-        entries as stored (``entries`` when this handle just wrote it) and
-        its share of the three views, folded once per handle."""
+    def _load_manifest(self, name: str) -> dict:
+        """The entries of one manifest, read once per handle."""
         m = self._manifest_cache.get(name)
         if m is None:
-            if entries is None:
-                with open(os.path.join(self._manifest_dir, name)) as f:
-                    entries = json.load(f)
-            buckets, deltas, stats = {}, {}, {}
-            for rel, e in entries.items():
-                p = self._root + rel
-                for b in e["buckets"]:
-                    (deltas if e["delta"] else buckets).setdefault(str(b), []).append(p)
-                stats[p] = st = dict(e)
-                del st["buckets"], st["delta"]
-            m = self._manifest_cache[name] = (entries, buckets, deltas, stats)
+            with open(os.path.join(self._manifest_dir, name)) as f:
+                m = self._manifest_cache[name] = json.load(f)
         return m
 
     def applied_ranges(self, stream_id: str = "default") -> list[list[int]]:
@@ -256,45 +262,41 @@ class TableLog:
         # names a directory only — table DATA stays deterministic.
         return os.path.join(self.data_dir, f"v{version}-{uuid.uuid4().hex[:12]}")
 
-    def commit(self, snap: Snapshot, parent: Snapshot | None = None) -> None:
+    def commit(
+        self, snap: Snapshot, parent: Snapshot | None = None,
+        added: Iterable[str] = (), removed: Collection[str] = (),
+    ) -> None:
         """Atomic create of the snapshot file ``snap.version`` (raises
-        FileExistsError on conflict). The commit works out its own change
-        from ``snap``'s views: it keeps each of ``parent``'s manifests
-        whose entries all stand unchanged in ``snap`` and writes ONE new
-        manifest holding every other entry (new files, re-listed files and
-        the survivors of a manifest that lost a file), or none when that
-        set is empty. The seconds of that diff and manifest write are
+        FileExistsError on conflict). ``snap.files`` are ``parent``'s less
+        ``removed`` plus ``added``: the commit keeps each of ``parent``'s
+        manifests that lost no file and writes ONE new manifest of the
+        added files plus the survivors of each manifest that lost one, or
+        none when that set is empty. The seconds of that manifest work are
         stored as the summary's ``manifest_s``; the snapshot JSON write and
         the link cannot time themselves, since that JSON holds the summary."""
         t = time.perf_counter()
-        listed: dict[tuple[str, bool], list[int]] = {}  # (path, delta) -> ids
-        for delta, view in ((False, snap.buckets), (True, snap.deltas)):
-            for bs, paths in view.items():
-                for p in paths:
-                    listed.setdefault((p, delta), []).append(int(bs))
         cut = len(self._root)
-        entries = {  # path relative to the root -> entry
-            p[cut:]: {"buckets": sorted(bs), "delta": d, **snap.file_stats.get(p, {})}
-            for (p, d), bs in listed.items()
-        }
+        gone = {p[cut:] for p in removed}
+        entries: dict[str, dict] = {}  # path relative to the root -> entry
         kept = []
         for name in parent.manifests if parent is not None else ():
-            m = self._load_manifest(name)[0]
-            if all(entries.get(rel) == e for rel, e in m.items()):
+            m = self._load_manifest(name)
+            if any(rel in m for rel in gone):
+                entries.update((rel, e) for rel, e in m.items() if rel not in gone)
+            else:
                 kept.append(name)
-                for rel in m:
-                    del entries[rel]
+        entries.update((p[cut:], snap.files[p]) for p in added)
         if entries:
             os.makedirs(self._manifest_dir, exist_ok=True)
             name = f"m{snap.version:012d}-{uuid.uuid4().hex[:12]}.json"
             with open(os.path.join(self._manifest_dir, name), "w") as f:
                 json.dump(entries, f)
-            self._load_manifest(name, entries)
+            self._manifest_cache[name] = entries
             kept.append(name)
         snap.manifests = kept
         snap.summary = {**snap.summary, "manifest_s": round(time.perf_counter() - t, 4)}
-        views = ("buckets", "deltas", "file_stats")
-        payload = {k: v for k, v in vars(snap).items() if k not in views}
+        payload = {f.name: getattr(snap, f.name) for f in fields(snap)}
+        del payload["files"]
         os.makedirs(self.log_dir, exist_ok=True)
         final = self.snap_path(snap.version)
         tmp = final + f".tmp-{uuid.uuid4().hex}"
@@ -306,42 +308,52 @@ class TableLog:
             os.unlink(tmp)
         self._manifest_cache = {n: self._load_manifest(n) for n in kept}
 
-    def commit_next(self, parent: Snapshot, n_buckets: int, **changes) -> int:
-        """Commit the successor of ``parent`` and return its version.
-        ``changes`` replace the parent's ``buckets``/``deltas``/``applied``/
-        ``schema_json``/``lineage``/``summary`` (lineage and summary default
-        to empty: a child never inherits its parent's). ``file_stats``
-        keeps the parent's entries for files still referenced and reads the
-        ``conv_id`` footer range of the new ones, timed as the summary's
-        ``footer_s``; :meth:`commit` adds ``manifest_s``. ``n_buckets`` is
-        (re-)stamped into the properties."""
+    def commit_next(
+        self, parent: Snapshot, n_buckets: int,
+        added: dict[str, tuple[list[int], bool]] | None = None,
+        removed: Iterable[str] = (), **changes,
+    ) -> int:
+        """Commit the successor of ``parent`` and return its version. Its
+        files are the parent's less ``removed`` plus ``added`` (path ->
+        (the bucket ids that list it, whether it is a delta file)); only
+        the added files' ``conv_id`` footer ranges are read, timed as the
+        summary's ``footer_s``, and :meth:`commit` adds ``manifest_s``.
+        Raises ValueError before writing anything if ``removed`` names a
+        file the parent does not list, or ``added`` one it does.
+        ``changes`` replace the parent's ``applied``/``schema_json``/
+        ``lineage``/``summary`` (lineage and summary default to empty: a
+        child never inherits its parent's). ``n_buckets`` is (re-)stamped
+        into the properties."""
+        added, removed = added or {}, set(removed)
+        for bad, what in (
+            (removed - parent.files.keys(), "removes files it does not list"),
+            (added.keys() & parent.files.keys(), "adds files it already lists"),
+        ):
+            if bad:
+                raise ValueError(f"commit on v{parent.version} {what}: {sorted(bad)}")
+        t = time.perf_counter()
+        files = {p: e for p, e in parent.files.items() if p not in removed}
+        if added:
+            # footer reads are I/O-bound and independent, and they sit on
+            # the per-batch serial path (Amdahl): read them concurrently
+            with ThreadPoolExecutor(min(16, len(added))) as ex:
+                ranges = list(ex.map(lambda p: footer_range(p, "conv_id"), added))
+            for (p, (bs, delta)), (lo, hi, n) in zip(added.items(), ranges):
+                files[p] = dict(
+                    buckets=sorted(bs), delta=delta, min_key=lo, max_key=hi, rows=n
+                )
         child = replace(
             parent,
             **{"lineage": [], "summary": {}, **changes},
             version=parent.version + 1,
             parent=parent.version,
             properties={**parent.properties, "n_buckets": n_buckets},
+            files=files,
         )
-        # a delta file shared by the buckets of its class is listed once
-        # per bucket: read its footer once
-        referenced = {
-            p for ps in (*child.buckets.values(), *child.deltas.values()) for p in ps
-        }
-        t = time.perf_counter()
-        stats = {p: parent.file_stats[p] for p in referenced if p in parent.file_stats}
-        new = [p for p in referenced if p not in stats]
-        if new:
-            # footer reads are I/O-bound and independent, and they sit on
-            # the per-batch serial path (Amdahl): read them concurrently
-            with ThreadPoolExecutor(min(16, len(new))) as ex:
-                ranges = list(ex.map(lambda p: footer_range(p, "conv_id"), new))
-            for p, (lo, hi, rows) in zip(new, ranges):
-                stats[p] = {"min_key": lo, "max_key": hi, "rows": rows}
-        child.file_stats = stats
         child.summary = {
             **child.summary, "footer_s": round(time.perf_counter() - t, 4)
         }
-        self.commit(child, parent)
+        self.commit(child, parent, added, removed)
         return child.version
 
     # -------------------------------------------------------------- expire
@@ -365,7 +377,7 @@ class TableLog:
         live: set[str] = set()  # top-level entries of data/ that hold a live file
         for v in range(max(0, current - keep_last + 1), current + 1):
             for name in self._snapshot_raw(v).manifests:
-                entries = self._load_manifest(name)[0]  # keys: data/<dir>/...
+                entries = self._load_manifest(name)  # keys: data/<dir>/...
                 live.update(rel.split(os.sep)[1] for rel in entries)
         referenced: set[str] = set()  # manifest FILENAMES (stored form)
         garbage = []

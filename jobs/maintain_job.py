@@ -12,8 +12,8 @@ rows (or whose base is fragmented), else fold the live delta files into
 one delta file once enough of them pile up, else do nothing; then vacuum
 data dirs no committed snapshot references (`expire_snapshots` — also
 collects orphan dirs from crashed/losing writers). ``--full-compact``
-rewrites everything and purges tombstones, restoring the reduction-free
-read path. The JSON line's ``operation`` names what ran: ``compact``,
+rewrites everything, restoring the reduction-free read path; it purges
+tombstones only with ``--drop-tombstones``. The JSON line's ``operation`` names what ran: ``compact``,
 ``fold`` or null.
 """
 

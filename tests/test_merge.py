@@ -136,11 +136,11 @@ def test_two_streams_interleaved_with_crash_retry(spark, tmp_path):
     real_commit = TableLog.commit
     boom = {"armed": True}
 
-    def crashing_commit(self, snap, parent=None):
+    def crashing_commit(self, snap, *args, **kwargs):
         if boom["armed"] and snap.version > 2:
             boom["armed"] = False
             raise RuntimeError("simulated crash before atomic commit")
-        return real_commit(self, snap, parent)
+        return real_commit(self, snap, *args, **kwargs)
 
     TableLog.commit = crashing_commit
     try:

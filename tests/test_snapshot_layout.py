@@ -189,7 +189,7 @@ def test_file_pruning_bounds_write_amplification(spark, tmp_path, monkeypatch):
     # hi-range files all survived untouched
     hi_stats = [
         s
-        for p, s in after_snap.file_stats.items()
+        for p, s in after_snap.files.items()
         if p in before_paths and s["min_key"] >= "conv_000500"
     ]
     assert len(hi_stats) >= 1
@@ -245,7 +245,7 @@ def test_point_lookup_read_prunes_to_one_buckets_files(spark, tmp_path):
     scanned = {os.path.realpath(p.removeprefix("file:")) for p in df.inputFiles()}
     expect_bucket = {os.path.realpath(p) for p in bucket_files}
     assert scanned <= expect_bucket, "lookup escaped its bucket"
-    # file_stats pruning: the hi-range file in this bucket (disjoint key
+    # footer-stats pruning: the hi-range file in this bucket (disjoint key
     # range) must NOT be scanned — only the lo-range file(s)
     assert len(scanned) < len(expect_bucket) or len(expect_bucket) == 1
     rows = df.collect()
@@ -465,7 +465,7 @@ def test_maintain_folds_the_delta_backlog_into_one_file(spark, tmp_path, monkeyp
     (fold,) = snap2.deltas[hot_b]
     assert fold not in snap.deltas[hot_b]
     assert {b: fs for b, fs in snap2.deltas.items() if fs} == {hot_b: [fold]}
-    assert snap2.file_stats[fold]["rows"] == 1  # the five updates' winner
+    assert snap2.files[fold]["rows"] == 1  # the five updates' winner
     # every base file, hot bucket's included, byte-untouched
     assert snap2.buckets == snap.buckets
     assert _file_bytes(base) == base
@@ -630,7 +630,7 @@ def test_commit_metadata_is_o_changed_files(spark, tmp_path):
     assert abs(small1 - small2) < 0.5 * max(small1, small2)
     # the snapshot JSON itself carries no file lists
     raw = _json.load(open(tbl.log.snap_path(3)))
-    assert not {"buckets", "deltas", "file_stats"} & set(raw)
+    assert not {"buckets", "deltas", "file_stats", "files"} & set(raw)
     assert len(raw["manifests"]) <= 64
     # each small commit's manifest holds one entry: one file of one bucket
     for mans in (mans1, mans2):
@@ -675,11 +675,7 @@ def _file_buckets(spark, paths, n) -> dict[str, set[int]]:
 
 def _delta_listings(snap) -> dict[str, set[int]]:
     """Delta file -> the buckets that list it."""
-    out: dict[str, set[int]] = {}
-    for b, ps in snap.deltas.items():
-        for p in ps:
-            out.setdefault(p, set()).add(int(b))
-    return out
+    return {p: set(e["buckets"]) for p, e in snap.files.items() if e["delta"]}
 
 
 def _state(tbl):

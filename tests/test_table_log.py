@@ -99,6 +99,15 @@ def _write(
     return out
 
 
+def _added(new: dict, delta: bool) -> dict:
+    """``_write``'s result as ``commit_next``'s ``added``: each file with
+    the buckets that list it."""
+    out: dict[str, tuple[list[int], bool]] = {}
+    for b, (p,) in new.items():
+        out.setdefault(p, ([], delta))[0].append(int(b))
+    return out
+
+
 def _create(log):
     if not log.exists():
         props = {"n_buckets": N_BUCKETS}
@@ -112,17 +121,13 @@ def _merge(lo, hi, rows, delta=False, shared=False):
         if applied is None:
             return  # the retry of a batch that committed
         new = _write(log, snap.version + 1, rows, shared, nested=not delta)
-        buckets, deltas = dict(snap.buckets), dict(snap.deltas)
-        for b, ps in new.items():
-            if delta:
-                deltas[b] = deltas.get(b, []) + ps
-            else:
-                buckets[b] = ps
+        # a base write replaces each of its buckets' base files
+        removed = [] if delta else [p for b in new for p in snap.buckets.get(b, [])]
         log.commit_next(
             snap,
             N_BUCKETS,
-            buckets=buckets,
-            deltas=deltas,
+            added=_added(new, delta),
+            removed=removed,
             applied=applied,
             lineage=[{"batch_id": lo, "rows_applied": sum(map(len, rows.values()))}],
         )
@@ -137,41 +142,31 @@ def _compact(log):
         return  # the retry of a compaction that committed
     # the rewrite's content only has to be deterministic: the old files'
     # footer key ranges stand in for their rows
+    listed = {b: snap.buckets.get(str(b), []) + snap.deltas[str(b)] for b in due}
     rows = {
-        b: [
-            snap.file_stats[p][k]
-            for p in snap.buckets.get(str(b), []) + snap.deltas[str(b)]
-            for k in ("min_key", "max_key")
-        ]
-        for b in due
+        b: [snap.files[p][k] for p in ps for k in ("min_key", "max_key")]
+        for b, ps in listed.items()
     }
     new = _write(log, snap.version + 1, rows)
-    buckets = {**snap.buckets, **new}
-    deltas = {b: ps for b, ps in snap.deltas.items() if int(b) not in due}
-    log.commit_next(snap, N_BUCKETS, buckets=buckets, deltas=deltas)
+    removed = {p for ps in listed.values() for p in ps}
+    log.commit_next(snap, N_BUCKETS, added=_added(new, False), removed=removed)
 
 
 def _fold(log):
     """The minor compaction: the shared delta files become one flat file
     listed by the union of their buckets."""
     snap = log.snapshot()
-    listings: dict[str, list[str]] = {}
-    for b, ps in snap.deltas.items():
-        for p in ps:
-            listings.setdefault(p, []).append(b)
-    folded = sorted(p for p, bs in listings.items() if len(bs) > 1)
+    folded = sorted(
+        p for p, e in snap.files.items() if e["delta"] and len(e["buckets"]) > 1
+    )
     if len(folded) < 2:
         return  # the retry of a fold that committed
-    union = sorted({int(b) for p in folded for b in listings[p]})
-    keys = [snap.file_stats[p][k] for p in folded for k in ("min_key", "max_key")]
+    union = sorted({b for p in folded for b in snap.files[p]["buckets"]})
+    keys = [snap.files[p][k] for p in folded for k in ("min_key", "max_key")]
     rows = dict.fromkeys(union, [])
     rows[union[0]] = keys  # a shared write lists every bucket it is given
     new = _write(log, snap.version + 1, rows, shared=True)
-    deltas = {
-        b: [p for p in ps if p not in folded] + new.get(b, [])
-        for b, ps in snap.deltas.items()
-    }
-    log.commit_next(snap, N_BUCKETS, deltas=deltas)
+    log.commit_next(snap, N_BUCKETS, added=_added(new, True), removed=folded)
 
 
 def _expire(log):
@@ -196,18 +191,19 @@ STEPS = [
 
 def _state(root: str):
     """What a fresh process sees: None before create, else the snapshot
-    with file pointers replaced by their footer stats (min/max key, rows),
-    after checking that every referenced file and manifest exists."""
+    with file pointers replaced by their manifest entries (buckets, delta,
+    min/max key, rows), after checking that every referenced file and
+    manifest exists."""
     log = TableLog(root)
     if not log.exists():
         return None
     snap = log.snapshot()
     manifests = [os.path.join(log.log_dir, "manifests", m) for m in snap.manifests]
-    for p in {*manifests, *snap.file_stats}:
+    for p in {*manifests, *snap.files}:
         assert os.path.isfile(p), p
 
     def files(by_bucket):
-        return {b: [snap.file_stats[p] for p in ps] for b, ps in by_bucket.items() if ps}
+        return {b: [snap.files[p] for p in ps] for b, ps in by_bucket.items() if ps}
 
     return (
         snap.version,
@@ -304,7 +300,7 @@ def test_crash_matrix_parent_or_child_then_retry_converges(tmp_path):
 
 def test_commit_next_reads_a_shared_file_footer_once(tmp_path, monkeypatch):
     """A delta file listed under two buckets gets one footer read and one
-    file_stats entry."""
+    entry in ``files``."""
     root = str(tmp_path / "t")
     _run(root, [_create])
     log = TableLog(root)
@@ -316,11 +312,16 @@ def test_commit_next_reads_a_shared_file_footer_once(tmp_path, monkeypatch):
     monkeypatch.setattr(
         table_log, "footer_range", lambda p, col: calls.append(p) or real(p, col)
     )
-    log.commit_next(snap, N_BUCKETS, deltas=new)
+    log.commit_next(snap, N_BUCKETS, added=_added(new, True))
     assert calls == [path]
     snap = TableLog(root).snapshot()
     assert snap.deltas == {"0": [path], "2": [path]}
-    assert snap.file_stats == {path: {"min_key": "a", "max_key": "c", "rows": 3}}
+    assert snap.files == {
+        path: {
+            "buckets": [0, 2], "delta": True, "min_key": "a", "max_key": "c",
+            "rows": 3,
+        }
+    }
 
 
 def test_commit_next_stores_the_summary_plus_its_footer_seconds(tmp_path):
@@ -332,13 +333,64 @@ def test_commit_next_stores_the_summary_plus_its_footer_seconds(tmp_path):
     log = TableLog(root)
     new = _write(log, 1, {0: ["a"], 1: ["b"]})
     phases = {"stats_pass_s": 0.5, "plan_s": 0.25, "write_s": 1.0}
-    log.commit_next(log.snapshot(), N_BUCKETS, buckets=new, summary=phases)
+    log.commit_next(log.snapshot(), N_BUCKETS, added=_added(new, False), summary=phases)
     summary = TableLog(root).snapshot().summary
     assert set(summary) == {*phases, "footer_s", "manifest_s"}
     assert {k: summary[k] for k in phases} == phases
     assert min(summary["footer_s"], summary["manifest_s"]) >= 0
     log.commit_next(log.snapshot(), N_BUCKETS)
     assert list(TableLog(root).snapshot().summary) == ["footer_s", "manifest_s"]
+
+
+def _tree(root: str) -> dict[str, bytes]:
+    """Every file under ``root`` -> its bytes."""
+    out = {}
+    for d, _, names in os.walk(root):
+        for name in names:
+            with open(os.path.join(d, name), "rb") as f:
+                out[os.path.relpath(os.path.join(d, name), root)] = f.read()
+    return out
+
+
+def test_commit_next_refuses_a_change_set_its_parent_contradicts(tmp_path):
+    """Removing a file the parent does not list, or adding one it already
+    lists, raises ValueError before anything is written: ``_log/``, its
+    manifests and ``data/`` stay byte-identical."""
+    root = str(tmp_path / "t")
+    _run(root, STEPS[:4])
+    log = TableLog(root)
+    snap = log.snapshot()
+    listed = next(p for p, e in snap.files.items() if e["delta"])
+    (unlisted,) = _write(log, snap.version + 1, {3: ["z"]})["3"]
+    before = _tree(root)
+    for change, what in (
+        ({"removed": [unlisted]}, "removes files it does not list"),
+        ({"added": {listed: ([0], True)}}, "adds files it already lists"),
+        ({"added": {unlisted: ([3], False)}, "removed": [listed, unlisted]},
+         "removes files it does not list"),
+    ):
+        with pytest.raises(ValueError, match=what):
+            log.commit_next(snap, N_BUCKETS, **change)
+    assert _tree(root) == before
+    assert {"_log", "data"} <= {p.split(os.sep)[0] for p in before}
+
+
+def test_a_committing_handles_snapshot_equals_a_fresh_load(tmp_path):
+    """After every step, the snapshot the committing handle loads (through
+    its manifest cache, having built the parent's views) equals a fresh
+    handle's in ``files``, ``manifests`` and the derived ``buckets`` and
+    ``deltas`` views."""
+    root = str(tmp_path / "t")
+    log = TableLog(root)
+    for i, step in enumerate(STEPS):
+        if log.exists():
+            parent = log.snapshot()
+            ids = {*parent.buckets, *parent.deltas}  # cached before the step
+            assert ids <= {str(b) for b in range(N_BUCKETS)}
+        step(log)
+        ours, fresh = log.snapshot(), TableLog(root).snapshot()
+        for name in ("files", "manifests", "buckets", "deltas"):
+            assert getattr(ours, name) == getattr(fresh, name), (i, name)
 
 
 def test_snapshot_written_without_a_summary_loads_with_an_empty_summary(tmp_path):
@@ -369,15 +421,12 @@ def test_a_delta_commit_writes_metadata_for_its_own_files_only(tmp_path):
     def commit(log, n, rows, delta):
         snap = log.snapshot()
         new = _write(log, snap.version + 1, rows, shared=delta)
-        view = snap.deltas if delta else snap.buckets
-        merged = {b: view.get(b, []) + ps for b, ps in new.items()}
-        key = "deltas" if delta else "buckets"
-        log.commit_next(snap, n, **{key: {**view, **merged}})
+        log.commit_next(snap, n, added=_added(new, delta))
 
     def meta(log, v):
         with open(log.snap_path(v)) as f:
             raw = json.load(f)
-        assert not {"buckets", "deltas", "file_stats"} & set(raw)
+        assert not {"buckets", "deltas", "file_stats", "files"} & set(raw)
         return raw, len(json.dumps({**raw, "summary": {}}))
 
     out = {}
@@ -437,7 +486,7 @@ def test_a_copied_table_reads_its_files_under_the_new_root(tmp_path):
     shutil.rmtree(old)
     snap = TableLog(new).snapshot()
     listed = {p for ps in (*snap.buckets.values(), *snap.deltas.values()) for p in ps}
-    assert listed == set(snap.file_stats) and len(listed) == 4
+    assert listed == set(snap.files) and len(listed) == 4
     assert all(p.startswith(os.path.join(new, "data", "")) for p in listed)
     assert _state(new) == state  # _state checks every listed file exists
     _run(new, STEPS[4:8])  # through the compaction
@@ -445,17 +494,17 @@ def test_a_copied_table_reads_its_files_under_the_new_root(tmp_path):
 
 
 def test_expire_keeps_a_shared_file_while_any_bucket_lists_it(tmp_path):
-    """A delta file shared by two buckets survives expire while one bucket
-    of a kept snapshot still lists it, and goes once none does."""
+    """A delta file shared by two buckets survives expire while a kept
+    snapshot lists it, its creator's expired or not, and its data dir goes
+    once a commit removes it."""
     root = str(tmp_path / "t")
     _run(root, [_create, _merge(0, 9, {0: ["a"], 2: ["b"]}, delta=True, shared=True)])
     log = TableLog(root)
-    snap = log.snapshot()
-    (path,) = snap.deltas["0"]
-    log.commit_next(snap, N_BUCKETS, deltas={"2": [path]})
+    (path,) = log.snapshot().deltas["0"]
+    log.commit_next(log.snapshot(), N_BUCKETS)  # lists it, adds nothing
     assert log.expire_snapshots(keep_last=1, grace_seconds=0) == []
     assert os.path.isfile(path)
-    log.commit_next(log.snapshot(), N_BUCKETS, deltas={})
+    log.commit_next(log.snapshot(), N_BUCKETS, removed=[path])
     assert log.expire_snapshots(keep_last=1, grace_seconds=0) == [
         os.path.dirname(path)
     ]
