@@ -51,6 +51,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -336,24 +337,12 @@ class SnapshotTable:
         """Bucket id = ``pmod(hash(conv_id), n_buckets)`` — exactly Spark's
         own HashPartitioning placement for ``repartition(n_buckets,
         conv_id)``. So one explicit repartition on conv_id into m classes
-        (m dividing n_buckets, see :meth:`_partition_by_bucket`) puts each
-        bucket in one task AND satisfies the LWW aggregation's (conv_id,
-        turn_idx) clustering requirement: the merge reduce+route runs on a
-        single exchange of the payload, and a base write names each file's
+        (m dividing n_buckets, see :meth:`_write`) puts each bucket in one
+        task AND satisfies the LWW aggregation's (conv_id, turn_idx)
+        clustering requirement: the reduce+route runs on a single
+        exchange of the payload, and a base write names each file's
         bucket by partitioning on this expression within the task."""
         return F.pmod(F.hash(F.col("conv_id")), F.lit(self.n_buckets)).cast("int")
-
-    def _partition_by_bucket(self, df: DataFrame, m: int) -> DataFrame:
-        """Shuffle ``df`` into ``m`` partitions (m divides n_buckets, see
-        :meth:`_write_classes`) so partition r holds exactly the buckets
-        ``b % m == r``: for m dividing n, ``pmod(h, n) mod m == pmod(h,
-        m)``. AQE never coalesces an explicit ``repartition(m, col)``
-        (REPARTITION_BY_NUM), so the mapping holds, and a following
-        groupBy on (conv_id, ...) reuses this exchange instead of adding
-        its own. Every CoW merge, compaction and multi-partition delta
-        merge takes this shuffle; a one-partition delta batch skips it
-        (see :meth:`merge`)."""
-        return df.repartition(m, F.col("conv_id"))
 
     def _write_classes(self) -> int:
         """Residue classes of a shuffled write, base or delta: the largest
@@ -368,34 +357,56 @@ class SnapshotTable:
             if self.n_buckets % d == 0
         )
 
-    @staticmethod
-    def _write_bucketed(
-        df: DataFrame, data_dir: str, bucket: F.Column | None
-    ) -> dict[int, list[str]]:
-        """Parquet write of ``df``, each of whose partitions holds one
-        residue class: :meth:`_partition_by_bucket`'s output (the LWW
-        reducer's, whose aggregation preserved that exchange), or a
-        one-partition batch, the single class of m = 1.
+    def _write(
+        self,
+        version: int,
+        rows: DataFrame,
+        touched: Iterable[int] | None = None,
+        one_task: bool = False,
+        drop_tombstones: bool = False,
+    ) -> tuple[dict[str, tuple[list[int], bool]], float]:
+        """LWW-reduce ``rows`` (stored columns) and write them into a fresh
+        data dir of ``version``: the one write path of every commit that
+        writes data. Returns ``commit_next``'s ``added`` and the call's
+        wall seconds.
 
-        A base write passes ``bucket`` (:meth:`bucket_expr`): each task
-        writes one file per bucket of its class under ``<col>=<b>/``, and
-        the result maps bucket id -> the new file, read from those
-        directory names. A delta write passes None: a flat write of one
-        file per class, mapped class -> the new file by the file's
-        ``part-NNNNN`` index. Reads pass the file paths and a schema, so
-        the directory adds no column."""
-        if bucket is None:
-            df.write.mode("errorifexists").parquet(data_dir)
-        else:
+        The write runs one task per residue class. ``rows`` is shuffled
+        into m = :meth:`_write_classes` partitions with ``repartition(m,
+        conv_id)``: for m dividing n_buckets, ``pmod(h, n) mod m ==
+        pmod(h, m)``, so partition r holds exactly the buckets ``b % m ==
+        r``. AQE never coalesces an explicit ``repartition(m, col)``
+        (REPARTITION_BY_NUM), so the mapping holds, and the LWW groupBy on
+        (conv_id, ...) reuses this exchange instead of adding its own.
+        ``one_task`` (a one-partition batch, or a fold) skips the shuffle:
+        ``coalesce(1)`` is the single class of m = 1 and satisfies the
+        groupBy in place.
+
+        ``touched`` None is a base write: each task writes one file per
+        bucket of its class under ``<col>=<b>/``, listed by that bucket.
+        Else it is a delta write of one flat file per class, keyed by its
+        ``part-NNNNN`` index c and listed by the buckets of ``touched``
+        with ``b % m == c``. A class file no bucket lists is deleted: it
+        is the empty file Spark's task 0 leaves for a class without rows,
+        in this fresh, unreferenced dir. Reads pass the file paths and a
+        schema, so the directory adds no column."""
+        t = time.perf_counter()
+        m = 1 if one_task else self._write_classes()
+        rows = rows.coalesce(1) if one_task else rows.repartition(m, F.col("conv_id"))
+        rows = last_writer_wins(rows, KEY, "_lsn")
+        if drop_tombstones:
+            rows = rows.filter(~F.col("_deleted"))
+        data_dir = self.log.new_data_dir(version)
+        if touched is None:
             # a partition column no payload column shadows (names compare
             # case-insensitively)
-            col, taken = "_bucket", {c.lower() for c in df.columns}
+            col, taken = "_bucket", {c.lower() for c in rows.columns}
             while col in taken:
                 col = "_" + col
-            df.withColumn(col, bucket).write.mode("errorifexists").partitionBy(
-                col
-            ).parquet(data_dir)
-        return SnapshotTable._files_by_key(
+            rows = rows.withColumn(col, self.bucket_expr())
+            rows.write.mode("errorifexists").partitionBy(col).parquet(data_dir)
+        else:
+            rows.write.mode("errorifexists").parquet(data_dir)
+        written = self._files_by_key(
             data_dir,
             [
                 os.path.relpath(os.path.join(d, f), data_dir)
@@ -404,26 +415,35 @@ class SnapshotTable:
                 if f.startswith("part-") and f.endswith(".parquet")
             ],
         )
+        added = {}
+        for key, p in written.items():
+            if touched is None:
+                added[p] = ([key], False)
+            elif bs := [b for b in touched if b % m == key]:
+                added[p] = (bs, True)
+            else:
+                os.unlink(p)
+        return added, round(time.perf_counter() - t, 4)
 
     @staticmethod
-    def _files_by_key(data_dir: str, names: list[str]) -> dict[int, list[str]]:
+    def _files_by_key(data_dir: str, names: list[str]) -> dict[int, str]:
         """Key each part file one write left in ``data_dir`` (``names`` are
         relative to it): a file under ``<col>=<b>/`` by its bucket b, a
         top-level ``part-NNNNN-...`` by its class index NNNNN. A key has
         one file; a second one (a retried task's leftover, say) would hold
         the same rows again, and a delta-free read would return them
         twice, so it raises."""
-        out: dict[int, list[str]] = {}
+        out: dict[int, str] = {}
         for name in names:
             d, f = os.path.split(name)
             key = int(d.split("=", 1)[1]) if d else int(f.split("-")[1])
             if key in out:
                 raise RuntimeError(
                     f"write to {data_dir} left two files for "
-                    f"{'bucket' if d else 'class'} {key}: {out[key][0]}, "
+                    f"{'bucket' if d else 'class'} {key}: {out[key]}, "
                     f"{os.path.join(data_dir, name)}"
                 )
-            out[key] = [os.path.join(data_dir, name)]
+            out[key] = os.path.join(data_dir, name)
         return out
 
     # -------------------------------------------------------------- merge
@@ -523,9 +543,10 @@ class SnapshotTable:
         snapshot create, whose ``summary`` holds the merge's ``operation``
         (``cow``, ``delta``, or ``empty`` for a batch with no rows) and
         its phase seconds: ``stats_pass_s`` (the :meth:`_batch_stats`
-        call), ``plan_s`` (entry to the write, less the stats pass),
-        ``write_s`` (the :meth:`_write_bucketed` call; 0 for an empty
-        batch) and the commit's ``footer_s``. Semantics = Iceberg ``MERGE
+        call), ``plan_s`` (entry to the :meth:`_write` call, less the
+        stats pass), ``write_s`` (that call: shuffle, reduce, parquet
+        write and file listing; 0 for an empty batch) and the commit's
+        ``footer_s``. Semantics = Iceberg ``MERGE
         INTO t USING u ON key WHEN MATCHED AND op='D' THEN DELETE / WHEN
         MATCHED THEN UPDATE / WHEN NOT MATCHED AND op<>'D' THEN INSERT``
         (SURVEY.md §7.2) under LWW-by-``lsn``.
@@ -624,13 +645,9 @@ class SnapshotTable:
         use_delta = cand_rows > _DELTA_THRESHOLD * max(incoming_rows, 1)
 
         # ---- reduce + write ----------------------------------------------
-        # the explicit residue-class repartition BEFORE the reduce is the
-        # whole merge pipeline's only payload shuffle: it routes each
-        # bucket to the task of its class AND satisfies the LWW groupBy's
-        # clustering requirement (conv_id is a prefix of the agg key), so
-        # the aggregate runs in place and the write needs no further
-        # exchange
-        m = self._write_classes()
+        # :meth:`_write`'s residue-class repartition BEFORE the reduce is
+        # the whole merge pipeline's only payload shuffle (none for a
+        # one-partition delta batch, whose own task is the one class)
         if use_delta:
             # in-batch LWW only: O(batch) write volume, table untouched;
             # one file per residue class, not per bucket
@@ -640,48 +657,24 @@ class SnapshotTable:
             for f in new_fields:  # stored side lacks brand-new columns
                 rows = rows.withColumn(f.name, F.lit(None).cast(f.dataType))
             rows = rows.select(*upd.columns).unionByName(upd)
-        if use_delta and one_task:
-            # a one-partition batch is already the one class of m = 1, and
-            # coalesce(1) satisfies the LWW groupBy: the reduce and the
-            # write run in the batch's own task, one delta file, no shuffle
-            m, rows = 1, rows.coalesce(1)
-        else:
-            rows = self._partition_by_bucket(rows, m)
-        winner = last_writer_wins(rows, KEY, "_lsn")
-
         phases = {
             "operation": "delta" if use_delta else "cow",
             "stats_pass_s": stats_s,
             "plan_s": plan_s(),
         }
-        written, phases["write_s"] = _timed(
-            self._write_bucketed,
-            winner,
-            self.log.new_data_dir(new_version),
-            None if use_delta else self.bucket_expr(),
+        added, phases["write_s"] = self._write(
+            new_version,
+            rows,
+            touched=incoming_stats if use_delta else None,
+            one_task=use_delta and one_task,
         )
-
-        if use_delta:
-            # a class file is listed by the batch's buckets of its class; a
-            # file no batch bucket lists (the empty one Spark's task 0 leaves
-            # for a batch without rows in class 0) stays out of the table
-            added = {
-                p: (bs, True)
-                for c, ps in written.items()
-                if (bs := [b for b in incoming_stats if b % m == c])
-                for p in ps
-            }
-            removed = []
-        else:
-            added = {p: ([b], False) for b, ps in written.items() for p in ps}
-            removed = candidates
 
         # ---- lineage + ledger -------------------------------------------
         self.log.commit_next(
             snap,
             self.n_buckets,
             added=added,
-            removed=removed,
+            removed=[] if use_delta else candidates,
             applied=applied,
             lineage=lineage(partition_counts),
             schema_json=evolved.json(),
@@ -707,29 +700,21 @@ class SnapshotTable:
         Dropping it from only some would let a full read see an update
         whose tombstone the compaction purged. After a FULL compact the
         read path is reduction-free again. The commit's ``summary`` holds
-        ``operation`` ``compact``."""
+        ``operation`` ``compact`` and ``write_s`` (the :meth:`_write`
+        call)."""
         snap = self.snapshot()
         sel = list(range(self.n_buckets)) if buckets is None else buckets
         paths = self._listed_by(snap, self._delta_closure(snap, sel))
         if not paths:
             return snap.version
-        df = last_writer_wins(
-            self._partition_by_bucket(
-                self._read_files(snap, paths), self._write_classes()
-            ),
-            KEY,
-            "_lsn",
-        )
-        if drop_tombstones:
-            df = df.filter(~F.col("_deleted"))
-        by_bucket = self._write_bucketed(
-            df, self.log.new_data_dir(snap.version + 1), self.bucket_expr()
+        added, write_s = self._write(
+            snap.version + 1,
+            self._read_files(snap, paths),
+            drop_tombstones=drop_tombstones,
         )
         return self.log.commit_next(
-            snap, self.n_buckets,
-            added={p: ([b], False) for b, ps in by_bucket.items() for p in ps},
-            removed=paths,
-            summary={"operation": "compact"},
+            snap, self.n_buckets, added=added, removed=paths,
+            summary={"operation": "compact", "write_s": write_s},
         )
 
     @staticmethod
@@ -764,7 +749,7 @@ class SnapshotTable:
           touched, a full read reduces base ∪ that file to the same
           winners; the fold reads and writes O(delta backlog), not
           O(table). Its commit changes no ledger or lineage, and its
-          ``summary`` holds ``operation`` ``fold``.
+          ``summary`` holds ``operation`` ``fold`` and ``write_s``.
 
         Returns the new version, or the current one if neither tier is
         due. This is the background loop a 10^10-event deployment runs
@@ -789,18 +774,15 @@ class SnapshotTable:
         live = [p for p, e in snap.files.items() if e["delta"]]
         if len(live) < _FOLD_FILES:
             return snap.version
-        # one task, no shuffle: coalesce(1) satisfies the LWW groupBy, and
-        # its one output partition is the single class of a flat write
-        folded = last_writer_wins(
-            self._read_files(snap, live).coalesce(1), KEY, "_lsn"
+        # one task, no shuffle: the single class of m = 1, listed by every
+        # bucket that listed a folded file
+        added, write_s = self._write(
+            snap.version + 1,
+            self._read_files(snap, live),
+            touched={b for p in live for b in snap.files[p]["buckets"]},
+            one_task=True,
         )
-        new = self._write_bucketed(
-            folded, self.log.new_data_dir(snap.version + 1), None
-        ).get(0, [])
-        union = sorted({b for p in live for b in snap.files[p]["buckets"]})
         return self.log.commit_next(
-            snap, self.n_buckets,
-            added={p: (union, True) for p in new},
-            removed=live,
-            summary={"operation": "fold"},
+            snap, self.n_buckets, added=added, removed=live,
+            summary={"operation": "fold", "write_s": write_s},
         )

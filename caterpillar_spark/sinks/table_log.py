@@ -62,9 +62,10 @@ class Snapshot:
     applied: dict[str, list[list[int]]] = field(default_factory=dict)
     lineage: list[dict] = field(default_factory=list)  # this commit's entries
     # this commit's "operation" (create, cow, delta, empty, compact or
-    # fold; the table sink's) and phase seconds: a merge's stats_pass_s,
-    # plan_s and write_s, commit_next's footer_s and commit's manifest_s;
-    # {} in snapshots written before summaries existed
+    # fold; the table sink's) and phase seconds: a merge's stats_pass_s
+    # and plan_s, every data-writing commit's write_s (0 for an empty
+    # merge), commit_next's footer_s and commit's manifest_s; {} in
+    # snapshots written before summaries existed
     summary: dict[str, float | str] = field(default_factory=dict)
     parent: int | None = None
     properties: dict = field(default_factory=dict)

@@ -422,7 +422,24 @@ def test_concurrent_commit_loser_cannot_clobber(spark, tmp_path, monkeypatch):
     assert all("data" in d for d in removed)
 
 
+def _assert_every_part_file_listed(tbl):
+    """Each ``part-*.parquet`` under a version's own ``data/v<v>-*`` dir is
+    listed by snapshot v: a write leaves no file its commit does not list.
+    ``expire_snapshots`` removes whole dirs, so an unlisted file in a live
+    dir would never be collected. Metadata only, no Spark job."""
+    log = tbl.log
+    for d in os.listdir(log.data_dir):
+        v = int(d[1:].split("-")[0])
+        listed = log.snapshot(v).files
+        for sub, _, names in os.walk(os.path.join(log.data_dir, d)):
+            for f in names:
+                if f.startswith("part-") and f.endswith(".parquet"):
+                    path = os.path.join(sub, f)
+                    assert path in listed, f"v{v} does not list {path}"
+
+
 def _rows(tbl):
+    _assert_every_part_file_listed(tbl)
     return sorted((r["conv_id"], r["text"]) for r in tbl.read().collect())
 
 
@@ -461,6 +478,7 @@ def test_maintain_folds_the_delta_backlog_into_one_file(spark, tmp_path, monkeyp
     assert v == snap.version + 1
     snap2 = tbl.snapshot()
     assert snap2.summary["operation"] == "fold"
+    assert snap2.summary["write_s"] > 0
     assert snap2.applied == snap.applied and snap2.lineage == []
     (fold,) = snap2.deltas[hot_b]
     assert fold not in snap.deltas[hot_b]
@@ -516,6 +534,7 @@ def test_maintain_compacts_the_closure_of_a_bucket_past_the_row_fraction(
     assert v == snap.version + 1
     snap2 = tbl.snapshot()
     assert snap2.summary["operation"] == "compact"
+    assert snap2.summary["write_s"] > 0
     assert not snap2.has_deltas()
     for b in (hot, mate):
         assert not set(snap2.buckets[str(b)]) & set(snap.buckets[str(b)])
@@ -556,6 +575,7 @@ def test_a_fold_keeps_the_tombstone_that_shadows_a_base_row(spark, tmp_path, mon
     tbl.maintain()
     snap = tbl.snapshot()
     assert snap.summary["operation"] == "fold"
+    assert snap.summary["write_s"] > 0
     assert len({p for fs in snap.deltas.values() for p in fs}) == 1
     assert _rows(tbl) == expected
     dead = tbl.read(include_deleted=True, conv_id="conv_000003").collect()
@@ -679,6 +699,7 @@ def _delta_listings(snap) -> dict[str, set[int]]:
 
 
 def _state(tbl):
+    _assert_every_part_file_listed(tbl)
     return sorted((r["conv_id"], r["text"]) for r in tbl.read().collect())
 
 
@@ -739,6 +760,29 @@ def test_partial_compaction_of_a_shared_class_resurrects_nothing(
     assert tbl.read(conv_id=gone).count() == 0
     after = tbl.snapshot()
     assert not set(_delta_listings(after)) & set(snap.deltas[str(b)])
+
+
+def test_a_delta_batch_without_class_0_rows_leaves_no_unlisted_file(
+    spark, tmp_path, monkeypatch
+):
+    """A multi-partition delta batch whose one key is in a class other
+    than 0: Spark's task 0 still writes a part file for its empty class.
+    No bucket lists that file, so the write deletes it rather than leave
+    it in a live data dir."""
+    n, m = _sharing_buckets(spark), spark.sparkContext.defaultParallelism
+    tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=n).create(PAYLOAD)
+    convs = [f"conv_{i:06d}" for i in range(600)]
+    tbl.merge(_insert_batch(spark, convs, 0), 0, (0, 599))
+    monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", -1)  # delta
+    key = next(c for c in convs if tbl.bucket_for_key(c) % m != 0)
+    batch = _insert_batch(spark, [key], 1000, "v2")
+    assert input_partitions(batch) == m  # the residue-class path
+    assert tbl.merge(batch, 1, (1000, 1000))[0] == 2
+    assert list(_delta_listings(tbl.snapshot()).values()) == [{tbl.bucket_for_key(key)}]
+    _assert_every_part_file_listed(tbl)
+    want = {c: f"v1:{c}" for c in convs}
+    want[key] = f"v2:{key}"
+    assert _state(tbl) == sorted(want.items())
 
 
 @pytest.mark.parametrize("write", ["delta", "cow", "compact"])
@@ -890,15 +934,15 @@ def test_a_second_file_for_one_bucket_or_class_raises(tmp_path):
     d = str(tmp_path)
     names = ["_bucket=3/part-00001-a.parquet", "_bucket=7/part-00001-a.parquet"]
     assert SnapshotTable._files_by_key(d, names) == {
-        3: [os.path.join(d, names[0])],
-        7: [os.path.join(d, names[1])],
+        3: os.path.join(d, names[0]),
+        7: os.path.join(d, names[1]),
     }
     with pytest.raises(RuntimeError, match="two files for bucket 3"):
         SnapshotTable._files_by_key(
             d, ["_bucket=3/part-00001-a.parquet", "_bucket=3/part-00001-b.parquet"]
         )
     assert SnapshotTable._files_by_key(d, ["part-00002-a.parquet"]) == {
-        2: [os.path.join(d, "part-00002-a.parquet")]
+        2: os.path.join(d, "part-00002-a.parquet")
     }
     with pytest.raises(RuntimeError, match="two files for class 2"):
         SnapshotTable._files_by_key(

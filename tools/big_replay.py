@@ -33,8 +33,8 @@ def merge_phases(log: TableLog) -> list[dict]:
     """One ``{batch, plan_sec, stats_pass_sec, write_sec, stats_sec,
     manifest_sec}`` per merge that wrote data (summary ``operation``
     ``cow`` or ``delta``), oldest first, from its summary: ``stats_sec`` is
-    the commit's footer reads, ``manifest_sec`` its manifest diff and
-    write."""
+    the commit's footer reads, ``manifest_sec`` its manifest bookkeeping
+    and write."""
     phases = []
     for v in range(1, log.current_version() + 1):
         snap = log.snapshot(v)
