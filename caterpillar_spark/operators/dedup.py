@@ -4,7 +4,7 @@ Reference ancestry: the ``sst`` converter's sort + unique-key invariant
 (``internal/pkg/pipeline/task/converter/sst.go:68-79``) is a single-process
 last-writer-wins per key; here it becomes a distributed reduction.
 
-Three physical strategies over identical semantics:
+Physical strategies over identical semantics:
 
 - ``last_writer_wins``        — hash aggregate with ``max_by``. This is the
   DEFAULT and the scale answer: Catalyst plans partial (map-side) +
@@ -20,6 +20,9 @@ Three physical strategies over identical semantics:
 - ``last_writer_wins_pandas`` — ``applyInPandas`` per-key reducer,
   Arrow-vectorized. Exists to benchmark the pandas-UDF path against the
   JVM ops (SURVEY.md §2.10); never the default.
+- ``last_writer_wins_arrow``  — the driver-side twin of the default over
+  an Arrow table, for a batch small enough to reduce without a Spark job
+  (the table sink's driver merge); pinned to it by a hypothesis test.
 
 All return one row per (key) with the max-LSN payload, KEEPING delete
 events (op='D' rows must survive dedup so MERGE can apply the delete —
@@ -29,6 +32,7 @@ filtering them here would resurrect older revisions).
 from __future__ import annotations
 
 from collections.abc import Sequence
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -36,11 +40,14 @@ from pyspark.sql import functions as F
 from caterpillar_spark.operators import register
 from caterpillar_spark.session import cached_columns
 
+if TYPE_CHECKING:
+    import pyarrow as pa
+
 DEFAULT_KEY = ("conv_id", "turn_idx")
 
 
-def _payload_cols(df: DataFrame, key: Sequence[str], lsn_col: str) -> list[str]:
-    return [c for c in df.columns if c not in set(key) and c != lsn_col]
+def _payload_cols(columns: list[str], key: Sequence[str], lsn_col: str) -> list[str]:
+    return [c for c in columns if c not in set(key) and c != lsn_col]
 
 
 @register("dedup_lww")
@@ -52,7 +59,7 @@ def last_writer_wins(
     table sink's ``_deleted`` tombstone flag, so this is also the reducer
     of ``SnapshotTable`` reads, merges and compactions. The Column lists
     are memoised per shape (it sits on the merge's per-batch driver path)."""
-    payload = _payload_cols(df, key, lsn_col)
+    payload = _payload_cols(df.columns, key, lsn_col)
     shape = (tuple(key), lsn_col, tuple(payload))
     spark = df.sparkSession
     agg = cached_columns(
@@ -75,6 +82,37 @@ def last_writer_wins(
         ],
     )
     return df.groupBy(*key).agg(*agg).select(*sel)
+
+
+def last_writer_wins_arrow(
+    table: pa.Table, key: Sequence[str] = DEFAULT_KEY, lsn_col: str = "lsn"
+) -> pa.Table:
+    """:func:`last_writer_wins` on the driver, over an Arrow table, with
+    ``max_by``'s semantics in one Spark partition: per key the max-LSN row
+    wins, and of rows with equal LSNs the LAST in input order (``max_by``
+    keeps its held row only while that row's LSN is strictly greater). A
+    NULL key value groups like any other value, and tombstones are kept.
+    The output has the Spark twin's columns (key, payload, lsn) and
+    nullability (key fields as given, every other field nullable).
+
+    ``lsn_col`` must hold no NULL: ``max_by`` skips such rows, which this
+    reducer does not model, so it raises."""
+    import pyarrow as pa
+
+    if table.column(lsn_col).null_count:
+        raise ValueError(f"{lsn_col} holds NULLs; reduce with last_writer_wins")
+    lsns = table.column(lsn_col).to_pylist()
+    winner: dict[tuple, int] = {}
+    for i, k in enumerate(zip(*(table.column(c).to_pylist() for c in key))):
+        j = winner.get(k)
+        if j is None or lsns[i] >= lsns[j]:
+            winner[k] = i
+    out = table.take(list(winner.values())).select(
+        [*key, *_payload_cols(table.column_names, key, lsn_col), lsn_col]
+    )
+    return out.cast(
+        pa.schema([f if f.name in key else f.with_nullable(True) for f in out.schema])
+    )
 
 
 @register("dedup_lww_window")
@@ -103,7 +141,7 @@ def last_writer_wins_salted(
     uniform by construction since LSN is unique — phase 2 reduces the ≤S
     partials per key. Mirrors SURVEY.md §2.5 salting plan.
     """
-    payload = _payload_cols(df, key, lsn_col)
+    payload = _payload_cols(df.columns, key, lsn_col)
     salt = F.pmod(F.xxhash64(F.col(lsn_col)), F.lit(n_salts)).alias("_salt")
     partial = (
         df.withColumn("_salt", salt)

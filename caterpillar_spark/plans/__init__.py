@@ -4,4 +4,5 @@ from caterpillar_spark.plans.explain import (  # noqa: F401
     input_partitions,
     pushed_filters,
     read_schema_columns,
+    size_estimate,
 )

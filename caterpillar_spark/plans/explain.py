@@ -3,9 +3,11 @@
 pruning happened). The reference has no optimizer to inspect
 (``pipeline.go:51-99`` executes the task list verbatim); for us Catalyst
 does the work and these helpers make its output testable so regressions in
-plan shape fail CI, not production. One helper serves the engine itself:
-:func:`input_partitions` counts a frame's partitions from its physical
-plan, without a Spark job, for ``SnapshotTable``'s stats pass and ``fan_out``."""
+plan shape fail CI, not production. Two helpers serve the engine itself,
+both without a Spark job: :func:`input_partitions` counts a frame's
+partitions from its physical plan, for ``SnapshotTable``'s stats pass and
+``fan_out``, and :func:`size_estimate` reads the optimizer's byte estimate,
+for ``SnapshotTable``'s driver-merge bound."""
 
 from __future__ import annotations
 
@@ -62,6 +64,18 @@ def input_partitions(df: DataFrame) -> int | None:
         kids = node.children()
         todo.extend(kids.apply(i) for i in range(kids.size()))
     return plan.execute().getNumPartitions()
+
+
+def size_estimate(df: DataFrame) -> int | None:
+    """The optimizer's estimate of ``df``'s size in bytes, read from its
+    optimized logical plan without running a Spark job, or None when the
+    plan has no estimate: Spark then reports its default,
+    ``spark.sql.defaultSizeInBytes``. A file scan is estimated from its
+    files' sizes, a local relation from its rows, and a streaming
+    ``foreachBatch`` frame keeps the stats of the plan it came from."""
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    default = df.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes()
+    return None if size >= default else int(size)
 
 
 def has_partial_aggregate(df: DataFrame) -> bool:

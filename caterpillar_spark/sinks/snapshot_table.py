@@ -34,6 +34,12 @@ Scale design (100 TB / 1000 executors):
   zero table rewrite); the read path LWW-reduces base∪delta by ``_lsn``
   and ``compact()`` folds deltas back into unique-key base files —
   Iceberg's MoR/compaction lifecycle;
+- a one-partition batch the optimizer sizes at most ``_DRIVER_BYTES``
+  (a streaming micro-batch) is **merged on the driver** when it goes
+  delta: one ``toArrow()`` collect is its only Spark job, and its stats,
+  LWW reduce and one-file parquet write run in pyarrow. A job's fixed
+  planning, codegen and scheduling cost exceeds such a batch's rows;
+  the bound caps the driver memory the collected batch takes;
 - ``maintain()`` bounds the delta backlog in two tiers, both decided from
   the log's footer stats with no Spark job, like an LSM tree's minor and
   major compactions: a **fold** LWW-reduces the live delta files alone
@@ -48,19 +54,25 @@ Scale design (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import time
+import uuid
 from collections.abc import Iterable
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from caterpillar_spark.operators.dedup import last_writer_wins
-from caterpillar_spark.plans import input_partitions
+from caterpillar_spark.operators.dedup import last_writer_wins, last_writer_wins_arrow
+from caterpillar_spark.plans import input_partitions, size_estimate
 from caterpillar_spark.session import cached_columns
 from caterpillar_spark.sinks.table_log import Snapshot, TableLog, updated_ledger
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 KEY = ["conv_id", "turn_idx"]
 _SYS_COLS = ["_lsn", "_deleted"]
@@ -74,8 +86,24 @@ _FOLD_FILES = 4
 # of its base rows, or its base is split into this many files
 _MAJOR_DELTA_FRAC = 0.5
 _MAX_BASE_FILES = 8
+# a one-partition batch whose optimizer size estimate is at most this many
+# bytes is merged on the driver: collected once as Arrow, it is held whole
+# in driver memory, with its reduced copy and its parquet encoding
+_DRIVER_BYTES = 1 << 20
+# the column types a driver-merged delta file may hold: pyarrow writes them
+# as Spark's parquet writer does (timestamps as INT96, Spark's default).
+# Others keep the Spark write: a TimestampNTZ, say, written as INT96 would
+# not read back as one
+_DRIVER_TYPES = (
+    T.StringType, T.BinaryType, T.BooleanType, T.ByteType, T.ShortType,
+    T.IntegerType, T.LongType, T.FloatType, T.DoubleType, T.DateType,
+    T.TimestampType,
+)
 # a batch's per-bucket (min conv_id, max conv_id, rows); None = unknown range
 KeyStats = dict[int, tuple[str | None, str | None, int]]
+# one group of a batch's stats: (source partition, bucket, rows, min lsn,
+# max lsn, min conv_id, max conv_id), min/max None when all are NULL
+StatRow = tuple[int, int, int, int | None, int | None, str | None, str | None]
 
 # the one declaration of a lineage row (stored as a JSON object in this
 # field order in each snapshot's ``lineage``)
@@ -98,6 +126,35 @@ def _timed(fn, *args):
     t = time.perf_counter()
     out = fn(*args)
     return out, round(time.perf_counter() - t, 4)
+
+
+def _fold_stats(
+    rows: Iterable[StatRow],
+) -> tuple[tuple[int, int] | None, list[tuple[int, int]], KeyStats]:
+    """A batch's LSN range (None if it has no rows), rows per source
+    partition and per-bucket ``(min_key, max_key, rows)``, folded from its
+    per-(source partition, bucket) groups."""
+    rows = list(rows)
+    if not rows:
+        return None, [], {}
+    by_sp: dict[int, int] = {}
+    by_b: dict[int, list[StatRow]] = {}
+    for r in rows:
+        by_sp[r[0]] = by_sp.get(r[0], 0) + r[2]
+        by_b.setdefault(r[1], []).append(r)
+    # a group whose conv_ids are all NULL has no min/max: its bucket's
+    # key range degrades to unknown (conservative: overlaps() keeps
+    # every file a candidate) instead of raising min(str, None)
+    # (ADVICE r2)
+    incoming: KeyStats = {}
+    for b, g in by_b.items():
+        n = sum(r[2] for r in g)
+        if any(r[5] is None for r in g):
+            incoming[b] = (None, None, n)
+        else:
+            incoming[b] = (min(r[5] for r in g), max(r[6] for r in g), n)
+    lsn_range = (min(r[3] for r in rows), max(r[4] for r in rows))
+    return lsn_range, sorted(by_sp.items()), incoming
 
 
 # --------------------------------------------------------------- routing
@@ -366,9 +423,10 @@ class SnapshotTable:
         drop_tombstones: bool = False,
     ) -> tuple[dict[str, tuple[list[int], bool]], float]:
         """LWW-reduce ``rows`` (stored columns) and write them into a fresh
-        data dir of ``version``: the one write path of every commit that
-        writes data. Returns ``commit_next``'s ``added`` and the call's
-        wall seconds.
+        data dir of ``version``: the Spark write path of every commit that
+        writes data (a delta merge of a batch collected to the driver
+        writes through its twin, :meth:`_write_arrow`). Returns
+        ``commit_next``'s ``added`` and the call's wall seconds.
 
         The write runs one task per residue class. ``rows`` is shuffled
         into m = :meth:`_write_classes` partitions with ``repartition(m,
@@ -385,10 +443,11 @@ class SnapshotTable:
         bucket of its class under ``<col>=<b>/``, listed by that bucket.
         Else it is a delta write of one flat file per class, keyed by its
         ``part-NNNNN`` index c and listed by the buckets of ``touched``
-        with ``b % m == c``. A class file no bucket lists is deleted: it
-        is the empty file Spark's task 0 leaves for a class without rows,
-        in this fresh, unreferenced dir. Reads pass the file paths and a
-        schema, so the directory adds no column."""
+        with ``b % m == c``. A class file no bucket lists is deleted, with
+        its ``.crc`` checksum: it is the empty file Spark's task 0 leaves
+        for a class without rows, in this fresh, unreferenced dir. Reads
+        pass the file paths and a schema, so the directory adds no
+        column."""
         t = time.perf_counter()
         m = 1 if one_task else self._write_classes()
         rows = rows.coalesce(1) if one_task else rows.repartition(m, F.col("conv_id"))
@@ -423,6 +482,9 @@ class SnapshotTable:
                 added[p] = (bs, True)
             else:
                 os.unlink(p)
+                d, f = os.path.split(p)
+                with contextlib.suppress(FileNotFoundError):  # its checksum
+                    os.unlink(os.path.join(d, f".{f}.crc"))
         return added, round(time.perf_counter() - t, 4)
 
     @staticmethod
@@ -449,24 +511,35 @@ class SnapshotTable:
     # -------------------------------------------------------------- merge
     def _batch_stats(
         self, df: DataFrame
-    ) -> tuple[bool, tuple[int, int] | None, list[tuple[int, int]], KeyStats]:
+    ) -> tuple[
+        bool, tuple[int, int] | None, list[tuple[int, int]], KeyStats, pa.Table | None
+    ]:
         """One narrow pass over a change batch (source_partition, conv_id
-        and lsn only): whether Spark reads the batch as one partition,
-        its LSN range (None if empty), rows per source partition (-1 for
-        rows without one) and per-bucket ``(min_key, max_key, rows)``.
+        and lsn): whether Spark reads the batch as one partition, its LSN
+        range (None if empty), rows per source partition (-1 for rows
+        without one), per-bucket ``(min_key, max_key, rows)``, and the
+        batch itself as Arrow if the pass collected it (else None).
 
         A one-partition batch (a one-file streaming trigger) is counted
         from its plan (:func:`~caterpillar_spark.plans.input_partitions`,
-        no job) and aggregated in its own task: ``coalesce(1)`` satisfies
-        the groupBy, so the pass is one job of one task, with no
-        shuffle."""
+        no job). If its conv_id is a string and the optimizer sizes it at
+        most ``_DRIVER_BYTES`` (:func:`~caterpillar_spark.plans.size_estimate`,
+        no job), the pass is ``toArrow()``, one job of one task, and the
+        stats are computed on the driver from the collected columns, which
+        the merge may then reduce and write there too. Any other
+        one-partition batch is aggregated in its own task: ``coalesce(1)``
+        satisfies the groupBy, so the pass is one job of one task, with
+        no shuffle. Both feed the same grouped rows to one fold."""
         one_task = input_partitions(df) == 1
+        if one_task and self._driver_sized(df):
+            batch = df.toArrow()
+            return (one_task, *_fold_stats(self._arrow_stat_rows(batch)), batch)
         if one_task:
             df = df.coalesce(1)
         sp = F.lit(-1)
         if "source_partition" in df.columns:
             sp = F.coalesce(F.col("source_partition"), sp)
-        stats = (
+        rows = (
             df.groupBy(sp.alias("sp"), self.bucket_expr().alias("b"))
             .agg(
                 F.count("*").alias("n"),
@@ -477,26 +550,47 @@ class SnapshotTable:
             )
             .collect()
         )
-        if not stats:
-            return one_task, None, [], {}
-        by_sp: dict[int, int] = {}
-        by_b: dict[int, list] = {}
-        for r in stats:
-            by_sp[r["sp"]] = by_sp.get(r["sp"], 0) + r["n"]
-            by_b.setdefault(r["b"], []).append(r)
-        # a group whose conv_ids are all NULL has no min/max: its bucket's
-        # key range degrades to unknown (conservative: overlaps() keeps
-        # every file a candidate) instead of raising min(str, None)
-        # (ADVICE r2)
-        incoming: KeyStats = {}
-        for b, g in by_b.items():
-            n = sum(r["n"] for r in g)
-            if any(r["klo"] is None for r in g):
-                incoming[b] = (None, None, n)
-            else:
-                incoming[b] = (min(r["klo"] for r in g), max(r["khi"] for r in g), n)
-        lsn_range = (min(r["lo"] for r in stats), max(r["hi"] for r in stats))
-        return one_task, lsn_range, sorted(by_sp.items()), incoming
+        return (one_task, *_fold_stats(rows), None)
+
+    @staticmethod
+    def _driver_sized(df: DataFrame) -> bool:
+        """Whether a one-partition batch is merged on the driver: its
+        conv_id is a string (so :func:`murmur3_hash_bytes` routes it) and
+        its size estimate is at most ``_DRIVER_BYTES``."""
+        key = next((f.dataType for f in df.schema.fields if f.name == "conv_id"), None)
+        if not isinstance(key, T.StringType):
+            return False
+        size = size_estimate(df)
+        return size is not None and size <= _DRIVER_BYTES
+
+    def _arrow_stat_rows(self, batch: pa.Table) -> list[StatRow]:
+        """The stats aggregate's grouped rows, from a collected batch's
+        columns: a row's bucket is ``murmur3_hash_bytes(conv_id) % n``, and
+        a NULL conv_id's is ``42 % n``, since Spark's ``hash(NULL)`` is
+        the seed. min/max skip NULLs, as Spark's do."""
+        n, buckets = self.n_buckets, {None: 42 % self.n_buckets}
+        sps = (
+            batch.column("source_partition").to_pylist()
+            if "source_partition" in batch.column_names
+            else [None] * batch.num_rows
+        )
+        groups: dict[tuple[int, int], list[tuple]] = {}
+        for sp, key, lsn in zip(
+            sps, batch.column("conv_id").to_pylist(), batch.column("lsn").to_pylist()
+        ):
+            if key not in buckets:
+                buckets[key] = murmur3_hash_bytes(key.encode()) % n
+            group = (-1 if sp is None else sp, buckets[key])
+            groups.setdefault(group, []).append((lsn, key))
+        rows = []
+        for (sp, b), g in groups.items():
+            lsns = [v for v, _ in g if v is not None]
+            keys = [k for _, k in g if k is not None]
+            rows.append((
+                sp, b, len(g), min(lsns, default=None), max(lsns, default=None),
+                min(keys, default=None), max(keys, default=None),
+            ))
+        return rows
 
     def merge(
         self,
@@ -537,16 +631,25 @@ class SnapshotTable:
         stats pass): its stats pass runs on
         ``coalesce(1)``, and if it goes delta, the LWW reduce and the
         write run in that one task too and write one file, the class of
-        m = 1 — two one-task jobs and no shuffle.
+        m = 1 — two one-task jobs and no shuffle. If the stats pass
+        collected such a batch to the driver (a string conv_id, at most
+        ``_DRIVER_BYTES`` by the optimizer's estimate) and it goes delta,
+        the driver reduces and writes that one file itself
+        (:meth:`_write_arrow`): the collect is the merge's only job.
+        A batch with a NULL ``lsn`` or a column type outside
+        ``_DRIVER_TYPES`` keeps the Spark write; a collected batch that
+        goes CoW takes the Spark path as well.
 
         Either path commits data + offset ledger + lineage in ONE atomic
         snapshot create, whose ``summary`` holds the merge's ``operation``
         (``cow``, ``delta``, or ``empty`` for a batch with no rows) and
         its phase seconds: ``stats_pass_s`` (the :meth:`_batch_stats`
-        call), ``plan_s`` (entry to the :meth:`_write` call, less the
-        stats pass), ``write_s`` (that call: shuffle, reduce, parquet
-        write and file listing; 0 for an empty batch) and the commit's
-        ``footer_s``. Semantics = Iceberg ``MERGE
+        call, the collect included), ``plan_s`` (entry to the write call,
+        less the stats pass), ``write_s`` (the :meth:`_write` call:
+        shuffle, reduce, parquet write and file listing, or the
+        :meth:`_write_arrow` call: reduce and parquet write; 0 for an
+        empty batch) and the commit's ``footer_s``. A driver-merged
+        batch's summary adds ``driver: true``. Semantics = Iceberg ``MERGE
         INTO t USING u ON key WHEN MATCHED AND op='D' THEN DELETE / WHEN
         MATCHED THEN UPDATE / WHEN NOT MATCHED AND op<>'D' THEN INSERT``
         (SURVEY.md §7.2) under LWW-by-``lsn``.
@@ -565,7 +668,7 @@ class SnapshotTable:
             return -1, None  # exactly-once: already applied
         if stats is None:
             stats, stats_s = _timed(self._batch_stats, updates)
-        one_task, _, partition_counts, incoming_stats = stats
+        one_task, _, partition_counts, incoming_stats, batch = stats
         new_version = snap.version + 1
 
         def plan_s() -> float:  # the merge so far, less the stats pass
@@ -610,25 +713,6 @@ class SnapshotTable:
             list(table_schema.fields)
             + [T.StructField(f.name, f.dataType, True) for f in new_fields]
         )
-        payload_cols = [f.name for f in evolved.fields]
-        # updates may also MISS columns (older producer): fill with null
-        upd = updates
-        for f in evolved.fields:
-            if f.name not in updates.columns:
-                upd = upd.withColumn(f.name, F.lit(None).cast(f.dataType))
-
-        upd = upd.select(
-            *payload_cols,
-            *cached_columns(
-                self.spark,
-                "merge_sys_cols",
-                (),
-                lambda: [
-                    F.col("lsn").alias("_lsn"),
-                    (F.col("op") == "D").alias("_deleted"),
-                ],
-            ),
-        )
 
         # ---- file-level pruning -----------------------------------------
         # the base files (one bucket each) whose key range overlaps the
@@ -643,31 +727,40 @@ class SnapshotTable:
         cand_rows = sum(int(snap.files[p]["rows"] or 0) for p in candidates)
         incoming_rows = sum(n for _, _, n in incoming_stats.values())
         use_delta = cand_rows > _DELTA_THRESHOLD * max(incoming_rows, 1)
+        phases = {"operation": "delta" if use_delta else "cow", "stats_pass_s": stats_s}
 
         # ---- reduce + write ----------------------------------------------
-        # :meth:`_write`'s residue-class repartition BEFORE the reduce is
-        # the whole merge pipeline's only payload shuffle (none for a
-        # one-partition delta batch, whose own task is the one class)
-        if use_delta:
-            # in-batch LWW only: O(batch) write volume, table untouched;
-            # one file per residue class, not per bucket
-            rows = upd
+        if (
+            use_delta
+            and batch is not None
+            and not batch.column("lsn").null_count  # max_by skips NULL lsns
+            and all(
+                isinstance(f.dataType, _DRIVER_TYPES)
+                for f in [*updates.schema.fields, *evolved.fields]
+            )
+        ):
+            # the collected batch: reduced and written on the driver
+            phases.update(plan_s=plan_s(), driver=True)
+            added, phases["write_s"] = self._write_arrow(
+                new_version, batch, evolved, incoming_stats
+            )
         else:
-            rows = self._read_files(snap, candidates)
-            for f in new_fields:  # stored side lacks brand-new columns
-                rows = rows.withColumn(f.name, F.lit(None).cast(f.dataType))
-            rows = rows.select(*upd.columns).unionByName(upd)
-        phases = {
-            "operation": "delta" if use_delta else "cow",
-            "stats_pass_s": stats_s,
-            "plan_s": plan_s(),
-        }
-        added, phases["write_s"] = self._write(
-            new_version,
-            rows,
-            touched=incoming_stats if use_delta else None,
-            one_task=use_delta and one_task,
-        )
+            # :meth:`_write`'s residue-class repartition BEFORE the reduce
+            # is the whole merge pipeline's only payload shuffle (none for
+            # a one-partition delta batch, whose own task is the one class)
+            rows = self._stored_rows(updates, evolved)
+            if not use_delta:
+                cow = self._read_files(snap, candidates)
+                for f in new_fields:  # stored side lacks brand-new columns
+                    cow = cow.withColumn(f.name, F.lit(None).cast(f.dataType))
+                rows = cow.select(*rows.columns).unionByName(rows)
+            phases["plan_s"] = plan_s()
+            added, phases["write_s"] = self._write(
+                new_version,
+                rows,
+                touched=incoming_stats if use_delta else None,
+                one_task=use_delta and one_task,
+            )
 
         # ---- lineage + ledger -------------------------------------------
         self.log.commit_next(
@@ -681,6 +774,72 @@ class SnapshotTable:
             summary=phases,
         )
         return new_version, partition_counts
+
+    def _stored_rows(self, updates: DataFrame, evolved: T.StructType) -> DataFrame:
+        """A change batch as stored rows: the ``evolved`` payload columns
+        (NULL where the batch lacks one: an older producer), then ``_lsn``
+        and ``_deleted``."""
+        upd = updates
+        for f in evolved.fields:
+            if f.name not in updates.columns:
+                upd = upd.withColumn(f.name, F.lit(None).cast(f.dataType))
+        return upd.select(
+            *evolved.fieldNames(),
+            *cached_columns(
+                self.spark,
+                "merge_sys_cols",
+                (),
+                lambda: [
+                    F.col("lsn").alias("_lsn"),
+                    (F.col("op") == "D").alias("_deleted"),
+                ],
+            ),
+        )
+
+    def _write_arrow(
+        self,
+        version: int,
+        batch: pa.Table,
+        evolved: T.StructType,
+        touched: Iterable[int],
+    ) -> tuple[dict[str, tuple[list[int], bool]], float]:
+        """The driver twin of a one-task delta :meth:`_write`, over a
+        collected change batch: it builds the :meth:`_stored_rows`
+        columns, reduces them with
+        :func:`~caterpillar_spark.operators.dedup.last_writer_wins_arrow`
+        and writes ONE parquet file, class 0 of m = 1, into a fresh data
+        dir of ``version``, listed by every bucket of ``touched``. The
+        file's physical schema is a Spark-written delta file's: the same
+        column order and nullability, and timestamps as INT96. Returns
+        ``commit_next``'s ``added`` and the call's wall seconds."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        t = time.perf_counter()
+        cols, fields = [], []
+        for f in evolved.fields:
+            if f.name in batch.column_names:
+                cols.append(batch.column(f.name))
+                fields.append(batch.schema.field(f.name))
+            else:  # an older producer's batch: typed NULLs
+                typ = to_arrow_type(f.dataType)
+                cols.append(pa.chunked_array([pa.nulls(batch.num_rows, typ)], typ))
+                fields.append(pa.field(f.name, typ))
+        cols += [batch.column("lsn"), pc.equal(batch.column("op"), "D")]
+        fields += [
+            batch.schema.field("lsn").with_name("_lsn"),
+            pa.field("_deleted", pa.bool_()),
+        ]
+        rows = last_writer_wins_arrow(
+            pa.Table.from_arrays(cols, schema=pa.schema(fields)), KEY, "_lsn"
+        )
+        data_dir = self.log.new_data_dir(version)
+        os.makedirs(data_dir)
+        path = os.path.join(data_dir, f"part-00000-{uuid.uuid4()}.snappy.parquet")
+        pq.write_table(rows, path, use_deprecated_int96_timestamps=True)
+        return {path: (sorted(touched), True)}, round(time.perf_counter() - t, 4)
 
     # ------------------------------------------------------------ compact
     def compact(

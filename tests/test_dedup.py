@@ -1,13 +1,21 @@
 """All dedup strategies must agree with each other and with a pandas
-reference reduction."""
+reference reduction; the driver-side Arrow twin must equal the default
+on any one-partition batch."""
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from caterpillar_spark.generator import GeneratorSpec, change_events
 from caterpillar_spark.operators.dedup import (
     last_writer_wins,
+    last_writer_wins_arrow,
     last_writer_wins_pandas,
     last_writer_wins_salted,
     last_writer_wins_window,
@@ -56,3 +64,78 @@ def test_one_row_per_key(spark):
     ev = change_events(spark, SPEC)
     lww = last_writer_wins(ev)
     assert lww.count() == lww.select("conv_id", "turn_idx").distinct().count()
+
+
+# ------------------------------------------------- the driver-side twin
+EVENT = T.StructType(
+    [
+        T.StructField("lsn", T.LongType(), False),
+        T.StructField("op", T.StringType()),
+        T.StructField("conv_id", T.StringType()),
+        T.StructField("turn_idx", T.IntegerType(), False),
+        T.StructField("text", T.StringType()),
+    ]
+)
+
+
+@st.composite
+def one_partition_batch(draw):
+    """Rows (lsn, op, conv_id, turn_idx, text) over a few keys, NULL
+    conv_id among them, with LSNs drawn from a small range so that equal
+    LSNs for one key are common."""
+    n = draw(st.integers(min_value=1, max_value=30))
+    return [
+        (
+            draw(st.integers(0, 6)),
+            op := draw(st.sampled_from(["I", "U", "D"])),
+            draw(st.sampled_from(["a", "b", "é", None])),
+            draw(st.integers(0, 1)),
+            None if op == "D" else f"t{i}",
+        )
+        for i in range(n)
+    ]
+
+
+def _rows(records):
+    return sorted(records, key=repr)
+
+
+@settings(
+    max_examples=30,
+    deadline=None,
+    derandomize=True,  # CI stability: same examples every run
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(one_partition_batch())
+# equal LSNs for one key: the later row wins
+@example([(3, "I", "a", 0, "first"), (3, "U", "a", 0, "second"), (1, "U", "a", 0, "x")])
+# a NULL conv_id is a key of its own
+@example([(1, "I", None, 0, "n1"), (2, "U", None, 0, "n2"), (1, "I", "a", 0, "a1")])
+# delete, then reinsert: the insert wins; a key whose events are all deletes
+# keeps its newest tombstone
+@example([(1, "I", "a", 0, "v1"), (2, "D", "a", 0, None), (3, "I", "a", 0, "v3"),
+          (4, "D", "b", 1, None), (5, "D", "b", 1, None)])
+def test_arrow_twin_equals_last_writer_wins(spark, rows):
+    """``last_writer_wins_arrow`` on a batch gives the rows, column order
+    and nullability that ``last_writer_wins`` gives on the same batch in
+    one Spark partition. Spark reads the same Arrow table as a local
+    relation, which keeps its row order."""
+    table = pa.Table.from_pylist(
+        [dict(zip(EVENT.fieldNames(), r)) for r in rows], schema=to_arrow_schema(EVENT)
+    )
+    want = last_writer_wins(spark.createDataFrame(table).coalesce(1))
+    got = last_writer_wins_arrow(table)
+    assert got.schema == to_arrow_schema(want.schema)
+    assert _rows(tuple(r.values()) for r in got.to_pylist()) == _rows(
+        tuple(r) for r in want.collect()
+    )
+
+
+def test_arrow_twin_refuses_null_lsns():
+    """``max_by`` skips rows whose LSN is NULL; the twin does not model
+    that and raises, so its caller keeps such a batch on Spark."""
+    table = pa.table(
+        {"conv_id": ["a"], "turn_idx": [0], "lsn": pa.array([None], pa.int64())}
+    )
+    with pytest.raises(ValueError, match="NULL"):
+        last_writer_wins_arrow(table)

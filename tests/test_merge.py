@@ -275,8 +275,12 @@ def test_merge_commits_record_their_phase_seconds(spark, tmp_path, monkeypatch):
     assert [s.summary["operation"] for s in (cow, delta, none)] == [
         "cow", "delta", "empty"
     ]
+    # the one-file delta segment was reduced and written on the driver
+    assert [s.summary.get("driver") for s in (cow, delta, none)] == [None, True, None]
     for snap in (cow, delta, none):
-        seconds = {k: v for k, v in snap.summary.items() if k != "operation"}
+        seconds = {
+            k: v for k, v in snap.summary.items() if k not in ("operation", "driver")
+        }
         assert set(seconds) == {
             "stats_pass_s", "plan_s", "write_s", "footer_s", "manifest_s"
         }
@@ -341,18 +345,20 @@ def test_covered_footer_range_launches_no_spark_job(
 ):
     """A segment whose footer range the ledger already covers is skipped
     by the merge's ledger check alone — no stats pass, no Spark job, and
-    not even a plan built to count the batch's partitions."""
+    not even a plan built to count the batch's partitions, and no
+    driver-side collect."""
     tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=8).create(PAYLOAD)
     chunks = write_changelog_chunks(spark, SPEC, str(tmp_path / "log"), n_chunks=2)
     replay_chunks(spark, chunks, tbl)
     lo, hi, _ = segment_footer_stats(chunks[0])
     events = spark.read.parquet(chunks[0])
-    counted = []
+    counted, collected = [], []
     monkeypatch.setattr(snapshot_table, "input_partitions", counted.append)
+    monkeypatch.setattr(type(events), "toArrow", collected.append)
     with spark_jobs("covered-footer") as jobs:
         res = apply_changes(events, tbl, batch_id=0, offset_range=(lo, hi))
     assert (res.snapshot_version, res.rows_in) == (-1, 0)
-    assert jobs == [] and counted == []
+    assert jobs == [] and counted == [] and collected == []
 
 
 def test_adhoc_merge_derives_its_own_range(spark, tmp_path):

@@ -4,6 +4,9 @@ plan shape part of the test suite (SURVEY.md §4.3)."""
 
 from __future__ import annotations
 
+import os
+
+import pandas as pd
 from pyspark.sql import functions as F
 
 from caterpillar_spark.operators import fan_out
@@ -12,6 +15,7 @@ from caterpillar_spark.plans import (
     input_partitions,
     pushed_filters,
     read_schema_columns,
+    size_estimate,
 )
 
 
@@ -126,6 +130,26 @@ def test_input_partitions_counts_from_the_plan_without_a_job(
         assert input_partitions(one.filter("id > 3")) == 1
         assert input_partitions(rows) == spark.sparkContext.defaultParallelism
         assert input_partitions(agg) is None
+    assert jobs == []
+
+
+def test_size_estimate_reads_the_plan_without_a_job(spark, tmp_path, spark_jobs):
+    """A file scan is sized from its files, a local relation from its
+    rows; a frame Spark cannot size (a parallelized list) reads as None."""
+    path = str(tmp_path / "one")
+    spark.range(100).coalesce(1).write.parquet(path)
+    one = spark.read.parquet(path)
+    file_bytes = sum(
+        os.path.getsize(os.path.join(path, f))
+        for f in os.listdir(path)
+        if f.endswith(".parquet")
+    )
+    local = spark.createDataFrame(pd.DataFrame({"id": range(100)}))
+    rows = spark.createDataFrame([(i,) for i in range(100)], "id long")
+    with spark_jobs("size") as jobs:
+        assert size_estimate(one) == file_bytes
+        assert 0 < size_estimate(local) < 1 << 20
+        assert size_estimate(rows) is None
     assert jobs == []
 
 

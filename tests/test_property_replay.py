@@ -32,11 +32,14 @@ PAYLOAD = T.StructType(
 )
 
 # a merge path is pinned through the delta threshold: infinite never picks
-# delta, negative always does, the default lets the merge decide
+# delta, negative always does, the default lets the merge decide. "driver"
+# is a delta merge of a one-partition batch the optimizer can size (see
+# _batch), which SnapshotTable reduces and writes on the driver
 THRESHOLD = {
     "auto": snapshot_table._DELTA_THRESHOLD,
     "cow": float("inf"),
     "delta": -1,
+    "driver": -1,
 }
 
 EVENT_SCHEMA = T.StructType(
@@ -71,13 +74,25 @@ def change_stream(draw):
         )
     n_chunks = draw(st.integers(min_value=1, max_value=3))
     # arbitrary merge path per chunk: CoW (file-pruned rewrite),
-    # merge-on-read delta append, or the auto heuristic — any interleaving
-    # must converge to the same state (they share the LWW reducer)
+    # merge-on-read delta append on Spark or on the driver, or the auto
+    # heuristic — any interleaving must converge to the same state
     modes = [
-        draw(st.sampled_from(["auto", "cow", "delta"])) for _ in range(n_chunks)
+        draw(st.sampled_from(["auto", "cow", "delta", "driver"]))
+        for _ in range(n_chunks)
     ]
     compact_at_end = draw(st.booleans())
     return events, n_chunks, modes, compact_at_end
+
+
+def _batch(spark, chunk, mode):
+    """A chunk as a change batch. In "driver" mode it is a local relation
+    (built from pandas, so the optimizer knows its size) in one
+    partition, like a one-file streaming trigger; else a parallelized
+    list, which Spark cannot size and spreads over the cores."""
+    if mode == "driver":
+        pdf = pd.DataFrame(chunk, columns=EVENT_SCHEMA.fieldNames())
+        return spark.createDataFrame(pdf, EVENT_SCHEMA).coalesce(1)
+    return spark.createDataFrame(chunk, EVENT_SCHEMA)
 
 
 def _expected(events):
@@ -107,9 +122,9 @@ def test_any_stream_reduces_correctly(spark, tmp_path_factory, stream):
         chunk = events[i * sz : (i + 1) * sz]
         if not chunk:
             continue
-        df = spark.createDataFrame(chunk, EVENT_SCHEMA)
         with patch.object(snapshot_table, "_DELTA_THRESHOLD", THRESHOLD[modes[i]]):
-            apply_changes(df, tbl, batch_id=i)
+            apply_changes(_batch(spark, chunk, modes[i]), tbl, batch_id=i)
+        assert tbl.snapshot().summary.get("driver", False) == (modes[i] == "driver")
     got = sorted(
         (r["conv_id"], r["turn_idx"], r["text"])
         for r in tbl.read().collect()
@@ -121,10 +136,9 @@ def test_any_stream_reduces_correctly(spark, tmp_path_factory, stream):
         chunk = events[i * sz : (i + 1) * sz]
         if not chunk:
             continue
-        with patch.object(
-            snapshot_table, "_DELTA_THRESHOLD", THRESHOLD[modes[n_chunks - 1 - i]]
-        ):
-            apply_changes(spark.createDataFrame(chunk, EVENT_SCHEMA), tbl, batch_id=i)
+        mode = modes[n_chunks - 1 - i]
+        with patch.object(snapshot_table, "_DELTA_THRESHOLD", THRESHOLD[mode]):
+            apply_changes(_batch(spark, chunk, mode), tbl, batch_id=i)
     again = sorted(
         (r["conv_id"], r["turn_idx"], r["text"])
         for r in tbl.read().collect()

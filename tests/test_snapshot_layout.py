@@ -9,6 +9,7 @@ from __future__ import annotations
 import datetime as dt
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -19,6 +20,7 @@ from caterpillar_spark.sinks.snapshot_table import (
     SnapshotTable,
     murmur3_hash_bytes,
 )
+from caterpillar_spark.sinks.table_log import footer_range
 
 PAYLOAD = T.StructType(
     [
@@ -767,8 +769,8 @@ def test_a_delta_batch_without_class_0_rows_leaves_no_unlisted_file(
 ):
     """A multi-partition delta batch whose one key is in a class other
     than 0: Spark's task 0 still writes a part file for its empty class.
-    No bucket lists that file, so the write deletes it rather than leave
-    it in a live data dir."""
+    No bucket lists that file, so the write deletes it, and its ``.crc``
+    checksum, rather than leave them in a live data dir."""
     n, m = _sharing_buckets(spark), spark.sparkContext.defaultParallelism
     tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=n).create(PAYLOAD)
     convs = [f"conv_{i:06d}" for i in range(600)]
@@ -780,6 +782,11 @@ def test_a_delta_batch_without_class_0_rows_leaves_no_unlisted_file(
     assert tbl.merge(batch, 1, (1000, 1000))[0] == 2
     assert list(_delta_listings(tbl.snapshot()).values()) == [{tbl.bucket_for_key(key)}]
     _assert_every_part_file_listed(tbl)
+    # nor the Hadoop checksum of the deleted file
+    for sub, _, names in os.walk(tbl.log.data_dir):
+        for f in names:
+            if f.startswith(".part-") and f.endswith(".crc"):
+                assert f[1:-4] in names, f"{os.path.join(sub, f)} outlived its file"
     want = {c: f"v1:{c}" for c in convs}
     want[key] = f"v2:{key}"
     assert _state(tbl) == sorted(want.items())
@@ -869,13 +876,10 @@ def _one_file(df, path: str):
     return out
 
 
-def test_one_partition_batch_merges_in_its_own_task(
-    spark, tmp_path, monkeypatch, spark_jobs
-):
-    """An ad-hoc batch read as one partition runs its stats pass and its
-    delta write as one job of one task each, with no shuffle, and writes
-    one delta file (class 0 of m = 1), listed by exactly the buckets with
-    rows in it."""
+def _merge_one_partition_batch(spark, tmp_path, monkeypatch, spark_jobs):
+    """Merge a one-file delta batch over a 600-key table: the batch's
+    Spark jobs, its commit summary, and the one delta file it writes,
+    listed by exactly the buckets with rows in it."""
     n = _sharing_buckets(spark)
     tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=n).create(PAYLOAD)
     convs = [f"conv_{i:06d}" for i in range(600)]
@@ -885,7 +889,6 @@ def test_one_partition_batch_merges_in_its_own_task(
     with spark_jobs("one-partition") as jobs:
         version, _ = tbl.merge(batch, 1)
     assert version == 2
-    assert [list(j.stage_tasks.values()) for j in jobs] == [[1], [1]], jobs
     listed = _delta_listings(tbl.snapshot())
     assert len(listed) == 1
     [(path, buckets)] = listed.items()
@@ -895,6 +898,31 @@ def test_one_partition_batch_merges_in_its_own_task(
     want = {c: f"v1:{c}" for c in convs}
     want.update((c, f"v2:{c}") for c in convs[::7])
     assert _state(tbl) == sorted(want.items())
+    return [list(j.stage_tasks.values()) for j in jobs], tbl.snapshot().summary
+
+
+def test_one_partition_batch_merges_in_its_own_task(
+    spark, tmp_path, monkeypatch, spark_jobs
+):
+    """An ad-hoc batch read as one partition, and sized within
+    ``_DRIVER_BYTES``, is merged on the driver: its one Spark job is the
+    one-task ``toArrow()`` collect, and the driver writes one delta file
+    (class 0 of m = 1)."""
+    tasks, summary = _merge_one_partition_batch(spark, tmp_path, monkeypatch, spark_jobs)
+    assert tasks == [[1]]
+    assert summary["operation"] == "delta" and summary["driver"] is True
+
+
+def test_one_partition_batch_past_the_driver_bound_merges_in_its_own_task(
+    spark, tmp_path, monkeypatch, spark_jobs
+):
+    """A one-partition batch larger than ``_DRIVER_BYTES`` keeps the Spark
+    path: its stats pass and its delta write run as one job of one task
+    each, with no shuffle, and write the same one delta file."""
+    monkeypatch.setattr(snapshot_table, "_DRIVER_BYTES", 0)
+    tasks, summary = _merge_one_partition_batch(spark, tmp_path, monkeypatch, spark_jobs)
+    assert tasks == [[1], [1]]
+    assert summary["operation"] == "delta" and "driver" not in summary
 
 
 def test_partial_compaction_after_a_one_file_delta_resurrects_nothing(
@@ -971,3 +999,125 @@ def test_engine_reads_list_their_files_without_a_spark_job(
         tbl.compact()
     assert compact_jobs, "the compaction wrote nothing"
     assert not [j for j in compact_jobs if j.description.startswith("Listing")]
+
+
+def _added_file(tbl) -> str:
+    """The one file the latest commit added."""
+    snap = tbl.snapshot()
+    [path] = set(snap.files) - set(tbl.snapshot(snap.version - 1).files)
+    return path
+
+
+def _physical_schema(path: str) -> list[tuple]:
+    schema = pq.ParquetFile(path).schema
+    return [
+        (c.name, c.physical_type, str(c.logical_type), c.max_definition_level)
+        for c in (schema.column(i) for i in range(len(schema)))
+    ]
+
+
+def test_a_driver_delta_file_is_stored_as_a_spark_delta_file(
+    spark, tmp_path, monkeypatch
+):
+    """The same one-file batches, merged on the driver and on Spark
+    (``_DRIVER_BYTES`` 0), write delta files with one physical schema
+    (column order, optional columns, ``ts`` as INT96) and the conv_id
+    footer range the log prunes by, and both tables read back the same
+    rows, in full and by key: also after a batch that adds a payload
+    column and one that lacks one."""
+    convs = [f"conv_{i:06d}" for i in range(200)]
+    tables = {
+        name: SnapshotTable(spark, str(tmp_path / name), n_buckets=8).create(PAYLOAD)
+        for name in ("driver", "spark")
+    }
+    for tbl in tables.values():
+        tbl.merge(_insert_batch(spark, convs, 0), 0, (0, 199))
+    monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", -1)  # delta
+    driver_bytes = {"driver": snapshot_table._DRIVER_BYTES, "spark": 0}
+    updates = [(2000 + i, "U", c, 0, "v3") for i, c in enumerate(convs[1::7])]
+    deletes = [(2100 + i, "D", c, 0, None) for i, c in enumerate(convs[2::9])]
+    batches = [
+        _insert_batch(spark, convs[::5], 1000, "v2").withColumn("lang", F.lit("en")),
+        _events(spark, updates + deletes).drop("tool"),
+    ]
+    for i, batch in enumerate(batches):
+        batch = _one_file(batch, str(tmp_path / f"b{i}"))
+        files = {}
+        for name, tbl in tables.items():
+            monkeypatch.setattr(snapshot_table, "_DRIVER_BYTES", driver_bytes[name])
+            tbl.merge(batch, i + 1)
+            assert tbl.snapshot().summary.get("driver", False) == (name == "driver")
+            files[name] = _added_file(tbl)
+            _assert_every_part_file_listed(tbl)
+        schema = _physical_schema(files["driver"])
+        assert schema == _physical_schema(files["spark"])
+        assert dict((c, (t, d)) for c, t, _, d in schema)["ts"] == ("INT96", 1)
+        key_range = footer_range(files["driver"], "conv_id")
+        assert key_range == footer_range(files["spark"], "conv_id")
+        assert key_range[0] is not None
+        for read in ({}, {"conv_id": convs[:30]}):
+            d, s = (
+                sorted(map(tuple, tables[name].read(**read).collect()))
+                for name in ("driver", "spark")
+            )
+            assert d == s
+    assert "lang" in tables["driver"].read().columns
+
+
+def test_driver_stats_equal_the_spark_stats_pass(spark, tmp_path, monkeypatch):
+    """The stats a collected batch gets on the driver equal the Spark
+    stats pass's: LSN range, rows per source partition (NULL → -1) and
+    per-bucket key ranges. A NULL conv_id goes to bucket ``42 % n``
+    (Spark's ``hash(NULL)`` is the seed), and in a source partition of
+    its own it leaves that bucket's range unknown."""
+    tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=8).create(PAYLOAD)
+    rows = [(10 + i, "U", f"conv_{i:03d}", 0, "x") for i in range(40)]
+    rows += [(5, "I", None, 1, "null key"), (99, "D", "conv_007", 0, None)]
+    sp = (
+        F.when(F.col("conv_id").isNull(), 9)
+        .when(F.col("lsn") % 3 == 0, F.lit(None))
+        .otherwise(F.col("lsn") % 2)
+    )
+    batch = _one_file(
+        _events(spark, rows).withColumn("source_partition", sp.cast("int")),
+        str(tmp_path / "b"),
+    )
+    driver = tbl._batch_stats(batch)
+    monkeypatch.setattr(snapshot_table, "_DRIVER_BYTES", 0)
+    on_spark = tbl._batch_stats(batch)
+    assert driver[4] is not None and on_spark[4] is None  # collected or not
+    assert driver[:4] == on_spark[:4]
+    assert driver[1] == (5, 99)
+    assert (9, 1) in driver[2] and driver[3][42 % 8][:2] == (None, None)
+
+
+def test_a_batch_the_driver_cannot_store_keeps_the_spark_write(
+    spark, tmp_path, monkeypatch
+):
+    """A collected delta batch with a NULL ``lsn`` (``max_by`` skips it,
+    the Arrow twin does not) or with a column pyarrow would not store as
+    Spark does (a TimestampNTZ, which INT96 cannot hold) is reduced and
+    written by Spark, and reads back."""
+    tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=8).create(PAYLOAD)
+    convs = [f"conv_{i:03d}" for i in range(50)]
+    tbl.merge(_insert_batch(spark, convs, 0), 0, (0, 49))
+    monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", -1)  # delta
+    seen = dt.datetime(2024, 1, 2, 3, 4, 5)
+    batches = [
+        # one conv_id: the NULL lsn shares its stats group with lsn 100
+        _events(spark, [(100, "U", convs[1], 0, "v2"), (None, "U", convs[1], 1, "v2")]),
+        _insert_batch(spark, convs[3:6], 200, "v3").withColumn(
+            "seen", F.lit(seen).cast("timestamp_ntz")
+        ),
+    ]
+    for i, batch in enumerate(batches):
+        tbl.merge(_one_file(batch, str(tmp_path / f"b{i}")), i + 1)
+        assert tbl.snapshot().summary["operation"] == "delta"
+        assert "driver" not in tbl.snapshot().summary
+    got = {
+        (r["conv_id"], r["turn_idx"]): (r["text"], r["seen"])
+        for r in tbl.read().collect()
+    }
+    assert got[convs[1], 0] == ("v2", None)
+    assert got[convs[4], 0] == (f"v3:{convs[4]}", seen)
+    _assert_every_part_file_listed(tbl)
