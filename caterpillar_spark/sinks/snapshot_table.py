@@ -30,22 +30,24 @@ Scale design (100 TB / 1000 executors):
   rewritten — a 1%-of-keyspace batch rewrites ~1% of table bytes;
 - small batches take the **merge-on-read delta path**: the reduced batch is
   appended as residue-class delta files, at most one per core, and one
-  for a one-partition batch (write volume and commit metadata O(batch),
-  zero table rewrite); the read path LWW-reduces base∪delta by ``_lsn``
-  and ``compact()`` folds deltas back into unique-key base files —
-  Iceberg's MoR/compaction lifecycle;
-- a one-partition batch the optimizer sizes at most ``_DRIVER_BYTES``
-  (a streaming micro-batch) is **merged on the driver** when it goes
-  delta: one ``toArrow()`` collect is its only Spark job, and its stats,
-  LWW reduce and one-file parquet write run in pyarrow. A job's fixed
-  planning, codegen and scheduling cost exceeds such a batch's rows;
-  the bound caps the driver memory the collected batch takes;
+  for a one-partition or driver-merged batch (write volume and commit
+  metadata O(batch), zero table rewrite); the read path LWW-reduces
+  base∪delta by ``_lsn`` and ``compact()`` folds deltas back into
+  unique-key base files — Iceberg's MoR/compaction lifecycle;
+- a batch the optimizer sizes at most ``_DRIVER_BYTES`` (a streaming
+  micro-batch of any number of files) is **merged on the driver** when it
+  goes delta: one ``toArrow()`` collect is its only Spark job, and its
+  stats, LWW reduce and one-file parquet write run in pyarrow. A job's
+  fixed planning, codegen and scheduling cost exceeds such a batch's
+  rows; the bound caps the driver memory the collected batch takes;
 - ``maintain()`` bounds the delta backlog in two tiers, both decided from
   the log's footer stats with no Spark job, like an LSM tree's minor and
   major compactions: a **fold** LWW-reduces the live delta files alone
-  into ONE delta file (reads and writes O(backlog), never a base file),
-  and only a bucket whose delta rows reach a fraction of its base rows
-  (or whose base is fragmented) has its base rewritten by ``compact()``;
+  into ONE delta file (reads and writes O(backlog), never a base file;
+  a backlog of at most ``_DRIVER_BYTES`` on disk is read, reduced and
+  written on the driver, with no Spark job), and only a bucket whose
+  delta rows reach a fraction of its base rows (or whose base is
+  fragmented) has its base rewritten by ``compact()``;
 - deletes are tombstones (``_deleted``), so row-level merge is idempotent
   and commutative under re-delivery; ``compact()`` drops them later;
 - the merge reduction is a hash aggregate (``max_by``) with map-side
@@ -86,24 +88,25 @@ _FOLD_FILES = 4
 # of its base rows, or its base is split into this many files
 _MAJOR_DELTA_FRAC = 0.5
 _MAX_BASE_FILES = 8
-# a one-partition batch whose optimizer size estimate is at most this many
-# bytes is merged on the driver: collected once as Arrow, it is held whole
+# a batch whose optimizer size estimate is at most this many bytes is
+# merged on the driver, and a delta backlog of at most this many bytes on
+# disk is folded there: collected or read once as Arrow, it is held whole
 # in driver memory, with its reduced copy and its parquet encoding
 _DRIVER_BYTES = 1 << 20
-# the column types a driver-merged delta file may hold: pyarrow writes them
-# as Spark's parquet writer does (timestamps as INT96, Spark's default).
-# Others keep the Spark write: a TimestampNTZ, say, written as INT96 would
-# not read back as one
+# the column types a driver-written delta file may hold: pyarrow writes
+# them as Spark's parquet writer does (timestamps as INT96, Spark's
+# default). Others keep the Spark write: a TimestampNTZ, say, written as
+# INT96 would not read back as one
 _DRIVER_TYPES = (
     T.StringType, T.BinaryType, T.BooleanType, T.ByteType, T.ShortType,
     T.IntegerType, T.LongType, T.FloatType, T.DoubleType, T.DateType,
     T.TimestampType,
 )
-# a batch's per-bucket (min conv_id, max conv_id, rows); None = unknown range
-KeyStats = dict[int, tuple[str | None, str | None, int]]
+# a batch's per-bucket (min conv_id, max conv_id, rows)
+KeyStats = dict[int, tuple[str, str, int]]
 # one group of a batch's stats: (source partition, bucket, rows, min lsn,
-# max lsn, min conv_id, max conv_id), min/max None when all are NULL
-StatRow = tuple[int, int, int, int | None, int | None, str | None, str | None]
+# max lsn, min conv_id, max conv_id)
+StatRow = tuple[int, int, int, int, int, str, str]
 
 # the one declaration of a lineage row (stored as a JSON object in this
 # field order in each snapshot's ``lineage``)
@@ -142,19 +145,24 @@ def _fold_stats(
     for r in rows:
         by_sp[r[0]] = by_sp.get(r[0], 0) + r[2]
         by_b.setdefault(r[1], []).append(r)
-    # a group whose conv_ids are all NULL has no min/max: its bucket's
-    # key range degrades to unknown (conservative: overlaps() keeps
-    # every file a candidate) instead of raising min(str, None)
-    # (ADVICE r2)
-    incoming: KeyStats = {}
-    for b, g in by_b.items():
-        n = sum(r[2] for r in g)
-        if any(r[5] is None for r in g):
-            incoming[b] = (None, None, n)
-        else:
-            incoming[b] = (min(r[5] for r in g), max(r[6] for r in g), n)
+    incoming: KeyStats = {
+        b: (min(r[5] for r in g), max(r[6] for r in g), sum(r[2] for r in g))
+        for b, g in by_b.items()
+    }
     lsn_range = (min(r[3] for r in rows), max(r[4] for r in rows))
     return lsn_range, sorted(by_sp.items()), incoming
+
+
+def _refuse_nulls(null_lsns: int, null_keys: int) -> None:
+    """Raise if a change batch holds a NULL ``lsn`` or ``conv_id``: LWW by
+    LSN cannot order the one, and the other has no bucket or key range,
+    so a merge would drop or duplicate rows without a word."""
+    if null_lsns or null_keys:
+        raise ValueError(
+            f"change batch holds {null_lsns} row(s) with a NULL lsn and "
+            f"{null_keys} with a NULL conv_id; merge refuses both: split "
+            "them off first with operators.quarantine.validate_change_events"
+        )
 
 
 # --------------------------------------------------------------- routing
@@ -275,6 +283,37 @@ class SnapshotTable:
         if not paths:
             return self.spark.createDataFrame([], schema)
         return self.spark.read.schema(schema).parquet(*sorted(paths))
+
+    def _read_arrow(self, snap: Snapshot, paths: list[str]) -> pa.Table:
+        """The driver twin of :meth:`_read_files`: the raw stored rows of
+        the given files (one or more) as one Arrow table in the stored schema, with the
+        types ``toArrow()`` yields (a ``TimestampType`` as
+        ``timestamp[us, tz=UTC]``) and a file written before a column
+        existed giving typed NULLs for it. Each file is read whole through
+        ``pq.ParquetFile``: ``pq.read_table`` would import
+        ``pyarrow.dataset``, which alone adds ~36 MB to the driver's RSS."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        schema = pa.schema(
+            (f.name, to_arrow_type(f.dataType)) for f in self._stored_schema(snap).fields
+        )
+        tables = []
+        for p in sorted(paths):
+            t = pq.ParquetFile(p, coerce_int96_timestamp_unit="us").read()
+            tables.append(
+                pa.Table.from_arrays(
+                    [
+                        t.column(f.name).cast(f.type)
+                        if f.name in t.column_names
+                        else pa.nulls(t.num_rows, f.type)
+                        for f in schema
+                    ],
+                    schema=schema,
+                )
+            )
+        return pa.concat_tables(tables)
 
     @staticmethod
     def _listed_by(snap: Snapshot, buckets: set[int], klo=None, khi=None) -> list[str]:
@@ -424,8 +463,9 @@ class SnapshotTable:
     ) -> tuple[dict[str, tuple[list[int], bool]], float]:
         """LWW-reduce ``rows`` (stored columns) and write them into a fresh
         data dir of ``version``: the Spark write path of every commit that
-        writes data (a delta merge of a batch collected to the driver
-        writes through its twin, :meth:`_write_arrow`). Returns
+        writes data (a delta merge of a batch collected to the driver and
+        a fold of a backlog read on the driver write through its twin,
+        :meth:`_write_arrow`). Returns
         ``commit_next``'s ``added`` and the call's wall seconds.
 
         The write runs one task per residue class. ``rows`` is shuffled
@@ -518,21 +558,26 @@ class SnapshotTable:
         and lsn): whether Spark reads the batch as one partition, its LSN
         range (None if empty), rows per source partition (-1 for rows
         without one), per-bucket ``(min_key, max_key, rows)``, and the
-        batch itself as Arrow if the pass collected it (else None).
+        batch itself as Arrow if the pass collected it (else None). It
+        raises ``ValueError`` if a row has a NULL ``lsn`` or ``conv_id``.
 
-        A one-partition batch (a one-file streaming trigger) is counted
-        from its plan (:func:`~caterpillar_spark.plans.input_partitions`,
-        no job). If its conv_id is a string and the optimizer sizes it at
+        If the batch's conv_id is a string and the optimizer sizes it at
         most ``_DRIVER_BYTES`` (:func:`~caterpillar_spark.plans.size_estimate`,
-        no job), the pass is ``toArrow()``, one job of one task, and the
-        stats are computed on the driver from the collected columns, which
-        the merge may then reduce and write there too. Any other
-        one-partition batch is aggregated in its own task: ``coalesce(1)``
-        satisfies the groupBy, so the pass is one job of one task, with
-        no shuffle. Both feed the same grouped rows to one fold."""
+        no job), the pass is ``toArrow()``, one job of one task per input
+        partition, and the stats are computed on the driver from the
+        collected columns, which the merge may then reduce and write there
+        too. Else Spark aggregates them. A batch Spark reads as one
+        partition (a one-file streaming trigger, counted from its plan by
+        :func:`~caterpillar_spark.plans.input_partitions`, no job) is
+        aggregated in its own task: ``coalesce(1)`` satisfies the groupBy,
+        so the pass is one job of one task, with no shuffle. Both feed the
+        same grouped rows to one fold; the Spark aggregate counts NULLs by
+        comparing ``count(col)`` with ``count(*)``, the driver reads each
+        column's ``null_count``."""
         one_task = input_partitions(df) == 1
-        if one_task and self._driver_sized(df):
+        if self._driver_sized(df):
             batch = df.toArrow()
+            _refuse_nulls(batch.column("lsn").null_count, batch.column("conv_id").null_count)
             return (one_task, *_fold_stats(self._arrow_stat_rows(batch)), batch)
         if one_task:
             df = df.coalesce(1)
@@ -547,16 +592,19 @@ class SnapshotTable:
                 F.max("lsn").alias("hi"),
                 F.min("conv_id").alias("klo"),
                 F.max("conv_id").alias("khi"),
+                F.count("lsn").alias("n_lsn"),
+                F.count("conv_id").alias("n_key"),
             )
             .collect()
         )
-        return (one_task, *_fold_stats(rows), None)
+        _refuse_nulls(sum(r.n - r.n_lsn for r in rows), sum(r.n - r.n_key for r in rows))
+        return (one_task, *_fold_stats(r[:7] for r in rows), None)
 
     @staticmethod
     def _driver_sized(df: DataFrame) -> bool:
-        """Whether a one-partition batch is merged on the driver: its
-        conv_id is a string (so :func:`murmur3_hash_bytes` routes it) and
-        its size estimate is at most ``_DRIVER_BYTES``."""
+        """Whether a batch is merged on the driver: its conv_id is a string
+        (so :func:`murmur3_hash_bytes` routes it) and its size estimate is
+        at most ``_DRIVER_BYTES``."""
         key = next((f.dataType for f in df.schema.fields if f.name == "conv_id"), None)
         if not isinstance(key, T.StringType):
             return False
@@ -565,10 +613,9 @@ class SnapshotTable:
 
     def _arrow_stat_rows(self, batch: pa.Table) -> list[StatRow]:
         """The stats aggregate's grouped rows, from a collected batch's
-        columns: a row's bucket is ``murmur3_hash_bytes(conv_id) % n``, and
-        a NULL conv_id's is ``42 % n``, since Spark's ``hash(NULL)`` is
-        the seed. min/max skip NULLs, as Spark's do."""
-        n, buckets = self.n_buckets, {None: 42 % self.n_buckets}
+        columns, which hold no NULL ``lsn`` or ``conv_id``: a row's bucket
+        is ``murmur3_hash_bytes(conv_id) % n``."""
+        n, buckets = self.n_buckets, {}
         sps = (
             batch.column("source_partition").to_pylist()
             if "source_partition" in batch.column_names
@@ -584,12 +631,8 @@ class SnapshotTable:
             groups.setdefault(group, []).append((lsn, key))
         rows = []
         for (sp, b), g in groups.items():
-            lsns = [v for v, _ in g if v is not None]
-            keys = [k for _, k in g if k is not None]
-            rows.append((
-                sp, b, len(g), min(lsns, default=None), max(lsns, default=None),
-                min(keys, default=None), max(keys, default=None),
-            ))
+            lsns, keys = zip(*g)
+            rows.append((sp, b, len(g), min(lsns), max(lsns), min(keys), max(keys)))
         return rows
 
     def merge(
@@ -632,13 +675,16 @@ class SnapshotTable:
         ``coalesce(1)``, and if it goes delta, the LWW reduce and the
         write run in that one task too and write one file, the class of
         m = 1 — two one-task jobs and no shuffle. If the stats pass
-        collected such a batch to the driver (a string conv_id, at most
-        ``_DRIVER_BYTES`` by the optimizer's estimate) and it goes delta,
-        the driver reduces and writes that one file itself
-        (:meth:`_write_arrow`): the collect is the merge's only job.
-        A batch with a NULL ``lsn`` or a column type outside
-        ``_DRIVER_TYPES`` keeps the Spark write; a collected batch that
-        goes CoW takes the Spark path as well.
+        collected the batch to the driver (a string conv_id, at most
+        ``_DRIVER_BYTES`` by the optimizer's estimate, any number of
+        partitions) and it goes delta, the driver reduces and writes one
+        file itself (:meth:`_write_arrow`): the collect is the merge's
+        only job. A batch with a column type outside ``_DRIVER_TYPES``
+        keeps the Spark write; a collected batch that goes CoW takes the
+        Spark path as well. A batch with a NULL ``lsn`` or ``conv_id``
+        raises ``ValueError`` in the stats pass, before any write:
+        ``operators.quarantine.validate_change_events`` splits such rows
+        off.
 
         Either path commits data + offset ledger + lineage in ONE atomic
         snapshot create, whose ``summary`` holds the merge's ``operation``
@@ -646,10 +692,11 @@ class SnapshotTable:
         its phase seconds: ``stats_pass_s`` (the :meth:`_batch_stats`
         call, the collect included), ``plan_s`` (entry to the write call,
         less the stats pass), ``write_s`` (the :meth:`_write` call:
-        shuffle, reduce, parquet write and file listing, or the
-        :meth:`_write_arrow` call: reduce and parquet write; 0 for an
-        empty batch) and the commit's ``footer_s``. A driver-merged
-        batch's summary adds ``driver: true``. Semantics = Iceberg ``MERGE
+        shuffle, reduce, parquet write and file listing, or the stored
+        columns' build and the :meth:`_write_arrow` call: reduce and
+        parquet write; 0 for an empty batch) and the commit's
+        ``footer_s``. A driver-merged batch's summary adds ``driver:
+        true``. Semantics = Iceberg ``MERGE
         INTO t USING u ON key WHEN MATCHED AND op='D' THEN DELETE / WHEN
         MATCHED THEN UPDATE / WHEN NOT MATCHED AND op<>'D' THEN INSERT``
         (SURVEY.md §7.2) under LWW-by-``lsn``.
@@ -733,7 +780,6 @@ class SnapshotTable:
         if (
             use_delta
             and batch is not None
-            and not batch.column("lsn").null_count  # max_by skips NULL lsns
             and all(
                 isinstance(f.dataType, _DRIVER_TYPES)
                 for f in [*updates.schema.fields, *evolved.fields]
@@ -741,8 +787,10 @@ class SnapshotTable:
         ):
             # the collected batch: reduced and written on the driver
             phases.update(plan_s=plan_s(), driver=True)
-            added, phases["write_s"] = self._write_arrow(
-                new_version, batch, evolved, incoming_stats
+            added, phases["write_s"] = _timed(
+                lambda: self._write_arrow(
+                    new_version, self._stored_arrow(batch, evolved), incoming_stats
+                )
             )
         else:
             # :meth:`_write`'s residue-class repartition BEFORE the reduce
@@ -796,28 +844,15 @@ class SnapshotTable:
             ),
         )
 
-    def _write_arrow(
-        self,
-        version: int,
-        batch: pa.Table,
-        evolved: T.StructType,
-        touched: Iterable[int],
-    ) -> tuple[dict[str, tuple[list[int], bool]], float]:
-        """The driver twin of a one-task delta :meth:`_write`, over a
-        collected change batch: it builds the :meth:`_stored_rows`
-        columns, reduces them with
-        :func:`~caterpillar_spark.operators.dedup.last_writer_wins_arrow`
-        and writes ONE parquet file, class 0 of m = 1, into a fresh data
-        dir of ``version``, listed by every bucket of ``touched``. The
-        file's physical schema is a Spark-written delta file's: the same
-        column order and nullability, and timestamps as INT96. Returns
-        ``commit_next``'s ``added`` and the call's wall seconds."""
+    @staticmethod
+    def _stored_arrow(batch: pa.Table, evolved: T.StructType) -> pa.Table:
+        """A collected change batch as stored rows, the driver twin of
+        :meth:`_stored_rows`: the ``evolved`` payload columns (typed NULLs
+        where the batch lacks one), then ``_lsn`` and ``_deleted``."""
         import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_type
 
-        t = time.perf_counter()
         cols, fields = [], []
         for f in evolved.fields:
             if f.name in batch.column_names:
@@ -832,14 +867,27 @@ class SnapshotTable:
             batch.schema.field("lsn").with_name("_lsn"),
             pa.field("_deleted", pa.bool_()),
         ]
-        rows = last_writer_wins_arrow(
-            pa.Table.from_arrays(cols, schema=pa.schema(fields)), KEY, "_lsn"
-        )
+        return pa.Table.from_arrays(cols, schema=pa.schema(fields))
+
+    def _write_arrow(
+        self, version: int, rows: pa.Table, touched: Iterable[int]
+    ) -> dict[str, tuple[list[int], bool]]:
+        """The driver twin of a one-task delta :meth:`_write`, for a driver
+        merge and a driver fold: it reduces ``rows`` (stored columns) with
+        :func:`~caterpillar_spark.operators.dedup.last_writer_wins_arrow`,
+        tombstones kept, and writes ONE parquet file, class 0 of m = 1,
+        into a fresh data dir of ``version``, listed by every bucket of
+        ``touched``. The file's physical schema is a Spark-written delta
+        file's: the same column order and nullability, and timestamps as
+        INT96. Returns ``commit_next``'s ``added``."""
+        import pyarrow.parquet as pq
+
+        rows = last_writer_wins_arrow(rows, KEY, "_lsn")
         data_dir = self.log.new_data_dir(version)
         os.makedirs(data_dir)
         path = os.path.join(data_dir, f"part-00000-{uuid.uuid4()}.snappy.parquet")
         pq.write_table(rows, path, use_deprecated_int96_timestamps=True)
-        return {path: (sorted(touched), True)}, round(time.perf_counter() - t, 4)
+        return {path: (sorted(touched), True)}
 
     # ------------------------------------------------------------ compact
     def compact(
@@ -853,7 +901,7 @@ class SnapshotTable:
         :meth:`maintain` compacts the buckets whose delta rows grew, leaving
         the cold ones byte-untouched). The subset is widened to its closure
         over shared delta files: a delta file holds one residue class (a
-        one-partition batch's or a fold's file, every bucket it touched),
+        one-file delta merge's or a fold's file, every bucket it touched),
         so every bucket that lists it is rewritten too — cold class-mates
         included — and the file is dropped from all of them at once.
         Dropping it from only some would let a full read see an update
@@ -901,14 +949,20 @@ class SnapshotTable:
           count each delta file it lists at ``rows / (buckets listing
           it)``, the file's rows spread over its buckets.
         - **minor (fold)**: else, once ``_FOLD_FILES`` distinct delta
-          files are live, LWW-reduce those files alone, in one task, into
-          ONE delta file and list it under every bucket that listed any of
-          them. The file keeps its tombstones: they still shadow base
-          rows. Since LWW by ``_lsn`` is associative and no base file is
-          touched, a full read reduces base ∪ that file to the same
-          winners; the fold reads and writes O(delta backlog), not
-          O(table). Its commit changes no ledger or lineage, and its
-          ``summary`` holds ``operation`` ``fold`` and ``write_s``.
+          files are live, LWW-reduce those files alone into ONE delta file
+          and list it under every bucket that listed any of them. The file
+          keeps its tombstones: they still shadow base rows. Since LWW by
+          ``_lsn`` is associative and no base file is touched, a full read
+          reduces base ∪ that file to the same winners; the fold reads and
+          writes O(delta backlog), not O(table). If the live delta files
+          sum to at most ``_DRIVER_BYTES`` on disk, conv_id is a string
+          and every stored column type is in ``_DRIVER_TYPES``, the driver
+          reads (:meth:`_read_arrow`), reduces and writes
+          (:meth:`_write_arrow`) the backlog with no Spark job; else one
+          Spark task does. Its commit changes no ledger or lineage, and
+          its ``summary`` holds ``operation`` ``fold`` and ``write_s``
+          (the read, reduce and write), plus ``driver: true`` for a
+          driver fold.
 
         Returns the new version, or the current one if neither tier is
         due. This is the background loop a 10^10-event deployment runs
@@ -933,15 +987,36 @@ class SnapshotTable:
         live = [p for p, e in snap.files.items() if e["delta"]]
         if len(live) < _FOLD_FILES:
             return snap.version
-        # one task, no shuffle: the single class of m = 1, listed by every
-        # bucket that listed a folded file
-        added, write_s = self._write(
-            snap.version + 1,
-            self._read_files(snap, live),
-            touched={b for p in live for b in snap.files[p]["buckets"]},
-            one_task=True,
-        )
+        # one file, the single class of m = 1, listed by every bucket that
+        # listed a folded file
+        version, summary = snap.version + 1, {"operation": "fold"}
+        touched = {b for p in live for b in snap.files[p]["buckets"]}
+        if self._driver_foldable(snap, live):
+            # two live delta files never hold the same (conv_id, turn_idx,
+            # _lsn): the ledger applies an LSN range once and a fold
+            # removes its inputs. So the order the files are read in never
+            # decides a winner
+            summary["driver"] = True
+            added, summary["write_s"] = _timed(
+                lambda: self._write_arrow(version, self._read_arrow(snap, live), touched)
+            )
+        else:
+            added, summary["write_s"] = self._write(
+                version, self._read_files(snap, live), touched=touched, one_task=True
+            )
         return self.log.commit_next(
-            snap, self.n_buckets, added=added, removed=live,
-            summary={"operation": "fold", "write_s": write_s},
+            snap, self.n_buckets, added=added, removed=live, summary=summary
+        )
+
+    def _driver_foldable(self, snap: Snapshot, live: list[str]) -> bool:
+        """Whether the fold of the ``live`` delta files runs on the driver:
+        conv_id is a string, every stored column type is one pyarrow writes
+        as Spark does, and the files sum to at most ``_DRIVER_BYTES`` on
+        disk (manifest entries hold no byte count)."""
+        fields = self._stored_schema(snap).fields
+        return (
+            all(isinstance(f.dataType, _DRIVER_TYPES) for f in fields)
+            and any(f.name == "conv_id" and isinstance(f.dataType, T.StringType)
+                    for f in fields)
+            and sum(map(os.path.getsize, live)) <= _DRIVER_BYTES
         )

@@ -14,7 +14,8 @@ data dirs no committed snapshot references (`expire_snapshots` — also
 collects orphan dirs from crashed/losing writers). ``--full-compact``
 rewrites everything, restoring the reduction-free read path; it purges
 tombstones only with ``--drop-tombstones``. The JSON line's ``operation`` names what ran: ``compact``,
-``fold`` or null.
+``fold`` or null, and ``driver`` whether it ran on the driver with no
+Spark job (a fold of a small backlog), null when nothing ran.
 """
 
 from __future__ import annotations
@@ -42,6 +43,7 @@ def main() -> None:
         v1 = table.compact(drop_tombstones=args.drop_tombstones)
     else:
         v1 = table.maintain()
+    summary = table.snapshot(v1).summary if v1 > v0 else {}
     removed = table.expire_snapshots(keep_last=args.expire_keep_last)
     print(
         json.dumps(
@@ -50,8 +52,8 @@ def main() -> None:
                 "version_before": v0,
                 "version_after": v1,
                 "compacted": v1 > v0,
-                "operation": table.snapshot(v1).summary.get("operation")
-                if v1 > v0 else None,
+                "operation": summary.get("operation"),
+                "driver": summary.get("driver", False) if summary else None,
                 "expired_dirs": len(removed),
             }
         )

@@ -65,6 +65,7 @@ def test_replay_job_batch_then_maintain(spark, tmp_path, monkeypatch, capsys):
     maintain_job.main()
     m = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert m["version_before"] == v0 and m["version_after"] > v0 and m["compacted"]
+    assert m["operation"] == "compact" and m["driver"] is False
 
     # compaction must preserve state
     tbl2 = SnapshotTable(spark, table_dir)
@@ -93,3 +94,31 @@ def test_maintain_job_incremental_noop(spark, tmp_path, monkeypatch, capsys):
     maintain_job.main()
     m = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert m["compacted"] is False and m["version_after"] == m["version_before"]
+    assert m["operation"] is None and m["driver"] is None
+
+
+def test_maintain_job_reports_a_driver_fold(spark, tmp_path, monkeypatch, capsys):
+    """Four small delta batches: the incremental maintain folds them on
+    the driver, and the JSON line says so."""
+    from pyspark.sql import types as T
+
+    from caterpillar_spark.sinks import snapshot_table
+    from caterpillar_spark.sinks.snapshot_table import SnapshotTable
+
+    table_dir = str(tmp_path / "table")
+    tbl = SnapshotTable(spark, table_dir, n_buckets=4).create(T.StructType([
+        T.StructField("conv_id", T.StringType()),
+        T.StructField("turn_idx", T.IntegerType()),
+        T.StructField("text", T.StringType()),
+    ]))
+    events = "lsn long, op string, conv_id string, turn_idx int, text string"
+    tbl.merge(spark.createDataFrame([(i, "I", f"c{i}", 0, "a") for i in range(40)], events), 0)
+    monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", -1)  # delta
+    for i in range(4):
+        tbl.merge(spark.createDataFrame([(100 + i, "U", "c1", 0, f"v{i}")], events), 1 + i)
+
+    maintain_job = _load("maintain_job")
+    monkeypatch.setattr(sys, "argv", ["maintain_job.py", "--table", table_dir])
+    maintain_job.main()
+    m = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert m["operation"] == "fold" and m["driver"] is True

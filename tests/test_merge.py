@@ -3,6 +3,7 @@ schema evolution, compaction, lineage manifest."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -423,19 +424,14 @@ def test_stats_pass_runs_at_most_once_per_batch(spark, tmp_path, monkeypatch):
 
 
 def test_apply_changes_null_key_group_stats(spark, tmp_path):
-    """ADVICE r2: a bucket whose stats groups mix all-NULL conv_id with
-    non-null ones must degrade its key range to unknown (conservative),
-    not crash on min(str, None); likewise a NULL source_partition is
-    counted as lineage partition -1, not a crash on int(None)."""
+    """A batch with NULL conv_ids raises before it writes anything, with
+    the count and the quarantine to route such rows through (a NULL key
+    has no bucket or key range, so a merge could leave two live rows for
+    it); a NULL source_partition is counted as lineage partition -1."""
     import datetime
-
-    from caterpillar_spark.cdc import apply_changes
 
     ts = datetime.datetime(2024, 1, 1)
     tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=2).create(PAYLOAD)
-    # non-null keys on partition 1 cover BOTH buckets; partition 2
-    # contributes an all-null group -> its bucket accumulates a known
-    # range with an unknown one
     rows = [
         (i, 1, "U", f"c{i}", 0, "user", "a", None, ts) for i in range(8)
     ] + [
@@ -448,12 +444,16 @@ def test_apply_changes_null_key_group_stats(spark, tmp_path):
         "lsn long, source_partition int, op string, conv_id string, "
         "turn_idx int, role string, text string, tool string, ts timestamp",
     )
-    res = apply_changes(events, tbl, batch_id=0)  # offset_range=None path
-    assert res.snapshot_version >= 1
-    assert tbl.read().count() >= 1
+    with pytest.raises(ValueError, match="2 with a NULL conv_id") as err:
+        apply_changes(events, tbl, batch_id=0)  # offset_range=None path
+    assert "validate_change_events" in str(err.value)
+    assert tbl.current_version() == 0
+    res = apply_changes(events.filter("conv_id IS NOT NULL"), tbl, batch_id=0)
+    assert res.snapshot_version == 1
+    assert tbl.read().count() == 9
     # a row without a source partition is counted as partition -1
     got = {r["partition"]: r["rows_applied"] for r in tbl.manifest().collect()}
-    assert got == {-1: 1, 1: 8, 2: 2}
+    assert got == {-1: 1, 1: 8}
 
 
 def test_merge_column_cache_reused_across_batches_and_handles(spark, tmp_path):

@@ -12,7 +12,7 @@ import datetime as dt
 from unittest.mock import patch
 
 import pandas as pd
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import types as T
 
@@ -41,6 +41,10 @@ THRESHOLD = {
     "delta": -1,
     "driver": -1,
 }
+
+# the fold path after a chunk: none, or a maintain() that folds once two
+# delta files are live (never a base rewrite) on the driver or on Spark
+FOLD_BYTES = {"driver": snapshot_table._DRIVER_BYTES, "spark": 0}
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -80,8 +84,16 @@ def change_stream(draw):
         draw(st.sampled_from(["auto", "cow", "delta", "driver"]))
         for _ in range(n_chunks)
     ]
+    folds = [
+        draw(st.sampled_from(["none", "driver", "spark"])) for _ in range(n_chunks)
+    ]
     compact_at_end = draw(st.booleans())
-    return events, n_chunks, modes, compact_at_end
+    return events, n_chunks, modes, folds, compact_at_end
+
+
+def _event(lsn, op, conv, turn, text):
+    return (lsn, op, conv, turn, None if op == "D" else "user", text, None,
+            dt.datetime(2024, 1, 1) + dt.timedelta(seconds=lsn))
 
 
 def _batch(spark, chunk, mode):
@@ -113,8 +125,13 @@ def _expected(events):
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large],
 )
 @given(change_stream())
+@example((
+    [_event(0, "I", "c0", 0, "a"), _event(1, "D", "c1", 0, None),
+     _event(2, "D", "c0", 0, None), _event(3, "I", "c0", 0, "b")],
+    2, ["driver", "delta"], ["none", "driver"], False,
+))
 def test_any_stream_reduces_correctly(spark, tmp_path_factory, stream):
-    events, n_chunks, modes, compact_at_end = stream
+    events, n_chunks, modes, folds, compact_at_end = stream
     tmp = tmp_path_factory.mktemp("prop")
     tbl = SnapshotTable(spark, str(tmp / "t"), n_buckets=4).create(PAYLOAD)
     sz = (len(events) + n_chunks - 1) // n_chunks
@@ -125,6 +142,16 @@ def test_any_stream_reduces_correctly(spark, tmp_path_factory, stream):
         with patch.object(snapshot_table, "_DELTA_THRESHOLD", THRESHOLD[modes[i]]):
             apply_changes(_batch(spark, chunk, modes[i]), tbl, batch_id=i)
         assert tbl.snapshot().summary.get("driver", False) == (modes[i] == "driver")
+        if folds[i] != "none":
+            v = tbl.current_version()
+            with patch.multiple(
+                snapshot_table, _FOLD_FILES=2, _MAJOR_DELTA_FRAC=float("inf"),
+                _DRIVER_BYTES=FOLD_BYTES[folds[i]],
+            ):
+                if tbl.maintain() > v:
+                    summary = tbl.snapshot().summary
+                    assert summary["operation"] == "fold"
+                    assert summary.get("driver", False) == (folds[i] == "driver")
     got = sorted(
         (r["conv_id"], r["turn_idx"], r["text"])
         for r in tbl.read().collect()

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import re
 
 import pyarrow.parquet as pq
 import pytest
@@ -480,7 +481,7 @@ def test_maintain_folds_the_delta_backlog_into_one_file(spark, tmp_path, monkeyp
     assert v == snap.version + 1
     snap2 = tbl.snapshot()
     assert snap2.summary["operation"] == "fold"
-    assert snap2.summary["write_s"] > 0
+    assert snap2.summary["write_s"] > 0 and snap2.summary["driver"] is True
     assert snap2.applied == snap.applied and snap2.lineage == []
     (fold,) = snap2.deltas[hot_b]
     assert fold not in snap.deltas[hot_b]
@@ -586,6 +587,82 @@ def test_a_fold_keeps_the_tombstone_that_shadows_a_base_row(spark, tmp_path, mon
     tbl.compact()
     assert not tbl.snapshot().has_deltas()
     assert _rows(tbl) == expected
+
+
+def _backlog(spark, tmp_path, name, monkeypatch) -> SnapshotTable:
+    """A 4-bucket table with a base and a backlog of delta files that
+    Spark and the driver wrote: an update, a tombstone over a base row, a
+    delete then a reinsert, and files written before and after an
+    additive ``lang`` column; every row has a ``ts``."""
+    tbl = SnapshotTable(spark, str(tmp_path / name), n_buckets=4).create(PAYLOAD)
+    convs = [f"conv_{i:06d}" for i in range(200)]
+    monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", float("inf"))  # CoW
+    tbl.merge(_insert_batch(spark, convs, 0), 0, (0, 199))
+    monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", -1)  # delta
+    batches = [
+        _events(spark, [(1000, "U", convs[1], 0, "v2"), (1001, "D", convs[2], 0, None)]),
+        _one_file(
+            _events(spark, [(1002, "D", convs[3], 0, None), (1003, "U", convs[1], 0, "v3")]),
+            str(tmp_path / f"{name}-b1"),
+        ),
+        _events(spark, [(1004, "I", convs[3], 0, "back")]).withColumn("lang", F.lit("en")),
+        _one_file(
+            _events(spark, [(1005, "I", "conv_new", 0, "new")]).withColumn(
+                "lang", F.lit("de")
+            ),
+            str(tmp_path / f"{name}-b3"),
+        ),
+    ]
+    for i, batch in enumerate(batches):
+        tbl.merge(batch, 1 + i)
+    assert len({p for p, e in tbl.snapshot().files.items() if e["delta"]}) >= 4
+    return tbl
+
+
+def test_the_arrow_reader_equals_the_spark_reader(spark, tmp_path, monkeypatch):
+    """``_read_arrow`` returns what ``_read_files(...).toArrow()`` does,
+    types included, over base files and delta files written by Spark and
+    by the driver, before and after an additive column."""
+    tbl = _backlog(spark, tmp_path, "t", monkeypatch)
+    snap = tbl.snapshot()
+    order = [(c, "ascending") for c in ("conv_id", "turn_idx", "_lsn")]
+    for paths in (
+        [p for p, e in snap.files.items() if e["delta"]],
+        list(snap.files),
+    ):
+        got = tbl._read_arrow(snap, paths).sort_by(order)
+        want = tbl._read_files(snap, paths).toArrow().sort_by(order)
+        assert got.schema == want.schema
+        assert got.to_pylist() == want.to_pylist()
+    assert {r["lang"] for r in got.to_pylist()} == {None, "en", "de"}
+    assert any(r["ts"] is not None for r in got.to_pylist())
+
+
+def test_a_driver_fold_equals_the_spark_fold_and_runs_no_job(
+    spark, tmp_path, monkeypatch, spark_jobs
+):
+    """The same backlog folded on the driver and by Spark (``_DRIVER_BYTES``
+    0) reads back the same rows, tombstones included. The driver fold
+    launches no Spark job, and its summary says ``driver: true``."""
+    tables = {name: _backlog(spark, tmp_path, name, monkeypatch) for name in ("driver", "spark")}
+    with spark_jobs("driver fold") as jobs:
+        tables["driver"].maintain()
+    assert jobs == []
+    monkeypatch.setattr(snapshot_table, "_DRIVER_BYTES", 0)
+    tables["spark"].maintain()
+    for name, tbl in tables.items():
+        summary = tbl.snapshot().summary
+        assert summary["operation"] == "fold"
+        assert summary.get("driver", False) == (name == "driver")
+        assert len({p for p, e in tbl.snapshot().files.items() if e["delta"]}) == 1
+        _assert_every_part_file_listed(tbl)
+    for read in ({}, {"include_deleted": True}):
+        d, s = (
+            sorted(map(tuple, tables[name].read(**read).collect()))
+            for name in ("driver", "spark")
+        )
+        assert d == s
+    assert ("conv_000003", 0, "user", "back") in {r[:4] for r in d}
 
 
 def test_full_delta_replay_matches_cow_replay(spark, tmp_path, monkeypatch):
@@ -925,6 +1002,51 @@ def test_one_partition_batch_past_the_driver_bound_merges_in_its_own_task(
     assert summary["operation"] == "delta" and "driver" not in summary
 
 
+def test_a_multi_file_trigger_merges_on_the_driver_in_one_job(
+    spark, tmp_path, monkeypatch, spark_jobs
+):
+    """A trigger of 4 segment files, which Spark reads as 4 partitions, is
+    merged on the driver when it goes delta: its one Spark job is the
+    ``toArrow()`` collect, one task per file."""
+    from caterpillar_spark.cdc import apply_changes
+    from caterpillar_spark.generator import (
+        GeneratorSpec,
+        change_events,
+        expected_final_state,
+        write_changelog_chunks,
+    )
+    from caterpillar_spark.streaming import stream_changelog
+
+    spec = GeneratorSpec(n_events=800, n_convs=40, turns_per_conv=5, seed=11)
+    log = str(tmp_path / "log")
+    write_changelog_chunks(spark, spec, log, n_chunks=4)
+    tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=8).create(PAYLOAD)
+    monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", -1)  # delta
+    triggers = []
+
+    def handle(batch, batch_id):
+        with spark_jobs("trigger") as jobs:
+            apply_changes(batch, tbl, batch_id=int(batch_id))
+        triggers.append([list(j.stage_tasks.values()) for j in jobs])
+
+    q = (
+        stream_changelog(spark, log, max_files_per_trigger=4)
+        .writeStream.foreachBatch(handle)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    assert triggers == [[[4]]]
+    summary = tbl.snapshot().summary
+    assert summary["operation"] == "delta" and summary["driver"] is True
+    _assert_every_part_file_listed(tbl)
+    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+    want = expected_final_state(change_events(spark, spec)).select(*cols)
+    got = tbl.read().select(*cols)
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
 def test_partial_compaction_after_a_one_file_delta_resurrects_nothing(
     spark, tmp_path, monkeypatch
 ):
@@ -1067,14 +1189,12 @@ def test_a_driver_delta_file_is_stored_as_a_spark_delta_file(
 def test_driver_stats_equal_the_spark_stats_pass(spark, tmp_path, monkeypatch):
     """The stats a collected batch gets on the driver equal the Spark
     stats pass's: LSN range, rows per source partition (NULL → -1) and
-    per-bucket key ranges. A NULL conv_id goes to bucket ``42 % n``
-    (Spark's ``hash(NULL)`` is the seed), and in a source partition of
-    its own it leaves that bucket's range unknown."""
+    per-bucket key ranges."""
     tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=8).create(PAYLOAD)
     rows = [(10 + i, "U", f"conv_{i:03d}", 0, "x") for i in range(40)]
-    rows += [(5, "I", None, 1, "null key"), (99, "D", "conv_007", 0, None)]
+    rows += [(5, "I", "conv_100", 1, "y"), (99, "D", "conv_007", 0, None)]
     sp = (
-        F.when(F.col("conv_id").isNull(), 9)
+        F.when(F.col("conv_id") == "conv_100", 9)
         .when(F.col("lsn") % 3 == 0, F.lit(None))
         .otherwise(F.col("lsn") % 2)
     )
@@ -1088,14 +1208,13 @@ def test_driver_stats_equal_the_spark_stats_pass(spark, tmp_path, monkeypatch):
     assert driver[4] is not None and on_spark[4] is None  # collected or not
     assert driver[:4] == on_spark[:4]
     assert driver[1] == (5, 99)
-    assert (9, 1) in driver[2] and driver[3][42 % 8][:2] == (None, None)
+    assert (9, 1) in driver[2] and (-1, 14) in driver[2]
 
 
 def test_a_batch_the_driver_cannot_store_keeps_the_spark_write(
     spark, tmp_path, monkeypatch
 ):
-    """A collected delta batch with a NULL ``lsn`` (``max_by`` skips it,
-    the Arrow twin does not) or with a column pyarrow would not store as
+    """A collected delta batch with a column pyarrow would not store as
     Spark does (a TimestampNTZ, which INT96 cannot hold) is reduced and
     written by Spark, and reads back."""
     tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=8).create(PAYLOAD)
@@ -1103,21 +1222,51 @@ def test_a_batch_the_driver_cannot_store_keeps_the_spark_write(
     tbl.merge(_insert_batch(spark, convs, 0), 0, (0, 49))
     monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", -1)  # delta
     seen = dt.datetime(2024, 1, 2, 3, 4, 5)
-    batches = [
-        # one conv_id: the NULL lsn shares its stats group with lsn 100
-        _events(spark, [(100, "U", convs[1], 0, "v2"), (None, "U", convs[1], 1, "v2")]),
-        _insert_batch(spark, convs[3:6], 200, "v3").withColumn(
-            "seen", F.lit(seen).cast("timestamp_ntz")
-        ),
-    ]
-    for i, batch in enumerate(batches):
-        tbl.merge(_one_file(batch, str(tmp_path / f"b{i}")), i + 1)
-        assert tbl.snapshot().summary["operation"] == "delta"
-        assert "driver" not in tbl.snapshot().summary
+    batch = _insert_batch(spark, convs[3:6], 200, "v3").withColumn(
+        "seen", F.lit(seen).cast("timestamp_ntz")
+    )
+    tbl.merge(_one_file(batch, str(tmp_path / "b")), 1)
+    assert tbl.snapshot().summary["operation"] == "delta"
+    assert "driver" not in tbl.snapshot().summary
     got = {
         (r["conv_id"], r["turn_idx"]): (r["text"], r["seen"])
         for r in tbl.read().collect()
     }
-    assert got[convs[1], 0] == ("v2", None)
+    assert got[convs[1], 0] == (f"v1:{convs[1]}", None)
     assert got[convs[4], 0] == (f"v3:{convs[4]}", seen)
     _assert_every_part_file_listed(tbl)
+
+
+@pytest.mark.parametrize("path", ["cow", "delta", "driver"])
+def test_merge_refuses_a_null_conv_id_or_lsn(spark, tmp_path, monkeypatch, path):
+    """A change batch with a NULL conv_id or lsn raises before it writes
+    anything, on the copy-on-write, Spark delta and driver delta paths.
+    The case a merge once took: a NULL-key row stored in an 8-bucket
+    table, then a CoW batch of a NULL-key update and a new key of bucket
+    ``42 % 8`` below the stored file's key range left two live NULL-key
+    rows, since the batch's key range skipped its NULL."""
+    tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=8).create(PAYLOAD)
+    convs = [f"conv_{i:03d}" for i in range(100)]
+    tbl.merge(_insert_batch(spark, convs, 0), 0, (0, 99))
+    low = next(f"a{i}" for i in range(1000) if tbl.bucket_for_key(f"a{i}") == 42 % 8)
+    monkeypatch.setattr(
+        snapshot_table, "_DELTA_THRESHOLD", float("inf") if path == "cow" else -1
+    )
+    if path == "delta":
+        monkeypatch.setattr(snapshot_table, "_DRIVER_BYTES", 0)
+
+    def batch(i, rows):
+        df = _events(spark, rows)
+        return _one_file(df, str(tmp_path / f"b{i}")) if path == "driver" else df
+
+    before = (tbl.current_version(), _rows(tbl))
+    null_key = batch(0, [(100, "I", None, 0, "null v1")])
+    both = batch(1, [(101, "U", None, 0, "null v2"), (102, "I", low, 0, "low")])
+    null_lsn = batch(2, [(103, "U", convs[1], 0, "v2"), (None, "U", convs[1], 1, "v2")])
+    for df, nulls in ((null_key, "0 row(s) with a NULL lsn and 1"),
+                      (both, "0 row(s) with a NULL lsn and 1"),
+                      (null_lsn, "1 row(s) with a NULL lsn and 0")):
+        with pytest.raises(ValueError, match=re.escape(nulls)) as err:
+            tbl.merge(df, 1)
+        assert "validate_change_events" in str(err.value)
+    assert (tbl.current_version(), _rows(tbl)) == before
