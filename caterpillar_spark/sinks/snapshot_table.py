@@ -13,27 +13,26 @@ placement. A write runs one task per residue class: it shuffles once, with
 ``repartition(m, conv_id)``, where m divides n and is at most the session's
 cores, and since ``pmod(h, n) mod m == pmod(h, m)``, shuffle partition r
 holds exactly the buckets ``b % m == r``. The same exchange satisfies the
-LWW aggregate's clustering. The one write without a shuffle is a delta
-merge of a batch Spark reads as one partition (a one-file streaming
-trigger): that partition is already the single class of m = 1, and
-``coalesce(1)`` satisfies the aggregate in place. A base write partitions
-each task's output by bucket id, so a task writes one file per bucket of
-its class into a ``<col>=<b>/`` directory that names the bucket; no
-per-row bucket column is stored. The bucket -> files pointers are exact
-(no co-hashed stale rows can survive a bucket rewrite). A DELTA file holds
-a whole residue class and is listed by exactly the buckets with rows in
-it; ``compact()`` drops it from all of them at once.
+LWW aggregate's clustering. The one Spark write without a shuffle is a
+fold, which must write one file: ``coalesce(1)`` makes its rows the
+single class of m = 1 and satisfies the aggregate in place. A base write
+partitions each task's output by bucket id, so a task writes one file per
+bucket of its class into a ``<col>=<b>/`` directory that names the
+bucket; no per-row bucket column is stored. The bucket -> files pointers
+are exact (no co-hashed stale rows can survive a bucket rewrite). A DELTA
+file holds a whole residue class and is listed by exactly the buckets
+with rows in it; ``compact()`` drops it from all of them at once.
 
 Scale design (100 TB / 1000 executors):
 - a merge prunes at FILE granularity on the per-file ``conv_id`` min/max
   the log records: only files whose key range overlaps the batch are
   rewritten — a 1%-of-keyspace batch rewrites ~1% of table bytes;
 - small batches take the **merge-on-read delta path**: the reduced batch is
-  appended as residue-class delta files, at most one per core, and one
-  for a one-partition or driver-merged batch (write volume and commit
-  metadata O(batch), zero table rewrite); the read path LWW-reduces
-  base∪delta by ``_lsn`` and ``compact()`` folds deltas back into
-  unique-key base files — Iceberg's MoR/compaction lifecycle;
+  appended as residue-class delta files, at most one per core, or one
+  for a driver-merged batch (write volume and commit metadata O(batch),
+  zero table rewrite); the read path LWW-reduces base∪delta by ``_lsn``
+  and ``compact()`` folds deltas back into unique-key base files —
+  Iceberg's MoR/compaction lifecycle;
 - a batch the optimizer sizes at most ``_DRIVER_BYTES`` (a streaming
   micro-batch of any number of files) is **merged on the driver** when it
   goes delta: one ``toArrow()`` collect is its only Spark job, and its
@@ -124,10 +123,10 @@ MANIFEST_SCHEMA = T.StructType(
 )
 
 
-def _timed(fn, *args):
-    """``fn(*args)`` and its wall seconds, rounded to 0.1 ms."""
+def _timed(fn, *args, **kwargs):
+    """``fn(*args, **kwargs)`` and its wall seconds, rounded to 0.1 ms."""
     t = time.perf_counter()
-    out = fn(*args)
+    out = fn(*args, **kwargs)
     return out, round(time.perf_counter() - t, 4)
 
 
@@ -151,6 +150,15 @@ def _fold_stats(
     }
     lsn_range = (min(r[3] for r in rows), max(r[4] for r in rows))
     return lsn_range, sorted(by_sp.items()), incoming
+
+
+def _driver_storable(fields: list[T.StructField]) -> bool:
+    """Whether the driver may store rows of these fields: conv_id is a
+    string (so :func:`murmur3_hash_bytes` routes it) and every type is
+    in ``_DRIVER_TYPES``. The size bound is the caller's."""
+    return all(isinstance(f.dataType, _DRIVER_TYPES) for f in fields) and any(
+        f.name == "conv_id" and isinstance(f.dataType, T.StringType) for f in fields
+    )
 
 
 def _refuse_nulls(null_lsns: int, null_keys: int) -> None:
@@ -444,9 +452,8 @@ class SnapshotTable:
         """Residue classes of a shuffled write, base or delta: the largest
         divisor of n_buckets that is at most the session's cores, so a
         write runs at most one task per core. Equals n_buckets (one
-        bucket per task) when the session has that many cores. A delta
-        merge of a one-partition batch uses m = 1 instead: its one task
-        already holds every class."""
+        bucket per task) when the session has that many cores. Only a
+        fold uses m = 1 instead (see :meth:`_write`)."""
         cores = self.spark.sparkContext.defaultParallelism
         return max(
             d for d in range(1, min(cores, self.n_buckets) + 1)
@@ -460,13 +467,12 @@ class SnapshotTable:
         touched: Iterable[int] | None = None,
         one_task: bool = False,
         drop_tombstones: bool = False,
-    ) -> tuple[dict[str, tuple[list[int], bool]], float]:
+    ) -> dict[str, tuple[list[int], bool]]:
         """LWW-reduce ``rows`` (stored columns) and write them into a fresh
         data dir of ``version``: the Spark write path of every commit that
         writes data (a delta merge of a batch collected to the driver and
         a fold of a backlog read on the driver write through its twin,
-        :meth:`_write_arrow`). Returns
-        ``commit_next``'s ``added`` and the call's wall seconds.
+        :meth:`_write_arrow`). Returns ``commit_next``'s ``added``.
 
         The write runs one task per residue class. ``rows`` is shuffled
         into m = :meth:`_write_classes` partitions with ``repartition(m,
@@ -475,9 +481,10 @@ class SnapshotTable:
         r``. AQE never coalesces an explicit ``repartition(m, col)``
         (REPARTITION_BY_NUM), so the mapping holds, and the LWW groupBy on
         (conv_id, ...) reuses this exchange instead of adding its own.
-        ``one_task`` (a one-partition batch, or a fold) skips the shuffle:
-        ``coalesce(1)`` is the single class of m = 1 and satisfies the
-        groupBy in place.
+        ``one_task`` is the fold's: it must write ONE file, since a fold
+        into m files would leave a backlog due again at the next
+        :meth:`maintain`. It skips the shuffle: ``coalesce(1)`` is the
+        single class of m = 1 and satisfies the groupBy in place.
 
         ``touched`` None is a base write: each task writes one file per
         bucket of its class under ``<col>=<b>/``, listed by that bucket.
@@ -488,7 +495,6 @@ class SnapshotTable:
         for a class without rows, in this fresh, unreferenced dir. Reads
         pass the file paths and a schema, so the directory adds no
         column."""
-        t = time.perf_counter()
         m = 1 if one_task else self._write_classes()
         rows = rows.coalesce(1) if one_task else rows.repartition(m, F.col("conv_id"))
         rows = last_writer_wins(rows, KEY, "_lsn")
@@ -525,7 +531,7 @@ class SnapshotTable:
                 d, f = os.path.split(p)
                 with contextlib.suppress(FileNotFoundError):  # its checksum
                     os.unlink(os.path.join(d, f".{f}.crc"))
-        return added, round(time.perf_counter() - t, 4)
+        return added
 
     @staticmethod
     def _files_by_key(data_dir: str, names: list[str]) -> dict[int, str]:
@@ -551,35 +557,33 @@ class SnapshotTable:
     # -------------------------------------------------------------- merge
     def _batch_stats(
         self, df: DataFrame
-    ) -> tuple[
-        bool, tuple[int, int] | None, list[tuple[int, int]], KeyStats, pa.Table | None
-    ]:
+    ) -> tuple[tuple[int, int] | None, list[tuple[int, int]], KeyStats, pa.Table | None]:
         """One narrow pass over a change batch (source_partition, conv_id
-        and lsn): whether Spark reads the batch as one partition, its LSN
-        range (None if empty), rows per source partition (-1 for rows
-        without one), per-bucket ``(min_key, max_key, rows)``, and the
-        batch itself as Arrow if the pass collected it (else None). It
-        raises ``ValueError`` if a row has a NULL ``lsn`` or ``conv_id``.
+        and lsn): its LSN range (None if empty), rows per source partition
+        (-1 for rows without one), per-bucket ``(min_key, max_key, rows)``,
+        and the batch itself as Arrow if the pass collected it (else None).
+        It raises ``ValueError`` if a row has a NULL ``lsn`` or ``conv_id``.
 
-        If the batch's conv_id is a string and the optimizer sizes it at
-        most ``_DRIVER_BYTES`` (:func:`~caterpillar_spark.plans.size_estimate`,
+        If the driver may store the batch's fields
+        (:func:`_driver_storable`) and the optimizer sizes it at most
+        ``_DRIVER_BYTES`` (:func:`~caterpillar_spark.plans.size_estimate`,
         no job), the pass is ``toArrow()``, one job of one task per input
         partition, and the stats are computed on the driver from the
         collected columns, which the merge may then reduce and write there
-        too. Else Spark aggregates them. A batch Spark reads as one
-        partition (a one-file streaming trigger, counted from its plan by
+        too. Else Spark aggregates them, and a batch Spark reads as one
+        partition (a one-file segment, counted from its plan by
         :func:`~caterpillar_spark.plans.input_partitions`, no job) is
         aggregated in its own task: ``coalesce(1)`` satisfies the groupBy,
         so the pass is one job of one task, with no shuffle. Both feed the
         same grouped rows to one fold; the Spark aggregate counts NULLs by
         comparing ``count(col)`` with ``count(*)``, the driver reads each
         column's ``null_count``."""
-        one_task = input_partitions(df) == 1
-        if self._driver_sized(df):
+        size = size_estimate(df) if _driver_storable(df.schema.fields) else None
+        if size is not None and size <= _DRIVER_BYTES:
             batch = df.toArrow()
             _refuse_nulls(batch.column("lsn").null_count, batch.column("conv_id").null_count)
-            return (one_task, *_fold_stats(self._arrow_stat_rows(batch)), batch)
-        if one_task:
+            return (*_fold_stats(self._arrow_stat_rows(batch)), batch)
+        if input_partitions(df) == 1:
             df = df.coalesce(1)
         sp = F.lit(-1)
         if "source_partition" in df.columns:
@@ -598,18 +602,7 @@ class SnapshotTable:
             .collect()
         )
         _refuse_nulls(sum(r.n - r.n_lsn for r in rows), sum(r.n - r.n_key for r in rows))
-        return (one_task, *_fold_stats(r[:7] for r in rows), None)
-
-    @staticmethod
-    def _driver_sized(df: DataFrame) -> bool:
-        """Whether a batch is merged on the driver: its conv_id is a string
-        (so :func:`murmur3_hash_bytes` routes it) and its size estimate is
-        at most ``_DRIVER_BYTES``."""
-        key = next((f.dataType for f in df.schema.fields if f.name == "conv_id"), None)
-        if not isinstance(key, T.StringType):
-            return False
-        size = size_estimate(df)
-        return size is not None and size <= _DRIVER_BYTES
+        return (*_fold_stats(r[:7] for r in rows), None)
 
     def _arrow_stat_rows(self, batch: pa.Table) -> list[StatRow]:
         """The stats aggregate's grouped rows, from a collected batch's
@@ -667,22 +660,17 @@ class SnapshotTable:
           batch with at least the table's rows therefore always takes CoW:
           its candidates hold at most the table's rows.
 
-        Both paths shuffle into the :meth:`_write_classes` residue
-        classes, so the write runs one task per class, not per bucket.
-        The exception is a batch that Spark reads as one partition
-        (:func:`~caterpillar_spark.plans.input_partitions`, counted by the
-        stats pass): its stats pass runs on
-        ``coalesce(1)``, and if it goes delta, the LWW reduce and the
-        write run in that one task too and write one file, the class of
-        m = 1 — two one-task jobs and no shuffle. If the stats pass
-        collected the batch to the driver (a string conv_id, at most
+        Both Spark paths shuffle into the :meth:`_write_classes` residue
+        classes, so the write runs one task per class, not per bucket. If
+        the stats pass collected the batch to the driver (at most
         ``_DRIVER_BYTES`` by the optimizer's estimate, any number of
         partitions) and it goes delta, the driver reduces and writes one
         file itself (:meth:`_write_arrow`): the collect is the merge's
-        only job. A batch with a column type outside ``_DRIVER_TYPES``
-        keeps the Spark write; a collected batch that goes CoW takes the
-        Spark path as well. A batch with a NULL ``lsn`` or ``conv_id``
-        raises ``ValueError`` in the stats pass, before any write:
+        only job. It does so only if the evolved schema passes
+        :func:`_driver_storable` too (the table may hold a column type
+        the batch lacks); else, and for a collected batch that goes CoW,
+        Spark writes. A batch with a NULL ``lsn`` or ``conv_id`` raises
+        ``ValueError`` in the stats pass, before any write:
         ``operators.quarantine.validate_change_events`` splits such rows
         off.
 
@@ -705,7 +693,7 @@ class SnapshotTable:
         stats = None
         if offset_range is None:
             stats, stats_s = _timed(self._batch_stats, updates)
-            offset_range = stats[1]
+            offset_range = stats[0]
             if offset_range is None:
                 return -1, None  # empty ad-hoc batch: no range to record
         snap = self.snapshot()
@@ -715,7 +703,7 @@ class SnapshotTable:
             return -1, None  # exactly-once: already applied
         if stats is None:
             stats, stats_s = _timed(self._batch_stats, updates)
-        one_task, _, partition_counts, incoming_stats, batch = stats
+        _, partition_counts, incoming_stats, batch = stats
         new_version = snap.version + 1
 
         def plan_s() -> float:  # the merge so far, less the stats pass
@@ -777,14 +765,7 @@ class SnapshotTable:
         phases = {"operation": "delta" if use_delta else "cow", "stats_pass_s": stats_s}
 
         # ---- reduce + write ----------------------------------------------
-        if (
-            use_delta
-            and batch is not None
-            and all(
-                isinstance(f.dataType, _DRIVER_TYPES)
-                for f in [*updates.schema.fields, *evolved.fields]
-            )
-        ):
+        if use_delta and batch is not None and _driver_storable(evolved.fields):
             # the collected batch: reduced and written on the driver
             phases.update(plan_s=plan_s(), driver=True)
             added, phases["write_s"] = _timed(
@@ -794,8 +775,7 @@ class SnapshotTable:
             )
         else:
             # :meth:`_write`'s residue-class repartition BEFORE the reduce
-            # is the whole merge pipeline's only payload shuffle (none for
-            # a one-partition delta batch, whose own task is the one class)
+            # is the whole merge pipeline's only payload shuffle
             rows = self._stored_rows(updates, evolved)
             if not use_delta:
                 cow = self._read_files(snap, candidates)
@@ -803,11 +783,8 @@ class SnapshotTable:
                     cow = cow.withColumn(f.name, F.lit(None).cast(f.dataType))
                 rows = cow.select(*rows.columns).unionByName(rows)
             phases["plan_s"] = plan_s()
-            added, phases["write_s"] = self._write(
-                new_version,
-                rows,
-                touched=incoming_stats if use_delta else None,
-                one_task=use_delta and one_task,
+            added, phases["write_s"] = _timed(
+                self._write, new_version, rows, incoming_stats if use_delta else None
             )
 
         # ---- lineage + ledger -------------------------------------------
@@ -879,14 +856,18 @@ class SnapshotTable:
         into a fresh data dir of ``version``, listed by every bucket of
         ``touched``. The file's physical schema is a Spark-written delta
         file's: the same column order and nullability, and timestamps as
-        INT96. Returns ``commit_next``'s ``added``."""
+        INT96. It stores no ``ARROW:schema`` footer entry: neither Spark
+        nor :meth:`_read_arrow`, which casts to the stored schema, reads
+        it. Returns ``commit_next``'s ``added``."""
         import pyarrow.parquet as pq
 
         rows = last_writer_wins_arrow(rows, KEY, "_lsn")
         data_dir = self.log.new_data_dir(version)
         os.makedirs(data_dir)
         path = os.path.join(data_dir, f"part-00000-{uuid.uuid4()}.snappy.parquet")
-        pq.write_table(rows, path, use_deprecated_int96_timestamps=True)
+        pq.write_table(
+            rows, path, use_deprecated_int96_timestamps=True, store_schema=False
+        )
         return {path: (sorted(touched), True)}
 
     # ------------------------------------------------------------ compact
@@ -901,7 +882,7 @@ class SnapshotTable:
         :meth:`maintain` compacts the buckets whose delta rows grew, leaving
         the cold ones byte-untouched). The subset is widened to its closure
         over shared delta files: a delta file holds one residue class (a
-        one-file delta merge's or a fold's file, every bucket it touched),
+        driver merge's or a fold's file, every bucket it touched),
         so every bucket that lists it is rewritten too — cold class-mates
         included — and the file is dropped from all of them at once.
         Dropping it from only some would let a full read see an update
@@ -914,7 +895,8 @@ class SnapshotTable:
         paths = self._listed_by(snap, self._delta_closure(snap, sel))
         if not paths:
             return snap.version
-        added, write_s = self._write(
+        added, write_s = _timed(
+            self._write,
             snap.version + 1,
             self._read_files(snap, paths),
             drop_tombstones=drop_tombstones,
@@ -955,14 +937,14 @@ class SnapshotTable:
           ``_lsn`` is associative and no base file is touched, a full read
           reduces base ∪ that file to the same winners; the fold reads and
           writes O(delta backlog), not O(table). If the live delta files
-          sum to at most ``_DRIVER_BYTES`` on disk, conv_id is a string
-          and every stored column type is in ``_DRIVER_TYPES``, the driver
-          reads (:meth:`_read_arrow`), reduces and writes
-          (:meth:`_write_arrow`) the backlog with no Spark job; else one
-          Spark task does. Its commit changes no ledger or lineage, and
-          its ``summary`` holds ``operation`` ``fold`` and ``write_s``
-          (the read, reduce and write), plus ``driver: true`` for a
-          driver fold.
+          sum to at most ``_DRIVER_BYTES`` on disk (manifest entries hold
+          no byte count) and the stored schema passes
+          :func:`_driver_storable`, the driver reads (:meth:`_read_arrow`),
+          reduces and writes (:meth:`_write_arrow`) the backlog with no
+          Spark job; else one Spark task does. Its commit changes no
+          ledger or lineage, and its ``summary`` holds ``operation``
+          ``fold`` and ``write_s`` (the read, reduce and write), plus
+          ``driver: true`` for a driver fold.
 
         Returns the new version, or the current one if neither tier is
         due. This is the background loop a 10^10-event deployment runs
@@ -991,7 +973,10 @@ class SnapshotTable:
         # listed a folded file
         version, summary = snap.version + 1, {"operation": "fold"}
         touched = {b for p in live for b in snap.files[p]["buckets"]}
-        if self._driver_foldable(snap, live):
+        if (
+            _driver_storable(self._stored_schema(snap).fields)
+            and sum(map(os.path.getsize, live)) <= _DRIVER_BYTES
+        ):
             # two live delta files never hold the same (conv_id, turn_idx,
             # _lsn): the ledger applies an LSN range once and a fold
             # removes its inputs. So the order the files are read in never
@@ -1001,22 +986,9 @@ class SnapshotTable:
                 lambda: self._write_arrow(version, self._read_arrow(snap, live), touched)
             )
         else:
-            added, summary["write_s"] = self._write(
-                version, self._read_files(snap, live), touched=touched, one_task=True
+            added, summary["write_s"] = _timed(
+                self._write, version, self._read_files(snap, live), touched, one_task=True
             )
         return self.log.commit_next(
             snap, self.n_buckets, added=added, removed=live, summary=summary
-        )
-
-    def _driver_foldable(self, snap: Snapshot, live: list[str]) -> bool:
-        """Whether the fold of the ``live`` delta files runs on the driver:
-        conv_id is a string, every stored column type is one pyarrow writes
-        as Spark does, and the files sum to at most ``_DRIVER_BYTES`` on
-        disk (manifest entries hold no byte count)."""
-        fields = self._stored_schema(snap).fields
-        return (
-            all(isinstance(f.dataType, _DRIVER_TYPES) for f in fields)
-            and any(f.name == "conv_id" and isinstance(f.dataType, T.StringType)
-                    for f in fields)
-            and sum(map(os.path.getsize, live)) <= _DRIVER_BYTES
         )

@@ -33,8 +33,9 @@ PAYLOAD = T.StructType(
 
 # a merge path is pinned through the delta threshold: infinite never picks
 # delta, negative always does, the default lets the merge decide. "driver"
-# is a delta merge of a one-partition batch the optimizer can size (see
-# _batch), which SnapshotTable reduces and writes on the driver
+# is a delta merge of a batch the optimizer sizes within _DRIVER_BYTES (see
+# _batch), which SnapshotTable reduces and writes on the driver; the other
+# modes' batches have no size estimate, so Spark reduces and writes them
 THRESHOLD = {
     "auto": snapshot_table._DELTA_THRESHOLD,
     "cow": float("inf"),
@@ -45,6 +46,11 @@ THRESHOLD = {
 # the fold path after a chunk: none, or a maintain() that folds once two
 # delta files are live (never a base rewrite) on the driver or on Spark
 FOLD_BYTES = {"driver": snapshot_table._DRIVER_BYTES, "spark": 0}
+
+# c0-c4, then a key below and one above all of them: a batch may hold a
+# key outside every stored file's conv_id range, and CoW pruning meets the
+# edges of those ranges
+KEYS = [f"c{i}" for i in range(5)] + ["a0", "z9"]
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -61,7 +67,7 @@ def change_stream(draw):
     events = []
     for lsn in range(n):
         op = draw(st.sampled_from(["I", "U", "D", "UP"]))
-        conv = f"c{draw(st.integers(0, 4))}"
+        conv = draw(st.sampled_from(KEYS))
         turn = draw(st.integers(0, 3))
         text = None if op == "D" else f"t-{lsn}-{draw(st.integers(0, 9))}"
         events.append(

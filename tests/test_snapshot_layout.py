@@ -508,8 +508,8 @@ def test_maintain_compacts_the_closure_of_a_bucket_past_the_row_fraction(
     by_bucket = {b: [c for c in convs if tbl.bucket_for_key(c) == b] for b in range(4)}
     hot, mate = 0, 1
     monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", -1)  # delta
-    # one key each of hot and mate in one one-partition batch: ONE delta
-    # file, listed by both buckets
+    # one key each of hot and mate in one small batch, merged on the
+    # driver: ONE delta file, listed by both buckets
     one_file = str(tmp_path / "one_file")
     _events(
         spark,
@@ -955,7 +955,7 @@ def _one_file(df, path: str):
 
 def _merge_one_partition_batch(spark, tmp_path, monkeypatch, spark_jobs):
     """Merge a one-file delta batch over a 600-key table: the batch's
-    Spark jobs, its commit summary, and the one delta file it writes,
+    Spark jobs, its commit summary, and the delta files it writes, each
     listed by exactly the buckets with rows in it."""
     n = _sharing_buckets(spark)
     tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=n).create(PAYLOAD)
@@ -967,15 +967,14 @@ def _merge_one_partition_batch(spark, tmp_path, monkeypatch, spark_jobs):
         version, _ = tbl.merge(batch, 1)
     assert version == 2
     listed = _delta_listings(tbl.snapshot())
-    assert len(listed) == 1
-    [(path, buckets)] = listed.items()
-    assert _file_buckets(spark, [path], n) == {_real(path): buckets}
-    assert buckets == {tbl.bucket_for_key(c) for c in convs[::7]}
-    assert len(buckets) > 1
+    assert _file_buckets(spark, list(listed), n) == {
+        _real(p): bs for p, bs in listed.items()
+    }
+    assert set().union(*listed.values()) == {tbl.bucket_for_key(c) for c in convs[::7]}
     want = {c: f"v1:{c}" for c in convs}
     want.update((c, f"v2:{c}") for c in convs[::7])
     assert _state(tbl) == sorted(want.items())
-    return [list(j.stage_tasks.values()) for j in jobs], tbl.snapshot().summary
+    return jobs, tbl.snapshot().summary, listed
 
 
 def test_one_partition_batch_merges_in_its_own_task(
@@ -985,20 +984,33 @@ def test_one_partition_batch_merges_in_its_own_task(
     ``_DRIVER_BYTES``, is merged on the driver: its one Spark job is the
     one-task ``toArrow()`` collect, and the driver writes one delta file
     (class 0 of m = 1)."""
-    tasks, summary = _merge_one_partition_batch(spark, tmp_path, monkeypatch, spark_jobs)
-    assert tasks == [[1]]
+    jobs, summary, listed = _merge_one_partition_batch(
+        spark, tmp_path, monkeypatch, spark_jobs
+    )
+    assert [list(j.stage_tasks.values()) for j in jobs] == [[1]]
     assert summary["operation"] == "delta" and summary["driver"] is True
+    [buckets] = listed.values()
+    assert len(buckets) > 1
 
 
-def test_one_partition_batch_past_the_driver_bound_merges_in_its_own_task(
+def test_one_partition_batch_past_the_driver_bound_writes_residue_class_files(
     spark, tmp_path, monkeypatch, spark_jobs
 ):
-    """A one-partition batch larger than ``_DRIVER_BYTES`` keeps the Spark
-    path: its stats pass and its delta write run as one job of one task
-    each, with no shuffle, and write the same one delta file."""
+    """A one-partition batch larger than ``_DRIVER_BYTES`` takes the
+    Spark path: its stats pass is one job of one task, with no shuffle,
+    and its delta write a stage of m tasks, one per residue class, that
+    writes one file per class with rows."""
+    m = spark.sparkContext.defaultParallelism
     monkeypatch.setattr(snapshot_table, "_DRIVER_BYTES", 0)
-    tasks, summary = _merge_one_partition_batch(spark, tmp_path, monkeypatch, spark_jobs)
-    assert tasks == [[1], [1]]
+    jobs, summary, listed = _merge_one_partition_batch(
+        spark, tmp_path, monkeypatch, spark_jobs
+    )
+    assert list(jobs[0].stage_tasks.values()) == [1]  # the stats pass
+    tasks = {s: t for j in jobs[1:] for s, t in j.stage_tasks.items()}
+    assert tasks[max(tasks)] == m  # the write is the last stage
+    classes = [{b % m for b in bs} for bs in listed.values()]
+    assert all(len(c) == 1 for c in classes)
+    assert len(listed) == len(set().union(*classes)) > 1
     assert summary["operation"] == "delta" and "driver" not in summary
 
 
@@ -1123,11 +1135,10 @@ def test_engine_reads_list_their_files_without_a_spark_job(
     assert not [j for j in compact_jobs if j.description.startswith("Listing")]
 
 
-def _added_file(tbl) -> str:
-    """The one file the latest commit added."""
+def _added_files(tbl) -> list[str]:
+    """The files the latest commit added."""
     snap = tbl.snapshot()
-    [path] = set(snap.files) - set(tbl.snapshot(snap.version - 1).files)
-    return path
+    return sorted(set(snap.files) - set(tbl.snapshot(snap.version - 1).files))
 
 
 def _physical_schema(path: str) -> list[tuple]:
@@ -1141,12 +1152,14 @@ def _physical_schema(path: str) -> list[tuple]:
 def test_a_driver_delta_file_is_stored_as_a_spark_delta_file(
     spark, tmp_path, monkeypatch
 ):
-    """The same one-file batches, merged on the driver and on Spark
-    (``_DRIVER_BYTES`` 0), write delta files with one physical schema
-    (column order, optional columns, ``ts`` as INT96) and the conv_id
-    footer range the log prunes by, and both tables read back the same
-    rows, in full and by key: also after a batch that adds a payload
-    column and one that lacks one."""
+    """The same one-file batches, merged on the driver (one file) and on
+    Spark (``_DRIVER_BYTES`` 0; one file per residue class), write delta
+    files with one physical schema (column order, optional columns,
+    ``ts`` as INT96) and together the conv_id footer range the log
+    prunes by, and both tables read back the same rows, in full and by
+    key: also after a batch that adds a payload column and one that
+    lacks one. The driver's file stores no ``ARROW:schema`` footer
+    entry, which no reader of the table uses."""
     convs = [f"conv_{i:06d}" for i in range(200)]
     tables = {
         name: SnapshotTable(spark, str(tmp_path / name), n_buckets=8).create(PAYLOAD)
@@ -1169,13 +1182,18 @@ def test_a_driver_delta_file_is_stored_as_a_spark_delta_file(
             monkeypatch.setattr(snapshot_table, "_DRIVER_BYTES", driver_bytes[name])
             tbl.merge(batch, i + 1)
             assert tbl.snapshot().summary.get("driver", False) == (name == "driver")
-            files[name] = _added_file(tbl)
+            files[name] = _added_files(tbl)
             _assert_every_part_file_listed(tbl)
-        schema = _physical_schema(files["driver"])
-        assert schema == _physical_schema(files["spark"])
+        [driver_file] = files["driver"]
+        assert len(files["spark"]) > 1
+        schema = _physical_schema(driver_file)
+        for path in files["spark"]:
+            assert _physical_schema(path) == schema
         assert dict((c, (t, d)) for c, t, _, d in schema)["ts"] == ("INT96", 1)
-        key_range = footer_range(files["driver"], "conv_id")
-        assert key_range == footer_range(files["spark"], "conv_id")
+        assert b"ARROW:schema" not in (pq.ParquetFile(driver_file).metadata.metadata or {})
+        key_range = footer_range(driver_file, "conv_id")
+        lo, hi, rows = zip(*(footer_range(p, "conv_id") for p in files["spark"]))
+        assert key_range == (min(lo), max(hi), sum(rows))
         assert key_range[0] is not None
         for read in ({}, {"conv_id": convs[:30]}):
             d, s = (
@@ -1205,10 +1223,10 @@ def test_driver_stats_equal_the_spark_stats_pass(spark, tmp_path, monkeypatch):
     driver = tbl._batch_stats(batch)
     monkeypatch.setattr(snapshot_table, "_DRIVER_BYTES", 0)
     on_spark = tbl._batch_stats(batch)
-    assert driver[4] is not None and on_spark[4] is None  # collected or not
-    assert driver[:4] == on_spark[:4]
-    assert driver[1] == (5, 99)
-    assert (9, 1) in driver[2] and (-1, 14) in driver[2]
+    assert driver[3] is not None and on_spark[3] is None  # collected or not
+    assert driver[:3] == on_spark[:3]
+    assert driver[0] == (5, 99)
+    assert (9, 1) in driver[1] and (-1, 14) in driver[1]
 
 
 def test_a_batch_the_driver_cannot_store_keeps_the_spark_write(
@@ -1235,6 +1253,36 @@ def test_a_batch_the_driver_cannot_store_keeps_the_spark_write(
     assert got[convs[1], 0] == (f"v1:{convs[1]}", None)
     assert got[convs[4], 0] == (f"v3:{convs[4]}", seen)
     _assert_every_part_file_listed(tbl)
+
+
+def test_a_small_batch_the_driver_cannot_store_is_not_collected(
+    spark, tmp_path, monkeypatch
+):
+    """A one-file batch within ``_DRIVER_BYTES`` that holds a TimestampNTZ
+    column is not collected only to be written by Spark: its stats pass
+    runs on Spark, and ``toArrow()`` is never called."""
+    tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=8).create(PAYLOAD)
+    seen = dt.datetime(2024, 1, 2, 3, 4, 5)
+    batch = _one_file(
+        _insert_batch(spark, ["conv_000", "conv_001"], 0).withColumn(
+            "seen", F.lit(seen).cast("timestamp_ntz")
+        ),
+        str(tmp_path / "b"),
+    )
+    assert snapshot_table.size_estimate(batch) <= snapshot_table._DRIVER_BYTES
+    collected, to_arrow = [], type(batch).toArrow
+
+    def counted(df):
+        collected.append(df)
+        return to_arrow(df)
+
+    monkeypatch.setattr(type(batch), "toArrow", counted)
+    assert tbl.merge(batch, 0)[0] == 1
+    assert collected == []
+    assert "driver" not in tbl.snapshot().summary
+    assert sorted((r["conv_id"], r["seen"]) for r in tbl.read().collect()) == [
+        ("conv_000", seen), ("conv_001", seen)
+    ]
 
 
 @pytest.mark.parametrize("path", ["cow", "delta", "driver"])

@@ -8,6 +8,9 @@ time the full-materialization noop sink for comparison.
 Usage:
     python tools/profile_queries.py [--sf DIR] [--passes N] [--plans TAG]
         [--noop] [query ...]
+
+``--sf`` defaults to ``$SPARK_GRAFT_SF_DIR``, else bench.py's default
+(sf0.1); the session's cores to ``$SPARK_GRAFT_CPUS``, else every CPU.
 """
 
 from __future__ import annotations
@@ -26,7 +29,7 @@ from caterpillar_spark.session import get_spark  # noqa: E402
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="*")
-    ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0"))
+    ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--passes", type=int, default=3)
     ap.add_argument("--plans", default=None, help="write explain output to plans/<TAG>/<q>_<suffix>.txt")
     ap.add_argument("--suffix", default="before")
@@ -36,7 +39,7 @@ def main() -> None:
     import bench as benchmod
     import __spark_entry__ as entrymod
 
-    cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cores = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     benchmod.pin_cores(cores)
     spark = get_spark("caterpillar-profile", cores=cores)
     qs = entrymod.queries()
