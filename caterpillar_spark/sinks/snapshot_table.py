@@ -13,15 +13,13 @@ placement. A write runs one task per residue class: it shuffles once, with
 ``repartition(m, conv_id)``, where m divides n and is at most the session's
 cores, and since ``pmod(h, n) mod m == pmod(h, m)``, shuffle partition r
 holds exactly the buckets ``b % m == r``. The same exchange satisfies the
-LWW aggregate's clustering. The one Spark write without a shuffle is a
-fold, which must write one file: ``coalesce(1)`` makes its rows the
-single class of m = 1 and satisfies the aggregate in place. A base write
-partitions each task's output by bucket id, so a task writes one file per
-bucket of its class into a ``<col>=<b>/`` directory that names the
-bucket; no per-row bucket column is stored. The bucket -> files pointers
-are exact (no co-hashed stale rows can survive a bucket rewrite). A DELTA
-file holds a whole residue class and is listed by exactly the buckets
-with rows in it; ``compact()`` drops it from all of them at once.
+LWW aggregate's clustering. A base write partitions each task's output
+by bucket id, so a task writes one file per bucket of its class into a
+``<col>=<b>/`` directory that names the bucket; no per-row bucket column
+is stored. The bucket -> files pointers are exact (no co-hashed stale
+rows can survive a bucket rewrite). A DELTA file holds a whole residue
+class and is listed by exactly the buckets with rows in it; ``compact()``
+drops it from all of them at once.
 
 Scale design (100 TB / 1000 executors):
 - a merge prunes at FILE granularity on the per-file ``conv_id`` min/max
@@ -41,10 +39,10 @@ Scale design (100 TB / 1000 executors):
   rows; the bound caps the driver memory the collected batch takes;
 - ``maintain()`` bounds the delta backlog in two tiers, both decided from
   the log's footer stats with no Spark job, like an LSM tree's minor and
-  major compactions: a **fold** LWW-reduces the live delta files alone
-  into ONE delta file (reads and writes O(backlog), never a base file;
-  a backlog of at most ``_DRIVER_BYTES`` on disk is read, reduced and
-  written on the driver, with no Spark job), and only a bucket whose
+  major compactions: a **fold** LWW-reduces the live delta commits
+  alone into ONE delta commit (reads and writes O(backlog), never a base
+  file; a backlog of at most ``_DRIVER_BYTES`` on disk is read, reduced
+  and written on the driver, with no Spark job), and only a bucket whose
   delta rows reach a fraction of its base rows (or whose base is
   fragmented) has its base rewritten by ``compact()``;
 - deletes are tombstones (``_deleted``), so row-level merge is idempotent
@@ -81,8 +79,8 @@ _SYS_COLS = ["_lsn", "_deleted"]
 # than this many times the incoming rows (BENCH/delta_ab.json)
 _DELTA_THRESHOLD = 3.0
 # maintain()'s tiers (the sweep behind k and f is in CHANGES.md): fold the
-# delta backlog into one delta file once this many distinct files are live
-_FOLD_FILES = 4
+# delta backlog into one delta commit once this many delta commits are live
+_FOLD_COMMITS = 4
 # ... and rewrite a bucket's base once its delta rows reach this fraction
 # of its base rows, or its base is split into this many files
 _MAJOR_DELTA_FRAC = 0.5
@@ -452,8 +450,7 @@ class SnapshotTable:
         """Residue classes of a shuffled write, base or delta: the largest
         divisor of n_buckets that is at most the session's cores, so a
         write runs at most one task per core. Equals n_buckets (one
-        bucket per task) when the session has that many cores. Only a
-        fold uses m = 1 instead (see :meth:`_write`)."""
+        bucket per task) when the session has that many cores."""
         cores = self.spark.sparkContext.defaultParallelism
         return max(
             d for d in range(1, min(cores, self.n_buckets) + 1)
@@ -465,7 +462,6 @@ class SnapshotTable:
         version: int,
         rows: DataFrame,
         touched: Iterable[int] | None = None,
-        one_task: bool = False,
         drop_tombstones: bool = False,
     ) -> dict[str, tuple[list[int], bool]]:
         """LWW-reduce ``rows`` (stored columns) and write them into a fresh
@@ -481,10 +477,6 @@ class SnapshotTable:
         r``. AQE never coalesces an explicit ``repartition(m, col)``
         (REPARTITION_BY_NUM), so the mapping holds, and the LWW groupBy on
         (conv_id, ...) reuses this exchange instead of adding its own.
-        ``one_task`` is the fold's: it must write ONE file, since a fold
-        into m files would leave a backlog due again at the next
-        :meth:`maintain`. It skips the shuffle: ``coalesce(1)`` is the
-        single class of m = 1 and satisfies the groupBy in place.
 
         ``touched`` None is a base write: each task writes one file per
         bucket of its class under ``<col>=<b>/``, listed by that bucket.
@@ -495,9 +487,8 @@ class SnapshotTable:
         for a class without rows, in this fresh, unreferenced dir. Reads
         pass the file paths and a schema, so the directory adds no
         column."""
-        m = 1 if one_task else self._write_classes()
-        rows = rows.coalesce(1) if one_task else rows.repartition(m, F.col("conv_id"))
-        rows = last_writer_wins(rows, KEY, "_lsn")
+        m = self._write_classes()
+        rows = last_writer_wins(rows.repartition(m, F.col("conv_id")), KEY, "_lsn")
         if drop_tombstones:
             rows = rows.filter(~F.col("_deleted"))
         data_dir = self.log.new_data_dir(version)
@@ -849,8 +840,8 @@ class SnapshotTable:
     def _write_arrow(
         self, version: int, rows: pa.Table, touched: Iterable[int]
     ) -> dict[str, tuple[list[int], bool]]:
-        """The driver twin of a one-task delta :meth:`_write`, for a driver
-        merge and a driver fold: it reduces ``rows`` (stored columns) with
+        """The driver twin of a delta :meth:`_write`, for a driver merge
+        and a driver fold: it reduces ``rows`` (stored columns) with
         :func:`~caterpillar_spark.operators.dedup.last_writer_wins_arrow`,
         tombstones kept, and writes ONE parquet file, class 0 of m = 1,
         into a fresh data dir of ``version``, listed by every bucket of
@@ -882,7 +873,7 @@ class SnapshotTable:
         :meth:`maintain` compacts the buckets whose delta rows grew, leaving
         the cold ones byte-untouched). The subset is widened to its closure
         over shared delta files: a delta file holds one residue class (a
-        driver merge's or a fold's file, every bucket it touched),
+        driver merge's or a driver fold's file, every bucket it touched),
         so every bucket that lists it is rewritten too — cold class-mates
         included — and the file is dropped from all of them at once.
         Dropping it from only some would let a full read see an update
@@ -930,18 +921,22 @@ class SnapshotTable:
           ``_MAJOR_DELTA_FRAC`` of their base rows. A bucket's delta rows
           count each delta file it lists at ``rows / (buckets listing
           it)``, the file's rows spread over its buckets.
-        - **minor (fold)**: else, once ``_FOLD_FILES`` distinct delta
-          files are live, LWW-reduce those files alone into ONE delta file
-          and list it under every bucket that listed any of them. The file
-          keeps its tombstones: they still shadow base rows. Since LWW by
-          ``_lsn`` is associative and no base file is touched, a full read
-          reduces base ∪ that file to the same winners; the fold reads and
+        - **minor (fold)**: else, once ``_FOLD_COMMITS`` delta commits
+          are live (the distinct data dirs of the live delta files, each
+          flat in its commit's dir), LWW-reduce those files alone into ONE
+          delta commit, the same write as a delta merge: a Spark fold
+          writes one file per residue class, each listed by the buckets
+          with rows in it, a driver fold one file listed by every bucket
+          that listed a folded file. The files keep their tombstones:
+          they still shadow base rows. Since LWW by ``_lsn`` is
+          associative and no base file is touched, a full read reduces
+          base ∪ the new files to the same winners; the fold reads and
           writes O(delta backlog), not O(table). If the live delta files
           sum to at most ``_DRIVER_BYTES`` on disk (manifest entries hold
           no byte count) and the stored schema passes
           :func:`_driver_storable`, the driver reads (:meth:`_read_arrow`),
           reduces and writes (:meth:`_write_arrow`) the backlog with no
-          Spark job; else one Spark task does. Its commit changes no
+          Spark job; else :meth:`_write` does. Its commit changes no
           ledger or lineage, and its ``summary`` holds ``operation``
           ``fold`` and ``write_s`` (the read, reduce and write), plus
           ``driver: true`` for a driver fold.
@@ -967,10 +962,8 @@ class SnapshotTable:
         if due:
             return self.compact(drop_tombstones=False, buckets=due)
         live = [p for p, e in snap.files.items() if e["delta"]]
-        if len(live) < _FOLD_FILES:
+        if len({os.path.dirname(p) for p in live}) < _FOLD_COMMITS:
             return snap.version
-        # one file, the single class of m = 1, listed by every bucket that
-        # listed a folded file
         version, summary = snap.version + 1, {"operation": "fold"}
         touched = {b for p in live for b in snap.files[p]["buckets"]}
         if (
@@ -987,7 +980,7 @@ class SnapshotTable:
             )
         else:
             added, summary["write_s"] = _timed(
-                self._write, version, self._read_files(snap, live), touched, one_task=True
+                self._write, version, self._read_files(snap, live), touched
             )
         return self.log.commit_next(
             snap, self.n_buckets, added=added, removed=live, summary=summary

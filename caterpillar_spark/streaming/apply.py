@@ -92,10 +92,10 @@ def apply_stream(
     to the files it overlaps takes the merge-on-read delta path (write
     volume O(batch)), a large one copy-on-write. With ``maintain_every=k``
     the sink runs ``table.maintain()`` after every k-th applied batch, the
-    streaming deployment's maintenance loop: it folds the live delta files
-    into one delta file (O(backlog) work, bounding the files a read
-    reduces), and rewrites a bucket's base only once its delta rows reach
-    a fraction of its base rows."""
+    streaming deployment's maintenance loop: it folds the live delta
+    commits into one delta commit (O(backlog) work, bounding the files a
+    read reduces), and rewrites a bucket's base only once its delta rows
+    reach a fraction of its base rows."""
 
     applied = {"n": 0}
 

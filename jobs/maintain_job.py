@@ -8,10 +8,10 @@ deployment schedules between merges.
 
 Default behaviour is INCREMENTAL (`SnapshotTable.maintain`): compact the
 buckets whose merge-on-read delta rows reached a fraction of their base
-rows (or whose base is fragmented), else fold the live delta files into
-one delta file once enough of them pile up, else do nothing; then vacuum
-data dirs no committed snapshot references (`expire_snapshots` — also
-collects orphan dirs from crashed/losing writers). ``--full-compact``
+rows (or whose base is fragmented), else fold the live delta commits
+into one delta commit once enough of them pile up, else do nothing; then
+vacuum data dirs no committed snapshot references (`expire_snapshots` —
+also collects orphan dirs from crashed/losing writers). ``--full-compact``
 rewrites everything, restoring the reduction-free read path; it purges
 tombstones only with ``--drop-tombstones``. The JSON line's ``operation`` names what ran: ``compact``,
 ``fold`` or null, and ``driver`` whether it ran on the driver with no

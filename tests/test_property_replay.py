@@ -44,7 +44,7 @@ THRESHOLD = {
 }
 
 # the fold path after a chunk: none, or a maintain() that folds once two
-# delta files are live (never a base rewrite) on the driver or on Spark
+# delta commits are live (never a base rewrite) on the driver or on Spark
 FOLD_BYTES = {"driver": snapshot_table._DRIVER_BYTES, "spark": 0}
 
 # c0-c4, then a key below and one above all of them: a batch may hold a
@@ -151,7 +151,7 @@ def test_any_stream_reduces_correctly(spark, tmp_path_factory, stream):
         if folds[i] != "none":
             v = tbl.current_version()
             with patch.multiple(
-                snapshot_table, _FOLD_FILES=2, _MAJOR_DELTA_FRAC=float("inf"),
+                snapshot_table, _FOLD_COMMITS=2, _MAJOR_DELTA_FRAC=float("inf"),
                 _DRIVER_BYTES=FOLD_BYTES[folds[i]],
             ):
                 if tbl.maintain() > v:

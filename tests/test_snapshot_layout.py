@@ -21,7 +21,7 @@ from caterpillar_spark.sinks.snapshot_table import (
     SnapshotTable,
     murmur3_hash_bytes,
 )
-from caterpillar_spark.sinks.table_log import footer_range
+from caterpillar_spark.sinks.table_log import TableLog, footer_range
 
 PAYLOAD = T.StructType(
     [
@@ -615,8 +615,13 @@ def _backlog(spark, tmp_path, name, monkeypatch) -> SnapshotTable:
     ]
     for i, batch in enumerate(batches):
         tbl.merge(batch, 1 + i)
-    assert len({p for p, e in tbl.snapshot().files.items() if e["delta"]}) >= 4
+    assert len(_delta_commits(tbl.snapshot())) >= snapshot_table._FOLD_COMMITS
     return tbl
+
+
+def _delta_commits(snap) -> set[str]:
+    """The data dirs of the live delta files: one per delta commit."""
+    return {os.path.dirname(p) for p, e in snap.files.items() if e["delta"]}
 
 
 def test_the_arrow_reader_equals_the_spark_reader(spark, tmp_path, monkeypatch):
@@ -642,19 +647,24 @@ def test_a_driver_fold_equals_the_spark_fold_and_runs_no_job(
     spark, tmp_path, monkeypatch, spark_jobs
 ):
     """The same backlog folded on the driver and by Spark (``_DRIVER_BYTES``
-    0) reads back the same rows, tombstones included. The driver fold
-    launches no Spark job, and its summary says ``driver: true``."""
+    0) reads back the same rows, tombstones included: the driver fold
+    writes one file, the Spark fold at most one per residue class. The
+    driver fold launches no Spark job, and its summary says ``driver:
+    true``."""
     tables = {name: _backlog(spark, tmp_path, name, monkeypatch) for name in ("driver", "spark")}
     with spark_jobs("driver fold") as jobs:
         tables["driver"].maintain()
     assert jobs == []
     monkeypatch.setattr(snapshot_table, "_DRIVER_BYTES", 0)
     tables["spark"].maintain()
+    m = spark.sparkContext.defaultParallelism
     for name, tbl in tables.items():
-        summary = tbl.snapshot().summary
-        assert summary["operation"] == "fold"
-        assert summary.get("driver", False) == (name == "driver")
-        assert len({p for p, e in tbl.snapshot().files.items() if e["delta"]}) == 1
+        snap = tbl.snapshot()
+        assert snap.summary["operation"] == "fold"
+        assert snap.summary.get("driver", False) == (name == "driver")
+        files = _delta_listings(snap)
+        assert len(_delta_commits(snap)) == 1
+        assert len(files) == 1 if name == "driver" else 1 <= len(files) <= m
         _assert_every_part_file_listed(tbl)
     for read in ({}, {"include_deleted": True}):
         d, s = (
@@ -663,6 +673,111 @@ def test_a_driver_fold_equals_the_spark_fold_and_runs_no_job(
         )
         assert d == s
     assert ("conv_000003", 0, "user", "back") in {r[:4] for r in d}
+
+
+@pytest.mark.parametrize("fold", ["driver", "spark"])
+def test_a_fold_that_crashes_before_its_commit_changes_nothing(
+    spark, tmp_path, monkeypatch, fold
+):
+    """``TableLog.commit_next`` raises once, after the fold wrote its data:
+    the snapshot, the read and the ledger are unchanged, the next
+    ``maintain()`` folds, and ``expire_snapshots(grace_seconds=0)``
+    removes the crashed fold's data dir."""
+    tbl = _backlog(spark, tmp_path, "t", monkeypatch)
+    if fold == "spark":
+        monkeypatch.setattr(snapshot_table, "_DRIVER_BYTES", 0)
+    snap, lineage = tbl.snapshot(), tbl.log.lineage()
+    rows = sorted(map(tuple, tbl.read(include_deleted=True).collect()))
+    dirs = set(os.listdir(tbl.log.data_dir))
+    commit_next, boom = TableLog.commit_next, {"armed": True}
+
+    def crashing(self, *args, **kwargs):
+        if boom.pop("armed", False):
+            raise RuntimeError("simulated crash after the fold's data write")
+        return commit_next(self, *args, **kwargs)
+
+    monkeypatch.setattr(TableLog, "commit_next", crashing)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        tbl.maintain()
+    (orphan,) = set(os.listdir(tbl.log.data_dir)) - dirs
+    orphan = os.path.join(tbl.log.data_dir, orphan)
+    assert any(f.endswith(".parquet") for _, _, fs in os.walk(orphan) for f in fs)
+
+    fresh = SnapshotTable(spark, tbl.root)
+    after = fresh.snapshot()
+    assert after.version == snap.version and after.files == snap.files
+    assert after.applied == snap.applied and fresh.log.lineage() == lineage
+    assert sorted(map(tuple, fresh.read(include_deleted=True).collect())) == rows
+
+    assert fresh.maintain() == snap.version + 1
+    summary = fresh.snapshot().summary
+    assert summary["operation"] == "fold"
+    assert summary.get("driver", False) == (fold == "driver")
+    assert orphan in fresh.expire_snapshots(grace_seconds=0)
+    assert not os.path.exists(orphan)
+    _assert_every_part_file_listed(fresh)
+    assert sorted(map(tuple, fresh.read(include_deleted=True).collect())) == rows
+
+
+def test_one_spark_delta_merge_is_one_commit_to_maintain(spark, tmp_path, monkeypatch):
+    """A Spark delta merge into a 4·cores-bucket table writes a file per
+    residue class, at least ``_FOLD_COMMITS`` of them, in ONE commit.
+    ``maintain()`` counts live delta commits, not files, so it does
+    nothing: a fold would only merge those class files into fewer files
+    that more buckets list."""
+    n = _sharing_buckets(spark)
+    tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=n).create(PAYLOAD)
+    convs = [f"conv_{i:06d}" for i in range(600)]
+    tbl.merge(_insert_batch(spark, convs, 0), 0, (0, 599))
+    monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", -1)  # delta
+    tbl.merge(_insert_batch(spark, convs[::4], 1000, "v2"), 1, (1000, 1149))
+    snap = tbl.snapshot()
+    assert "driver" not in snap.summary
+    assert len(_delta_listings(snap)) >= snapshot_table._FOLD_COMMITS
+    assert len(_delta_commits(snap)) == 1
+    assert tbl.maintain() == snap.version
+
+
+def test_a_spark_fold_writes_one_file_per_residue_class(spark, tmp_path, monkeypatch):
+    """With ``_DRIVER_BYTES`` 0, ``_FOLD_COMMITS`` Spark delta merges into
+    a 4·cores-bucket table fold on Spark into at most m files, the same
+    write as a delta merge: each file holds one residue class and is
+    listed by exactly the buckets with rows in it, so a point lookup
+    opens at most one delta file. The read is unchanged, and a second
+    ``maintain()`` is a no-op."""
+    n, m = _sharing_buckets(spark), spark.sparkContext.defaultParallelism
+    tbl = SnapshotTable(spark, str(tmp_path / "t"), n_buckets=n).create(PAYLOAD)
+    convs = [f"conv_{i:06d}" for i in range(600)]
+    tbl.merge(_insert_batch(spark, convs, 0), 0, (0, 599))
+    monkeypatch.setattr(snapshot_table, "_DELTA_THRESHOLD", -1)  # delta
+    monkeypatch.setattr(snapshot_table, "_DRIVER_BYTES", 0)
+    monkeypatch.setattr(snapshot_table, "_MAJOR_DELTA_FRAC", float("inf"))  # no compact
+    for i in range(snapshot_table._FOLD_COMMITS):
+        lsn = 1000 * (i + 1)
+        rows = [(lsn + j, "U", c, 0, f"v{i}") for j, c in enumerate(convs[i::7])]
+        rows.append((lsn + len(rows), "D", convs[5 * i + 1], 0, None))
+        tbl.merge(_events(spark, rows), 1 + i, (lsn, lsn + len(rows) - 1))
+    snap = tbl.snapshot()
+    assert len(_delta_commits(snap)) == snapshot_table._FOLD_COMMITS
+    state = _state(tbl)
+
+    v = tbl.maintain()
+    assert v == snap.version + 1
+    folded = tbl.snapshot()
+    assert folded.summary["operation"] == "fold" and "driver" not in folded.summary
+    assert folded.buckets == snap.buckets
+    listed = _delta_listings(folded)
+    assert 1 < len(listed) <= m and len(_delta_commits(folded)) == 1
+    held = _file_buckets(spark, list(listed), n)
+    for p, bs in listed.items():
+        assert len({b % m for b in held[_real(p)]}) == 1, p
+        assert held[_real(p)] == bs, f"{p} holds {held[_real(p)]}, listed by {bs}"
+    assert _state(tbl) == state
+    deltas = {_real(p) for p in listed}
+    for k in convs[:40:4]:
+        looked_up = {_real(f) for f in tbl.read(conv_id=k).inputFiles()}
+        assert len(looked_up & deltas) <= 1, k
+    assert tbl.maintain() == v
 
 
 def test_full_delta_replay_matches_cow_replay(spark, tmp_path, monkeypatch):
